@@ -1,0 +1,13 @@
+"""Make the benchmark's modules, the engine package and ``scripts`` (for
+``canon``) importable, the way ``run.py`` sets up its path."""
+
+import os
+import sys
+
+HERE = os.path.dirname(os.path.abspath(__file__))
+BENCH = os.path.dirname(HERE)
+ROOT = os.path.dirname(BENCH)
+
+for p in (os.path.join(ROOT, "scripts"), ROOT, BENCH):
+    if p not in sys.path:
+        sys.path.insert(0, p)
