@@ -10,10 +10,14 @@ joins for the small dimensions (SURVEY.md §1.4, §4.1).
 
 from __future__ import annotations
 
+import contextlib
 import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from . import store
+from .store import check_stream_identity  # noqa: F401  (public re-export)
 
 TESTDATA_TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -206,7 +210,19 @@ def _read_parquet_dispatch(spark: SparkSession,
         fingerprint = paths
     ns_cols = _nanos_ts_columns_at(tuple(paths), fingerprint)
     if ns_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        return _read_nanos(spark, paths, ns_cols)
+    return spark.read.parquet(*paths)
+
+
+def _read_nanos(spark: SparkSession, paths, ns_cols) -> DataFrame:
+    """Read parquet whose ``ns_cols`` are TIMESTAMP(NANOS), which Spark's
+    micro-precision engine cannot represent: as longs floor-divided to
+    micros (the truncation DuckDB applies), cast to NTZ so both unit
+    branches yield the same type (the LTZ→NTZ cast is wall-clock
+    identity under the UTC-pinned session). The legacy flag is
+    session-scoped by design and NOT restored: the scan evaluates
+    lazily, possibly long after this call."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(*paths)
     for c in ns_cols:
         df = df.withColumn(
@@ -297,25 +313,11 @@ def table(spark: SparkSession, sf_dir: str, name: str,
         return served
     path = os.path.join(sf_dir, f"{name}.parquet")
     ns_cols = nanos_ts_columns(path)
-    if ns_cols:
-        # session-scoped by design, NOT restored: the scan evaluates
-        # lazily (possibly long after this call), so the flag must
-        # outlive the builder. Only set when a file actually IS nanos;
-        # a session also reading OTHER nanos parquet it wants typed as
-        # long would need a separate session.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        for c in ns_cols:
-            # cast to NTZ so both dispatch branches yield the SAME type
-            # (micros files read natively as NTZ); under the UTC-pinned
-            # session the LTZ→NTZ cast is wall-clock identity.
-            df = df.withColumn(
-                c,
-                F.timestamp_micros(F.expr(f"`{c}` div 1000"))
-                .cast("timestamp_ntz"),
-            )
-    else:
-        df = _read_parquet_cached(spark, path)
+    # the legacy flag is only set when a file actually IS nanos; a
+    # session also reading OTHER nanos parquet it wants typed as long
+    # would need a separate session
+    df = (_read_nanos(spark, (path,), ns_cols) if ns_cols
+          else _read_parquet_cached(spark, path))
     if with_derived:
         for col_name, factory in LAYOUT_DERIVED.get(name, {}).items():
             df = df.withColumn(col_name, factory(df))
@@ -574,27 +576,25 @@ def _manifest_path(layout_path: str, tbl: str) -> str:
 
 
 def _read_manifest(layout_path: str, tbl: str) -> dict | None:
-    import json
-
-    try:
-        with open(_manifest_path(layout_path, tbl)) as f:
-            return json.load(f)
-    except (OSError, ValueError):
-        return None
+    return store.read_json(_manifest_path(layout_path, tbl))
 
 
 def _write_manifest(layout_path: str, tbl: str, manifest: dict) -> None:
-    import json
+    store.write_json(_manifest_path(layout_path, tbl), manifest)
 
-    with open(_manifest_path(layout_path, tbl), "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
-        f.write("\n")
+
+def _layout_swap(layout_path: str, tbl: str) -> store.Swap:
+    """The directory swap that publishes a compacted layout table."""
+    tbl_dir = os.path.join(layout_path, tbl)
+    return store.Swap(tbl_dir, tbl_dir + "_compact_tmp",
+                      tbl_dir + "_compact_old", "_graft_manifest.json",
+                      "layout_swap_between_renames")
 
 
 def _acquire_build_lock(path: str) -> str:
-    """Single-writer gate for a layout directory (r9, verdict ask 7):
-    two sessions building the same ``path`` would race
-    ``write_bucketed`` into one external location. O_EXCL creation is
+    """Single-writer gate for a layout directory: two sessions
+    building the same ``path`` would race ``write_bucketed`` into one
+    external location. O_EXCL creation is
     the atomic claim; the holder's pid is recorded so a crashed
     builder's stale lock is detected (dead pid → the lock is stolen
     and the build proceeds — crash recovery, not contention) while a
@@ -629,7 +629,7 @@ def _acquire_build_lock(path: str) -> str:
                     # another user (shared-host build). Treating it as
                     # dead would steal a live builder's lock — the
                     # exact race the lock exists to prevent. Only
-                    # ESRCH proves the holder is gone. (r10 ADVICE)
+                    # ESRCH proves the holder is gone.
                     alive = True
             if alive:
                 raise RuntimeError(
@@ -640,10 +640,19 @@ def _acquire_build_lock(path: str) -> str:
                 )
             # stale lock from a crashed builder: steal and retry the
             # atomic claim (another waiter may steal first — loop)
-            try:
+            with contextlib.suppress(OSError):
                 os.remove(lock)
-            except OSError:
-                pass
+
+
+@contextlib.contextmanager
+def _build_lock(path: str):
+    """Hold the layout directory's single-writer lock for the block."""
+    lock = _acquire_build_lock(path)
+    try:
+        yield
+    finally:
+        with contextlib.suppress(OSError):
+            os.remove(lock)
 
 
 def build_workload_layout(
@@ -658,7 +667,7 @@ def build_workload_layout(
     """Build + register the bucketed workload layout — Spark's
     ``CREATE INDEX`` (A15, ``sql/init.sql:44-47``).
 
-    ``lsh_planes`` (r11) sets the plane width of the embeddings
+    ``lsh_planes`` sets the plane width of the embeddings
     layout's stored LSH bucket (default: the 4-plane oracle-contract
     width; deployments pass ``llm.lsh_planes_for(corpus_rows)``). Like
     an explicit ``buckets``, an explicit width that mismatches an
@@ -692,26 +701,28 @@ def build_workload_layout(
     tests and operators use.
 
     Subset builds (``tables=("lineitem",)``) keep the one-count-per-
-    family invariant (r8 ADVICE): if a sibling in the same join family
+    family invariant: if a sibling in the same join family
     (``LAYOUT_FAMILIES``) is already registered, ``buckets=None``
     REUSES the sibling's count, and an explicit mismatching ``buckets``
     raises — a family split across two counts would silently lose the
     shuffle-free join the layout exists for.
 
-    Maintenance is INCREMENTAL for append-only sources (r9, verdict
-    ask 1): each build persists a ``_graft_manifest.json`` inside the
-    layout table dir recording the source's per-part (mtime_ns, size)
-    map. When the source drifts by strictly ADDING part files — the
-    reference's own monthly-append ingest pattern
+    Maintenance is INCREMENTAL for append-only sources: each build
+    persists a ``_graft_manifest.json`` inside the layout table dir
+    recording the source's per-part (mtime_ns, size) map. When the
+    source drifts by strictly ADDING part files — the reference's own
+    monthly-append ingest pattern
     (``python/ingest_data.py:160-166``) — only the new parts are read,
     bucketized, and APPENDED into the existing bucketed table (a
     bucketed INSERT: one new sorted run per touched bucket), so a
     month's maintenance costs O(month), not O(100 TB fact). Any drift
     the diff can't scope — a modified or deleted part, a changed
-    bucket count or key — keeps the loud full-rebuild posture. The
-    manifest also lets a FRESH session re-register a still-fresh
-    layout without any rebuild (the fingerprint used to live only in
-    session conf, so every new session paid a full build)."""
+    bucket count or key — keeps the loud full-rebuild posture. An
+    append records its pending part names in the manifest before it
+    starts and writes the final manifest after it, so an append cut
+    short also rebuilds in full instead of appending the delta twice.
+    The manifest lets a FRESH session re-register a still-fresh layout
+    without any rebuild."""
     # family-consistency gate BEFORE defaulting: a registered sibling's
     # count wins over the parallelism default
     buckets_explicit = buckets is not None
@@ -740,7 +751,7 @@ def build_workload_layout(
     if buckets is None:
         buckets = max(32, 4 * spark.sparkContext.defaultParallelism)
     if lsh_planes is not None:
-        # same validation f3's env gate applies (r11 review): the plane
+        # same validation f3's env gate applies: the plane
         # stream is a 16-deep seeded prefix and bucket_expr silently
         # truncates past it — an out-of-range width would build an
         # index LABELED wider than its data, which no query width could
@@ -755,16 +766,10 @@ def build_workload_layout(
                 f"plane prefix holds {_LSH_MAX_PLANES} planes and the "
                 f"oracle contract floors at {_N_LSH_PLANES}")
 
-    lock = _acquire_build_lock(path)
-    try:
+    with _build_lock(path):
         return _build_layout_tables(spark, sf_dir, path, buckets,
                                     buckets_explicit, tables, rebuild,
                                     lsh_planes)
-    finally:
-        try:
-            os.remove(lock)
-        except OSError:
-            pass
 
 
 def _build_layout_tables(
@@ -788,17 +793,16 @@ def _build_layout_tables(
         src_path = os.path.join(sf_dir, f"{name}.parquet")
         cur_parts = _source_parts(src_path)
         cur_fp = _fingerprint_of(cur_parts)
-        _recover_compact_swap(path, tbl)  # r14 ask 2: heal killed swap
+        _layout_swap(path, tbl).heal()
         manifest = _read_manifest(path, tbl)
-        # the manifest (written atomically with the data) is the
+        # the manifest (it travels inside the table directory) is the
         # on-disk truth of which source version the table was built
         # from; session conf is the fallback for pre-manifest layouts
         built_fp = (manifest or {}).get("fingerprint") \
             or spark.conf.get(conf_key + ".src", None)
-        # r11: plane width of the embeddings stored LSH bucket —
-        # explicit param > manifest-recorded width > the 4-plane
-        # contract default (a pre-r11 manifest without the field IS
-        # the default width)
+        # plane width of the embeddings stored LSH bucket — explicit
+        # param > manifest-recorded width > the 4-plane contract
+        # default (a manifest without the field IS the default width)
         if name == "embeddings":
             from .queries.llm import LSH_PLANES as _LSH_DEFAULT
 
@@ -810,7 +814,7 @@ def _build_layout_tables(
             # to the .lsh_planes conf set at the original build —
             # otherwise a wide stored assignment would silently
             # re-register as the 4-plane default and _embeddings would
-            # trust a wide bucket as 4-plane (r11 ADVICE)
+            # trust a wide bucket as 4-plane
             conf_planes = spark.conf.get(conf_key + ".lsh_planes", None)
             stored_planes = manifest_planes or (
                 int(conf_planes) if conf_planes else None)
@@ -824,17 +828,15 @@ def _build_layout_tables(
             eff_planes = None
 
         def _toctou_gate(what: str) -> None:
-            # r8 ADVICE: the fingerprint was taken BEFORE a potentially
+            # the fingerprint was taken BEFORE a potentially
             # minutes-long build; a source mutated mid-build must not
             # be registered as fresh. Re-stat, drop the manifest (the
             # table's contents are a mix of versions — the next build
             # must be full), refuse loudly.
             post_fp = _source_fingerprint(src_path)
             if post_fp != cur_fp:
-                try:
+                with contextlib.suppress(OSError):
                     os.remove(_manifest_path(path, tbl))
-                except OSError:
-                    pass
                 raise ValueError(
                     f"source {src_path} changed WHILE the layout for "
                     f"{name!r} was {what} (fingerprint {cur_fp} → "
@@ -842,6 +844,17 @@ def _build_layout_tables(
                     f"and was NOT registered. Re-run "
                     f"build_workload_layout once the source is settled."
                 )
+
+        def _manifest_now(buckets, **fields) -> dict:
+            # the manifest of the table as built from cur_parts
+            return {
+                "fingerprint": cur_fp, "parts": cur_parts,
+                "buckets": int(buckets), "key": key, "source": src_path,
+                "derived": sorted(LAYOUT_DERIVED.get(name, {})),
+                **({"lsh_planes": int(eff_planes)}
+                   if name == "embeddings" else {}),
+                **fields,
+            }
 
         def _full_build() -> None:
             # read the PLAIN source explicitly (serve flag off for this
@@ -852,7 +865,7 @@ def _build_layout_tables(
             try:
                 # materialize the derived bucket columns (computed on
                 # the fly by the plain path) into the table, bound to
-                # this build's plane width (r11)
+                # this build's plane width
                 src = table(spark, sf_dir, name)
                 for cn, fac in _derived_factories(name,
                                                   eff_planes).items():
@@ -861,7 +874,7 @@ def _build_layout_tables(
                 spark.conf.set(LAYOUT_SERVE_CONF, prev)
             if name in LAYOUT_VALUE_PARTITIONED:
                 # co-locate each partition VALUE into one task before
-                # the partitioned write (r11): an unrepartitioned frame
+                # the partitioned write: an unrepartitioned frame
                 # writes every input partition × every value it touches
                 # — at a wide-plane LSH layout (2^11+ dirs × 64 input
                 # partitions) that is the 100k-tiny-files failure mode;
@@ -874,15 +887,10 @@ def _build_layout_tables(
                 _io.write_bucketed(src, tbl, key, buckets=buckets,
                                    path=os.path.join(path, tbl))
             _toctou_gate("building")
-            _write_manifest(path, tbl, {
-                "fingerprint": cur_fp, "parts": cur_parts,
-                "buckets": int(buckets), "key": key, "source": src_path,
-                "mode": ("partitioned" if name in LAYOUT_VALUE_PARTITIONED
-                         else "bucketed"),
-                "derived": sorted(LAYOUT_DERIVED.get(name, {})),
-                **({"lsh_planes": int(eff_planes)}
-                   if name == "embeddings" else {}),
-            })
+            _write_manifest(path, tbl, _manifest_now(
+                buckets, mode=("partitioned"
+                               if name in LAYOUT_VALUE_PARTITIONED
+                               else "bucketed")))
 
         reg_buckets = int(buckets)
         # a layout built under an OLDER derived-column set must be
@@ -895,10 +903,13 @@ def _build_layout_tables(
             != sorted(LAYOUT_DERIVED.get(name, {}))
         )
         if rebuild or not spark.catalog.tableExists(tbl) \
-                or built_fp is None or derived_drift:
+                or built_fp is None or derived_drift \
+                or (manifest or {}).get("pending"):
             # missing or version-unknown table must never be re-blessed
             # against the current source; build IS the rebuild,
-            # CREATE INDEX style
+            # CREATE INDEX style. A pending record means an append may
+            # have landed without its final manifest: the table's
+            # contents are unknown, so it is rebuilt too.
             _full_build()
         elif built_fp == cur_fp:
             existing = (int(manifest["buckets"]) if manifest is not None
@@ -914,8 +925,8 @@ def _build_layout_tables(
                 # the old build would silently hand back a layout the
                 # caller didn't request, while the drift path treats
                 # the same mismatch as a full-rebuild trigger. Match
-                # that posture — rebuild as requested. (r10 ADVICE;
-                # r11 extends it to the LSH plane width)
+                # that posture — rebuild as requested (bucket count
+                # and LSH plane width alike)
                 _full_build()
             else:
                 # fresh — register only (CREATE INDEX IF NOT EXISTS),
@@ -948,6 +959,10 @@ def _build_layout_tables(
                     # appended rows MUST get the stored assignment's
                     # width, whatever this call would default to
                     eff_planes = manifest_planes or default_planes
+                # the pending record is on disk before the append job
+                # starts and is cleared by the final manifest write
+                _write_manifest(path, tbl, {
+                    **manifest, "pending": sorted(new_names)})
                 delta = _read_parquet_dispatch(
                     spark, tuple(os.path.join(src_path, n)
                                  for n in sorted(new_names)))
@@ -970,30 +985,22 @@ def _build_layout_tables(
                                        buckets=int(manifest["buckets"]),
                                        mode="append")
                 _toctou_gate("incrementally appending to")
-                new_manifest = {
-                    "fingerprint": cur_fp, "parts": cur_parts,
-                    "buckets": int(manifest["buckets"]), "key": key,
-                    "source": src_path,
-                    "mode": manifest.get("mode", "bucketed"),
-                    "derived": sorted(LAYOUT_DERIVED.get(name, {})),
-                    "compactions": int(manifest.get("compactions", 0)),
-                    "minor_compactions":
-                        int(manifest.get("minor_compactions", 0)),
-                    **({"lsh_planes": int(eff_planes)}
-                       if name == "embeddings" else {}),
-                }
+                new_manifest = _manifest_now(
+                    manifest["buckets"],
+                    mode=manifest.get("mode", "bucketed"),
+                    compactions=int(manifest.get("compactions", 0)),
+                    minor_compactions=int(
+                        manifest.get("minor_compactions", 0)))
                 _write_manifest(path, tbl, new_manifest)
                 reg_buckets = int(manifest["buckets"])
-                # auto-compaction (r10, verdict ask 5): each append
-                # lands one new sorted run per touched bucket; once the
-                # average passes LAYOUT_COMPACT_RUNS_PER_BUCKET, merge
-                # back to ~one file per bucket NOW, under the build
-                # lock this path already holds — the policy decision
-                # the manual compact_workload_layout left open.
+                # auto-compaction: each append lands one new sorted run
+                # per touched bucket; once the average passes
+                # LAYOUT_COMPACT_RUNS_PER_BUCKET, merge back NOW, under
+                # the build lock this path already holds.
                 if (_runs_per_bucket(path, tbl, new_manifest)
                         > LAYOUT_COMPACT_RUNS_PER_BUCKET):
-                    # MINOR compaction (r13): merge only the append
-                    # runs, cost ∝ appended bytes — the pigeonhole
+                    # MINOR compaction: merge only the append runs, cost
+                    # ∝ appended bytes — the pigeonhole
                     # guarantees at least one bucket is above the
                     # per-bucket threshold whenever the average trips
                     _minor_compact_one(spark, path, name, tbl)
@@ -1004,7 +1011,7 @@ def _build_layout_tables(
         if name == "embeddings":
             # the width of the STORED assignment — layout_lsh_planes
             # reads this so the vector family only trusts a stored
-            # bucket built at the width it is probing (r11)
+            # bucket built at the width it is probing
             spark.conf.set(conf_key + ".lsh_planes", str(int(eff_planes)))
         spark.conf.set(conf_key, tbl)
         built[name] = tbl
@@ -1033,7 +1040,7 @@ def _runs_per_bucket(path: str, tbl: str, manifest: dict) -> float:
     return n_files / max(1, int(manifest.get("buckets", 1)))
 
 
-# Auto-compaction threshold (r10, verdict ask 5): compact a layout
+# Auto-compaction threshold: compact a layout
 # table once its appends average more than this many sorted runs per
 # bucket. Economics from the K=100 lifecycle probe (SCALE.md §18a):
 # one compaction costs ~½ an append (2.7 s vs 4.7 s) and resets the
@@ -1055,15 +1062,9 @@ def _compact_one(spark: SparkSession, path: str, name: str,
     from . import io as _io
 
     key = LAYOUT_BUCKET_KEYS[name]
-    _recover_compact_swap(path, tbl)  # r14 ask 2: heal a killed swap
-    manifest = _read_manifest(path, tbl)
-    if manifest is None:
-        raise ValueError(
-            f"no manifest for layout table {tbl!r} under "
-            f"{path!r} — compact only manifest-tracked layouts "
-            f"(rebuild with build_workload_layout first)")
+    manifest = _compaction_manifest(path, tbl)
     tbl_dir = os.path.join(path, tbl)
-    tmp_dir = os.path.join(path, tbl + "_compact_tmp")
+    tmp_dir = _layout_swap(path, tbl).staged
     tmp_tbl = tbl + "_compact_tmp"
 
     before = _layout_n_files(tbl_dir)
@@ -1089,89 +1090,38 @@ def _compact_one(spark: SparkSession, path: str, name: str,
     # swap: catalog entry for the tmp table goes (external drop
     # keeps files), then the data directories trade places
     spark.sql(f"DROP TABLE {tmp_tbl}")
-    _swap_compacted(spark, path, tbl, tmp_dir, {
+    _swap_compacted(spark, path, tbl, {
         **manifest,
         "compactions": int(manifest.get("compactions", 0)) + 1,
     })
     return before, _layout_n_files(tbl_dir)
 
 
-def _recover_compact_swap(path: str, tbl: str) -> None:
-    """Writer-side heal of a compaction swap interrupted by PROCESS
-    DEATH (r14, verdict ask 2 — proven by kill -9 injection, not
-    simulated files: scripts/crash_injection_probe.py).
-
-    :func:`_swap_compacted` trades directories in two renames; a crash
-    between them leaves the live table directory MISSING with the
-    pre-compaction tree parked at ``<tbl>_compact_old`` (its manifest
-    inside — the manifest travels with the directory). Readers fail
-    loudly in that window (the catalog table points at a missing
-    path); the heal is O(1): rename the parked tree back. A crash
-    AFTER the second rename but before the manifest write leaves a
-    valid compacted tree with no manifest — that degrades to the loud
-    full-rebuild posture (manifest None), correct but O(corpus), and
-    is left alone here because the parked old tree is the
-    known-good state only in the missing-target window.
-
-    Called ONLY by maintainer entry points under the build lock
-    (_compact_one, _minor_compact_one, _build_layout_tables) — the
-    sketch-store posture: single maintainer heals, readers never
-    mutate. Leftover ``_compact_tmp``/``_minor_scratch`` trees from a
-    crashed run are cleared by the compaction paths themselves (they
-    rmtree before building)."""
-    import shutil
-
-    tbl_dir = os.path.join(path, tbl)
-    old_dir = tbl_dir + "_compact_old"
-    if not os.path.isdir(tbl_dir) and os.path.isdir(old_dir):
-        os.rename(old_dir, tbl_dir)
-        return
-    # both present: the crash landed after the second rename (new tree
-    # live) — the parked old tree is superseded garbage
-    if os.path.isdir(tbl_dir) and os.path.isdir(old_dir) \
-            and _read_manifest(path, tbl) is not None:
-        shutil.rmtree(old_dir, ignore_errors=True)
+def _compaction_manifest(path: str, tbl: str) -> dict:
+    """Heal an interrupted swap, then return the table's manifest.
+    Compaction refuses a table without one."""
+    _layout_swap(path, tbl).heal()
+    manifest = _read_manifest(path, tbl)
+    if manifest is None:
+        raise ValueError(
+            f"no manifest for layout table {tbl!r} under {path!r} — "
+            f"compact only manifest-tracked layouts "
+            f"(rebuild with build_workload_layout first)")
+    return manifest
 
 
 def _swap_compacted(spark: SparkSession, path: str, tbl: str,
-                    tmp_dir: str, new_manifest: dict) -> None:
-    """Directory-swap tail shared by major and minor compaction: trade
-    the live table directory for the freshly-built ``tmp_dir``, write
-    the manifest, REFRESH, delete the old tree — failure-safe."""
-    import shutil
-
-    from .crashpoints import crash_point
-
-    tbl_dir = os.path.join(path, tbl)
-    old_dir = os.path.join(path, tbl + "_compact_old")
-    shutil.rmtree(old_dir, ignore_errors=True)
-    os.rename(tbl_dir, old_dir)
-    crash_point("layout_swap_between_renames")  # r14 ask 2: kill -9 seam
-    try:
-        os.rename(tmp_dir, tbl_dir)
-        # the old manifest traveled away with old_dir; the
-        # compacted tree gets a fresh one (same fingerprint —
-        # the SOURCE didn't move)
-        _write_manifest(path, tbl, new_manifest)
-    except BaseException:
-        # failure-safe swap (r10 ADVICE): the still-registered
-        # catalog table must never point at a missing or
-        # manifest-less directory — park whatever landed and
-        # restore the original tree + manifest
-        if os.path.isdir(old_dir):
-            if os.path.isdir(tbl_dir):
-                failed = tbl_dir + "_compact_failed"
-                shutil.rmtree(failed, ignore_errors=True)
-                os.rename(tbl_dir, failed)
-            os.rename(old_dir, tbl_dir)
-        raise
-    # REFRESH before deleting the old tree: queries planned from here
-    # on list the compacted files; only a query already executing
-    # against the pre-swap listing races the delete (the honest limit
-    # of directory-swap compaction on a plain filesystem — pinned by
-    # tests/test_workload_layout.py's concurrent-reader test)
-    spark.sql(f"REFRESH TABLE {tbl}")
-    shutil.rmtree(old_dir, ignore_errors=True)
+                    new_manifest: dict) -> None:
+    """Publish ``<tbl>_compact_tmp`` as the live table. The manifest is
+    written after the second rename, inside the swap's protected region,
+    so a death between the renames heals by rolling back in O(1). The
+    table is REFRESHed before the superseded tree is deleted: queries
+    planned from then on list the new files, and only a query already
+    executing against the old listing races the delete (pinned by
+    tests/test_workload_layout.py's concurrent-reader test)."""
+    _layout_swap(path, tbl).publish(
+        then=lambda: _write_manifest(path, tbl, new_manifest),
+        before_drop=lambda: spark.sql(f"REFRESH TABLE {tbl}"))
 
 
 # Minor compaction merges a bucket's append RUNS once it holds at least
@@ -1185,14 +1135,14 @@ def _minor_compact_one(spark: SparkSession, path: str, name: str,
                        tbl: str,
                        min_files: int = LAYOUT_MINOR_COMPACT_MIN_FILES,
                        ) -> tuple[int, int]:
-    """SELECTIVE (LSM-minor) compaction of one layout table (r13,
-    verdict ask 3): merge only the accumulated append RUNS — every
-    file of a bucket/partition except its largest — and HARDLINK
-    everything else into the new tree, so the rewrite cost scales with
-    the APPENDED fraction, not the corpus size. r12 measured the full
-    rewrite at 63.3 s vs 68.8 s rebuild at the 9.8 M-vector tier (8%
-    margin — because _compact_one rewrites every bucket's base data);
-    minor compaction reads and writes ONLY run bytes. Buckets below
+    """SELECTIVE (LSM-minor) compaction of one layout table: merge only
+    the accumulated append RUNS — every file of a bucket/partition
+    except its largest — and HARDLINK everything else into the new
+    tree, so the rewrite cost scales with the APPENDED fraction, not the
+    corpus size. The full rewrite (_compact_one) costs 63.3 s against a
+    68.8 s rebuild at the 9.8 M-vector tier, because it rewrites every
+    bucket's base data; minor compaction reads and writes ONLY run
+    bytes. Buckets below
     ``min_files`` are untouched (read fan-in ≤ 2 is fine); the base
     file of a compacted bucket is linked, never copied. Read fan-in
     after a pass is ≤ 2 (base + one merged run); the merged run grows
@@ -1209,13 +1159,7 @@ def _minor_compact_one(spark: SparkSession, path: str, name: str,
     from . import io as _io
 
     key = LAYOUT_BUCKET_KEYS[name]
-    _recover_compact_swap(path, tbl)  # r14 ask 2: heal a killed swap
-    manifest = _read_manifest(path, tbl)
-    if manifest is None:
-        raise ValueError(
-            f"no manifest for layout table {tbl!r} under {path!r} — "
-            f"compact only manifest-tracked layouts "
-            f"(rebuild with build_workload_layout first)")
+    manifest = _compaction_manifest(path, tbl)
     tbl_dir = os.path.join(path, tbl)
     before = _layout_n_files(tbl_dir)
     partitioned = name in LAYOUT_VALUE_PARTITIONED
@@ -1278,10 +1222,10 @@ def _minor_compact_one(spark: SparkSession, path: str, name: str,
 
     from .crashpoints import crash_point
 
-    crash_point("minor_compact_mid_scratch")  # r14 ask 2: kill -9 seam
+    crash_point("minor_compact_mid_scratch")
     # assemble the new tree: hardlinks for every kept file (zero data
     # movement), the merged run files moved in from scratch
-    tmp_dir = os.path.join(path, tbl + "_compact_tmp")
+    tmp_dir = _layout_swap(path, tbl).staged
     shutil.rmtree(tmp_dir, ignore_errors=True)
     os.makedirs(tmp_dir)
     for f in kept:
@@ -1298,7 +1242,7 @@ def _minor_compact_one(spark: SparkSession, path: str, name: str,
             os.rename(src, dst)
     shutil.rmtree(scratch, ignore_errors=True)
 
-    _swap_compacted(spark, path, tbl, tmp_dir, {
+    _swap_compacted(spark, path, tbl, {
         **manifest,
         "minor_compactions":
             int(manifest.get("minor_compactions", 0)) + 1,
@@ -1347,7 +1291,7 @@ def compact_workload_layout(spark: SparkSession, sf_dir: str,
                             full: bool = True,
                             ) -> dict[str, tuple[int, int]]:
     """Merge a layout table's accumulated append runs back to one file
-    per bucket (r9 — the maintenance seam incremental appends open):
+    per bucket (the maintenance seam incremental appends open):
     every :func:`build_workload_layout` append lands one new sorted
     file per touched bucket, so a monthly cadence grows files-per-
     bucket linearly and eventually hits the small-files pathology the
@@ -1367,12 +1311,12 @@ def compact_workload_layout(spark: SparkSession, sf_dir: str,
     way with a per-partition-value repartition. Single-writer via the
     build lockfile. Returns {table: (files_before, files_after)}.
 
-    Since r10 this is also called AUTOMATICALLY by the maintenance
+    This is also called AUTOMATICALLY by the maintenance
     path: an incremental append that pushes a table past
     ``LAYOUT_COMPACT_RUNS_PER_BUCKET`` average runs per bucket
     triggers a compaction of that table under the same build lock.
 
-    ``full=False`` (r13, verdict ask 3) runs the SELECTIVE minor step
+    ``full=False`` runs the SELECTIVE minor step
     instead — :func:`_minor_compact_one` merges only each bucket's
     accumulated append runs and hardlinks the untouched base files, so
     the cost scales with the appended fraction rather than the corpus
@@ -1385,48 +1329,15 @@ def compact_workload_layout(spark: SparkSession, sf_dir: str,
         raise ValueError(
             f"not layout tables: {unknown} — compactable tables are "
             f"{sorted(LAYOUT_BUCKET_KEYS)} (LAYOUT_BUCKET_KEYS)")
-    lock = _acquire_build_lock(path)
-    try:
-        out: dict[str, tuple[int, int]] = {}
+    out: dict[str, tuple[int, int]] = {}
+    with _build_lock(path):
         for name in names:
-            conf_key = _layout_conf_key(sf_dir, name)
-            tbl = spark.conf.get(conf_key, None)
-            if tbl is None:
-                continue
-            out[name] = (_compact_one(spark, path, name, tbl) if full
-                         else _minor_compact_one(spark, path, name, tbl))
-        return out
-    finally:
-        try:
-            os.remove(lock)
-        except OSError:
-            pass
-
-
-def check_stream_identity(owner, last: int, stream_id, batch_id: int,
-                          what: str, advice: str) -> bool:
-    """Shared exactly-once replay decision for every streaming
-    maintainer — the sketch writers (queries/llm.py) and the layout
-    ingest below delegate here so the rule can never drift between
-    stores (r13 review; the rule itself is the r12 ADVICE fix):
-    batch ids are only monotonic WITHIN one checkpoint, so the guard
-    is keyed on (stream identity, batch id). Returns True when the
-    batch is a replay (caller no-ops); raises when a DIFFERENT
-    identity presents a non-monotonic batch id (a fresh/relocated
-    checkpoint restarting at 0 — treating those as replays would
-    silently drop new data); returns False when the batch should fold
-    in. ``last < 0`` marks batch-built state any stream may adopt."""
-    if last < 0:
-        return False
-    if owner != stream_id and int(batch_id) <= last:
-        raise ValueError(
-            f"{what} was last maintained by stream {owner!r} up to "
-            f"batch {last}, but stream {stream_id!r} presented batch "
-            f"{batch_id}: a fresh/relocated checkpoint restarts batch "
-            f"ids at 0, and treating this as a replay would silently "
-            f"drop new data. Resume the ORIGINAL checkpoint, or "
-            f"{advice}")
-    return int(batch_id) <= last
+            tbl = spark.conf.get(_layout_conf_key(sf_dir, name), None)
+            if tbl is not None:
+                out[name] = (
+                    _compact_one(spark, path, name, tbl) if full
+                    else _minor_compact_one(spark, path, name, tbl))
+    return out
 
 
 def _stream_marker_path(src_path: str) -> str:
@@ -1442,10 +1353,8 @@ def layout_ingest_writer(sf_dir: str, path: str, name: str,
                          lsh_planes: int | None = None,
                          publish: str = "write",
                          source_log: str | None = None):
-    """Per-batch maintainer for a STREAMING layout source (r13 — the
-    lifecycle symmetry the sketch products completed in r12/r13: every
-    stored product now has build / incremental-append / streaming
-    maintenance / serve). Each micro-batch publishes into the SOURCE
+    """Per-batch maintainer for a STREAMING layout source. Each
+    micro-batch publishes into the SOURCE
     directory as deterministically named part files, then the standard
     incremental maintenance path (:func:`build_workload_layout`)
     bucketizes ONLY that delta into the layout — the reference's
@@ -1472,9 +1381,9 @@ def layout_ingest_writer(sf_dir: str, path: str, name: str,
        marker but before the append leaves pending source parts that
        the replay (or the next batch, or any manual build) folds in.
 
-    Identity semantics mirror the sketch writers'
-    (``queries/llm._check_stream_identity``): batch ids are only
-    monotonic WITHIN one checkpoint, so a DIFFERENT stream identity
+    The replay decision is :func:`store.check_stream_identity`, shared
+    with the sketch writers: batch ids are only monotonic WITHIN one
+    checkpoint, so a DIFFERENT stream identity
     presenting a non-monotonic batch id refuses loudly instead of
     silently skipping genuinely new data as replays; a different
     stream with a monotonically HIGHER batch id may adopt the source
@@ -1483,7 +1392,7 @@ def layout_ingest_writer(sf_dir: str, path: str, name: str,
     Single-maintainer posture: while a stream owns a source directory,
     concurrent layout builds from OTHER sessions are excluded by the
     build lock, and manual builds between CLEAN batches are safe (the
-    diff is append-only). r13 ADVICE caveat: a manual build that lands
+    diff is append-only). Caveat: a manual build that lands
     inside the crash-before-marker window consumes a crashed batch's
     PARTIAL publication; the subsequent replay deletes and rewrites
     those files, which the differ correctly reads as non-append drift
@@ -1492,16 +1401,16 @@ def layout_ingest_writer(sf_dir: str, path: str, name: str,
     through to the underlying build — the first batch against a fresh
     layout is the full build that fixes them.
 
-    ``publish`` (r15 optimization, guide §1.2 — don't recompute what a
-    cheaper operation moves): how a batch's rows land in the source
-    directory.
+    ``publish``: how a batch's rows land in the source directory.
 
     - ``"write"`` (default): ``batch_df.write.parquet`` — a Spark job
       that re-serializes every batch row. Works for ANY streamed
       frame (transformed, non-file sources) and is the durable
       general path.
-    - ``"link"``: hardlink (copy across filesystems) the batch's own
-      INPUT FILES under the deterministic names — a metadata move, no
+    - ``"link"``: hardlink the batch's own INPUT FILES under the
+      deterministic names (a copy only where the filesystem refuses
+      links: EXDEV, EPERM, EOPNOTSUPP; any other error propagates and
+      nothing is published) — a metadata move, no
       Spark job, no byte rewrite. ONLY valid when the streamed frame
       is a BARE file-source scan of immutable feed files (no
       filter/projection/transform — the batch's rows are exactly its
@@ -1532,6 +1441,7 @@ def layout_ingest_writer(sf_dir: str, path: str, name: str,
     src_path = os.path.join(sf_dir, f"{name}.parquet")
 
     def _ingest(batch_df, batch_id: int) -> None:
+        import errno as _errno
         import glob as _glob
         import hashlib as _hashlib
         import json as _json
@@ -1540,18 +1450,11 @@ def layout_ingest_writer(sf_dir: str, path: str, name: str,
         spark = batch_df.sparkSession
         os.makedirs(src_path, exist_ok=True)
         marker = _stream_marker_path(src_path)
-        state = None
-        if os.path.exists(marker):
-            with open(marker) as fh:
-                state = _json.load(fh)
-        replay = False
-        if state is not None:
-            replay = check_stream_identity(
-                state.get("stream_id"),
-                int(state.get("last_batch_id", -1)),
-                stream_id, batch_id,
-                f"layout source at {src_path}",
-                "feed the new stream into its own source directory.")
+        state = store.read_json(marker) or {}
+        replay = store.check_stream_identity(
+            state.get("stream_id"), int(state.get("last_batch_id", -1)),
+            stream_id, batch_id, f"layout source at {src_path}",
+            "feed the new stream into its own source directory.")
         if not replay:
             sid = _hashlib.sha1(str(stream_id).encode()).hexdigest()[:8]
             stem = f"part-graft-{sid}-{int(batch_id):09d}-"
@@ -1600,8 +1503,8 @@ def layout_ingest_writer(sf_dir: str, path: str, name: str,
                         f"entry at {log_file} — the stream's source is "
                         f"not a file source (or not source 0). Use the "
                         f"default publish='write'. ({exc})") from exc
-                in_files = sorted(entries)
-                if not in_files:
+                files = sorted(entries)
+                if not files:
                     raise ValueError(
                         f"publish='link': batch {batch_id}'s metadata "
                         f"log lists no files — use the default "
@@ -1613,7 +1516,7 @@ def layout_ingest_writer(sf_dir: str, path: str, name: str,
                 # refuse loudly rather than publish bytes the parquet
                 # maintenance path would misread (and never silently
                 # drop a file the batch actually contained)
-                odd = [p for p in in_files if not p.endswith(".parquet")]
+                odd = [p for p in files if not p.endswith(".parquet")]
                 if odd:
                     raise ValueError(
                         f"publish='link': batch {batch_id} contains "
@@ -1621,65 +1524,53 @@ def layout_ingest_writer(sf_dir: str, path: str, name: str,
                         f"the link contract is a bare PARQUET file "
                         f"source; use the default publish='write'.")
                 src_abs = os.path.abspath(src_path) + os.sep
-                for p in in_files:
+                for p in files:
                     if os.path.abspath(p).startswith(src_abs):
                         raise ValueError(
                             f"publish='link' batch input {p} already "
                             f"lives inside the source directory "
                             f"{src_path} — self-publication would "
                             f"duplicate rows.")
-                # same replay posture as the write path: a crashed
-                # attempt's partial publication is deleted and re-linked
-                for f in _glob.glob(os.path.join(src_path,
-                                                 stem + "*.parquet")):
-                    os.remove(f)
-                # dot-prefixed temp names: hidden from Spark's file
-                # listing AND from every *.parquet glob in this module,
-                # so a crash mid-link can never leave a stray the
-                # readers or the write-path cleanup would miss (the
-                # write path's underscore-prefixed temp dir posture)
-                for stale in _glob.glob(
-                        os.path.join(src_path, f".{stem}*.inprogress")):
-                    try:
-                        os.remove(stale)
-                    except OSError:
-                        pass
-                for i, p in enumerate(in_files):
-                    dst = os.path.join(src_path, f"{stem}{i:05d}.parquet")
-                    tmpdst = os.path.join(
-                        src_path, f".{stem}{i:05d}.inprogress")
-                    try:
-                        os.link(p, tmpdst)
-                    except OSError:  # cross-device: fall back to copy
-                        _shutil.copy2(p, tmpdst)
-                    os.replace(tmpdst, dst)
             else:
                 tmp = os.path.join(src_path, f"_graft_ingest_tmp_{sid}")
                 _shutil.rmtree(tmp, ignore_errors=True)
                 batch_df.write.mode("overwrite").parquet(tmp)
-                # a crashed prior attempt may have published a PARTIAL
-                # set of files (the marker proves the layout never
-                # consumed them — consumption only happens after the
-                # marker commit)
-                for f in _glob.glob(os.path.join(src_path,
-                                                 stem + "*.parquet")):
-                    os.remove(f)
-                parts = sorted(f for f in os.listdir(tmp)
+                files = sorted(os.path.join(tmp, f) for f in os.listdir(tmp)
                                if f.endswith(".parquet"))
-                for i, f in enumerate(parts):
-                    os.replace(os.path.join(tmp, f),
-                               os.path.join(src_path,
-                                            f"{stem}{i:05d}.parquet"))
+            # a crashed attempt's partial publication is deleted and
+            # republished: the marker proves the layout never consumed
+            # it (consumption only happens after the marker commit)
+            for f in (_glob.glob(os.path.join(src_path, stem + "*.parquet"))
+                      + _glob.glob(os.path.join(src_path,
+                                                f".{stem}*.inprogress"))):
+                os.remove(f)
+            for i, p in enumerate(files):
+                if publish == "link":
+                    # dot-prefixed temp name: hidden from Spark's file
+                    # listing and from every *.parquet glob, so a crash
+                    # mid-link leaves no stray a reader could see
+                    tmpdst = os.path.join(
+                        src_path, f".{stem}{i:05d}.inprogress")
+                    try:
+                        os.link(p, tmpdst)
+                    except OSError as exc:
+                        # a filesystem that cannot link copies; any
+                        # other failure (ENOSPC, EIO, ...) is real
+                        if exc.errno not in (_errno.EXDEV, _errno.EPERM,
+                                             _errno.EOPNOTSUPP):
+                            raise
+                        _shutil.copy2(p, tmpdst)
+                    p = tmpdst
+                os.replace(p, os.path.join(src_path,
+                                           f"{stem}{i:05d}.parquet"))
+            if publish == "write":
                 _shutil.rmtree(tmp, ignore_errors=True)
             from .crashpoints import crash_point
 
-            crash_point("layout_publish_before_marker")  # r14 ask 2
-            mtmp = marker + ".tmp"
-            with open(mtmp, "w") as fh:
-                _json.dump({"stream_id": stream_id,
-                            "last_batch_id": int(batch_id)}, fh)
-            os.replace(mtmp, marker)
-            crash_point("layout_marker_before_append")  # r14 ask 2
+            crash_point("layout_publish_before_marker")
+            store.write_json(marker, {"stream_id": stream_id,
+                                      "last_batch_id": int(batch_id)})
+            crash_point("layout_marker_before_append")
         # maintenance on every call: idempotent manifest diff; heals a
         # crash that landed between the marker commit and the append
         build_workload_layout(spark, sf_dir, path, buckets=buckets,
@@ -1694,7 +1585,7 @@ def stream_append_layout(stream_df, sf_dir: str, path: str, name: str,
                          lsh_planes: int | None = None,
                          publish: str = "write") -> None:
     """Drain a streaming DataFrame into a workload-layout SOURCE and
-    keep the layout incrementally maintained (r13): foreachBatch +
+    keep the layout incrementally maintained: foreachBatch +
     checkpoint (source offset tracking) + :func:`layout_ingest_writer`
     (replay-guarded deterministic publication + manifest-diff append)
     = exactly-once layout maintenance. availableNow trigger — call
@@ -1706,17 +1597,15 @@ def stream_append_layout(stream_df, sf_dir: str, path: str, name: str,
     zero-rewrite publication for bare single-file-source replays (see
     there for the contract); the batch→files mapping is read from THIS
     checkpoint's ``sources/0`` metadata log."""
+    from .streaming import drain_available_now
+
     writer = layout_ingest_writer(
         sf_dir, path, name, stream_id=os.path.abspath(checkpoint),
         buckets=buckets, lsh_planes=lsh_planes, publish=publish,
         source_log=(os.path.join(os.path.abspath(checkpoint),
                                  "sources", "0")
                     if publish == "link" else None))
-    q = (stream_df.writeStream.foreachBatch(writer)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    drain_available_now(stream_df, writer, checkpoint)
     # foreachBatch executes against a CLONED SparkSession whose SQLConf
     # dies with the stream — the catalog TABLE is shared (it lives in
     # the shared state) but the serve registration is per-session, so

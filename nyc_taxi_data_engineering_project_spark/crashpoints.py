@@ -18,15 +18,14 @@ and kills the process inside batch 1's publish window.
 
 The registered points (each one line inside the window it names):
 
-- ``sketch_swap_between_renames`` — llm._write_sketch_parquet, between
-  ``rename(target, old)`` and ``rename(tmp, target)``: the stranded
-  swap ``_read_sketch_parquet`` must refuse and ``_recover_sketch_swap``
-  must heal.
-- ``layout_swap_between_renames`` — catalog._swap_compacted, same
-  window for the layout directory swap: readers fail loudly (the
+- ``sketch_swap_between_renames`` — the sketch cells' store.Swap
+  (llm._write_cells), between ``rename(target, old)`` and
+  ``rename(tmp, target)``: the stranded swap ``Swap.read`` must refuse
+  and the next writer's ``Swap.heal`` must repair.
+- ``layout_swap_between_renames`` — the layout compaction's store.Swap
+  (catalog._swap_compacted), same window: readers fail loudly (the
   catalog table points at a missing dir) and the next maintainer entry
-  restores the pre-compaction tree in O(1) via
-  ``catalog._recover_compact_swap``.
+  restores the pre-compaction tree in O(1) via ``Swap.heal``.
 - ``minor_compact_mid_scratch`` — catalog._minor_compact_one, after
   the merged-run write but before the hardlink assembly: nothing
   published; the next entry must clean the scratch and redo.

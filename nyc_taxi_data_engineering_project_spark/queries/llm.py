@@ -17,16 +17,20 @@ from __future__ import annotations
 
 import functools
 import itertools
+import json
 import math
 import os
 import random
+import shutil
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, Observation, Window as W, functions as F
 
-from .. import fx
+from .. import fx, store
 from ..catalog import table
 from ..pinning import pin, unpin
 from ..registry import query
+from ..streaming import drain_available_now
 
 # --------------------------------------------------------------- helpers
 
@@ -3160,14 +3164,16 @@ _CM_D = 4
 _CM_W = 4096
 
 
+def _doc_tokens(docs):
+    """Non-empty whitespace tokens of the non-null ``text`` rows."""
+    return (docs.filter(F.col("text").isNotNull())
+            .select(F.explode(_tokens()).alias("token"))
+            .filter(F.length("token") > 0))
+
+
 def _cm_token_stream(spark, sf_dir):
     """The documents token stream the CM sketch summarizes."""
-    return (
-        table(spark, sf_dir, "documents")
-        .filter(F.col("text").isNotNull())
-        .select(F.explode(_tokens()).alias("token"))
-        .filter(F.length("token") > 0)
-    )
+    return _doc_tokens(table(spark, sf_dir, "documents"))
 
 
 def _cm_bucketed(toks):
@@ -3210,382 +3216,198 @@ def cm_estimate_against(cand_bucketed, grid, complete: bool = False):
             .agg(F.min(c).alias("cm_count")))
 
 
-def _recover_sketch_swap(target: str) -> None:
-    """Heal a swap stranded by a crash between _write_sketch_parquet's
-    two renames (r12 ADVICE, medium): in that window ``target`` is
-    missing while either ``target.tmp`` (complete new cells — its
-    ``_manifest.json`` is written strictly AFTER the parquet files, so
-    its presence proves completeness) or ``target.old`` (the pre-swap
-    cells) still exists. Roll FORWARD to a complete tmp — for a
-    streaming grid the tmp carries the batch's ``last_batch_id``, so
-    the replayed epoch is then the designed no-op; otherwise roll BACK
-    to ``.old`` and let the replay re-merge. Either way the cells and
-    the replay guard move together, preserving exactly-once. Called
-    ONLY by writer entry points (_write_sketch_parquet /
-    _load_inner_manifest) — each sketch path has a single maintainer,
-    and a READER that renamed directories here would race a LIVE
-    writer mid-swap (r13 review); readers go through
-    :func:`_read_sketch_parquet`, which retries the brief window and
-    raises on a genuinely stranded swap instead of mutating."""
-    import os as _os
-    import shutil as _shutil
-
-    tmp, old = target + ".tmp", target + ".old"
-    if _os.path.exists(target):
-        return
-    if _os.path.exists(_os.path.join(tmp, "_manifest.json")):
-        _os.rename(tmp, target)
-        _shutil.rmtree(old, ignore_errors=True)
-    elif _os.path.exists(old):
-        _os.rename(old, target)
-        _shutil.rmtree(tmp, ignore_errors=True)
+# ------------------------------------------------ stored-sketch lifecycle
+# A stored sketch is a directory holding ``manifest.json`` (geometry +
+# summary: what probes and merges read) and a cells directory that
+# carries its own ``_manifest.json`` (geometry + replay guard). The cells
+# directory is published by a store.Swap, so cells and guard always move
+# together. Both sketches are linear, so build, merge and per-batch
+# update are one operation: fold cell frames, then publish.
+def _sketch_swap(target: str) -> store.Swap:
+    return store.Swap(target, target + ".tmp", target + ".old",
+                      "_manifest.json", "sketch_swap_between_renames")
 
 
-def _read_sketch_parquet(spark, target: str):
-    """Reader-side counterpart of :func:`_write_sketch_parquet` (r13
-    review): readers NEVER mutate the store — healing a stranded swap
-    is the single maintainer's job, and a reader that renamed
-    directories would race a live writer between its two renames (the
-    reader's rename(tmp→target) makes the writer's own rename throw
-    and can tear a healthy streaming query down). A reader that lands
-    in the brief missing-path window retries; a genuinely stranded
-    swap (crashed writer: .tmp/.old present, target still missing)
-    raises with the recovery named.
-
-    r13 ADVICE: the retry covers the READ itself, not just the
-    exists() probe — a writer swapping between our probe and
-    ``spark.read.parquet`` surfaces a missing-path AnalysisException,
-    which is the exact window this helper absorbs, so that exception
-    is retryable too. The budget backs off to ~1 s total (0.2/0.3/
-    0.4 s BETWEEN the four attempts — no sleep after the last try,
-    r14 self-review) so a slow filesystem mid-swap isn't misdiagnosed
-    as a stranded writer, and after composing the stranded-swap error
-    we re-check ``target`` one final time (the writer may have
-    completed while we were deciding)."""
-    import os as _os
-    import time as _time
-
-    last_exc = None
-    for attempt in range(4):
-        if attempt:  # back off BETWEEN attempts; no dead tail sleep
-            _time.sleep(0.1 * (attempt + 1))
-        if _os.path.exists(target):
-            try:
-                return spark.read.parquet(target)
-            except Exception as exc:  # missing-path race mid-swap
-                if "PATH_NOT_FOUND" not in str(exc) and \
-                        "Path does not exist" not in str(exc):
-                    raise
-                last_exc = exc
-    tmp, old = target + ".tmp", target + ".old"
-    if (_os.path.exists(_os.path.join(tmp, "_manifest.json"))
-            or _os.path.exists(old)):
-        if _os.path.exists(target):  # writer finished while we decided
-            return spark.read.parquet(target)
-        raise ValueError(
-            f"sketch at {target} has a stranded swap (crashed writer: "
-            f".tmp/.old present, target missing). Re-run its "
-            f"maintainer (build_*/stream_* heal the swap on entry); "
-            f"readers never mutate the store.") from last_exc
-    return spark.read.parquet(target)  # normal missing-path error
+def _write_cells(df, target: str, inner_manifest: dict) -> None:
+    """Publish ``df`` as single-file parquet at ``target`` with
+    ``inner_manifest`` staged inside it (parquet readers skip underscore
+    files), so a reader sees the old cells or the new ones, never a
+    partial tree. Heals an interrupted swap first: this is the writer."""
+    swap = _sketch_swap(target)
+    swap.heal()
+    shutil.rmtree(swap.staged, ignore_errors=True)
+    df.coalesce(1).write.mode("overwrite").parquet(swap.staged)
+    store.write_json(os.path.join(swap.staged, swap.manifest),
+                     inner_manifest)
+    swap.publish()
 
 
-def _write_sketch_parquet(df, target: str, inner_manifest=None) -> None:
-    """Write a (sketch-sized) frame as single-file parquet at
-    ``target`` with tmp+rename-swap semantics (the _compact_one
-    posture): no reader ever observes PARTIAL contents — Spark's own
-    overwrite deletes the old tree BEFORE the new files land, which is
-    exactly the window a rebuild-while-serving deployment hits (r12
-    review). Honesty note (r12 ADVICE): the two renames are not one —
-    a concurrent reader can see ``target`` briefly MISSING between
-    them (:func:`_read_sketch_parquet` retries that window); a crash
-    inside it strands the swap, which the next WRITER call heals via
-    :func:`_recover_sketch_swap` — readers raise rather than heal, so
-    they can never race a live writer's rename (r13 review).
-    ``inner_manifest`` (a dict) is staged
-    as ``_manifest.json`` INSIDE the directory (parquet readers skip
-    underscore files) after the cells and before the swap, so manifest
-    and cells publish in the same rename — the streaming replay
-    guard's atomicity contract."""
-    import json as _json
-    import os as _os
-    import shutil as _shutil
+class _Sketch(NamedTuple):
+    """What differs between the stored sketches."""
 
-    from ..crashpoints import crash_point
+    kind: str                    # noun for refusals
+    builder: str                 # the public builder a refusal names
+    cells: str                   # cells directory under the sketch path
+    geometry: dict               # fields that must equal the engine's
+    of_docs: Callable            # documents frame -> cells
+    fold: Callable               # union of cell frames -> cells
+    summary: str                 # manifest field summarizing the cells
+    summarize: Callable          # stored cells -> int
 
-    _recover_sketch_swap(target)
-    tmp, old = target + ".tmp", target + ".old"
-    _shutil.rmtree(tmp, ignore_errors=True)
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    if inner_manifest is not None:
-        with open(_os.path.join(tmp, "_manifest.json"), "w") as fh:
-            _json.dump(inner_manifest, fh)
-    _shutil.rmtree(old, ignore_errors=True)
-    if _os.path.exists(target):
-        _os.rename(target, old)
-    crash_point("sketch_swap_between_renames")  # r14 ask 2: kill -9 seam
-    _os.rename(tmp, target)
-    _shutil.rmtree(old, ignore_errors=True)
+    def check_geometry(self, manifest: dict, where: str) -> None:
+        drift = [f"{k}={manifest.get(k)} != engine {k}={v}"
+                 for k, v in self.geometry.items() if manifest.get(k) != v]
+        if drift:
+            raise ValueError(
+                f"{self.kind} at {where} has geometry {', '.join(drift)};"
+                f" sketches build, merge and probe at one geometry — "
+                f"rebuild it ({self.builder}) or use the matching engine "
+                f"version.")
+
+    def load(self, spark, path: str):
+        """(manifest, cells) of the sketch stored at ``path``; refuses a
+        geometry other than the engine's."""
+        with open(os.path.join(path, "manifest.json")) as fh:
+            manifest = json.load(fh)
+        self.check_geometry(manifest, path)
+        target = os.path.join(path, self.cells)
+        return manifest, _sketch_swap(target).read(spark)
+
+    def publish(self, spark, path: str, cells, source=None,
+                last_batch_id: int = -1, stream_id=None) -> dict:
+        """Store ``cells`` as the sketch at ``path`` and return its
+        manifest. The replay guard (``last_batch_id``, ``stream_id``)
+        publishes with the cells; ``last_batch_id=-1`` marks batch-built
+        cells that a stream folds in rather than replaces. The summary
+        is computed from the stored cells, so it cannot drift from
+        them."""
+        target = os.path.join(path, self.cells)
+        os.makedirs(path, exist_ok=True)
+        _write_cells(cells, target, {**self.geometry,
+                                     "last_batch_id": last_batch_id,
+                                     "stream_id": stream_id})
+        manifest = {**self.geometry, self.summary:
+                    int(self.summarize(spark.read.parquet(target)))}
+        if source is not None:
+            manifest["source"] = source
+        if last_batch_id >= 0:
+            manifest["last_batch_id"] = last_batch_id
+        store.write_json(os.path.join(path, "manifest.json"), manifest)
+        return manifest
+
+    def merge(self, spark, paths, out_path: str) -> dict:
+        opened = [self.load(spark, p) for p in paths]
+        sources = [m["source"] for m, _ in opened if "source" in m]
+        merged = functools.reduce(lambda a, b: a.unionByName(b),
+                                  [cells for _, cells in opened])
+        return self.publish(spark, out_path, self.fold(merged),
+                            source=sources or None)
+
+    def update_writer(self, path: str, stream_id):
+        target = os.path.join(path, self.cells)
+        swap = _sketch_swap(target)
+
+        def _update(batch_df, batch_id: int) -> None:
+            spark = batch_df.sparkSession
+            swap.heal()
+            inner = store.read_json(os.path.join(target, swap.manifest))
+            if inner is None and os.path.exists(target):
+                raise ValueError(
+                    f"{self.kind} at {target} exists without a readable "
+                    f"inner _manifest.json (built by an older engine, or "
+                    f"foreign data): streaming onto it would silently "
+                    f"replace the stored state with the first batch. "
+                    f"Rebuild it ({self.builder}) or move it aside.")
+            cells = self.of_docs(batch_df)
+            if inner is not None:
+                self.check_geometry(inner, target)
+                if store.check_stream_identity(
+                        inner.get("stream_id"),
+                        int(inner.get("last_batch_id", -1)),
+                        stream_id, batch_id, f"sketch at {target}",
+                        "build the new stream into its own path and "
+                        "merge the sketches (they are linear)."):
+                    return  # replayed epoch: already folded in
+                cells = self.fold(
+                    spark.read.parquet(target).unionByName(cells))
+            self.publish(spark, path, cells, source="stream",
+                         last_batch_id=int(batch_id), stream_id=stream_id)
+
+        return _update
+
+    def stream(self, docs_stream, path: str, checkpoint: str) -> None:
+        os.makedirs(path, exist_ok=True)
+        drain_available_now(
+            docs_stream,
+            self.update_writer(path, os.path.abspath(checkpoint)),
+            checkpoint)
+
+
+_CM = _Sketch(
+    kind="CM grid", builder="build_cm_grid", cells="grid.parquet",
+    geometry={"d": _CM_D, "w": _CM_W},
+    of_docs=lambda docs: _cm_grid_of(_doc_tokens(docs)),
+    fold=lambda cells: (cells.groupBy("i", "bucket")
+                        .agg(F.sum("c").alias("c"))),
+    summary="total",
+    # every occurrence lands in exactly one row-0 cell
+    summarize=lambda cells: (cells.filter(F.col("i") == 0)
+                             .agg(F.sum("c")).collect()[0][0]) or 0,
+)
 
 
 def build_cm_grid(spark, sf_dir: str, path: str) -> dict:
-    """Productized count-min deployment, step 1 (r11 verdict ask 3):
-    summarize the documents token stream into a PERSISTED grid at
-    ``path`` — f34's exact geometry (d=4 × w=4096, one-md5 split) —
-    so a later session estimates any queried token without touching
-    the corpus again. This is the API f34's docstring promises: "a
-    100 TB deployment estimates only QUERIED tokens against the same
-    stored grid". One pass over the stream builds the grid; the stream
-    total falls out of the grid itself (every occurrence lands in
-    exactly one row-0 cell), so no second scan. Returns the manifest
-    {d, w, total, source}, also written atomically next to the data
-    (the io.py temp+rename posture)."""
-    import json as _json
-    import os as _os
-
-    toks = _cm_token_stream(spark, sf_dir)
-    grid = _cm_grid_of(toks)
-    _os.makedirs(path, exist_ok=True)
-    # inner manifest ships WITH the cells (r12 ADVICE): a later
-    # stream_cm_grid onto this path sees geometry + last_batch_id=-1
-    # and FOLDS the stored counts in instead of silently replacing them
-    _write_sketch_parquet(
-        grid, _os.path.join(path, "grid.parquet"),
-        inner_manifest={"d": _CM_D, "w": _CM_W, "last_batch_id": -1,
-                        "stream_id": None})
-    stored = spark.read.parquet(_os.path.join(path, "grid.parquet"))
-    total = (stored.filter(F.col("i") == 0)
-             .agg(F.sum("c")).collect()[0][0]) or 0
-    manifest = {"d": _CM_D, "w": _CM_W, "total": int(total),
-                "source": sf_dir}
-    tmp = _os.path.join(path, ".manifest.json.tmp")
-    with open(tmp, "w") as fh:
-        _json.dump(manifest, fh)
-    _os.replace(tmp, _os.path.join(path, "manifest.json"))
-    return manifest
+    """Summarize the documents token stream into a count-min grid stored
+    at ``path`` — f34's geometry (d=4 × w=4096, one-md5 split) — so a
+    later session estimates any token without touching the corpus. One
+    pass builds the grid; the stream total falls out of its row-0 cells.
+    Returns the manifest {d, w, total, source}. A later
+    :func:`stream_cm_grid` onto ``path`` folds these counts in."""
+    return _CM.publish(spark, path,
+                       _CM.of_docs(table(spark, sf_dir, "documents")),
+                       source=sf_dir)
 
 
 def cm_estimate(spark, path: str, tokens):
-    """Productized count-min deployment, step 2: estimate the stream
-    frequency of ``tokens`` (a list of strings, or any DataFrame with
-    a ``token`` column) against the grid stored by
-    :func:`build_cm_grid` — (token, cm_count), never under the true
-    count (CM's one-sided guarantee; a token absent from the
-    summarized stream estimates its true 0 unless it collides on all
-    d rows). Refuses loudly if the stored geometry differs from the
-    engine's — estimating at the wrong width would silently return
-    garbage, the catalog's stale-layout posture."""
-    import json as _json
-    import os as _os
-
-    with open(_os.path.join(path, "manifest.json")) as fh:
-        manifest = _json.load(fh)
-    if manifest.get("d") != _CM_D or manifest.get("w") != _CM_W:
-        raise ValueError(
-            f"stored CM grid at {path} was built at geometry "
-            f"d={manifest.get('d')} w={manifest.get('w')}, but this "
-            f"engine estimates at d={_CM_D} w={_CM_W}; rebuild the "
-            f"grid (build_cm_grid) or use the matching engine version."
-        )
+    """Estimate the stream frequency of ``tokens`` (a list of strings, or
+    any DataFrame with a ``token`` column) against the grid stored at
+    ``path``: (token, cm_count), never under the true count; a token
+    absent from the stream estimates its true 0 unless it collides on
+    all d rows. Refuses a grid stored under another geometry."""
+    _, grid = _CM.load(spark, path)
     if not hasattr(tokens, "columns"):
         tokens = spark.createDataFrame(
             [(t,) for t in tokens], "token string")
-    grid = _read_sketch_parquet(spark, _os.path.join(path,
-                                                     "grid.parquet"))
     return cm_estimate_against(
         _cm_bucketed(tokens.select("token").distinct()), grid,
         complete=True)
 
 
-def _load_inner_manifest(target: str, kind: str, geometry: dict):
-    """Shared replay-guard preamble for the streaming sketch writers:
-    heal a stranded swap, then load + validate the inner manifest that
-    travels with the cells. Returns the manifest dict, or None when no
-    sketch exists yet. Raises on geometry drift and — r12 ADVICE — on
-    a stored sketch that predates the inner manifest (streaming onto
-    it would silently discard the stored state)."""
-    import json as _json
-    import os as _os
-
-    _recover_sketch_swap(target)
-    inner = _os.path.join(target, "_manifest.json")
-    if _os.path.exists(inner):
-        with open(inner) as fh:
-            manifest = _json.load(fh)
-        drift = {k: (manifest.get(k), v) for k, v in geometry.items()
-                 if manifest.get(k) != v}
-        if drift:
-            raise ValueError(
-                f"streaming {kind} at {target} has geometry "
-                + ", ".join(f"{k}={got} != engine {k}={want}"
-                            for k, (got, want) in drift.items()))
-        return manifest
-    if _os.path.exists(target):
-        raise ValueError(
-            f"{kind} at {target} exists without an inner _manifest.json "
-            f"(pre-r13 build, or foreign data): streaming onto it would "
-            f"silently replace the stored state with the first batch. "
-            f"Rebuild it with this engine (the builders now write the "
-            f"inner manifest) or move it aside.")
-    return None
-
-
-def _check_stream_identity(manifest, stream_id, batch_id: int,
-                           target: str) -> bool:
-    """Replay-guard decision shared by the streaming sketch writers
-    (r12 ADVICE: batch_id alone is ambiguous ACROSS checkpoints — a
-    fresh/deleted checkpoint restarts foreachBatch ids at 0, and
-    treating those as replays silently drops genuinely new data).
-    Since r13 the DECISION itself lives in one place —
-    ``catalog.check_stream_identity`` — shared with the layout's
-    streaming ingest, so the exactly-once rule cannot drift between
-    stores; this wrapper supplies the sketch wording (last_batch_id=-1
-    marks a batch-built sketch any stream may adopt)."""
-    from ..catalog import check_stream_identity
-
-    return check_stream_identity(
-        manifest.get("stream_id"),
-        int(manifest.get("last_batch_id", -1)),
-        stream_id, batch_id, f"sketch at {target}",
-        "build the new stream into its own path and merge the "
-        "sketches (they are linear).")
-
-
 def cm_update_writer(path: str, stream_id=None):
-    """Per-batch maintainer for a STREAMING count-min grid (r12,
-    self-initiated — the sketch-product line meets D-group streaming):
-    each micro-batch of documents folds into the stored grid by
-    linearity (cell-wise sum, the merge_cm_grids property), so the grid
-    at ``path`` is always the exact grid of every document streamed so
-    far.
-
-    Exactly-once under replay: ``foreachBatch`` re-runs a batch when a
-    crash lands between sink write and checkpoint commit, and a grid
-    MERGE is not idempotent — so the authoritative manifest (geometry +
-    ``last_batch_id`` + ``stream_id``) travels INSIDE the grid
-    directory (parquet readers ignore underscore-prefixed files) and
-    publishes in the SAME rename as the cells in _write_sketch_parquet.
-    A replayed batch_id <= last_batch_id from the SAME ``stream_id`` is
-    a no-op; a crash stranded between the swap's two renames is healed
-    by _recover_sketch_swap on the next call (roll-forward keeps the
-    guard and cells together, r12 ADVICE); a DIFFERENT stream_id
-    presenting a non-monotonic batch_id REFUSES instead of silently
-    dropping data (fresh-checkpoint hazard, r12 ADVICE); and a grid
-    batch-built by :func:`build_cm_grid` is adopted by FOLDING its
-    cells in, never replaced (its inner manifest carries
-    last_batch_id=-1). ``path/manifest.json`` is mirrored after the
-    swap for :func:`cm_estimate` (geometry-only reader); ``total`` is
-    never accounted separately — it falls out of the stored row-0
-    cells, so it cannot drift from the data. Module-level factory so
-    crash tests wrap the exact production writer (the
-    epoch_overwrite_writer posture, streaming.py)."""
-    import json as _json
-    import os as _os
-
-    grid_path = _os.path.join(path, "grid.parquet")
-
-    def _update(batch_df, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        manifest = _load_inner_manifest(
-            grid_path, "CM grid", {"d": _CM_D, "w": _CM_W})
-        if manifest is not None and _check_stream_identity(
-                manifest, stream_id, batch_id, grid_path):
-            return  # replayed epoch: already folded into the cells
-        toks = (batch_df.filter(F.col("text").isNotNull())
-                .select(F.explode(_tokens()).alias("token"))
-                .filter(F.length("token") > 0))
-        merged = _cm_grid_of(toks)
-        if manifest is not None:
-            merged = (spark.read.parquet(grid_path)
-                      .unionByName(merged)
-                      .groupBy("i", "bucket").agg(F.sum("c").alias("c")))
-        _write_sketch_parquet(
-            merged, grid_path,
-            inner_manifest={"d": _CM_D, "w": _CM_W,
-                            "last_batch_id": int(batch_id),
-                            "stream_id": stream_id})
-        # best-effort mirror for cm_estimate; total from the cells
-        total = (spark.read.parquet(grid_path)
-                 .filter(F.col("i") == 0)
-                 .agg(F.sum("c")).collect()[0][0]) or 0
-        mirror_tmp = _os.path.join(path, ".manifest.json.tmp")
-        with open(mirror_tmp, "w") as fh:
-            _json.dump({"d": _CM_D, "w": _CM_W, "total": int(total),
-                        "source": "stream",
-                        "last_batch_id": int(batch_id)}, fh)
-        _os.replace(mirror_tmp, _os.path.join(path, "manifest.json"))
-
-    return _update
+    """Per-batch maintainer of a streaming count-min grid: each
+    micro-batch of documents (``text``) folds into the stored grid by
+    cell-wise sum, so the grid is always that of every document streamed
+    so far. Exactly-once under ``foreachBatch`` replay: a replayed
+    batch id from the same ``stream_id`` is a no-op, a different stream
+    presenting a non-monotonic batch id refuses, a batch-built grid is
+    folded in, and a swap interrupted by a crash heals on entry.
+    ``path/manifest.json`` is rewritten after each batch for
+    :func:`cm_estimate`."""
+    return _CM.update_writer(path, stream_id)
 
 
 def stream_cm_grid(docs_stream, path: str, checkpoint: str) -> None:
-    """Drain a streaming documents frame (``text`` column) into the
-    stored grid at ``path``: foreachBatch + checkpoint (source offset
-    tracking) + :func:`cm_update_writer` (replay-guarded atomic merge)
-    = exactly-once grid maintenance. availableNow trigger — call again
-    as new files land, or swap the trigger for a continuous cadence.
-    The checkpoint's absolute path doubles as the grid's stream
-    identity (r12 ADVICE): batch ids are only monotonic WITHIN one
-    checkpoint, so the replay guard is keyed on both — a run against a
-    fresh/relocated checkpoint refuses loudly instead of silently
-    dropping batches 0..last as replays."""
-    import os as _os
-
-    _os.makedirs(path, exist_ok=True)
-    writer = cm_update_writer(path, stream_id=_os.path.abspath(checkpoint))
-    q = (docs_stream.writeStream.foreachBatch(writer)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    """Drain a streaming documents frame into the grid at ``path``
+    through :func:`cm_update_writer`. The checkpoint's absolute path is
+    the stream identity the replay guard is keyed on."""
+    _CM.stream(docs_stream, path, checkpoint)
 
 
 def merge_cm_grids(spark, paths, out_path: str) -> dict:
-    """Productized count-min deployment, step 1b (r12): MERGE
-    shard-built grids into one. The grid is a linear sketch — each
-    cell is a plain count, so the grid of a union of streams is the
-    cell-wise SUM of the shards' grids, exactly (no approximation is
-    introduced by sharding; pinned cell-for-cell against the
-    whole-corpus build in test_llm_ops.py). This is how a 100 TB
-    deployment builds the structure: every ingest shard summarizes its
-    own slice with :func:`build_cm_grid`, the ≤ d×w-row grids merge
-    here (driver-light — the inputs are already sketch-sized), and
-    :func:`cm_estimate` probes the merged result. Refuses geometry
-    drift across shards, the cm_estimate posture."""
-    import json as _json
-    import os as _os
-    from functools import reduce
-
-    totals = 0
-    sources = []
-    for p in paths:
-        with open(_os.path.join(p, "manifest.json")) as fh:
-            m = _json.load(fh)
-        if m.get("d") != _CM_D or m.get("w") != _CM_W:
-            raise ValueError(
-                f"CM grid at {p} has geometry d={m.get('d')} "
-                f"w={m.get('w')} != engine d={_CM_D} w={_CM_W}; "
-                f"grids merge only at one geometry."
-            )
-        totals += int(m["total"])
-        sources.append(m.get("source"))
-    merged = reduce(
-        lambda a, b: a.unionByName(b),
-        [_read_sketch_parquet(spark, _os.path.join(p, "grid.parquet"))
-         for p in paths],
-    ).groupBy("i", "bucket").agg(F.sum("c").alias("c"))
-    _os.makedirs(out_path, exist_ok=True)
-    _write_sketch_parquet(
-        merged, _os.path.join(out_path, "grid.parquet"),
-        inner_manifest={"d": _CM_D, "w": _CM_W, "last_batch_id": -1,
-                        "stream_id": None})
-    manifest = {"d": _CM_D, "w": _CM_W, "total": totals,
-                "source": sources}
-    tmp = _os.path.join(out_path, ".manifest.json.tmp")
-    with open(tmp, "w") as fh:
-        _json.dump(manifest, fh)
-    _os.replace(tmp, _os.path.join(out_path, "manifest.json"))
-    return manifest
+    """Merge shard-built grids into one at ``out_path``. The grid is
+    linear: the grid of a union of streams is the cell-wise sum of the
+    shards' grids, exactly. Refuses geometry drift across shards."""
+    return _CM.merge(spark, paths, out_path)
 
 
 _F34_SQL = f"""
@@ -3715,60 +3537,39 @@ def gram_hashes(docs, width: int = _DECON_W):
     )
 
 
-def build_bloom_filter(spark, grams, path: str) -> dict:
-    """Productized Bloom deployment, step 1 (r12, self-initiated — the
-    build_cm_grid playbook applied to the membership sketch f35
-    demonstrates): compress an eval-gram set into the persisted
-    DISTINCT-position set at ``path``. ``grams`` is any DataFrame with
-    a ``gh`` md5-hex column (:func:`gram_hashes` builds one from
-    (doc_id, text) docs). The stored filter is <= 2^16 positions
-    (~8 KB as a bitmap, a few hundred KB as parquet ints at worst) at
-    ANY eval-set size — the structure a 1000-executor decontamination
-    broadcasts to every task. Returns + persists the manifest
-    {k, m, n_positions}."""
-    import json as _json
-    import os as _os
+def _bloom_cells(grams):
+    """The DISTINCT bit-position set of a ``gh`` gram-hash frame."""
+    return _bloom_positions(grams.select("gh")).select("pos").distinct()
 
-    bits = _bloom_positions(grams.select("gh")).select("pos").distinct()
-    _os.makedirs(path, exist_ok=True)
-    # inner manifest ships with the bits (the build_cm_grid posture):
-    # a later stream_bloom_filter onto this path ORs into the stored
-    # positions instead of silently replacing them
-    _write_sketch_parquet(
-        bits, _os.path.join(path, "bits.parquet"),
-        inner_manifest={"k": _BLOOM_K, "m": _BLOOM_M,
-                        "last_batch_id": -1, "stream_id": None})
-    n = spark.read.parquet(_os.path.join(path, "bits.parquet")).count()
-    manifest = {"k": _BLOOM_K, "m": _BLOOM_M, "n_positions": int(n)}
-    tmp = _os.path.join(path, ".manifest.json.tmp")
-    with open(tmp, "w") as fh:
-        _json.dump(manifest, fh)
-    _os.replace(tmp, _os.path.join(path, "manifest.json"))
-    return manifest
+
+_BLOOM = _Sketch(
+    kind="Bloom filter", builder="build_bloom_filter", cells="bits.parquet",
+    geometry={"k": _BLOOM_K, "m": _BLOOM_M},
+    of_docs=lambda docs: _bloom_cells(gram_hashes(docs)),
+    fold=lambda cells: cells.distinct(),
+    summary="n_positions",
+    summarize=lambda cells: cells.count(),
+)
+
+
+def build_bloom_filter(spark, grams, path: str) -> dict:
+    """Compress an eval-gram set into the DISTINCT-position set stored at
+    ``path``. ``grams`` is any DataFrame with a ``gh`` md5-hex column
+    (:func:`gram_hashes` builds one from (doc_id, text) docs). The stored
+    filter is <= 2^16 positions at any eval-set size. Returns the
+    manifest {k, m, n_positions}. A later :func:`stream_bloom_filter`
+    onto ``path`` ORs into these positions."""
+    return _BLOOM.publish(spark, path, _bloom_cells(grams))
 
 
 def bloom_probe(spark, path: str, grams):
-    """Productized Bloom deployment, step 2: tag every distinct row of
-    ``grams`` (any DataFrame with a ``gh`` md5-hex column; duplicate
-    rows collapse to one tagged row, and hits are counted over
-    DISTINCT positions so duplicates can never flip the verdict) with
-    ``bloom_hit`` — true iff ALL k positions are set in the filter
-    stored by :func:`build_bloom_filter`. One-sided: a gram that WAS
-    in the eval set always hits (membership cannot be missed); a miss
-    is definitive. Refuses a filter stored under a different geometry,
-    the cm_estimate posture."""
-    import json as _json
-    import os as _os
-
-    with open(_os.path.join(path, "manifest.json")) as fh:
-        manifest = _json.load(fh)
-    if manifest.get("k") != _BLOOM_K or manifest.get("m") != _BLOOM_M:
-        raise ValueError(
-            f"stored Bloom filter at {path} was built at geometry "
-            f"k={manifest.get('k')} m={manifest.get('m')}, but this "
-            f"engine probes at k={_BLOOM_K} m={_BLOOM_M}; rebuild it "
-            f"(build_bloom_filter) or use the matching engine version."
-        )
+    """Tag every distinct row of ``grams`` (any DataFrame with a ``gh``
+    md5-hex column; duplicate rows collapse to one tagged row, and hits
+    are counted over DISTINCT positions so duplicates can never flip the
+    verdict) with ``bloom_hit`` — true iff ALL k positions are set in
+    the filter stored at ``path``. One-sided: a gram that WAS in the
+    eval set always hits; a miss is definitive. Refuses a filter stored
+    under another geometry."""
     reserved = {"j", "pos", "_set", "_k_hit", "bloom_hit"}
     clash = reserved & set(grams.columns)
     if clash:
@@ -3776,9 +3577,8 @@ def bloom_probe(spark, path: str, grams):
             f"bloom_probe input carries reserved column(s) "
             f"{sorted(clash)} — the probe adds these internally; "
             f"rename them first.")
-    bits = (_read_sketch_parquet(spark,
-                                 _os.path.join(path, "bits.parquet"))
-            .withColumn("_set", F.lit(True)))
+    _, bits = _BLOOM.load(spark, path)
+    bits = bits.withColumn("_set", F.lit(True))
     khit = (
         _bloom_positions(grams)
         .join(F.broadcast(bits), "pos", "left")
@@ -3796,115 +3596,28 @@ def bloom_probe(spark, path: str, grams):
 
 
 def merge_bloom_filters(spark, paths, out_path: str) -> dict:
-    """Productized Bloom deployment, step 1b (r13, verdict ask 4 —
-    lifecycle symmetry with the CM grid): MERGE shard-built filters
-    into one. A Bloom filter is OR-linear — the filter of a union of
-    gram sets is the bitwise OR of the shards' bitmaps, i.e. the
-    DISTINCT UNION of their position sets, exactly (no approximation
-    is introduced by sharding; pinned position-for-position against
-    the whole-corpus build in test_llm_ops.py). This is the 100 TB
-    build: every ingest shard compresses its slice with
-    :func:`build_bloom_filter`, the ≤ 2^16-row position sets merge
-    here (driver-light — inputs are already sketch-sized), and
-    :func:`bloom_probe` serves the merged result. Refuses geometry
-    drift across shards, the merge_cm_grids posture."""
-    import json as _json
-    import os as _os
-    from functools import reduce
-
-    for p in paths:
-        with open(_os.path.join(p, "manifest.json")) as fh:
-            m = _json.load(fh)
-        if m.get("k") != _BLOOM_K or m.get("m") != _BLOOM_M:
-            raise ValueError(
-                f"Bloom filter at {p} has geometry k={m.get('k')} "
-                f"m={m.get('m')} != engine k={_BLOOM_K} m={_BLOOM_M}; "
-                f"filters merge only at one geometry."
-            )
-    merged = reduce(
-        lambda a, b: a.unionByName(b),
-        [_read_sketch_parquet(spark, _os.path.join(p, "bits.parquet"))
-         for p in paths],
-    ).distinct()
-    _os.makedirs(out_path, exist_ok=True)
-    _write_sketch_parquet(
-        merged, _os.path.join(out_path, "bits.parquet"),
-        inner_manifest={"k": _BLOOM_K, "m": _BLOOM_M,
-                        "last_batch_id": -1, "stream_id": None})
-    n = spark.read.parquet(_os.path.join(out_path, "bits.parquet")).count()
-    manifest = {"k": _BLOOM_K, "m": _BLOOM_M, "n_positions": int(n)}
-    tmp = _os.path.join(out_path, ".manifest.json.tmp")
-    with open(tmp, "w") as fh:
-        _json.dump(manifest, fh)
-    _os.replace(tmp, _os.path.join(out_path, "manifest.json"))
-    return manifest
+    """Merge shard-built filters into one at ``out_path``. A Bloom
+    filter is OR-linear: the filter of a union of gram sets is the
+    DISTINCT UNION of the shards' position sets, exactly. Refuses
+    geometry drift across shards."""
+    return _BLOOM.merge(spark, paths, out_path)
 
 
 def bloom_update_writer(path: str, stream_id=None):
-    """Per-batch maintainer for a STREAMING Bloom filter (r13, verdict
-    ask 4): each micro-batch of documents (``doc_id``, ``text``) grams
-    via :func:`gram_hashes` and ORs into the stored position set — the
-    merge_bloom_filters property per batch — so the filter at ``path``
-    always covers every document streamed so far. The exactly-once
-    machinery is cm_update_writer's, shared verbatim: the inner
-    manifest (geometry + last_batch_id + stream_id) publishes in the
-    same rename as the bits; a same-stream replayed epoch no-ops; a
-    different stream presenting a non-monotonic batch_id refuses; a
-    batch-built filter is adopted by folding, never replaced; a
-    stranded swap heals on entry. (Unlike the CM merge, an OR-merge IS
-    idempotent — but the guard still matters: without it a replayed
-    batch would pay the gram/shuffle cost again, and the stream_id
-    check still protects against the fresh-checkpoint drop.)"""
-    import json as _json
-    import os as _os
-
-    bits_path = _os.path.join(path, "bits.parquet")
-
-    def _update(batch_df, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        manifest = _load_inner_manifest(
-            bits_path, "Bloom filter", {"k": _BLOOM_K, "m": _BLOOM_M})
-        if manifest is not None and _check_stream_identity(
-                manifest, stream_id, batch_id, bits_path):
-            return  # replayed epoch: already ORed into the bits
-        merged = (_bloom_positions(gram_hashes(batch_df).select("gh"))
-                  .select("pos").distinct())
-        if manifest is not None:
-            merged = (spark.read.parquet(bits_path)
-                      .unionByName(merged).distinct())
-        _write_sketch_parquet(
-            merged, bits_path,
-            inner_manifest={"k": _BLOOM_K, "m": _BLOOM_M,
-                            "last_batch_id": int(batch_id),
-                            "stream_id": stream_id})
-        n = spark.read.parquet(bits_path).count()
-        mirror_tmp = _os.path.join(path, ".manifest.json.tmp")
-        with open(mirror_tmp, "w") as fh:
-            _json.dump({"k": _BLOOM_K, "m": _BLOOM_M,
-                        "n_positions": int(n), "source": "stream",
-                        "last_batch_id": int(batch_id)}, fh)
-        _os.replace(mirror_tmp, _os.path.join(path, "manifest.json"))
-
-    return _update
+    """Per-batch maintainer of a streaming Bloom filter: each micro-batch
+    of documents (``doc_id``, ``text``) grams via :func:`gram_hashes`
+    and ORs into the stored position set. The exactly-once contract is
+    :func:`cm_update_writer`'s. An OR-merge is idempotent, but the guard
+    still saves a replayed batch's gram/shuffle cost and refuses the
+    fresh-checkpoint drop."""
+    return _BLOOM.update_writer(path, stream_id)
 
 
 def stream_bloom_filter(docs_stream, path: str, checkpoint: str) -> None:
-    """Drain a streaming documents frame (``doc_id``, ``text``) into
-    the stored Bloom filter at ``path``: foreachBatch + checkpoint +
-    :func:`bloom_update_writer` = exactly-once filter maintenance,
-    stream_cm_grid's shape on the membership sketch. The checkpoint's
-    absolute path is the stream identity (batch ids are only monotonic
-    within one checkpoint)."""
-    import os as _os
-
-    _os.makedirs(path, exist_ok=True)
-    writer = bloom_update_writer(
-        path, stream_id=_os.path.abspath(checkpoint))
-    q = (docs_stream.writeStream.foreachBatch(writer)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    """Drain a streaming documents frame (``doc_id``, ``text``) into the
+    filter at ``path`` through :func:`bloom_update_writer`; the
+    checkpoint's absolute path is the stream identity."""
+    _BLOOM.stream(docs_stream, path, checkpoint)
 
 
 _F35_SQL = f"""

@@ -289,28 +289,25 @@ def d8_stateful(spark, sf_dir):
     (``d8_tracked``) over time-ordered file chunks must emit
     monotonically growing per-user counts whose FINAL state equals the
     batch aggregate."""
+    raw = os.environ.get("SPARK_GRAFT_D8_STATE_PARTS", "8")
+    if not raw.strip().isdecimal() or int(raw) < 1:
+        raise ValueError(
+            f"SPARK_GRAFT_D8_STATE_PARTS={raw!r}: expected an integer >= 1")
     out = d8_tracked(events_stream(spark, sf_dir))
-    # r15 (verdict ask 2): the r14 core-DERIVED override
-    # (defaultParallelism // 2 → 16 at 32 cores, 4 at 8) anti-scaled
-    # on the driver's board (5.9 s at 32c vs 2.5 s at 8c). Re-measured
-    # fresh-JVM at sf0.1 per the driver's protocol
-    # (plans/r15/d8_state_parts_ab.json, min over REPS=5 + per-rep
-    # trajectories): at 32 cores parts=2 → 3.4 s, 8 → 1.7 s,
-    # 16 → 1.9 s; at 8 cores parts=4 → 5.3 s, 8 → 2.0 s. d8's
-    # per-partition cost really is COMPUTE (the pandas state fn is a
-    # Python-worker round per partition per batch — the r14 reading),
-    # so the store-minimizing replay default (2) serializes it; but
-    # deriving the count from CORES is what broke at 8 cores (4 parts
-    # = too few) and what inflated the 32-core cold spawn bill (16
-    # workers). A FIXED 8 — r13's value, sized to the op's compute
-    # profile, not the host — wins at BOTH core counts (8c/32c ratio
-    # 2.0/1.7 ≈ 1.18, ≥ 1). Deployment override: a DEDICATED env knob
-    # (the generic SPARK_GRAFT_REPLAY_STATE_PARTS only applies when no
-    # per-query override is passed, so it cannot reach d8).
+    # A FIXED 8 state partitions, sized to the op's compute profile,
+    # not to the host: d8's per-partition cost is COMPUTE (a
+    # Python-worker round per partition per batch), so the
+    # store-minimizing replay default (2) serializes it, while a
+    # core-derived count is too few at 8 cores and inflates the worker
+    # spawn bill at 32. Fresh-JVM at sf0.1
+    # (plans/r15/d8_state_parts_ab.json): at 32 cores parts=2 → 3.4 s,
+    # 8 → 1.7 s, 16 → 1.9 s; at 8 cores parts=4 → 5.3 s, 8 → 2.0 s.
+    # Deployments override it with a DEDICATED env knob (the generic
+    # SPARK_GRAFT_REPLAY_STATE_PARTS only applies when no per-query
+    # override is passed, so it cannot reach d8).
     return run_available_now(
         out, "d8_state", output_mode="update",
-        state_partitions=int(os.environ.get(
-            "SPARK_GRAFT_D8_STATE_PARTS", "8")),
+        state_partitions=int(raw),
     )
 
 

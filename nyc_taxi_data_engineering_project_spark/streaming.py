@@ -194,16 +194,23 @@ def epoch_overwrite_writer(target: str):
     return write_epoch
 
 
+def drain_available_now(sdf: DataFrame, batch_fn, checkpoint: str) -> None:
+    """Run ``batch_fn(batch_df, batch_id)`` over every micro-batch of the
+    input available now, then return: ``foreachBatch`` + checkpoint
+    (source offset tracking) + ``availableNow`` trigger. Exactly-once
+    needs ``batch_fn`` to be idempotent under replay of its last batch;
+    every stored product's maintainer drains through here."""
+    (sdf.writeStream.foreachBatch(batch_fn)
+     .option("checkpointLocation", checkpoint)
+     .trigger(availableNow=True)
+     .start()
+     .awaitTermination())
+
+
 def foreach_batch_idempotent_sink(sdf: DataFrame, target: str,
                                   checkpoint: str) -> None:
     """D10: exactly-once file sink — ``foreachBatch`` + checkpoint.
     Exactly-once = source offset tracking (checkpoint) + idempotent
     epoch write (``epoch_overwrite_writer``); either alone gives only
     at-least-once."""
-    q = (
-        sdf.writeStream.foreachBatch(epoch_overwrite_writer(target))
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_available_now(sdf, epoch_overwrite_writer(target), checkpoint)

@@ -77,27 +77,27 @@ def phase_sketch_kill(work: str) -> None:
     the process dies between rename(target, old) and rename(tmp,
     target), stranding v2 in .tmp and v1 in .old."""
     from nyc_taxi_data_engineering_project_spark.queries.llm import (
-        _write_sketch_parquet,
+        _write_cells,
     )
 
     spark = _session()
     t = _sketch_target(work)
-    _write_sketch_parquet(spark.range(0, 10).toDF("v"), t,
-                          inner_manifest={"ver": 1})
+    _write_cells(spark.range(0, 10).toDF("v"), t,
+                 inner_manifest={"ver": 1})
     os.environ["SPARK_GRAFT_CRASH_POINT"] = "sketch_swap_between_renames"
-    _write_sketch_parquet(spark.range(100, 120).toDF("v"), t,
-                          inner_manifest={"ver": 2})
+    _write_cells(spark.range(100, 120).toDF("v"), t,
+                 inner_manifest={"ver": 2})
     raise AssertionError("unreachable — the swap window must kill us")
 
 
 def phase_sketch_assert_reader_refuses(work: str) -> None:
     from nyc_taxi_data_engineering_project_spark.queries.llm import (
-        _read_sketch_parquet,
+        _sketch_swap,
     )
 
     spark = _session()
     try:
-        _read_sketch_parquet(spark, _sketch_target(work))
+        _sketch_swap(_sketch_target(work)).read(spark)
     except ValueError as exc:
         assert "stranded swap" in str(exc), str(exc)
         print("READER_REFUSED_OK", flush=True)
@@ -107,14 +107,13 @@ def phase_sketch_assert_reader_refuses(work: str) -> None:
 
 def phase_sketch_assert_writer_heals(work: str) -> None:
     from nyc_taxi_data_engineering_project_spark.queries.llm import (
-        _read_sketch_parquet,
-        _recover_sketch_swap,
+        _sketch_swap,
     )
 
     spark = _session()
     t = _sketch_target(work)
-    _recover_sketch_swap(t)  # the writer-entry heal
-    df = _read_sketch_parquet(spark, t)
+    _sketch_swap(t).heal()  # the writer-entry heal
+    df = _sketch_swap(t).read(spark)
     vals = sorted(r["v"] for r in df.collect())
     # the killed writer's v2 payload (staged complete in .tmp with its
     # inner manifest) is what the heal publishes

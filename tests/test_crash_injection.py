@@ -13,9 +13,7 @@ import os
 import subprocess
 import sys
 
-from nyc_taxi_data_engineering_project_spark.catalog import (
-    _recover_compact_swap,
-)
+from nyc_taxi_data_engineering_project_spark.catalog import _layout_swap
 from nyc_taxi_data_engineering_project_spark.crashpoints import crash_point
 
 
@@ -37,7 +35,7 @@ class TestRecoverCompactSwap:
         _mk_tree(os.path.join(lay, tbl + "_compact_old"),
                  manifest={"fingerprint": "fp1", "buckets": 4})
         _mk_tree(os.path.join(lay, tbl + "_compact_tmp"))
-        _recover_compact_swap(lay, tbl)
+        _layout_swap(lay, tbl).heal()
         assert os.path.isdir(os.path.join(lay, tbl))
         assert not os.path.isdir(os.path.join(lay, tbl + "_compact_old"))
         with open(os.path.join(lay, tbl, "_graft_manifest.json")) as fh:
@@ -52,7 +50,7 @@ class TestRecoverCompactSwap:
                  manifest={"fingerprint": "fp2", "buckets": 4})
         _mk_tree(os.path.join(lay, tbl + "_compact_old"),
                  manifest={"fingerprint": "fp1", "buckets": 4})
-        _recover_compact_swap(lay, tbl)
+        _layout_swap(lay, tbl).heal()
         assert os.path.isdir(os.path.join(lay, tbl))
         assert not os.path.isdir(os.path.join(lay, tbl + "_compact_old"))
 
@@ -66,7 +64,7 @@ class TestRecoverCompactSwap:
         _mk_tree(os.path.join(lay, tbl))  # no manifest
         _mk_tree(os.path.join(lay, tbl + "_compact_old"),
                  manifest={"fingerprint": "fp1"})
-        _recover_compact_swap(lay, tbl)
+        _layout_swap(lay, tbl).heal()
         assert os.path.isdir(os.path.join(lay, tbl))
         assert os.path.isdir(os.path.join(lay, tbl + "_compact_old"))
 
@@ -74,7 +72,7 @@ class TestRecoverCompactSwap:
         lay = str(tmp_path)
         tbl = "t"
         _mk_tree(os.path.join(lay, tbl), manifest={"fingerprint": "fp"})
-        _recover_compact_swap(lay, tbl)
+        _layout_swap(lay, tbl).heal()
         assert os.path.isdir(os.path.join(lay, tbl))
 
 

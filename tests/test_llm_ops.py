@@ -934,6 +934,45 @@ def test_sketch_swap_crash_recovery(spark, tmp_path):
     assert not os.path.exists(grid + ".tmp")
 
 
+def test_sketch_swap_failure_restores_previous_cells(
+        spark, tmp_path, monkeypatch):
+    """A write whose tmp → target rename fails restores the previous
+    cells: readers keep serving them, no parked .old tree is left
+    behind, and the next write succeeds."""
+    import os
+
+    from nyc_taxi_data_engineering_project_spark.queries.llm import (
+        build_cm_grid,
+        cm_estimate,
+        cm_update_writer,
+    )
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    gdir = str(tmp_path / "g")
+    build_cm_grid(spark, SF_DIR, gdir)
+    grid = os.path.join(gdir, "grid.parquet")
+    est = lambda: {r.token: r.cm_count  # noqa: E731
+                   for r in cm_estimate(spark, gdir, ["the"]).collect()}
+    before = est()
+
+    real_rename = os.rename
+
+    def _boom(src, dst):
+        if src == grid + ".tmp" and dst == grid:
+            raise OSError("synthetic rename failure")
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", _boom)
+    with pytest.raises(OSError, match="synthetic rename failure"):
+        cm_update_writer(gdir, stream_id="ck")(docs.limit(10), 0)
+    monkeypatch.setattr(os, "rename", real_rename)
+
+    assert not os.path.exists(grid + ".old")
+    assert est() == before
+    cm_update_writer(gdir, stream_id="ck")(docs.limit(10), 0)
+    assert est()["the"] > before["the"]
+
+
 def test_stream_onto_batch_built_grid_folds(spark, tmp_path):
     """r13 (r12 ADVICE): streaming onto a path populated by
     build_cm_grid must FOLD the stored counts in — the builder's inner

@@ -35,8 +35,8 @@ import pytest
 
 from conftest import SF_DIR
 from nyc_taxi_data_engineering_project_spark.queries.llm import (
-    _read_sketch_parquet,
-    _write_sketch_parquet,
+    _sketch_swap,
+    _write_cells,
 )
 
 from cpu_soak import spread_entry
@@ -49,7 +49,7 @@ class TestReadSketchRetriesTheReadItself:
         in: the old code (exists-probe-only retry, then raise) never
         re-reached the read; the fixed reader returns the frame."""
         target = str(tmp_path / "sketch")
-        _write_sketch_parquet(
+        _write_cells(
             spark.range(5).toDF("v"), target, inner_manifest={"k": 1})
         # tear the swap open: target -> .tmp (manifest inside), as if
         # a writer crashed (or is paused) between its two renames
@@ -62,22 +62,22 @@ class TestReadSketchRetriesTheReadItself:
         t = threading.Thread(target=_finish_swap)
         t.start()
         try:
-            df = _read_sketch_parquet(spark, target)
+            df = _sketch_swap(target).read(spark)
             assert df.count() == 5
         finally:
             t.join()
 
     def test_genuinely_stranded_swap_still_raises(self, spark, tmp_path):
         target = str(tmp_path / "sketch")
-        _write_sketch_parquet(
+        _write_cells(
             spark.range(3).toDF("v"), target, inner_manifest={"k": 1})
         os.rename(target, target + ".tmp")
         with pytest.raises(ValueError, match="stranded swap"):
-            _read_sketch_parquet(spark, target)
+            _sketch_swap(target).read(spark)
 
     def test_plain_missing_path_raises_normally(self, spark, tmp_path):
         with pytest.raises(Exception, match="PATH_NOT_FOUND|does not exist"):
-            _read_sketch_parquet(spark, str(tmp_path / "never_written"))
+            _sketch_swap(str(tmp_path / "never_written")).read(spark)
 
 
 # --------------------------------------------------------------- 3 —

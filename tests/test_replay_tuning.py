@@ -13,6 +13,7 @@ from __future__ import annotations
 import os
 import uuid
 
+import pytest
 from pyspark.sql import functions as F
 
 from conftest import SF_DIR
@@ -84,3 +85,17 @@ def test_run_available_now_state_partitions_override(spark):
         .dropDuplicates(["user_id", "event_type"])
     )
     assert got.count() == batch.count()
+
+
+def test_d8_state_parts_env_is_validated(spark, monkeypatch):
+    """SPARK_GRAFT_D8_STATE_PARTS must be an integer >= 1; anything else
+    is refused with an error naming the variable instead of silently
+    falling back to the generic replay default."""
+    from nyc_taxi_data_engineering_project_spark.queries.streaming_q import (
+        d8_stateful,
+    )
+
+    for bad in ("0", "x"):
+        monkeypatch.setenv("SPARK_GRAFT_D8_STATE_PARTS", bad)
+        with pytest.raises(ValueError, match="SPARK_GRAFT_D8_STATE_PARTS"):
+            d8_stateful(spark, SF_DIR)

@@ -14,6 +14,7 @@ presenting non-monotonic batch ids refuses loudly.
 
 from __future__ import annotations
 
+import errno
 import glob
 import json
 import os
@@ -469,8 +470,28 @@ def test_link_publish_crash_mid_link_republishes_cleanly(
                                   source_log=log_dir)
     # batch_df rows are unused by the link path; only the session is
     dummy = orders.limit(0)
+    marker = _stream_marker_path(f"{src}/orders.parquet")
+    real_link = os.link
+
+    def _link_fails(err):
+        def _link(a, b):
+            raise OSError(err, os.strerror(err))
+        return _link
+
     try:
+        # a real link failure propagates and publishes nothing
+        monkeypatch.setattr(cat.os, "link", _link_fails(errno.ENOSPC))
+        with pytest.raises(OSError) as exc_info:
+            writer(dummy, 0)
+        assert exc_info.value.errno == errno.ENOSPC
+        assert not _published(src) and not os.path.exists(marker)
+        # a filesystem that cannot link falls back to a copy
+        monkeypatch.setattr(cat.os, "link", _link_fails(errno.EXDEV))
         writer(dummy, 0)
+        monkeypatch.setattr(cat.os, "link", real_link)
+        assert [os.stat(p).st_nlink for p in _published(src)] == [1]
+        with open(marker) as fh:
+            assert json.load(fh)["last_batch_id"] == 0
 
         real_replace = os.replace
 

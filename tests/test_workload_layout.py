@@ -423,6 +423,56 @@ def test_incremental_maintenance_appends_only_the_delta(spark, tmp_path):
         drop_workload_layout(spark, src_dir)
 
 
+def test_death_between_append_and_manifest_does_not_duplicate(
+        spark, tmp_path, monkeypatch):
+    """Incremental maintenance appends the delta, then writes the
+    manifest. A failure between the two must not let the next run append
+    the same delta again: the pending-parts record written before the
+    append sends it down the full-rebuild path, so the served rows equal
+    the source's."""
+    import os
+    import shutil
+
+    from nyc_taxi_data_engineering_project_spark import io as _io
+
+    src_dir = str(tmp_path / "src")
+    os.makedirs(src_dir)
+    plain = spark.read.parquet(f"{SF_DIR}/orders.parquet")
+    plain.filter(F.month("o_orderdate") != 12).coalesce(1) \
+        .write.parquet(f"{src_dir}/orders.parquet")
+    lay = str(tmp_path / "layout")
+    build_workload_layout(spark, src_dir, lay, buckets=4,
+                          tables=("orders",))
+    try:
+        tmp_out = str(tmp_path / "m2")
+        plain.filter(F.month("o_orderdate") == 12).coalesce(1) \
+            .write.parquet(tmp_out)
+        part = next(p for p in os.listdir(tmp_out)
+                    if p.endswith(".parquet"))
+        shutil.copy(f"{tmp_out}/{part}",
+                    f"{src_dir}/orders.parquet/month2-{part}")
+
+        real_write = _io.write_bucketed
+
+        def _append_then_die(*a, **kw):
+            real_write(*a, **kw)
+            if kw.get("mode") == "append":
+                raise RuntimeError("synthetic death after the append job")
+
+        monkeypatch.setattr(_io, "write_bucketed", _append_then_die)
+        with pytest.raises(RuntimeError, match="synthetic death"):
+            build_workload_layout(spark, src_dir, lay, buckets=4,
+                                  tables=("orders",))
+        monkeypatch.undo()
+
+        build_workload_layout(spark, src_dir, lay, buckets=4,
+                              tables=("orders",))
+        src_rows = spark.read.parquet(f"{src_dir}/orders.parquet")
+        assert table(spark, src_dir, "orders").count() == src_rows.count()
+    finally:
+        drop_workload_layout(spark, src_dir)
+
+
 def test_incremental_maintenance_partitioned_embeddings(spark, tmp_path):
     """The maintenance story must hold for the PARTITIONED layout mode
     too (embeddings ANN index): appended vectors are bucketized by the
