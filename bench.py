@@ -166,9 +166,9 @@ def main() -> None:
     # r15 (verdict ask 5): board-level CPU totals on the one-line JSON
     # so the driver can separate the box's ±40% ambient wall band from
     # real plan regressions without trusting builder-side boards.
-    # Additive fields only; computed below once metrics parse.
-    task_cpu_total = None
-    python_worker_total = None
+    # Additive fields only, present on both outputs only when the
+    # event log parsed.
+    cpu_totals: dict[str, float] = {}
 
     # flush + parse the event log into per-key noise-immune metrics:
     # min task-CPU across reps (min-of-N, same additive-noise argument
@@ -200,10 +200,12 @@ def main() -> None:
                 # structural worker-activity evidence
                 "python_worker_bytes": int(pick["python_worker_bytes"]),
             }
-        task_cpu_total = round(
-            sum(m["task_cpu_s"] for m in metrics.values()), 3)
-        python_worker_total = round(
-            sum(m["python_worker_s"] for m in metrics.values()), 3)
+        cpu_totals = {
+            "task_cpu_total": round(
+                sum(m["task_cpu_s"] for m in metrics.values()), 3),
+            "python_worker_total": round(
+                sum(m["python_worker_s"] for m in metrics.values()), 3),
+        }
     except Exception as exc:
         print(f"# BENCH METRICS PARSE ERROR: {exc}", file=sys.stderr)
     finally:
@@ -228,8 +230,7 @@ def main() -> None:
         # the box's ±40% wall band), wall stays the gate
         "metrics": metrics,
         # r15 verdict ask 5: board totals of the noise-immune columns
-        "task_cpu_total": task_cpu_total,
-        "python_worker_total": python_worker_total,
+        **cpu_totals,
     }
     if layout_build_s is not None:
         detail["layout_dir"] = layout_dir
@@ -257,12 +258,10 @@ def main() -> None:
             "unit": "sec", "queries": out, "sf": sf,
             "n_queries": len(timings), "queries_shown": len(out),
             "reps": REPS, "detail": "BENCH_DETAIL.json"}
-    if task_cpu_total is not None:
-        # r15 verdict ask 5: wall sits in the box's ±40% ambient band;
-        # these two totals are the noise-immune companions (task-thread
-        # CPU + Python-worker time summed over all keys' min-CPU reps)
-        line["task_cpu_total"] = task_cpu_total
-        line["python_worker_total"] = python_worker_total
+    # r15 verdict ask 5: wall sits in the box's ±40% ambient band;
+    # these two totals are the noise-immune companions (task-thread
+    # CPU + Python-worker time summed over all keys' min-CPU reps)
+    line.update(cpu_totals)
     print(json.dumps(line, separators=(",", ":")))
     # session already stopped above (event-log flush)
 

@@ -42,49 +42,26 @@ def nanos_ts_columns(path: str) -> tuple[str, ...]:
     timestamp[us] today and would break ~40 keys the same way if they
     flipped).
 
-    Cache key (ADVICE r5): a single file keys on (path, mtime_ns,
-    size) — size is the cheap second discriminator for filesystems with
-    coarse mtime ticks, where an in-process rewrite can land in the
-    same tick. A directory keys on the FULL sorted part list with each
-    part's (mtime_ns, size), so adding/rewriting ANY part re-dispatches
-    (keying only parts[0] served stale answers when other parts moved).
-    Directories additionally peek EVERY part footer and refuse a
+    The cache is keyed on :func:`_source_parts`: every part's (name,
+    mtime_ns, size), so adding or rewriting ANY part re-dispatches (size
+    catches a rewrite inside one coarse mtime tick), and an unstat-able
+    path is not cached. Directories peek EVERY part footer and refuse a
     mixed-unit table loudly — a single-unit dispatch cannot represent
     one, and any subset peek can miss the odd part out."""
-    import glob as _glob
-
-    if os.path.isdir(path):  # Spark-written table: peek part files
-        parts = sorted(_glob.glob(os.path.join(path, "*.parquet")))
-        if not parts:
-            return ()
-        try:
-            fingerprint = tuple(
-                (os.path.basename(p), st.st_mtime_ns, st.st_size)
-                for p in parts for st in (os.stat(p),)
-            )
-        except OSError:
-            return ()
-        # peek EVERY part: first+last missed a differing unit in an
-        # interior part (partial compaction, or lexicographic part
-        # ordering interleaving two writers' files), silently misreading
-        # it — the exact incident class this guard exists to refuse.
-        # Footer reads are metadata-only (~ms each) and the result is
-        # cached per directory fingerprint, so the cost is one-time per
-        # table version; a 100 TB table with thousands of parts pays it
-        # once at first dispatch, not per query.
-        return _nanos_ts_columns_at(tuple(parts), fingerprint)
-    try:
-        st = os.stat(path)
-    except OSError:
-        return ()
-    return _nanos_ts_columns_at((path,), (st.st_mtime_ns, st.st_size))
+    fp = _path_fingerprint(path)
+    # footer reads are metadata-only (~ms each) and cached per source
+    # version, so a table with thousands of parts pays them once
+    return _nanos_ts_columns_at(path, fp) if fp else ()
 
 
 @functools.lru_cache(maxsize=256)
-def _nanos_ts_columns_at(peek_paths: tuple, fingerprint: tuple
-                         ) -> tuple[str, ...]:
+def _nanos_ts_columns_at(path: str, fingerprint: tuple) -> tuple[str, ...]:
+    """Nanos columns of the parts ``fingerprint`` names (the hashable
+    form of :func:`_source_parts`, or a subset of it) of source
+    ``path``."""
     import pyarrow.parquet as pq
 
+    peek_paths = _part_paths(path, fingerprint)
     per_part = []
     for p in peek_paths:
         try:
@@ -135,24 +112,42 @@ def events_ts_is_nanos(path: str) -> bool:
     return "ts" in nanos_ts_columns(path)
 
 
-def _path_fingerprint(path: str):
-    """Cheap identity of a parquet source for driver-side caches: a
-    file is (mtime_ns, size); a directory is the full sorted part list
-    with each part's (mtime_ns, size) — the same invalidation rule as
-    :func:`nanos_ts_columns`. ``None`` = unstat-able (don't cache)."""
+def _source_parts(path: str) -> dict[str, list[int]]:
+    """``{basename: [mtime_ns, size]}`` of a parquet source's parts (a
+    Spark-written directory's ``*.parquet`` files, or the single file).
+    The one source-version rule: the nanos dispatch, the schema cache,
+    the view memo, the layout staleness gate and the layout manifest
+    all derive from it, so a rewritten or added part invalidates every
+    one of them. Metadata-only; raises OSError when unstat-able."""
     import glob as _glob
 
+    if os.path.isdir(path):
+        parts = sorted(_glob.glob(os.path.join(path, "*.parquet")))
+    else:
+        parts = [path]
+    return {
+        os.path.basename(p): [st.st_mtime_ns, st.st_size]
+        for p in parts for st in (os.stat(p),)
+    }
+
+
+def _frozen(parts: dict[str, list[int]]) -> tuple:
+    return tuple((n, *meta) for n, meta in parts.items())
+
+
+def _path_fingerprint(path: str) -> tuple | None:
+    """Hashable :func:`_source_parts` for driver-side cache keys;
+    ``None`` = unstat-able (don't cache)."""
     try:
-        if os.path.isdir(path):
-            return tuple(
-                (os.path.basename(p), st.st_mtime_ns, st.st_size)
-                for p in sorted(_glob.glob(os.path.join(path, "*.parquet")))
-                for st in (os.stat(p),)
-            )
-        st = os.stat(path)
-        return (st.st_mtime_ns, st.st_size)
+        return _frozen(_source_parts(path))
     except OSError:
         return None
+
+
+def _part_paths(path: str, fingerprint: tuple) -> tuple[str, ...]:
+    if not os.path.isdir(path):
+        return (path,)
+    return tuple(os.path.join(path, n) for n, *_meta in fingerprint)
 
 
 # Driver-side parquet schema cache (r14 optimization round, guide §1/§5:
@@ -193,22 +188,16 @@ def _read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(sch).parquet(path)
 
 
-def _read_parquet_dispatch(spark: SparkSession,
-                           paths: tuple[str, ...]) -> DataFrame:
-    """Read an explicit set of parquet part files with the same
-    nanos-footer dispatch :func:`table` applies to whole sources —
-    used by the incremental layout path, which reads only the parts a
-    source APPENDED (the whole-source readers can't scope to a
-    subset). Mixed units among the given parts refuse loudly via
-    :func:`_nanos_ts_columns_at`."""
-    try:
-        fingerprint = tuple(
-            (os.path.basename(p), st.st_mtime_ns, st.st_size)
-            for p in paths for st in (os.stat(p),)
-        )
-    except OSError:
-        fingerprint = paths
-    ns_cols = _nanos_ts_columns_at(tuple(paths), fingerprint)
+def _read_parquet_dispatch(spark: SparkSession, path: str,
+                           parts: dict[str, list[int]]) -> DataFrame:
+    """Read only ``parts`` (a subset of :func:`_source_parts`) of the
+    directory source ``path`` with the nanos-footer dispatch
+    :func:`table` applies to whole sources — the incremental layout path
+    reads just the parts a source appended. Mixed units among the
+    given parts refuse loudly."""
+    fp = _frozen(parts)
+    paths = _part_paths(path, fp)
+    ns_cols = _nanos_ts_columns_at(path, fp)
     if ns_cols:
         return _read_nanos(spark, paths, ns_cols)
     return spark.read.parquet(*paths)
@@ -534,25 +523,6 @@ def _layout_conf_key(sf_dir: str, name: str) -> str:
     return f"spark.spark_graft.layout.{h}.{name}"
 
 
-def _source_parts(path: str) -> dict[str, list[int]]:
-    """Per-part metadata map of a parquet source (single file or
-    Spark-written directory): ``{basename: [mtime_ns, size]}``, the
-    same discriminator the nanos-dispatch cache uses. Metadata-only
-    (os.stat), no data IO. This is the unit the incremental layout
-    maintenance diffs: an append-only ingest adds entries without
-    touching existing ones."""
-    import glob as _glob
-
-    if os.path.isdir(path):
-        parts = sorted(_glob.glob(os.path.join(path, "*.parquet")))
-    else:
-        parts = [path]
-    return {
-        os.path.basename(p): [st.st_mtime_ns, st.st_size]
-        for p in parts for st in (os.stat(p),)
-    }
-
-
 def _fingerprint_of(parts: dict[str, list[int]]) -> str:
     import hashlib
 
@@ -712,17 +682,18 @@ def build_workload_layout(
     recording the source's per-part (mtime_ns, size) map. When the
     source drifts by strictly ADDING part files — the reference's own
     monthly-append ingest pattern
-    (``python/ingest_data.py:160-166``) — only the new parts are read,
-    bucketized, and APPENDED into the existing bucketed table (a
-    bucketed INSERT: one new sorted run per touched bucket), so a
-    month's maintenance costs O(month), not O(100 TB fact). Any drift
-    the diff can't scope — a modified or deleted part, a changed
-    bucket count or key — keeps the loud full-rebuild posture. An
-    append records its pending part names in the manifest before it
-    starts and writes the final manifest after it, so an append cut
-    short also rebuilds in full instead of appending the delta twice.
-    The manifest lets a FRESH session re-register a still-fresh layout
-    without any rebuild."""
+    (``python/ingest_data.py:160-166``) — only the new parts are read
+    and bucketized, so a month's maintenance costs O(month), not
+    O(100 TB fact): the delta is written as new sorted runs (one per
+    touched bucket per input task) into a staged tree beside hardlinks
+    of every live file, and the tree is published with its manifest by
+    one directory swap (:func:`_rewrite_layout`, the routine both
+    compactions use). An append cut short publishes nothing, so the
+    retry appends the same delta once, incrementally. Any drift the
+    diff can't scope — a modified or deleted part, a changed bucket
+    count or key — keeps the loud full-rebuild posture, which
+    overwrites the table in place. The manifest lets a FRESH session
+    re-register a still-fresh layout without any rebuild."""
     # family-consistency gate BEFORE defaulting: a registered sibling's
     # count wins over the parallelism default
     buckets_explicit = buckets is not None
@@ -782,8 +753,6 @@ def _build_layout_tables(
     rebuild: bool,
     lsh_planes: int | None = None,
 ) -> dict[str, str]:
-    from . import io as _io
-
     built: dict[str, str] = {}
     for name in tables:
         key = LAYOUT_BUCKET_KEYS[name]  # KeyError = not a layout table
@@ -827,24 +796,6 @@ def _build_layout_tables(
             stored_planes = None
             eff_planes = None
 
-        def _toctou_gate(what: str) -> None:
-            # the fingerprint was taken BEFORE a potentially
-            # minutes-long build; a source mutated mid-build must not
-            # be registered as fresh. Re-stat, drop the manifest (the
-            # table's contents are a mix of versions — the next build
-            # must be full), refuse loudly.
-            post_fp = _source_fingerprint(src_path)
-            if post_fp != cur_fp:
-                with contextlib.suppress(OSError):
-                    os.remove(_manifest_path(path, tbl))
-                raise ValueError(
-                    f"source {src_path} changed WHILE the layout for "
-                    f"{name!r} was {what} (fingerprint {cur_fp} → "
-                    f"{post_fp}); the built table is a mix of versions "
-                    f"and was NOT registered. Re-run "
-                    f"build_workload_layout once the source is settled."
-                )
-
         def _manifest_now(buckets, **fields) -> dict:
             # the manifest of the table as built from cur_parts
             return {
@@ -872,21 +823,12 @@ def _build_layout_tables(
                     src = src.withColumn(cn, fac(src))
             finally:
                 spark.conf.set(LAYOUT_SERVE_CONF, prev)
-            if name in LAYOUT_VALUE_PARTITIONED:
-                # co-locate each partition VALUE into one task before
-                # the partitioned write: an unrepartitioned frame
-                # writes every input partition × every value it touches
-                # — at a wide-plane LSH layout (2^11+ dirs × 64 input
-                # partitions) that is the 100k-tiny-files failure mode;
-                # repartition(key) caps files at ~one per value (the
-                # posture _compact_one already takes)
-                _io.write_value_partitioned(
-                    src.repartition(F.col(key)), tbl, key,
-                    path=os.path.join(path, tbl))
-            else:
-                _io.write_bucketed(src, tbl, key, buckets=buckets,
-                                   path=os.path.join(path, tbl))
-            _toctou_gate("building")
+            # in place: the overwrite creates the catalog entry and its
+            # bucket spec, and wipes the old tree with its manifest
+            _layout_write(src, name, tbl, buckets, os.path.join(path, tbl))
+            # a source mutated during the build leaves a manifest-less
+            # table, which the next build rebuilds in full
+            _refuse_if_moved(src_path, cur_fp, name, "building")
             _write_manifest(path, tbl, _manifest_now(
                 buckets, mode=("partitioned"
                                if name in LAYOUT_VALUE_PARTITIONED
@@ -903,13 +845,10 @@ def _build_layout_tables(
             != sorted(LAYOUT_DERIVED.get(name, {}))
         )
         if rebuild or not spark.catalog.tableExists(tbl) \
-                or built_fp is None or derived_drift \
-                or (manifest or {}).get("pending"):
+                or built_fp is None or derived_drift:
             # missing or version-unknown table must never be re-blessed
             # against the current source; build IS the rebuild,
-            # CREATE INDEX style. A pending record means an append may
-            # have landed without its final manifest: the table's
-            # contents are unknown, so it is rebuilt too.
+            # CREATE INDEX style
             _full_build()
         elif built_fp == cur_fp:
             existing = (int(manifest["buckets"]) if manifest is not None
@@ -959,39 +898,24 @@ def _build_layout_tables(
                     # appended rows MUST get the stored assignment's
                     # width, whatever this call would default to
                     eff_planes = manifest_planes or default_planes
-                # the pending record is on disk before the append job
-                # starts and is cleared by the final manifest write
-                _write_manifest(path, tbl, {
-                    **manifest, "pending": sorted(new_names)})
                 delta = _read_parquet_dispatch(
-                    spark, tuple(os.path.join(src_path, n)
-                                 for n in sorted(new_names)))
+                    spark, src_path, {n: cur_parts[n] for n in new_names})
                 for cn, fac in _derived_factories(name,
                                                   eff_planes).items():
                     # static derived rules only (fixed-literal hashes):
                     # appended rows get the same bucket assignment the
                     # existing rows got at build
                     delta = delta.withColumn(cn, fac(delta))
-                if name in LAYOUT_VALUE_PARTITIONED:
-                    # same tiny-files guard as the full build: one new
-                    # run per touched VALUE, not per (input partition ×
-                    # value) — wide-plane layouts touch thousands of
-                    # dirs per append otherwise
-                    _io.write_value_partitioned(
-                        delta.repartition(F.col(key)), tbl, key,
-                        mode="append")
-                else:
-                    _io.write_bucketed(delta, tbl, key,
-                                       buckets=int(manifest["buckets"]),
-                                       mode="append")
-                _toctou_gate("incrementally appending to")
                 new_manifest = _manifest_now(
                     manifest["buckets"],
                     mode=manifest.get("mode", "bucketed"),
                     compactions=int(manifest.get("compactions", 0)),
                     minor_compactions=int(
                         manifest.get("minor_compactions", 0)))
-                _write_manifest(path, tbl, new_manifest)
+                _rewrite_layout(
+                    spark, path, name, tbl, delta,
+                    _layout_files(os.path.join(path, tbl)), new_manifest,
+                    append=True)
                 reg_buckets = int(manifest["buckets"])
                 # auto-compaction: each append lands one new sorted run
                 # per touched bucket; once the average passes
@@ -1003,7 +927,8 @@ def _build_layout_tables(
                     # ∝ appended bytes — the pigeonhole
                     # guarantees at least one bucket is above the
                     # per-bucket threshold whenever the average trips
-                    _minor_compact_one(spark, path, name, tbl)
+                    _compact_layout_table(spark, path, name, tbl,
+                                          full=False)
         # fingerprint the source AS BUILT: table() refuses to serve the
         # layout once the source drifts from this
         spark.conf.set(conf_key + ".src", cur_fp)
@@ -1018,9 +943,13 @@ def _build_layout_tables(
     return built
 
 
+def _layout_files(d: str) -> list[str]:
+    return [os.path.join(root, f) for root, _dirs, files in os.walk(d)
+            for f in files if f.endswith(".parquet")]
+
+
 def _layout_n_files(d: str) -> int:
-    return sum(1 for root, _dirs, files in os.walk(d)
-               for f in files if f.endswith(".parquet"))
+    return len(_layout_files(d))
 
 
 def _runs_per_bucket(path: str, tbl: str, manifest: dict) -> float:
@@ -1051,50 +980,97 @@ def _runs_per_bucket(path: str, tbl: str, manifest: dict) -> float:
 LAYOUT_COMPACT_RUNS_PER_BUCKET = 4
 
 
-def _compact_one(spark: SparkSession, path: str, name: str,
-                 tbl: str) -> tuple[int, int]:
-    """Compact ONE layout table back to ~one file per bucket. Assumes
-    the caller holds the build lock (compact_workload_layout and the
-    auto-compaction hook in the incremental-append path both do).
-    Returns (files_before, files_after)."""
-    import shutil
-
+def _layout_write(df: DataFrame, name: str, table_name: str,
+                  buckets: int, path: str) -> None:
+    """Write ``df`` as catalog table ``table_name`` at ``path`` with the
+    layout writer of source table ``name``."""
     from . import io as _io
 
     key = LAYOUT_BUCKET_KEYS[name]
-    manifest = _compaction_manifest(path, tbl)
-    tbl_dir = os.path.join(path, tbl)
-    tmp_dir = _layout_swap(path, tbl).staged
-    tmp_tbl = tbl + "_compact_tmp"
-
-    before = _layout_n_files(tbl_dir)
-    # read the FILES, not the catalog table: the bucketed
-    # scan's partitioning already satisfies the repartition,
-    # so the optimizer elides the exchange and each INPUT FILE
-    # task writes its own bucket files — defeating the merge.
-    # A plain file read carries no bucket metadata, so the
-    # repartition really co-locates each bucket into one task
-    # (observed: 12→9 files instead of 12→4 via spark.table).
-    df = spark.read.parquet(tbl_dir)
-    shutil.rmtree(tmp_dir, ignore_errors=True)
-    spark.sql(f"DROP TABLE IF EXISTS {tmp_tbl}")
     if name in LAYOUT_VALUE_PARTITIONED:
-        _io.write_value_partitioned(
-            df.repartition(F.col(key)), tmp_tbl, key,
-            path=tmp_dir)
+        # co-locate each partition VALUE into one task: an
+        # unrepartitioned frame writes every input partition × every
+        # value it touches — at a wide-plane LSH layout (2^11+ dirs × 64
+        # input partitions) the 100k-tiny-files failure mode
+        _io.write_value_partitioned(df.repartition(F.col(key)),
+                                    table_name, key, path=path)
     else:
-        buckets = int(manifest["buckets"])
-        _io.write_bucketed(
-            df.repartition(buckets, F.col(key)), tmp_tbl, key,
-            buckets=buckets, path=tmp_dir)
-    # swap: catalog entry for the tmp table goes (external drop
-    # keeps files), then the data directories trade places
-    spark.sql(f"DROP TABLE {tmp_tbl}")
-    _swap_compacted(spark, path, tbl, {
-        **manifest,
-        "compactions": int(manifest.get("compactions", 0)) + 1,
-    })
-    return before, _layout_n_files(tbl_dir)
+        _io.write_bucketed(df, table_name, key, buckets=buckets,
+                           path=path)
+
+
+def _refuse_if_moved(src_path: str, fp: str, name: str, what: str) -> None:
+    """Refuse loudly when the source no longer has fingerprint ``fp``:
+    it was taken before a potentially minutes-long write, and a source
+    mutated meanwhile must not be registered as fresh."""
+    post_fp = _source_fingerprint(src_path)
+    if post_fp != fp:
+        raise ValueError(
+            f"source {src_path} changed WHILE the layout for {name!r} "
+            f"was {what} (fingerprint {fp} → {post_fp}); the result was "
+            f"NOT registered. Re-run build_workload_layout once the "
+            f"source is settled.")
+
+
+def _rewrite_layout(spark: SparkSession, path: str, name: str, tbl: str,
+                    rows: DataFrame, keep: list[str], manifest: dict,
+                    append: bool = False) -> None:
+    """The one way a built layout table changes — appends, minor and
+    major compaction. ``rows`` are written with the table's layout
+    writer into the swap's staged tree, the live ``keep`` files are
+    hardlinked beside them under their own names, and the tree is
+    published with ``manifest`` by :meth:`store.Swap.publish`. Nothing
+    is published when any step fails, so the live table and its
+    manifest stay exactly as they were.
+
+    Compaction rows are co-located one bucket per task, so each bucket
+    gets one new file (partitioned tables always are). ``append`` rows
+    are source rows read at the manifest's fingerprint: they are
+    written as they come (no merge shuffle: one new run per touched
+    bucket per input task), and the source is re-stat'ed before
+    publish, refusing unless it still has that fingerprint. The table
+    is REFRESHed (and a partitioned table's new partition values
+    recovered) before the superseded tree is deleted: queries planned
+    from then on list the new files. Caller holds the build lock."""
+    import shutil
+
+    from .crashpoints import crash_point
+
+    swap = _layout_swap(path, tbl)
+    staged_tbl = tbl + "_compact_tmp"
+    buckets = int(manifest["buckets"])
+    shutil.rmtree(swap.staged, ignore_errors=True)
+    spark.sql(f"DROP TABLE IF EXISTS {staged_tbl}")
+    if not append and name not in LAYOUT_VALUE_PARTITIONED:
+        # Spark's repartition hash is the bucketed writer's
+        # Murmur3-pmod, so each task holds exactly one bucket
+        rows = rows.repartition(buckets, F.col(LAYOUT_BUCKET_KEYS[name]))
+    _layout_write(rows, name, staged_tbl, buckets, swap.staged)
+    # the staged table's catalog entry goes; an external drop keeps
+    # the files
+    spark.sql(f"DROP TABLE {staged_tbl}")
+    crash_point("minor_compact_mid_scratch")
+    for f in keep:
+        dst = os.path.join(swap.staged, os.path.relpath(f, swap.target))
+        os.makedirs(os.path.dirname(dst), exist_ok=True)
+        os.link(f, dst)
+        # with its checksum sidecar: the local filesystem verifies
+        # every read against it
+        crc = os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc")
+        if os.path.exists(crc):
+            os.link(crc, os.path.join(os.path.dirname(dst),
+                                      os.path.basename(crc)))
+    if append:
+        _refuse_if_moved(manifest["source"], manifest["fingerprint"],
+                         name, "being appended to")
+
+    def _serve_new_tree() -> None:
+        if name in LAYOUT_VALUE_PARTITIONED:
+            spark.sql(f"ALTER TABLE {tbl} RECOVER PARTITIONS")
+        spark.sql(f"REFRESH TABLE {tbl}")
+
+    swap.publish(then=lambda: _write_manifest(path, tbl, manifest),
+                 before_drop=_serve_new_tree)
 
 
 def _compaction_manifest(path: str, tbl: str) -> dict:
@@ -1110,20 +1086,6 @@ def _compaction_manifest(path: str, tbl: str) -> dict:
     return manifest
 
 
-def _swap_compacted(spark: SparkSession, path: str, tbl: str,
-                    new_manifest: dict) -> None:
-    """Publish ``<tbl>_compact_tmp`` as the live table. The manifest is
-    written after the second rename, inside the swap's protected region,
-    so a death between the renames heals by rolling back in O(1). The
-    table is REFRESHed before the superseded tree is deleted: queries
-    planned from then on list the new files, and only a query already
-    executing against the old listing races the delete (pinned by
-    tests/test_workload_layout.py's concurrent-reader test)."""
-    _layout_swap(path, tbl).publish(
-        then=lambda: _write_manifest(path, tbl, new_manifest),
-        before_drop=lambda: spark.sql(f"REFRESH TABLE {tbl}"))
-
-
 # Minor compaction merges a bucket's append RUNS once it holds at least
 # this many files (largest file = the base, everything else = runs).
 # 3 means: base + >= 2 accumulated runs — a bucket with one run keeps
@@ -1131,122 +1093,70 @@ def _swap_compacted(spark: SparkSession, path: str, tbl: str,
 LAYOUT_MINOR_COMPACT_MIN_FILES = 3
 
 
-def _minor_compact_one(spark: SparkSession, path: str, name: str,
-                       tbl: str,
-                       min_files: int = LAYOUT_MINOR_COMPACT_MIN_FILES,
-                       ) -> tuple[int, int]:
-    """SELECTIVE (LSM-minor) compaction of one layout table: merge only
-    the accumulated append RUNS — every file of a bucket/partition
-    except its largest — and HARDLINK everything else into the new
-    tree, so the rewrite cost scales with the APPENDED fraction, not the
-    corpus size. The full rewrite (_compact_one) costs 63.3 s against a
-    68.8 s rebuild at the 9.8 M-vector tier, because it rewrites every
-    bucket's base data; minor compaction reads and writes ONLY run
-    bytes. Buckets below
-    ``min_files`` are untouched (read fan-in ≤ 2 is fine); the base
-    file of a compacted bucket is linked, never copied. Read fan-in
-    after a pass is ≤ 2 (base + one merged run); the merged run grows
-    with total appended data, so a periodic FULL compaction
-    (``compact_workload_layout(..., full=True)``) remains the major
-    step, LSM-style. The publish is the same atomic directory swap as
-    the major path (one rename — the concurrent-reader race profile is
-    unchanged). Caller holds the build lock. Returns
-    (files_before, files_after); a no-op when no bucket crosses the
-    threshold."""
+def _split_runs(tbl_dir: str, partitioned: bool
+                ) -> tuple[list[str], list[str]]:
+    """(kept, runs) of a layout table for minor compaction: a bucket
+    with at least ``LAYOUT_MINOR_COMPACT_MIN_FILES`` files keeps its
+    largest (the base) and merges the rest; smaller buckets are kept
+    whole."""
     import re
-    import shutil
-
-    from . import io as _io
-
-    key = LAYOUT_BUCKET_KEYS[name]
-    manifest = _compaction_manifest(path, tbl)
-    tbl_dir = os.path.join(path, tbl)
-    before = _layout_n_files(tbl_dir)
-    partitioned = name in LAYOUT_VALUE_PARTITIONED
 
     # group the data files by bucket: partition DIRECTORY for the
     # value-partitioned mode, bucket-id file-name suffix for the
     # bucketed mode (Spark writes part-...-<uuid>_NNNNN.c000...)
     groups: dict[str, list[str]] = {}
-    if partitioned:
-        for e in os.scandir(tbl_dir):
-            if e.is_dir() and "=" in e.name:
-                groups[e.name] = [
-                    os.path.join(e.path, f) for f in os.listdir(e.path)
-                    if f.endswith(".parquet")]
-    else:
-        for f in os.listdir(tbl_dir):
-            if not f.endswith(".parquet"):
-                continue
-            m = re.search(r"_(\d+)\.c\d+", f)
-            if m is None:
-                raise ValueError(
-                    f"cannot parse a bucket id out of {f!r} under "
-                    f"{tbl_dir!r} — minor compaction needs the bucketed "
-                    f"writer's file naming; run a full compaction.")
-            groups.setdefault(m.group(1), []).append(
-                os.path.join(tbl_dir, f))
-
+    for f in _layout_files(tbl_dir):
+        if partitioned:
+            groups.setdefault(os.path.dirname(f), []).append(f)
+            continue
+        m = re.search(r"_(\d+)\.c\d+", os.path.basename(f))
+        if m is None:
+            raise ValueError(
+                f"cannot parse a bucket id out of {f!r} — minor "
+                f"compaction needs the bucketed writer's file naming; "
+                f"run a full compaction.")
+        groups.setdefault(m.group(1), []).append(f)
     kept: list[str] = []
     runs: list[str] = []
     for files in groups.values():
-        if len(files) >= min_files:
+        if len(files) >= LAYOUT_MINOR_COMPACT_MIN_FILES:
             by_size = sorted(files, key=os.path.getsize, reverse=True)
             kept.append(by_size[0])
             runs.extend(by_size[1:])
         else:
             kept.extend(files)
-    if not runs:
-        return before, before
+    return kept, runs
 
-    # ONE job merges every run (not a per-bucket loop): read only the
-    # run files, repartition on the bucket key so each bucket's runs
-    # land in one output file, write with the same layout writer so
-    # bucket ids / partition values are preserved
-    scratch = os.path.join(path, tbl + "_minor_scratch")
-    scratch_tbl = tbl + "_minor_scratch"
-    shutil.rmtree(scratch, ignore_errors=True)
-    spark.sql(f"DROP TABLE IF EXISTS {scratch_tbl}")
-    if partitioned:
-        # basePath recovers the partition column from the dir names
-        df = spark.read.option("basePath", tbl_dir).parquet(*runs)
-        _io.write_value_partitioned(
-            df.repartition(F.col(key)), scratch_tbl, key, path=scratch)
+
+def _compact_layout_table(spark: SparkSession, path: str, name: str,
+                          tbl: str, full: bool) -> tuple[int, int]:
+    """Compact ONE layout table; caller holds the build lock. ``full``
+    (major) rewrites every file back to one per bucket. Otherwise
+    (minor, LSM-style) only each bucket's accumulated append runs are
+    merged and every base file is hardlinked, so the cost scales with
+    the APPENDED bytes, not the corpus: the major rewrite costs 63.3 s
+    against a 68.8 s rebuild at the 9.8 M-vector tier. Read fan-in
+    after a minor pass is ≤ 2 (base + one merged run); a no-op when no
+    bucket crosses the threshold. Returns (files_before, files_after)."""
+    manifest = _compaction_manifest(path, tbl)
+    tbl_dir = os.path.join(path, tbl)
+    before = _layout_n_files(tbl_dir)
+    if full:
+        # read the FILES, not the catalog table: the bucketed scan's
+        # partitioning already satisfies the merge's repartition, so
+        # the optimizer would elide the exchange and each input file
+        # task would write its own bucket files — defeating the merge
+        kept, inputs, counter = [], [tbl_dir], "compactions"
     else:
-        buckets = int(manifest["buckets"])
-        df = spark.read.parquet(*runs)
-        _io.write_bucketed(
-            df.repartition(buckets, F.col(key)), scratch_tbl, key,
-            buckets=buckets, path=scratch)
-    spark.sql(f"DROP TABLE {scratch_tbl}")
-
-    from .crashpoints import crash_point
-
-    crash_point("minor_compact_mid_scratch")
-    # assemble the new tree: hardlinks for every kept file (zero data
-    # movement), the merged run files moved in from scratch
-    tmp_dir = _layout_swap(path, tbl).staged
-    shutil.rmtree(tmp_dir, ignore_errors=True)
-    os.makedirs(tmp_dir)
-    for f in kept:
-        dst = os.path.join(tmp_dir, os.path.relpath(f, tbl_dir))
-        os.makedirs(os.path.dirname(dst), exist_ok=True)
-        os.link(f, dst)
-    for root, _dirs, files in os.walk(scratch):
-        for f in files:
-            if not f.endswith(".parquet"):
-                continue
-            src = os.path.join(root, f)
-            dst = os.path.join(tmp_dir, os.path.relpath(src, scratch))
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            os.rename(src, dst)
-    shutil.rmtree(scratch, ignore_errors=True)
-
-    _swap_compacted(spark, path, tbl, {
-        **manifest,
-        "minor_compactions":
-            int(manifest.get("minor_compactions", 0)) + 1,
-    })
+        kept, inputs = _split_runs(tbl_dir,
+                                   name in LAYOUT_VALUE_PARTITIONED)
+        counter = "minor_compactions"
+        if not inputs:
+            return before, before
+    # basePath recovers a partitioned table's column from the dir names
+    rows = spark.read.option("basePath", tbl_dir).parquet(*inputs)
+    _rewrite_layout(spark, path, name, tbl, rows, kept, {
+        **manifest, counter: int(manifest.get(counter, 0)) + 1})
     return before, _layout_n_files(tbl_dir)
 
 
@@ -1298,31 +1208,29 @@ def compact_workload_layout(spark: SparkSession, sf_dir: str,
     layout exists to avoid. Compaction is the B-tree's merge step.
 
     Mechanics — no source re-read, no shuffle beyond one co-located
-    repartition: the layout table is read back (one task per bucket),
-    repartitioned on its own bucket key (Spark's repartition hash is
-    the same Murmur3-pmod the bucketed writer uses, so each task holds
-    exactly one bucket → exactly one output file per bucket), written
-    bucketed to a temp location, and the files are SWAPPED under the
-    unchanged catalog table (bucket ids live in the file names, which
-    the swap preserves; REFRESH TABLE drops the stale listing). The
-    manifest is rewritten with the SAME source fingerprint — the
-    source didn't move, so staleness state and future incremental
-    appends are unaffected. Value-partitioned tables compact the same
-    way with a per-partition-value repartition. Single-writer via the
-    build lockfile. Returns {table: (files_before, files_after)}.
+    repartition: the table's files are read back, repartitioned on
+    their own bucket key (Spark's repartition hash is the same
+    Murmur3-pmod the bucketed writer uses, so each task holds exactly
+    one bucket → exactly one output file per bucket), and published
+    under the unchanged catalog table by :func:`_rewrite_layout`, the
+    staged-tree directory swap every layout change goes through (bucket
+    ids live in the file names, which the swap preserves). The
+    manifest keeps the SAME source fingerprint — the source didn't
+    move, so staleness state and future incremental appends are
+    unaffected. Value-partitioned tables compact the same way with a
+    per-partition-value repartition. Single-writer via the build
+    lockfile. Returns {table: (files_before, files_after)}.
 
-    This is also called AUTOMATICALLY by the maintenance
-    path: an incremental append that pushes a table past
-    ``LAYOUT_COMPACT_RUNS_PER_BUCKET`` average runs per bucket
-    triggers a compaction of that table under the same build lock.
+    An incremental append that pushes a table past
+    ``LAYOUT_COMPACT_RUNS_PER_BUCKET`` average runs per bucket runs
+    the minor step on that table under the same build lock.
 
-    ``full=False`` runs the SELECTIVE minor step
-    instead — :func:`_minor_compact_one` merges only each bucket's
-    accumulated append runs and hardlinks the untouched base files, so
-    the cost scales with the appended fraction rather than the corpus
-    size. The auto-compaction hook uses the minor step; call
-    ``full=True`` periodically (the LSM major step) to return read
-    fan-in to exactly one file per bucket."""
+    ``full=False`` runs the SELECTIVE minor step instead: it merges
+    only each bucket's accumulated append runs and hardlinks the
+    untouched base files, so the cost scales with the appended fraction
+    rather than the corpus size. Call ``full=True`` periodically (the
+    LSM major step) to return read fan-in to exactly one file per
+    bucket."""
     names = tuple(tables) if tables is not None else tuple(LAYOUT_BUCKET_KEYS)
     unknown = sorted(n for n in names if n not in LAYOUT_BUCKET_KEYS)
     if unknown:
@@ -1334,9 +1242,8 @@ def compact_workload_layout(spark: SparkSession, sf_dir: str,
         for name in names:
             tbl = spark.conf.get(_layout_conf_key(sf_dir, name), None)
             if tbl is not None:
-                out[name] = (
-                    _compact_one(spark, path, name, tbl) if full
-                    else _minor_compact_one(spark, path, name, tbl))
+                out[name] = _compact_layout_table(spark, path, name, tbl,
+                                                  full)
     return out
 
 
@@ -1345,6 +1252,46 @@ def _stream_marker_path(src_path: str) -> str:
     # *.parquet glob both ignore it, so the marker travels WITH the
     # source directory without perturbing fingerprints or scans
     return os.path.join(src_path, "_graft_stream.json")
+
+
+def _batch_input_files(source_log: str, batch_id: int) -> list[str]:
+    """Sorted input files of ``batch_id`` per a file source's checkpoint
+    metadata log. Spark compacts that log every compactInterval
+    (default 10) batches into a CUMULATIVE ``<id>.compact`` file (every
+    entry since batch 0, each carrying its own batchId), and its log
+    cleanup later deletes plain entries a compact file covers — so a
+    missing ``<id>`` is read from the newest ``.compact`` at or past the
+    batch, filtered to the batch's own entries."""
+    import json
+    from urllib.parse import unquote, urlparse
+
+    log_file = os.path.join(source_log, str(batch_id))
+    try:
+        if not os.path.exists(log_file):
+            later = [int(f[:-len(".compact")]) for f in os.listdir(source_log)
+                     if f.endswith(".compact")
+                     and f[:-len(".compact")].isdigit()]
+            later = [c for c in later if c >= batch_id]
+            if not later:
+                raise FileNotFoundError(f"{log_file}[.compact]")
+            log_file = os.path.join(source_log, f"{max(later)}.compact")
+        files = []
+        with open(log_file) as fh:
+            for line in fh:
+                line = line.strip()
+                if not line or line.startswith("v"):
+                    continue  # version header
+                rec = json.loads(line)
+                if int(rec.get("batchId", -1)) == batch_id:
+                    files.append(unquote(urlparse(rec["path"]).path))
+    except OSError as exc:
+        raise ValueError(
+            f"publish='link': no file-source metadata log entry for "
+            f"batch {batch_id} under {source_log} — the stream's source "
+            f"is not a file source (or not source 0), or Spark's log "
+            f"cleanup removed the entry and every compact file covering "
+            f"it. Use the default publish='write'. ({exc})") from exc
+    return sorted(files)
 
 
 def layout_ingest_writer(sf_dir: str, path: str, name: str,
@@ -1378,8 +1325,9 @@ def layout_ingest_writer(sf_dir: str, path: str, name: str,
        modified-source drift and force a full rebuild);
     3. the maintenance step runs on EVERY call — including replays —
        because its manifest diff is idempotent: a crash after the
-       marker but before the append leaves pending source parts that
-       the replay (or the next batch, or any manual build) folds in.
+       marker but before the append leaves source parts the layout
+       lacks, which the replay (or the next batch, or any manual
+       build) folds in.
 
     The replay decision is :func:`store.check_stream_identity`, shared
     with the sketch writers: batch ids are only monotonic WITHIN one
@@ -1444,7 +1392,6 @@ def layout_ingest_writer(sf_dir: str, path: str, name: str,
         import errno as _errno
         import glob as _glob
         import hashlib as _hashlib
-        import json as _json
         import shutil as _shutil
 
         spark = batch_df.sparkSession
@@ -1461,9 +1408,6 @@ def layout_ingest_writer(sf_dir: str, path: str, name: str,
             # sid-scoped so two streams feeding DIFFERENT sources that
             # happen to share a directory prefix can never collide
             if publish == "link":
-                from urllib.parse import unquote as _unquote
-                from urllib.parse import urlparse as _urlparse
-
                 sibling = os.path.join(os.path.dirname(source_log), "1")
                 if os.path.isdir(sibling):
                     # a second FILE source would publish only source
@@ -1476,34 +1420,7 @@ def layout_ingest_writer(sf_dir: str, path: str, name: str,
                         "publish='link' supports exactly ONE file "
                         f"source, but this stream checkpoints a second "
                         f"source at {sibling} — use publish='write'.")
-                # Spark compacts the file-source metadata log every
-                # compactInterval (default 10) batches: that batch's
-                # entry is named '<id>.compact' and is CUMULATIVE
-                # (every entry since batch 0, each carrying its own
-                # batchId) — so dispatch on whichever file exists and
-                # filter to THIS batch's entries.
-                log_file = os.path.join(source_log, str(int(batch_id)))
-                if not os.path.exists(log_file):
-                    log_file += ".compact"
-                entries: list[str] = []
-                try:
-                    with open(log_file) as fh:
-                        for line in fh:
-                            line = line.strip()
-                            if not line or line.startswith("v"):
-                                continue  # version header
-                            rec = _json.loads(line)
-                            if int(rec.get("batchId", -1)) != int(batch_id):
-                                continue  # compact file: other batches
-                            entries.append(
-                                _unquote(_urlparse(rec["path"]).path))
-                except OSError as exc:
-                    raise ValueError(
-                        f"publish='link': no file-source metadata log "
-                        f"entry at {log_file} — the stream's source is "
-                        f"not a file source (or not source 0). Use the "
-                        f"default publish='write'. ({exc})") from exc
-                files = sorted(entries)
+                files = _batch_input_files(source_log, int(batch_id))
                 if not files:
                     raise ValueError(
                         f"publish='link': batch {batch_id}'s metadata "

@@ -22,13 +22,18 @@ The registered points (each one line inside the window it names):
   (llm._write_cells), between ``rename(target, old)`` and
   ``rename(tmp, target)``: the stranded swap ``Swap.read`` must refuse
   and the next writer's ``Swap.heal`` must repair.
-- ``layout_swap_between_renames`` — the layout compaction's store.Swap
-  (catalog._swap_compacted), same window: readers fail loudly (the
-  catalog table points at a missing dir) and the next maintainer entry
-  restores the pre-compaction tree in O(1) via ``Swap.heal``.
-- ``minor_compact_mid_scratch`` — catalog._minor_compact_one, after
-  the merged-run write but before the hardlink assembly: nothing
-  published; the next entry must clean the scratch and redo.
+- ``layout_swap_between_renames`` — the store.Swap that publishes
+  every layout table change (catalog._rewrite_layout: appends, minor
+  and major compaction), same window: readers fail loudly (the catalog
+  table points at a missing dir) and the next maintainer entry restores
+  the previous tree in O(1) via ``Swap.heal`` — the staged tree holds
+  no manifest until the publish writes it, so an interrupted append is
+  rolled back and redone exactly once.
+- ``minor_compact_mid_scratch`` — catalog._rewrite_layout, the routine
+  shared by appends and both compactions (the name predates the
+  sharing), after the new rows are written into the staged tree but
+  before the kept files are hardlinked beside them: nothing published;
+  the next entry must clean the staged tree and redo.
 - ``layout_publish_before_marker`` — catalog.layout_ingest_writer,
   after the deterministic part publication but before the marker
   commit: the marker proves the layout never consumed the partial set,

@@ -176,82 +176,8 @@ def ingest_trips(spark: SparkSession, source_path: str, target: str) -> int:
     )
 
 
-# filesystem schemes Hadoop/Spark report or accept in table locations;
-# a single-slash 'file:/path' (no '//') is URI-parsed only for these —
-# any other 'word:' prefix is treated as a raw OS path (r11 ADVICE)
-_KNOWN_FS_SCHEMES = frozenset({
-    "file", "hdfs", "viewfs", "o3fs", "ofs", "s3", "s3a", "s3n", "gs",
-    "abfs", "abfss", "wasb", "wasbs", "oss", "dbfs", "cos", "swift",
-})
-
-
-def _normalize_location(loc: str) -> str:
-    """Canonicalize a table location for equality comparison (r10
-    ADVICE; r11 review fix): DESCRIBE FORMATTED reports a Hadoop URI
-    (percent-encoded, scheme-qualified) while callers usually pass raw
-    OS paths — so ONLY a string that actually carries a scheme is
-    URI-parsed. Running a raw path through urlparse would truncate at
-    '#'/'?' and wrongly decode literal %XX sequences ('/data/run#3'
-    would normalize to '/data/run' and both false-refuse a legitimate
-    append and false-pass a different directory). Local (file/bare)
-    locations realpath; remote schemes compare as
-    scheme://netloc/decoded-path.
-
-    What counts as "carries a scheme" (r11 ADVICE): a leading
-    ``name:`` alone does NOT — a relative dir literally named
-    ``data:v2/part`` would otherwise take the URI branch. Only an
-    explicit ``scheme://`` or a KNOWN filesystem scheme qualifies
-    (the known set covers Hadoop's single-slash ``file:/path``
-    spelling that DESCRIBE FORMATTED reports)."""
-    import re
-    from urllib.parse import unquote, urlparse
-
-    m = re.match(r"^([A-Za-z][A-Za-z0-9+.-]*):(//)?", loc)
-    if not m or (m.group(2) is None
-                 and m.group(1).lower() not in _KNOWN_FS_SCHEMES):
-        return os.path.realpath(loc)  # raw OS path: no URI semantics
-    parsed = urlparse(loc)
-    if parsed.scheme == "file":
-        return os.path.realpath(unquote(parsed.path))
-    return f"{parsed.scheme}://{parsed.netloc}{unquote(parsed.path).rstrip('/')}"
-
-
-def _check_append_location(df: DataFrame, table_name: str,
-                           path: str) -> None:
-    """Guard for ``path`` + ``mode='append'`` on the layout writers
-    (r10 ADVICE): append inherits the EXISTING table's location, so a
-    passed ``path`` is never applied — if the table is absent,
-    ``saveAsTable`` would silently create a MANAGED table in the
-    warehouse instead of at the requested external location, and if it
-    exists somewhere else the rows would land away from where the
-    caller pointed. Fail loudly in both cases."""
-    spark = df.sparkSession
-    if not spark.catalog.tableExists(table_name):
-        raise ValueError(
-            f"mode='append' with path={path!r}, but table "
-            f"{table_name!r} does not exist: the append would create a "
-            f"MANAGED warehouse table, ignoring the requested external "
-            f"location. Create the table first with mode='overwrite' "
-            f"(which honors path), or drop the path argument."
-        )
-    loc = next(
-        (r["data_type"] for r in
-         spark.sql(f"DESCRIBE FORMATTED {table_name}").collect()
-         if r["col_name"] == "Location"), None)
-    if loc is not None:
-        existing = _normalize_location(loc)
-        if existing != _normalize_location(path):
-            raise ValueError(
-                f"mode='append' with path={path!r}, but table "
-                f"{table_name!r} lives at {existing!r}: append always "
-                f"writes into the existing table's location — pass "
-                f"that path (or none) if that is what you mean."
-            )
-
-
 def write_bucketed(df: DataFrame, table_name: str, key: str,
-                   buckets: int = 16, path: str | None = None,
-                   mode: str = "overwrite") -> None:
+                   buckets: int = 16, path: str | None = None) -> None:
     """A15 (scale option): hash-bucketed, per-bucket-sorted table layout.
 
     Two tables bucketed on the same key with the same bucket count join
@@ -262,35 +188,25 @@ def write_bucketed(df: DataFrame, table_name: str, key: str,
     (``sql/init.sql:46-47``) when the dim is too large to broadcast.
     Asserted shuffle-free in tests/test_bucketing.py.
 
-    ``mode="append"`` adds rows INTO an existing bucketed table (Spark
-    validates the bucket spec matches): each append lands one new file
-    per written bucket, so buckets accumulate sorted runs — B-tree-
-    style incremental maintenance for the layout (catalog's
-    maintain-on-append path), paid per delta instead of per table.
-    Readers still get the hash-partitioning guarantee (bucket id is a
-    property of the key hash, not of file count); only the per-bucket
-    sort becomes per-run, which Spark's bucketed scan already treats
-    as unsorted input when a bucket has >1 file."""
+    Overwrites ``table_name`` (an external table when ``path`` is
+    given). A bucket may hold several files — the layout's appends add
+    sorted runs beside the existing ones (catalog._rewrite_layout);
+    readers keep the hash-partitioning guarantee (bucket id is a
+    property of the key hash, not of file count), and Spark's bucketed
+    scan treats a multi-file bucket as unsorted input."""
     writer = (
-        df.write.mode(mode)
+        df.write.mode("overwrite")
         .bucketBy(buckets, key)
         .sortBy(key)
         .format("parquet")
     )
     if path is not None:
-        if mode == "overwrite":
-            writer = writer.option("path", path)
-        else:
-            # append inherits the existing table's location;
-            # re-specifying it is a catalog conflict — verify the
-            # caller's intent instead of silently dropping it
-            _check_append_location(df, table_name, path)
+        writer = writer.option("path", path)
     writer.saveAsTable(table_name)
 
 
 def write_value_partitioned(df: DataFrame, table_name: str, key: str,
-                            path: str | None = None,
-                            mode: str = "overwrite") -> None:
+                            path: str | None = None) -> None:
     """Layout variant: one directory per distinct ``key`` value
     (``PARTITIONED BY`` at rest). Where :func:`write_bucketed` buys
     shuffle-free joins/aggregates, this buys SCAN PRUNING: a filter or
@@ -300,26 +216,21 @@ def write_value_partitioned(df: DataFrame, table_name: str, key: str,
     bounded-cardinality key — the embeddings ANN index's access
     pattern (catalog.LAYOUT_VALUE_PARTITIONED). Keep the key's
     cardinality bounded (directories are metadata, and tiny files are
-    the failure mode): LSH plane count, not raw ids. ``mode="append"``
-    adds files into the value directories — incremental maintenance,
-    same contract as the bucketed writer's append."""
-    writer = df.write.mode(mode).partitionBy(key).format("parquet")
-    if mode == "overwrite":
-        # overwrite must mean THE TABLE EQUALS THE FRAME: under the
-        # session's dynamic partitionOverwriteMode (right for the
-        # month-window reload sinks), a rebuild only replaces
-        # partitions PRESENT in the new frame — a partition value that
-        # vanished between builds (e.g. an LSH relayout to a narrower
-        # plane width, r11) would survive as stale duplicate rows
-        # (observed: 500-row source served 874 after a 6→4-plane
-        # rebuild). Static mode truncates every existing partition
-        # first; per-write option, the session default is untouched.
-        writer = writer.option("partitionOverwriteMode", "static")
+    the failure mode): LSH plane count, not raw ids. Overwrites
+    ``table_name``, like :func:`write_bucketed`."""
+    # overwrite must mean THE TABLE EQUALS THE FRAME: under the
+    # session's dynamic partitionOverwriteMode (right for the
+    # month-window reload sinks), a rebuild only replaces partitions
+    # PRESENT in the new frame — a partition value that vanished
+    # between builds (e.g. an LSH relayout to a narrower plane width)
+    # would survive as stale duplicate rows (observed: 500-row source
+    # served 874 after a 6→4-plane rebuild). Static mode truncates
+    # every existing partition first; per-write option, the session
+    # default is untouched.
+    writer = (df.write.mode("overwrite").partitionBy(key).format("parquet")
+              .option("partitionOverwriteMode", "static"))
     if path is not None:
-        if mode == "overwrite":
-            writer = writer.option("path", path)
-        else:
-            _check_append_location(df, table_name, path)
+        writer = writer.option("path", path)
     writer.saveAsTable(table_name)
 
 

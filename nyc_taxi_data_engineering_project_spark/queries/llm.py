@@ -490,47 +490,10 @@ def _embeddings(spark, sf_dir, with_bucket: bool = False,
     )
 
 
-def _sampled_kmeans(emb, k, sample_cap=4096, iters=8, seed=42):
-    """Seeded Lloyd k-means fit on a bounded sample of ``emb.emb`` —
-    the coarse-structure build shared by f21 (IVF quantizer) and f28
-    (topic clustering). Hash-ordered ``limit`` = deterministic uniform
-    sample in one TakeOrdered job; driver memory is bounded at
-    sample_cap × dim regardless of corpus size (the standard big-data
-    k-means posture: the fit sees a sample, the full corpus only ever
-    gets a map-only assignment pass). Returns the k×dim centroid array —
-    tiny driver state shipped to workers by closure."""
-    import numpy as np
-
-    sample = np.array(
-        [r.emb for r in emb.select("emb", "vec_id")
-         .orderBy(F.xxhash64("vec_id")).limit(sample_cap).collect()]
-    )
-    # empty-partition robustness: an empty corpus (a date-filtered run
-    # over an empty month) has no structure to fit — return None and
-    # let the caller emit its empty result instead of crashing in
-    # rng.choice; a corpus smaller than k fits what it has (fewer cells
-    # than asked is the correct degenerate quantizer, not an error)
-    if len(sample) == 0:
-        return None
-    k = min(k, len(sample))
-    rng = np.random.default_rng(seed)
-    centers = sample[rng.choice(len(sample), k, replace=False)]
-    for _ in range(iters):
-        d2 = ((sample[:, None, :] - centers[None, :, :]) ** 2).sum(axis=2)
-        assign = d2.argmin(axis=1)
-        for j in range(k):  # empty cell keeps its previous centroid
-            members = sample[assign == j]
-            if len(members):
-                centers[j] = members.mean(axis=0)
-    return centers
-
-
-# Portable seed quantizer (r8: the f21/f28 oracle graduation). The Lloyd
-# fit above is seeded and driver-bounded but its centroids are fitted in
-# numpy — no static SQL twin can reproduce 8 iterations of float means
-# bit-exactly, which is why f21/f28 were rows-only through r7. The
-# graduation replaces the REGISTERED keys' quantizer with one both
-# engines derive from the data identically: the centroids are the
+# Portable seed quantizer (the f21/f28 oracle graduation). A Lloyd
+# k-means fit lives in numpy — no static SQL twin can reproduce its
+# float means bit-exactly — so f21/f28 use a quantizer both engines
+# derive from the data identically: the centroids are the
 # embeddings of the k vectors with the smallest Knuth-style multiplicative
 # hash of vec_id — pure BIGINT arithmetic (no overflow: (2^31-1)·A + C
 # < 2^63), i.e. k-means with hash-random init and zero Lloyd iterations,
@@ -538,8 +501,7 @@ def _sampled_kmeans(emb, k, sample_cap=4096, iters=8, seed=42):
 # SEQUENTIAL per-element accumulation (cumsum, not matmul) so d² is
 # bit-identical to DuckDB's list_dot_product fold (the f3-proven
 # equivalence), and every ordering ties on (d², cell) in both engines —
-# the assignment is exact, not ulp-close. The Lloyd fit remains the
-# data-adaptive option (quantizer="kmeans", exercised by tests).
+# the assignment is exact, not ulp-close.
 _SEED_M = 2_147_483_648  # 2^31
 _SEED_A = 1_103_515_245
 _SEED_C = 12_345
@@ -1328,7 +1290,7 @@ def _f21_oracle(k: int = 16, nprobe: int = 4) -> str:
 
 
 @query("f21_ivf_ann", oracle=_f21_oracle())
-def f21_ivf_ann(spark, sf_dir, quantizer="seed"):
+def f21_ivf_ann(spark, sf_dir):
     """F21: IVF (inverted-file) ANN — the second of the two scale
     structures the training-pipeline mandate names (LSH is f3_lsh_ann).
     A coarse quantizer partitions the corpus into cells; every vector
@@ -1336,26 +1298,18 @@ def f21_ivf_ann(spark, sf_dir, quantizer="seed"):
     each query probes its nprobe=4 nearest cells and runs exact cosine
     top-k inside them only.
 
-    Quantizers (r8 graduation — see the _SEED_M block comment): the
-    registered key uses the PORTABLE seed quantizer (centroids = the k
-    hash-ranked corpus vectors, zero Lloyd iterations), which both
-    engines derive identically — the key is fully oracle-hash-checked.
-    ``quantizer="kmeans"`` keeps the seeded Lloyd fit
-    (``_sampled_kmeans``) as the data-adaptive option for clustered
-    embeddings; its fitted centroids live only in numpy, so that
-    variant is recall-gated rather than hash-checked
-    (tests/test_llm_ops.py exercises both).
+    Quantizer (see the _SEED_M block comment): the PORTABLE seed
+    quantizer (centroids = the k hash-ranked corpus vectors, zero Lloyd
+    iterations), which both engines derive identically — the key is
+    fully oracle-hash-checked.
 
-    Scale posture (either quantizer): driver state is k×dim regardless
+    Scale posture: driver state is k×dim regardless
     of corpus size; assignment is map-only, one Arrow batch pass; the
     probe join is equi on cell id, shuffle-partitionable; recall/cost
     is tuned by k and nprobe."""
     k, nprobe = 16, 4
     emb = _embeddings(spark, sf_dir)
-    if quantizer == "seed":
-        centers_np = _seed_centroids(emb, k=k)
-    else:
-        centers_np = _sampled_kmeans(emb, k=k)
+    centers_np = _seed_centroids(emb, k=k)
     if centers_np is None:  # empty corpus: no index, no neighbors
         return spark.createDataFrame(
             [], "query_id long, neighbor_id long, cosine double, rk int")
@@ -2836,15 +2790,13 @@ def _f28_oracle(k: int = 8) -> str:
 
 
 @query("f28_doc_clustering", oracle=_f28_oracle())
-def f28_doc_clustering(spark, sf_dir, quantizer="seed"):
+def f28_doc_clustering(spark, sf_dir):
     """F28: corpus topic clustering — vector quantization over the
     embedding column (the domain-mixture / data-curation view: cluster
     sizes and purity drive up/down-sampling decisions in training-data
-    pipelines). Reuses f21's machinery: the portable seed quantizer by
-    default (fully oracle-hash-checked — see f21's docstring and the
-    _SEED_M block comment for the r8 graduation), the seeded Lloyd fit
-    via ``quantizer="kmeans"`` for data-adaptive cells (recall/invariant
-    gated in tests).
+    pipelines). Reuses f21's machinery: the portable seed quantizer
+    (fully oracle-hash-checked — see f21's docstring and the _SEED_M
+    block comment).
 
     Scale posture: quantizer cost is constant in corpus size (k×dim
     driver state); assignment is one map-only Arrow pass; the
@@ -2853,10 +2805,7 @@ def f28_doc_clustering(spark, sf_dir, quantizer="seed"):
     label mix."""
     k = 8
     emb = _embeddings(spark, sf_dir)
-    if quantizer == "seed":
-        centers_np = _seed_centroids(emb, k=k)
-    else:
-        centers_np = _sampled_kmeans(emb, k=k)
+    centers_np = _seed_centroids(emb, k=k)
     if centers_np is None:  # empty corpus: no clusters to profile
         return spark.createDataFrame(
             [], "cluster_id long, n_vecs long, n_labels long, "

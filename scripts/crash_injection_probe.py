@@ -19,6 +19,10 @@ processes assert the documented recovery:
                                   | file set unchanged)
   minor_compact_mid_scratch       | nothing published — table intact,
                                   | re-entry cleans scratch + compacts
+  layout_swap_between_renames     | heal rolls the table back to its
+   (during an incremental append) | pre-append tree and manifest; the
+                                  | next build lands the delta exactly
+                                  | once (served rows = source rows)
   layout_publish_before_marker    | marker proves non-consumption;
                                   | checkpoint replay deletes the
                                   | partial set and republishes
@@ -141,6 +145,20 @@ def _setup_layout_source(work: str) -> str:
     return sf
 
 
+def _add_source_part(spark, work: str, i: int) -> None:
+    """Land one new source part of 500 orders with fresh keys."""
+    sf, _lay = _layout_dirs(work)
+    df = spark.read.parquet(os.path.join(sf, "orders.parquet"))
+    extra = df.limit(500).withColumn(
+        "o_orderkey", df.o_orderkey + (i + 1) * 50_000_000)
+    tmp = os.path.join(work, f"extra_{i}")
+    extra.coalesce(1).write.parquet(tmp)
+    part = glob.glob(os.path.join(tmp, "*.parquet"))[0]
+    shutil.copy(part, os.path.join(
+        sf, "orders.parquet", f"part-extra-{i:03d}.parquet"))
+    shutil.rmtree(tmp)
+
+
 def phase_layout_build(work: str, appends: int = 0) -> None:
     """Build the orders layout; optionally append extra source parts
     (incremental appends = one new sorted run per touched bucket) so
@@ -154,15 +172,7 @@ def phase_layout_build(work: str, appends: int = 0) -> None:
                                   tables=("orders",))
     for i in range(appends):
         # new source part -> append-only drift -> incremental append
-        df = spark.read.parquet(os.path.join(sf, "orders.parquet"))
-        extra = df.limit(500).withColumn(
-            "o_orderkey", df.o_orderkey + (i + 1) * 50_000_000)
-        tmp = os.path.join(work, f"extra_{i}")
-        extra.coalesce(1).write.parquet(tmp)
-        part = glob.glob(os.path.join(tmp, "*.parquet"))[0]
-        shutil.copy(part, os.path.join(
-            sf, "orders.parquet", f"part-extra-{i:03d}.parquet"))
-        shutil.rmtree(tmp)
+        _add_source_part(spark, work, i)
         catalog.build_workload_layout(spark, sf, lay, buckets=4,
                                       tables=("orders",))
     tbl = spark.conf.get(catalog._layout_conf_key(sf, "orders"))
@@ -255,6 +265,47 @@ def phase_minor_assert_intact_then_compact(work: str) -> None:
     print(f"MINOR_REENTRY_OK files {before}->{after}", flush=True)
 
 
+def phase_append_kill(work: str) -> None:
+    """Land a new source part and maintain the layout with the swap
+    window armed: the incremental append dies between the renames."""
+    from nyc_taxi_data_engineering_project_spark import catalog
+
+    sf, lay = _layout_dirs(work)
+    spark = _session()
+    catalog.build_workload_layout(spark, sf, lay, buckets=4,
+                                  tables=("orders",))  # re-register
+    _add_source_part(spark, work, 0)
+    os.environ["SPARK_GRAFT_CRASH_POINT"] = "layout_swap_between_renames"
+    catalog.build_workload_layout(spark, sf, lay, buckets=4,
+                                  tables=("orders",))
+    raise AssertionError("unreachable — the append's swap must kill us")
+
+
+def phase_append_assert_exactly_once(work: str) -> None:
+    """The heal restores the pre-append tree and manifest; the next
+    build then lands the delta exactly once."""
+    from nyc_taxi_data_engineering_project_spark import catalog
+
+    sf, lay = _layout_dirs(work)
+    with open(os.path.join(work, "layout_state.json")) as fh:
+        state = json.load(fh)
+    tbl = state["tbl"]
+    catalog._layout_swap(lay, tbl).heal()
+    assert catalog._read_manifest(lay, tbl) == state["manifest"]
+    files = catalog._layout_n_files(os.path.join(lay, tbl))
+    assert files == state["files"], (files, state["files"])
+    spark = _session()
+    catalog.build_workload_layout(spark, sf, lay, buckets=4,
+                                  tables=("orders",))
+    served = catalog.table(spark, sf, "orders")
+    n = served.count()
+    nd = served.select("o_orderkey").distinct().count()
+    want = spark.read.parquet(os.path.join(sf, "orders.parquet")).count()
+    assert n == nd == want == state["rows"] + 500, (n, nd, want)
+    assert not os.path.isdir(os.path.join(lay, tbl + "_compact_old"))
+    print(f"APPEND_EXACTLY_ONCE_OK rows={n}", flush=True)
+
+
 def _stream_paths(work: str) -> dict[str, str]:
     return {k: os.path.join(work, k)
             for k in ("feed", "src", "layout", "ckpt")}
@@ -315,6 +366,8 @@ PHASES = {
     "layout_reader": phase_layout_assert_reader_refuses,
     "layout_heal_o1": lambda w: phase_layout_assert_heal(w, True),
     "minor_reentry": phase_minor_assert_intact_then_compact,
+    "append_kill": phase_append_kill,
+    "append_exactly_once": phase_append_assert_exactly_once,
     "stream_kill_publish": lambda w: phase_stream_kill(
         w, "layout_publish_before_marker"),
     "stream_kill_marker": lambda w: phase_stream_kill(
@@ -424,6 +477,12 @@ def main() -> None:
         ("layout_build_runs", False),
         ("scratch_kill", True),
         ("minor_reentry", False),
+    ])
+    run("layout_swap_append", [
+        ("layout_build", False),
+        ("append_kill", True),
+        ("layout_reader", False),
+        ("append_exactly_once", False),
     ])
     run("stream_publish_before_marker", [
         ("stream_kill_publish", True),

@@ -43,7 +43,8 @@ def main() -> None:
     def timed_write_bucketed(*a, **kw):
         t0 = time.perf_counter()
         real_write_bucketed(*a, **kw)
-        events.append((f"write_bucketed(mode={kw.get('mode','overwrite')})",
+        # the table name tells a full build from a staged append
+        events.append((f"write_bucketed({a[1]})",
                        round(time.perf_counter() - t0, 3)))
 
     def timed_build(*a, **kw):

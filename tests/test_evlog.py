@@ -204,3 +204,51 @@ def test_python_worker_time_fourth_column(tmp_path):
                      # evidence
                      "python_worker_bytes": 12345},
     }
+
+
+def test_bench_outputs_omit_cpu_totals_when_the_log_does_not_parse(
+        tmp_path, monkeypatch, capsys):
+    """bench.py's board totals ride the event-log parse. When it fails,
+    neither BENCH_DETAIL.json nor the stdout line may carry
+    ``task_cpu_total`` / ``python_worker_total`` as null. bench.py
+    writes the detail file beside itself, so a copy runs from
+    ``tmp_path``."""
+    import importlib.util
+    import shutil
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    # bench.py puts its own directory on sys.path; undo that afterwards
+    monkeypatch.setattr(sys, "path", list(sys.path))
+    shutil.copy(os.path.join(repo, "bench.py"), tmp_path / "bench.py")
+    spec = importlib.util.spec_from_file_location(
+        "bench_copy", tmp_path / "bench.py")
+    bench = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(bench)
+
+    class _Session:
+        class sparkContext:  # noqa: N801 — stands in for the attribute
+            @staticmethod
+            def setJobGroup(*_a):
+                pass
+
+        def stop(self):
+            pass
+
+    def _unparsable(*_a, **_kw):
+        raise ValueError("synthetic unparsable event log")
+
+    monkeypatch.delenv("SPARK_GRAFT_LAYOUT_DIR", raising=False)
+    monkeypatch.setattr(bench, "get_session", lambda *a, **kw: _Session())
+    monkeypatch.setattr(bench.registry, "load_all", lambda: None)
+    monkeypatch.setattr(bench.registry, "QUERIES", {})
+    monkeypatch.setattr(bench, "group_task_metrics", _unparsable)
+    bench.main()
+
+    with open(tmp_path / "BENCH_DETAIL.json") as fh:
+        detail = json.load(fh)
+    line = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    for out in (detail, line):
+        assert "task_cpu_total" not in out
+        assert "python_worker_total" not in out
+    assert detail["metrics"] == {} and line["n_queries"] == 0

@@ -233,18 +233,13 @@ def test_ml_minhash_lsh_finds_planted_neardups(spark):
             assert r.jaccard >= 0.6
 
 
-@pytest.mark.parametrize("quantizer", ["seed", "kmeans"])
-def test_ivf_ann_recall_vs_bruteforce(spark, quantizer):
+def test_ivf_ann_recall_vs_bruteforce(spark):
     """IVF with nprobe=4 of 16 cells must recall well over half of the
-    exact top-5 (both quantizers measure ~0.5-0.6 on the isotropic
+    exact top-5 (the seed quantizer measures ~0.5-0.6 on the isotropic
     synthetic vectors — beats LSH's ~0.4 here), and agree with exact
-    cosine values on overlaps. Both quantizers are exercised: the
-    portable seed quantizer (the registered, oracle-hash-checked key)
-    and the seeded Lloyd fit (the data-adaptive option for clustered
-    embeddings)."""
+    cosine values on overlaps."""
     exact = registry.QUERIES["f3_cosine_topk"](spark, SF_DIR).collect()
-    approx = registry.QUERIES["f21_ivf_ann"](
-        spark, SF_DIR, quantizer=quantizer).collect()
+    approx = registry.QUERIES["f21_ivf_ann"](spark, SF_DIR).collect()
     es, approx_sets = {}, {}
     for r in exact:
         es.setdefault(r.query_id, set()).add(r.neighbor_id)
@@ -258,29 +253,6 @@ def test_ivf_ann_recall_vs_bruteforce(spark, quantizer):
     for r in approx:
         if (r.query_id, r.neighbor_id) in exact_cos:
             assert abs(exact_cos[(r.query_id, r.neighbor_id)] - r.cosine) < 1e-9
-
-
-def test_sampled_kmeans_tiny_corpus_clamps_k(spark):
-    """r6 empty-sweep follow-through: the 0 < corpus < k band. A
-    3-vector corpus asked for k=16 cells must fit 3 centroids (the
-    vectors themselves, in some order), not crash in rng.choice; an
-    empty corpus must return None (the callers' emit-empty signal)."""
-    from nyc_taxi_data_engineering_project_spark.queries.llm import (
-        _sampled_kmeans,
-    )
-
-    tiny = spark.createDataFrame(
-        [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [1.0, 1.0])],
-        "vec_id long, emb array<double>",
-    )
-    centers = _sampled_kmeans(tiny, k=16)
-    assert centers.shape == (3, 2)
-    assert sorted(map(tuple, centers.tolist())) == [
-        (0.0, 1.0), (1.0, 0.0), (1.0, 1.0),
-    ]
-
-    empty = spark.createDataFrame([], "vec_id long, emb array<double>")
-    assert _sampled_kmeans(empty, k=16) is None
 
 
 def test_boilerplate_removal_reassembly(spark):
@@ -334,13 +306,10 @@ def test_chunking_covers_documents(spark):
         assert last.n_tokens == n - 24 * (len(got) - 1)
 
 
-@pytest.mark.parametrize("quantizer", ["seed", "kmeans"])
-def test_doc_clustering_partitions_corpus(spark, quantizer):
+def test_doc_clustering_partitions_corpus(spark):
     """f28: cluster sizes must sum to the corpus size with at most k
-    non-empty clusters — under both quantizers (the oracle-checked seed
-    default and the Lloyd fit)."""
-    rows = registry.QUERIES["f28_doc_clustering"](
-        spark, SF_DIR, quantizer=quantizer).collect()
+    non-empty clusters."""
+    rows = registry.QUERIES["f28_doc_clustering"](spark, SF_DIR).collect()
     n = table(spark, SF_DIR, "embeddings").count()
     assert sum(r.n_vecs for r in rows) == n
     assert 1 <= len(rows) <= 8

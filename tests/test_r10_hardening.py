@@ -1,6 +1,6 @@
 """r10 ADVICE hardening: build-lock EPERM semantics, fresh-register
-bucket-count honesty, failure-safe compaction swap, append-location
-guard on the layout writers, and the JVM-scoped dot-kernel memo."""
+bucket-count honesty, failure-safe compaction swap, and the JVM-scoped
+dot-kernel memo."""
 
 from __future__ import annotations
 
@@ -8,11 +8,9 @@ import os
 import shutil
 
 import pytest
-from pyspark.sql import functions as F
 
 from conftest import SF_DIR
 from nyc_taxi_data_engineering_project_spark import catalog
-from nyc_taxi_data_engineering_project_spark import io as gio
 from nyc_taxi_data_engineering_project_spark.catalog import (
     _acquire_build_lock,
     _layout_conf_key,
@@ -146,39 +144,6 @@ def test_compact_swap_failure_restores_original_tree(
         assert table(spark, src_dir, "orders").count() == n
     finally:
         drop_workload_layout(spark, src_dir)
-
-
-# ------------------------------------------- append-location guard
-def test_append_with_path_requires_existing_table(spark, tmp_path):
-    df = spark.range(10).select(
-        F.col("id").alias("k"), (F.col("id") % 3).alias("v"))
-    spark.sql("DROP TABLE IF EXISTS t_r10_absent")
-    with pytest.raises(ValueError, match="does not exist"):
-        gio.write_bucketed(df, "t_r10_absent", "k", buckets=2,
-                           path=str(tmp_path / "t1"), mode="append")
-    assert not spark.catalog.tableExists("t_r10_absent")
-    with pytest.raises(ValueError, match="does not exist"):
-        gio.write_value_partitioned(df, "t_r10_absent", "v",
-                                    path=str(tmp_path / "t2"),
-                                    mode="append")
-
-
-def test_append_with_mismatching_path_raises(spark, tmp_path):
-    df = spark.range(10).select(
-        F.col("id").alias("k"), (F.col("id") % 3).alias("v"))
-    real = str(tmp_path / "real")
-    try:
-        gio.write_bucketed(df, "t_r10_loc", "k", buckets=2, path=real)
-        with pytest.raises(ValueError, match="lives at"):
-            gio.write_bucketed(df, "t_r10_loc", "k", buckets=2,
-                               path=str(tmp_path / "elsewhere"),
-                               mode="append")
-        # the MATCHING path is accepted (explicit no-op confirmation)
-        gio.write_bucketed(df, "t_r10_loc", "k", buckets=2, path=real,
-                           mode="append")
-        assert spark.table("t_r10_loc").count() == 20
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_r10_loc")
 
 
 # ------------------------------------------------- dot-kernel memo

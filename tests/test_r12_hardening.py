@@ -1,11 +1,8 @@
 """r11 ADVICE fixes, pinned (r12).
 
-Four low-severity findings from the round-11 advisor, each with the
+Low-severity findings from the round-11 advisor, each with the
 failure it names reproduced here so the fix can't regress:
 
-1. io._normalize_location treated ANY leading ``word:`` as a URI
-   scheme — a relative dir literally named ``data:v2/part`` got
-   urlparse'd (truncated at '?'/'#', percent-decoded).
 2. session's undersized-heap warning assumed '8g' when
    spark.driver.memory was unset — suppressing the warning exactly for
    unmanaged JVMs whose real default heap is 1 g.
@@ -25,54 +22,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from conftest import SF_DIR
-from nyc_taxi_data_engineering_project_spark.io import _normalize_location
 from nyc_taxi_data_engineering_project_spark.session import (
     _running_heap_gb,
 )
-
-
-# ---------------------------------------------------------------- 1 —
-class TestNormalizeLocationSchemeDetection:
-    def test_relative_dir_with_colon_segment_is_a_path(
-            self, tmp_path, monkeypatch):
-        # 'data:v2/part' has a leading 'data:' that is NOT a URI scheme
-        monkeypatch.chdir(tmp_path)
-        loc = "data:v2/part"
-        assert _normalize_location(loc) == os.path.realpath(loc)
-
-    def test_colon_path_with_query_chars_not_truncated(
-            self, tmp_path, monkeypatch):
-        monkeypatch.chdir(tmp_path)
-        loc = "data:v2/run?x=1#frag"
-        # the URI branch would truncate at '?'; the path branch keeps it
-        assert _normalize_location(loc).endswith("run?x=1#frag")
-
-    def test_colon_path_percent_not_decoded(self, tmp_path, monkeypatch):
-        monkeypatch.chdir(tmp_path)
-        loc = "data:v2/p%20q"
-        assert _normalize_location(loc).endswith("p%20q")
-
-    def test_single_slash_file_uri_still_uri(self):
-        # Hadoop's DESCRIBE FORMATTED spelling: file:/x (no '//')
-        assert _normalize_location("file:/x/y") == os.path.realpath(
-            "/x/y")
-        assert _normalize_location("file:///x/y") == os.path.realpath(
-            "/x/y")
-
-    def test_remote_scheme_normalizes(self):
-        assert (_normalize_location("s3a://bucket/p/q/")
-                == "s3a://bucket/p/q")
-
-    def test_unknown_scheme_with_slashes_is_uri(self):
-        # explicit '://' always takes the URI branch, known or not
-        assert (_normalize_location("weird://host/p")
-                == "weird://host/p")
-
-    def test_guard_equality_raw_vs_file_uri(self, tmp_path):
-        d = str(tmp_path / "t")
-        os.makedirs(d)
-        assert _normalize_location(d) == _normalize_location(
-            "file:" + d)
 
 
 # ---------------------------------------------------------------- 2 —

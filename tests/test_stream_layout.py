@@ -438,6 +438,48 @@ def test_link_publish_across_metadata_log_compaction(spark, tmp_path):
         drop_workload_layout(spark, src)
 
 
+def test_link_publish_reads_a_cleaned_up_entry_from_a_later_compact(
+        spark, tmp_path):
+    """Spark's file-source log cleanup deletes plain entries a later
+    ``.compact`` file covers. A replayed non-boundary batch whose plain
+    entry is gone must be read from the newest compact file at or past
+    it, not refused as "not a file source"; with no covering compact
+    file the refusal names log cleanup as a possible cause."""
+    feed = str(tmp_path / "feed")
+    src = str(tmp_path / "src")
+    lay = str(tmp_path / "lay")
+    log_dir = str(tmp_path / "ckpt" / "sources" / "0")
+    os.makedirs(src)
+    os.makedirs(log_dir)
+    orders = spark.read.parquet(f"{SF_DIR}/orders.parquet")
+    orders.repartition(3).write.parquet(feed)
+    parts = sorted(glob.glob(os.path.join(feed, "*.parquet")))
+    assert len(parts) == 3
+
+    def _entry(i):
+        return json.dumps({"path": f"file://{parts[i]}", "timestamp": 0,
+                           "batchId": i}) + "\n"
+
+    # batch 2 is a compact boundary holding batches 0-2; cleanup
+    # deleted the plain entries of batches 0 and 1
+    with open(os.path.join(log_dir, "2.compact"), "w") as fh:
+        fh.write("v1\n" + "".join(_entry(i) for i in range(3)))
+    writer = layout_ingest_writer(src, lay, "orders", stream_id="ckpt-c",
+                                  buckets=4, publish="link",
+                                  source_log=log_dir)
+    dummy = orders.limit(0)
+    try:
+        for b in range(3):
+            writer(dummy, b)
+        assert len(_published(src)) == 3
+        served = _served_rows(spark, src)
+        assert served.count() == orders.count()
+        with pytest.raises(ValueError, match="log cleanup"):
+            writer(dummy, 3)
+    finally:
+        drop_workload_layout(spark, src)
+
+
 def test_link_publish_crash_mid_link_republishes_cleanly(
         spark, tmp_path, monkeypatch):
     """Crash window 1 for the LINK publisher: some links landed, the

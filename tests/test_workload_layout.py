@@ -425,11 +425,10 @@ def test_incremental_maintenance_appends_only_the_delta(spark, tmp_path):
 
 def test_death_between_append_and_manifest_does_not_duplicate(
         spark, tmp_path, monkeypatch):
-    """Incremental maintenance appends the delta, then writes the
-    manifest. A failure between the two must not let the next run append
-    the same delta again: the pending-parts record written before the
-    append sends it down the full-rebuild path, so the served rows equal
-    the source's."""
+    """Incremental maintenance writes the delta, then publishes it with
+    the manifest. A failure between the two must not let the next run
+    append the same delta again: nothing was published, so the retry
+    appends it exactly once and the served rows equal the source's."""
     import os
     import shutil
 
@@ -456,8 +455,7 @@ def test_death_between_append_and_manifest_does_not_duplicate(
 
         def _append_then_die(*a, **kw):
             real_write(*a, **kw)
-            if kw.get("mode") == "append":
-                raise RuntimeError("synthetic death after the append job")
+            raise RuntimeError("synthetic death after the append job")
 
         monkeypatch.setattr(_io, "write_bucketed", _append_then_die)
         with pytest.raises(RuntimeError, match="synthetic death"):
@@ -471,6 +469,150 @@ def test_death_between_append_and_manifest_does_not_duplicate(
         assert table(spark, src_dir, "orders").count() == src_rows.count()
     finally:
         drop_workload_layout(spark, src_dir)
+
+
+def _orders_layout_with_pending_month(spark, tmp_path):
+    """An orders layout built from months 1-11 of a directory source,
+    with month 12 then landed as a new source part: the next build is
+    an incremental append. Returns (src_dir, layout_dir, table)."""
+    import os
+    import shutil
+
+    src_dir = str(tmp_path / "src")
+    os.makedirs(src_dir)
+    plain = spark.read.parquet(f"{SF_DIR}/orders.parquet")
+    plain.filter(F.month("o_orderdate") != 12).coalesce(1) \
+        .write.parquet(f"{src_dir}/orders.parquet")
+    lay = str(tmp_path / "layout")
+    tbl = build_workload_layout(spark, src_dir, lay, buckets=4,
+                                tables=("orders",))["orders"]
+    tmp_out = str(tmp_path / "m2")
+    plain.filter(F.month("o_orderdate") == 12).coalesce(1) \
+        .write.parquet(tmp_out)
+    part = next(p for p in os.listdir(tmp_out) if p.endswith(".parquet"))
+    shutil.copy(f"{tmp_out}/{part}",
+                f"{src_dir}/orders.parquet/month2-{part}")
+    return src_dir, lay, tbl
+
+
+def test_failed_append_publishes_nothing_and_retries_incrementally(
+        spark, tmp_path, monkeypatch):
+    """A failure after the delta write leaves the served rows and the
+    manifest exactly as they were, and the retry takes the incremental
+    path: every pre-existing layout file (by inode) is still in the
+    table afterwards — no full rebuild."""
+    import os
+
+    from nyc_taxi_data_engineering_project_spark import io as _io
+    from nyc_taxi_data_engineering_project_spark.catalog import (
+        _read_manifest,
+    )
+
+    src_dir, lay, tbl = _orders_layout_with_pending_month(spark, tmp_path)
+    try:
+        n0 = spark.table(tbl).count()
+        m0 = _read_manifest(lay, tbl)
+        inodes0 = {os.stat(f).st_ino for f in _layout_data_files(spark, tbl)}
+        real_write = _io.write_bucketed
+
+        def _write_then_die(*a, **kw):
+            real_write(*a, **kw)
+            raise RuntimeError("synthetic death after the delta write")
+
+        monkeypatch.setattr(_io, "write_bucketed", _write_then_die)
+        with pytest.raises(RuntimeError, match="synthetic death"):
+            build_workload_layout(spark, src_dir, lay, buckets=4,
+                                  tables=("orders",))
+        monkeypatch.undo()
+        spark.sql(f"REFRESH TABLE {tbl}")
+        assert spark.table(tbl).count() == n0
+        assert _read_manifest(lay, tbl) == m0
+
+        build_workload_layout(spark, src_dir, lay, buckets=4,
+                              tables=("orders",))
+        inodes1 = {os.stat(f).st_ino for f in _layout_data_files(spark, tbl)}
+        assert inodes0 < inodes1, "the retry rewrote pre-existing files"
+        src_rows = spark.read.parquet(f"{src_dir}/orders.parquet")
+        assert table(spark, src_dir, "orders").count() == src_rows.count()
+    finally:
+        drop_workload_layout(spark, src_dir)
+
+
+def test_source_part_added_during_append_refuses_and_publishes_nothing(
+        spark, tmp_path, monkeypatch):
+    """A source part landing while an append runs must raise the loud
+    "changed WHILE" error, publish nothing (the table still serves the
+    pre-append rows) and keep the old manifest."""
+    import os
+    import shutil
+
+    from nyc_taxi_data_engineering_project_spark import io as _io
+    from nyc_taxi_data_engineering_project_spark.catalog import (
+        _read_manifest,
+    )
+
+    src_dir, lay, tbl = _orders_layout_with_pending_month(spark, tmp_path)
+    try:
+        n0 = spark.table(tbl).count()
+        m0 = _read_manifest(lay, tbl)
+        real_write = _io.write_bucketed
+        src_tbl_dir = f"{src_dir}/orders.parquet"
+        first = sorted(p for p in os.listdir(src_tbl_dir)
+                       if p.endswith(".parquet"))[0]
+
+        def _write_while_ingest_lands(*a, **kw):
+            real_write(*a, **kw)
+            shutil.copy(f"{src_tbl_dir}/{first}",
+                        f"{src_tbl_dir}/late-{first}")
+
+        monkeypatch.setattr(_io, "write_bucketed", _write_while_ingest_lands)
+        with pytest.raises(ValueError, match="changed WHILE"):
+            build_workload_layout(spark, src_dir, lay, buckets=4,
+                                  tables=("orders",))
+        monkeypatch.undo()
+        spark.sql(f"REFRESH TABLE {tbl}")
+        assert spark.table(tbl).count() == n0
+        assert _read_manifest(lay, tbl) == m0
+    finally:
+        drop_workload_layout(spark, src_dir)
+
+
+def test_concurrent_reader_during_append(spark, tmp_path):
+    """A reader hammering the layout table while an incremental append
+    publishes must only ever see a whole version: every successful read
+    returns the pre-append count or the post-append count."""
+    import threading
+    import time as _time
+
+    src_dir, lay, tbl = _orders_layout_with_pending_month(spark, tmp_path)
+    pre = spark.table(tbl).count()
+    post = spark.read.parquet(f"{src_dir}/orders.parquet").count()
+    stop = threading.Event()
+    counts: list[int] = []
+
+    def reader():
+        while not stop.is_set():
+            try:
+                counts.append(spark.table(tbl).count())
+            except Exception:  # noqa: BLE001 — the swap's listing race
+                pass
+
+    t = threading.Thread(target=reader)
+    try:
+        t.start()
+        build_workload_layout(spark, src_dir, lay, buckets=4,
+                              tables=("orders",))
+        _time.sleep(0.5)  # a few reads strictly after the publish
+    finally:
+        stop.set()
+        t.join()
+        drop_workload_layout(spark, src_dir)
+    assert counts, "reader thread never completed a single read"
+    wrong = set(counts) - {pre, post}
+    assert not wrong, (
+        f"concurrent reads returned {wrong}, neither the pre-append "
+        f"{pre} nor the post-append {post} count")
+    assert counts[-1] == post
 
 
 def test_incremental_maintenance_partitioned_embeddings(spark, tmp_path):
@@ -540,6 +682,41 @@ def test_incremental_maintenance_partitioned_embeddings(spark, tmp_path):
         finally:
             spark.conf.unset(LAYOUT_SERVE_CONF)
         assert served.count() == plain.count()
+    finally:
+        drop_workload_layout(spark, src_dir)
+
+
+def test_append_adds_new_partition_values(spark, tmp_path):
+    """An append whose rows land in partition VALUES the layout did not
+    hold yet (LSH buckets first seen in the delta) must serve them: the
+    published tree's new partition directories are registered with the
+    catalog table, so the served rows equal the source's."""
+    import os
+    import shutil
+
+    src_dir = str(tmp_path / "src")
+    os.makedirs(src_dir)
+    plain = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    tagged = table(spark, SF_DIR, "embeddings", with_derived=True)
+    low = tagged.filter(F.col("graft_lsh_bucket") < 8).select("vec_id")
+    first = plain.join(low, "vec_id", "left_semi")
+    rest = plain.join(low, "vec_id", "left_anti")
+    assert first.count() > 0 and rest.count() > 0
+    first.coalesce(1).write.parquet(f"{src_dir}/embeddings.parquet")
+    lay = str(tmp_path / "lay")
+    build_workload_layout(spark, src_dir, lay, tables=("embeddings",))
+    try:
+        tmp_out = str(tmp_path / "rest")
+        rest.coalesce(1).write.parquet(tmp_out)
+        part = next(p for p in os.listdir(tmp_out)
+                    if p.endswith(".parquet"))
+        shutil.copy(f"{tmp_out}/{part}",
+                    f"{src_dir}/embeddings.parquet/rest-{part}")
+        build_workload_layout(spark, src_dir, lay, tables=("embeddings",))
+        served = table(spark, src_dir, "embeddings")
+        assert served.count() == plain.count()
+        assert served.filter(F.col("vec_id").isin(
+            [r.vec_id for r in rest.limit(5).collect()])).count() == 5
     finally:
         drop_workload_layout(spark, src_dir)
 
@@ -1293,6 +1470,50 @@ def test_minor_compaction_merges_only_runs_bucketed(spark, tmp_path):
         res2 = compact_workload_layout(spark, src_dir, lay,
                                        tables=("orders",), full=False)
         assert res2["orders"] == (fa, fa)
+    finally:
+        drop_workload_layout(spark, src_dir)
+
+
+def test_layout_rewrites_keep_checksum_sidecars(spark, tmp_path):
+    """Appends and the minor compaction hardlink the files they keep
+    into a new tree; each must arrive with its ``.crc`` sidecar, or the
+    local filesystem silently stops verifying reads of it."""
+    import os
+    import shutil
+
+    from nyc_taxi_data_engineering_project_spark.catalog import (
+        compact_workload_layout,
+    )
+
+    src_dir = str(tmp_path / "src")
+    os.makedirs(src_dir)
+    plain = spark.read.parquet(f"{SF_DIR}/orders.parquet")
+    slices = [plain.filter(F.col("o_orderkey") % 3 == i) for i in range(3)]
+    slices[0].coalesce(1).write.parquet(f"{src_dir}/orders.parquet")
+    lay = str(tmp_path / "lay")
+    tbl = build_workload_layout(spark, src_dir, lay, buckets=4,
+                                tables=("orders",))["orders"]
+
+    def _missing_sidecars():
+        return [f for f in _layout_data_files(spark, tbl) if not
+                os.path.exists(os.path.join(os.path.dirname(f),
+                                            f".{os.path.basename(f)}.crc"))]
+
+    try:
+        for i in (1, 2):
+            tmp_out = str(tmp_path / f"s{i}")
+            slices[i].coalesce(1).write.parquet(tmp_out)
+            part = next(p for p in os.listdir(tmp_out)
+                        if p.endswith(".parquet"))
+            shutil.copy(f"{tmp_out}/{part}",
+                        f"{src_dir}/orders.parquet/s{i}-{part}")
+            build_workload_layout(spark, src_dir, lay, buckets=4,
+                                  tables=("orders",))
+            assert not _missing_sidecars()
+        compact_workload_layout(spark, src_dir, lay, tables=("orders",),
+                                full=False)
+        assert not _missing_sidecars()
+        assert table(spark, src_dir, "orders").count() == plain.count()
     finally:
         drop_workload_layout(spark, src_dir)
 
