@@ -62,9 +62,6 @@ from nyc_taxi_data_engineering_project_spark.evlog import (  # noqa: E402
     group_task_metrics,
 )
 from nyc_taxi_data_engineering_project_spark.session import get_session  # noqa: E402
-from nyc_taxi_data_engineering_project_spark.envguard import scrub_contract_env
-
-scrub_contract_env()  # default-contract run: drop leaked overrides (r10 ADVICE)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 

@@ -420,33 +420,26 @@ LAYOUT_VALUE_PARTITIONED = {"embeddings"}
 # on bucket keys).
 LAYOUT_FAMILIES = {"orders": "orderkey", "lineitem": "orderkey"}
 LAYOUT_SERVE_CONF = "spark.spark_graft.layout_serve"
-
-
-def _embeddings_lsh_bucket(df: DataFrame):
-    """Derived bucket column for the embeddings layout: f3_lsh_ann's
-    exact bucket expression (sign bits against the fixed seeded
-    hyperplanes) over the raw ``embedding`` column. Lazy import — the
-    plane literals and the shared bucket rule live with the query
-    family (queries/llm.py) and llm imports this module. Memoized
-    JVM-scoped (r10): the expression references its input by name and
-    is df-independent, so one ~300-round-trip py4j build serves every
-    table() call in the process instead of taxing each one ~0.3 s."""
-    from .queries.llm import LSH_PLANES
-
-    return _embeddings_lsh_bucket_at(len(LSH_PLANES))(df)
+# f3_lsh_ann's oracle-contract LSH width: the stored bucket's width
+# when a build names none.
+_N_LSH_PLANES = 4
 
 
 def _embeddings_lsh_bucket_at(n_planes: int):
-    """Width-parameterized variant (r11, the wide-plane ANN layout):
-    the SAME seeded prefix-stable plane stream, first ``n_planes``
-    planes — plane i is identical at every width, so a 4-plane layout
-    and a 10-plane layout agree on the shared sign bits and the
-    4-plane oracle contract never moves. Deployments size the width
-    with ``llm.lsh_planes_for(corpus_rows)`` (the measured §19c
-    bucket-width rule) and build the layout AT that width, so the
-    stored assignment — not a per-run tagging scan — is what the wide
-    mode probes (SCALE.md §19c finding 2: the wide mode without a
-    stored assignment goes tagging-scan-bound)."""
+    """Derived-column factory for the embeddings layout's stored LSH
+    bucket at ``n_planes`` planes: f3's exact bucket expression (sign
+    bits against the first ``n_planes`` planes of the seeded
+    prefix-stable ``llm.LSH_PLANES`` stream) over the raw ``embedding``
+    column. Plane i is identical at every width, so layouts of any
+    width agree on their shared sign bits and the 4-plane oracle
+    contract never moves. Deployments size the width with
+    ``llm.lsh_planes_for(corpus_rows)`` and build the layout AT it, so
+    ``llm.lsh_ann_topk`` at that width probes the stored assignment
+    instead of a per-run tagging scan. The expression is memoized
+    JVM-scoped (``llm.bucket_expr``): it references its input by name,
+    so one py4j build serves every ``table()`` call in the process.
+    Lazy import — the planes live with the query family, which imports
+    this module."""
     def factory(df: DataFrame):
         from .queries.llm import bucket_expr
 
@@ -477,11 +470,9 @@ def layout_lsh_planes(spark: SparkSession, sf_dir: str) -> int | None:
         return None
     if spark.conf.get(LAYOUT_SERVE_CONF, "true").lower() != "true":
         return None
-    from .queries.llm import LSH_PLANES
-
     return int(spark.conf.get(
         _layout_conf_key(sf_dir, "embeddings") + ".lsh_planes",
-        str(len(LSH_PLANES))))
+        str(_N_LSH_PLANES)))
 
 
 def _embeddings_nrm(df: DataFrame):
@@ -503,7 +494,7 @@ def _embeddings_nrm(df: DataFrame):
 # doesn't reference them — exposing several costs nothing per query.)
 LAYOUT_DERIVED: dict[str, dict] = {
     "embeddings": {
-        "graft_lsh_bucket": _embeddings_lsh_bucket,
+        "graft_lsh_bucket": _embeddings_lsh_bucket_at(_N_LSH_PLANES),
         "graft_nrm": _embeddings_nrm,
     },
 }
@@ -722,20 +713,11 @@ def build_workload_layout(
     if buckets is None:
         buckets = max(32, 4 * spark.sparkContext.defaultParallelism)
     if lsh_planes is not None:
-        # same validation f3's env gate applies: the plane
-        # stream is a 16-deep seeded prefix and bucket_expr silently
-        # truncates past it — an out-of-range width would build an
-        # index LABELED wider than its data, which no query width could
-        # ever match (permanently unserved) and which a later in-range
-        # call would needlessly full-rebuild
-        from .queries.llm import _LSH_MAX_PLANES, _N_LSH_PLANES
+        # the width lsh_ann_topk accepts: an index built at any other
+        # width no query could probe
+        from .queries.llm import _check_lsh_width
 
-        if not _N_LSH_PLANES <= int(lsh_planes) <= _LSH_MAX_PLANES:
-            raise ValueError(
-                f"lsh_planes={lsh_planes} outside "
-                f"[{_N_LSH_PLANES}, {_LSH_MAX_PLANES}] — the seeded "
-                f"plane prefix holds {_LSH_MAX_PLANES} planes and the "
-                f"oracle contract floors at {_N_LSH_PLANES}")
+        _check_lsh_width(lsh_planes)
 
     with _build_lock(path):
         return _build_layout_tables(spark, sf_dir, path, buckets,
@@ -773,10 +755,8 @@ def _build_layout_tables(
         # param > manifest-recorded width > the 4-plane contract
         # default (a manifest without the field IS the default width)
         if name == "embeddings":
-            from .queries.llm import LSH_PLANES as _LSH_DEFAULT
-
             planes_req = lsh_planes
-            default_planes = len(_LSH_DEFAULT)
+            default_planes = _N_LSH_PLANES
             manifest_planes = (manifest or {}).get("lsh_planes")
             # stored width of an EXISTING build: manifest first; for a
             # conf-only pre-manifest layout (manifest None) fall back
@@ -1162,17 +1142,16 @@ def _compact_layout_table(spark: SparkSession, path: str, name: str,
 
 def build_ann_index(spark: SparkSession, sf_dir: str,
                     path: str, rebuild: bool = False) -> dict:
-    """The ANN deployment recipe as ONE call (r11): size the LSH plane
-    width from the corpus with the measured §19c rule
-    (``llm.lsh_planes_for`` — hold expected bucket width ≈ 2000), build
-    the embeddings layout AT that width, and return what a deployment
-    needs to know. Queries opt into the wide width explicitly
-    (``SPARK_GRAFT_LSH_PLANES=<lsh_planes>`` for f3_lsh_ann) — the
-    width is deliberately NOT auto-followed by default queries, because
-    the engine's transparency invariant says results never depend on
-    whether an index exists; an approximate op's RESULT changing with
-    layout registration would break it (and the 4-plane oracle
-    contract with it).
+    """The ANN deployment recipe as ONE call: size the LSH plane width
+    from the corpus with the measured §19c rule (``llm.lsh_planes_for``
+    — hold expected bucket width ≈ 2000), build the embeddings layout
+    AT that width, and return what a deployment needs to know. Queries
+    probe the index by passing the width explicitly —
+    ``llm.lsh_ann_topk(spark, sf_dir, info["lsh_planes"])``. The
+    registry keys never follow it: the engine's transparency invariant
+    says results never depend on whether an index exists, and an
+    approximate op's RESULT changing with layout registration would
+    break it (and the 4-plane oracle contract with it).
 
     Returns ``{"table": <layout table>, "lsh_planes": <width>,
     "corpus_rows": <n>, "buckets": 2**width}``. Measured at 3.16 M /

@@ -27,7 +27,7 @@ from typing import Callable, NamedTuple
 from pyspark.sql import DataFrame, Observation, Window as W, functions as F
 
 from .. import fx, store
-from ..catalog import table
+from ..catalog import _N_LSH_PLANES, table
 from ..pinning import pin, unpin
 from ..registry import query
 from ..streaming import drain_available_now
@@ -218,38 +218,6 @@ def _norm(a):
     return F.sqrt(_dot(a, a))
 
 
-# Fixed random-hyperplane set for the ANN scale path — seeded, so the
-# DuckDB oracle can inline the exact same literals and check values.
-# Like F13_PLANES, the full set is ONE seeded prefix-stable stream
-# (r10): plane i is identical at every count, so the 4-plane oracle
-# contract is untouched while the scale mode (SPARK_GRAFT_LSH_PLANES /
-# lsh_planes_for) can widen to up to _LSH_MAX_PLANES as the corpus
-# grows. 16 planes = 65 536 buckets ≈ a 130 M-vector corpus at the
-# measured ~2 K target bucket width (SCALE.md §19c).
-_N_LSH_PLANES = 4
-_LSH_MAX_PLANES = 16
-_LSH_RNG = random.Random(42)
-LSH_ALL_PLANES = [
-    [_LSH_RNG.uniform(-1.0, 1.0) for _ in range(64)]
-    for _ in range(_LSH_MAX_PLANES)
-]
-LSH_PLANES = LSH_ALL_PLANES[:_N_LSH_PLANES]
-
-# f13's hyperplane sets — module-level so the implementation and its
-# DuckDB oracle inline the SAME literals. The base planes are a PREFIX
-# of one seeded stream: n_planes grows with corpus size, but plane i is
-# identical at every size, so one static oracle serves all SFs. The 8
-# split planes come from an INDEPENDENT seed for the same reason (r3
-# drew them by CONTINUING the base rng after n_planes blocks, which
-# shifted them whenever n changed — unoraclable).
-# 40 planes covers n ≈ 64·2^40 ≈ 7e13 vectors (the plane-count rule is
-# k = round(log2(n/64 + 1))) — beyond any 100 TB corpus, so the
-# fail-fast guard in _f13_planes is unreachable in practice (ADVICE r5:
-# the r5 cap of 16 turned an oracle-only concern into a potential
-# production failure at ~4.2M vectors). Cost of the larger prefix: a
-# one-time module-import list build and a longer inlined oracle string;
-# the Spark side still uses only the first k planes.
-_F13_MAX_PLANES = 40
 # Oracle-side spelling of _embeddings' usable-vector predicate (see its
 # docstring): squared norm positive-finite excludes null, NaN-element,
 # Inf-element, and all-zero vectors; the explicit null-element check
@@ -267,60 +235,65 @@ _VEC_OK = (
     " x -> x * x)) BETWEEN 5e-324 AND 1.7976931348623157e308)"
 )
 
-_f13_rng = random.Random(42)
-F13_PLANES = [
-    [_f13_rng.uniform(-1.0, 1.0) for _ in range(64)]
-    for _ in range(_F13_MAX_PLANES)
-]
-_f13_split_rng = random.Random(4242)
-F13_SPLIT_PLANES = [
-    [_f13_split_rng.uniform(-1.0, 1.0) for _ in range(64)]
-    for _ in range(8)
-]
-
-# f36's quantizer planes — an INDEPENDENT seeded prefix-stable stream
-# (not F13_PLANES: the two operators' cluster geometries must be free
-# to evolve separately — widening f13's pair-search buckets must not
-# silently re-cluster f36's prototype partition). Same 40-plane
-# envelope and the same prefix-stability contract: plane i is
-# identical at every count, so one static oracle serves all SFs.
-_F36_MAX_PLANES = 40
-_f36_rng = random.Random(3636)
-F36_PLANES = [
-    [_f36_rng.uniform(-1.0, 1.0) for _ in range(64)]
-    for _ in range(_F36_MAX_PLANES)
-]
+# Seeded random-hyperplane streams, module-level so every Spark side
+# and its DuckDB oracle inline the SAME literals. Each stream is
+# prefix-stable: plane i is identical at every count, so an operator
+# that widens with the corpus uses the first k planes while its static
+# oracle inlines the whole list and slices [1:k]. 40 planes cover
+# n ≈ 64·2^40 ≈ 7e13 vectors under f13's plane-count rule, beyond any
+# 100 TB corpus; the Spark side only ever builds the first k.
+_MAX_PLANES = 40
 
 
-def _f36_planes(k: int):
-    """First ``k`` f36 quantizer planes; refuses past the inlined-oracle
-    envelope for exactly :func:`_f13_planes`'s reason."""
-    if k > _F36_MAX_PLANES:
+def _plane_stream(seed: int, n: int = _MAX_PLANES) -> list[list[float]]:
+    rng = random.Random(seed)
+    return [[rng.uniform(-1.0, 1.0) for _ in range(_EMB_DIM)]
+            for _ in range(n)]
+
+
+# The LSH stream: f3's ANN signature (the _N_LSH_PLANES = 4 oracle
+# contract, widening up to _LSH_MAX_PLANES: 65 536 buckets ≈ a 130 M
+# vector corpus at the measured ~2 K target bucket width, SCALE.md
+# §19c) and f13's near-dup buckets.
+LSH_PLANES = _plane_stream(42)
+_LSH_MAX_PLANES = 16
+# f13's hot-bucket split bits: an independent seed, so they stay put
+# when the base plane count changes with the corpus.
+F13_SPLIT_PLANES = _plane_stream(4242, 8)
+# f36's quantizer: independent of the LSH stream, so widening f13's
+# pair-search buckets never re-clusters f36's prototype partition.
+F36_PLANES = _plane_stream(3636)
+_PLANE_SETS = {
+    "lsh": LSH_PLANES,
+    "f13_split": F13_SPLIT_PLANES,
+    "f36": F36_PLANES,
+}
+
+
+def _planes(key: str, k: int) -> list[list[float]]:
+    """First ``k`` planes of the named stream. Refuses past the stream's
+    length instead of silently truncating: the DuckDB oracle inlines
+    exactly that many literals, so a Spark side built from fewer planes
+    than it asked for would diverge from it. Raising ``_MAX_PLANES``
+    extends both sides from the same seeded prefix."""
+    planes = _PLANE_SETS[key]
+    if k > len(planes):
         raise ValueError(
-            f"f36 needs {k} hyperplanes but the prefix-stable plane set "
-            f"(and its inlined DuckDB oracle) holds _F36_MAX_PLANES="
-            f"{_F36_MAX_PLANES}; raise _F36_MAX_PLANES — both sides extend "
-            "the same seeded prefix, so the oracle stays exact."
-        )
-    return F36_PLANES[:k]
+            f"{key!r} needs {k} hyperplanes but the prefix-stable plane "
+            f"set (and its inlined DuckDB oracle) holds {len(planes)}; "
+            "raise _MAX_PLANES — both sides extend the same seeded "
+            "prefix, so the oracle stays exact.")
+    return planes[:k]
 
 
-def _f13_planes(k: int):
-    """First ``k`` planes of the seeded stream (prefix-stable in k).
-
-    Refuses k > _F13_MAX_PLANES instead of silently extending: the
-    DuckDB oracle inlines exactly _F13_MAX_PLANES literals and slices
-    ``[1:k]``, so a silently-extended Spark side would diverge from the
-    oracle (false FAIL) past ~4.2M vectors. Raising _F13_MAX_PLANES
-    regenerates BOTH sides from the same seeded prefix consistently."""
-    if k > _F13_MAX_PLANES:
-        raise ValueError(
-            f"f13 needs {k} hyperplanes but the prefix-stable plane set "
-            f"(and its inlined DuckDB oracle) holds _F13_MAX_PLANES="
-            f"{_F13_MAX_PLANES}; raise _F13_MAX_PLANES — both sides extend "
-            "the same seeded prefix, so the oracle stays exact."
-        )
-    return F13_PLANES[:k]
+def _sign_bits_sql(planes) -> list[str]:
+    """Oracle spelling of :func:`_hyperplane_bucket`: one bit term per
+    plane, ``2^i`` when the dot with plane i is positive."""
+    return [
+        f"(CASE WHEN list_dot_product(e, [{', '.join(repr(v) for v in p)}])"
+        f" > 0 THEN {1 << i} ELSE 0 END)"
+        for i, p in enumerate(planes)
+    ]
 
 
 def _f13_oracle() -> str:
@@ -332,15 +305,8 @@ def _f13_oracle() -> str:
     real corpus counts — and (b) float ulp at the 0.3 threshold,
     absorbed by rounding to 6 dp before comparing (f3's proven
     pattern)."""
-    def bits(planes):
-        return [
-            f"(CASE WHEN list_dot_product(e, [{', '.join(repr(v) for v in p)}])"
-            f" > 0 THEN {1 << i} ELSE 0 END)"
-            for i, p in enumerate(planes)
-        ]
-
-    base_bits = ", ".join(bits(F13_PLANES))
-    sub_bits = " + ".join(bits(F13_SPLIT_PLANES))
+    base_bits = ", ".join(_sign_bits_sql(LSH_PLANES))
+    sub_bits = " + ".join(_sign_bits_sql(F13_SPLIT_PLANES))
     cos = fx.sql_round("list_cosine_similarity(ea, eb)", 6)
     return f"""
     WITH params AS (
@@ -387,18 +353,11 @@ def _f13_oracle() -> str:
 
 
 def _lsh_ann_oracle(n_planes: int = _N_LSH_PLANES) -> str:
-    """DuckDB twin of f3_lsh_ann (and, at ``n_planes`` > 4, of the wide
-    scale mode — r11's f3_lsh_ann_wide): same planes (inlined literals
-    from the one prefix-stable seeded stream), same bucket rule (sign
-    bits), same Hamming-1 multi-probe, same top-k."""
-    plane_sql = [
-        "[" + ", ".join(repr(v) for v in plane) + "]"
-        for plane in LSH_ALL_PLANES[:n_planes]
-    ]
-    bucket = " + ".join(
-        f"(CASE WHEN list_dot_product(e, {p}) > 0 THEN {1 << i} ELSE 0 END)"
-        for i, p in enumerate(plane_sql)
-    )
+    """DuckDB twin of :func:`lsh_ann_topk` at ``n_planes`` (f3_lsh_ann
+    at 4, f3_lsh_ann_wide at 8): same planes (inlined literals from the
+    LSH stream), same bucket rule (sign bits), same Hamming-1
+    multi-probe, same top-k."""
+    bucket = " + ".join(_sign_bits_sql(_planes("lsh", n_planes)))
     probe_list = ", ".join(
         ["bucket"] + [f"xor(bucket, {1 << i})" for i in range(n_planes)]
     )
@@ -427,11 +386,10 @@ def _lsh_ann_oracle(n_planes: int = _N_LSH_PLANES) -> str:
     """
 
 
-def _embeddings(spark, sf_dir, with_bucket: bool = False,
-                n_planes: int | None = None) -> DataFrame:
+def _embeddings(spark, sf_dir, n_planes: int | None = None) -> DataFrame:
     """Shared embeddings source for the vector family (f3/f13/f21/f28).
 
-    Unusable vectors are EXCLUDED at the source (r6 edge findings): a
+    Unusable vectors are EXCLUDED at the source: a
     100 TB embedding table carries nulls (failed encoder calls), NaN
     elements (encoders write garbage, not always null), and all-zero
     vectors (norm 0 → every cosine is 0/0). Nulls crashed every
@@ -447,16 +405,18 @@ def _embeddings(spark, sf_dir, with_bucket: bool = False,
     one. Every vector-family oracle carries the matching ``_VEC_OK``
     predicate.
 
-    The accessor reads the table's DERIVED columns (r9): ``nrm`` comes
+    The accessor reads the table's DERIVED columns: ``nrm`` comes
     from the layout's materialized ``graft_nrm`` when one is
     registered (the metadata a real ANN index stores per row — no
     per-query 64-element fold over candidates), computed on the fly
     otherwise — identical values either way, catalog.LAYOUT_DERIVED
-    materializes the exact same expression. ``with_bucket=True``
-    additionally exposes the fixed-hyperplane LSH bucket as ``bucket``
-    (served pre-partitioned from ``graft_lsh_bucket`` under a layout —
-    the persisted ANN index f3_lsh_ann's candidate side rides).
-    Catalyst prunes whichever derived column a query doesn't
+    materializes the exact same expression. ``n_planes`` additionally
+    exposes the ``n_planes``-wide LSH bucket as ``bucket``: served from
+    the stored ``graft_lsh_bucket`` (pre-partitioned under a layout —
+    the persisted ANN index) when the registered layout, or the
+    4-plane default without one, has that width, and computed inline
+    from the same prefix-stable stream otherwise (value-identical,
+    unpruned). Catalyst prunes whichever derived column a query doesn't
     reference, so the no-layout path pays only for what it uses."""
     e = table(spark, sf_dir, "embeddings", with_derived=True).filter(
         F.col("embedding").isNotNull()
@@ -464,24 +424,15 @@ def _embeddings(spark, sf_dir, with_bucket: bool = False,
     emb = _as_double(F.col("embedding"))
     cols = ["vec_id", "label", emb.alias("emb"),
             F.col("graft_nrm").alias("nrm")]
-    if with_bucket:
-        # r11 (wide-plane layout end-to-end): the STORED bucket column
-        # is only trusted when its build width matches the requested
-        # width — `graft_lsh_bucket` serves both the 4-plane contract
-        # default and a wide-plane layout built via
-        # build_workload_layout(lsh_planes=...); any mismatch (e.g.
-        # wide query over a 4-plane layout, or the default oracle
-        # contract over a wide layout) recomputes inline from the same
-        # prefix-stable plane stream, value-correct but unpruned.
+    if n_planes is not None:
         from ..catalog import layout_lsh_planes
 
-        want = n_planes or _N_LSH_PLANES
         stored = layout_lsh_planes(spark, sf_dir)
         served_width = stored if stored is not None else _N_LSH_PLANES
-        if want == served_width:
+        if n_planes == served_width:
             cols.append(F.col("graft_lsh_bucket").alias("bucket"))
         else:
-            cols.append(bucket_expr("lsh", want, "embedding",
+            cols.append(bucket_expr("lsh", n_planes, "embedding",
                                     as_double=True).alias("bucket"))
     out = e.select(*cols)
     return out.filter(
@@ -604,25 +555,16 @@ def _hyperplane_bucket(planes, emb_col):
 
 
 # Memoized spellings of the vector family's df-independent derived
-# expressions (r10, verdict ask 2): building a k-plane bucket tree
-# costs k × (64 F.lit + array + fold) py4j round trips — a flat
-# ~0.3-0.4 s tax every invocation of table(..., with_derived=True) and
-# every f13 call paid, measured as the whole vector family's bench
-# regression after the r9 kernel change. The Columns reference their
-# inputs BY NAME, so one build per (plane set, prefix, column, JVM)
-# serves every query in the process; _jvm_token keys out dead-JVM refs.
-_PLANE_SETS = {
-    "lsh": lambda: LSH_ALL_PLANES,
-    "f13": lambda: F13_PLANES,
-    "f13_split": lambda: F13_SPLIT_PLANES,
-    "f36": lambda: F36_PLANES,
-}
-
-
+# expressions: building a k-plane bucket tree costs k × (64 F.lit +
+# array + fold) py4j round trips, a flat ~0.3-0.4 s tax on every
+# table(..., with_derived=True) call and every f13 call. The Columns
+# reference their inputs BY NAME, so one build per (plane set, prefix,
+# column, JVM) serves every query in the process; _jvm_token keys out
+# dead-JVM refs.
 def bucket_expr(planes_key: str, n: int, emb_name: str,
                 as_double: bool = False):
-    """Memoized :func:`_hyperplane_bucket` over the first ``n`` planes
-    of the named module plane set, applied to column ``emb_name``."""
+    """Memoized :func:`_hyperplane_bucket` over :func:`_planes`
+    ``(planes_key, n)``, applied to column ``emb_name``."""
     return _bucket_expr_cached(planes_key, n, emb_name, as_double,
                                _jvm_token())
 
@@ -633,7 +575,7 @@ def _bucket_expr_cached(planes_key: str, n: int, emb_name: str,
     col = F.col(emb_name)
     if as_double:
         col = _as_double(col)
-    return _hyperplane_bucket(_PLANE_SETS[planes_key]()[:n], col)
+    return _hyperplane_bucket(_planes(planes_key, n), col)
 
 
 def nrm_expr(emb_name: str, as_double: bool = False):
@@ -677,7 +619,7 @@ def f1_exact_dedup(spark, sf_dir):
 
 
 # f2's tuning constants — module-level so the implementation and its
-# DuckDB oracle read the SAME literals (the F13_PLANES pattern).
+# DuckDB oracle read the SAME literals (the LSH_PLANES pattern).
 F2_N_HASHES, F2_N_BANDS, F2_MAX_BUCKET = 32, 4, 64
 
 # Universal-hash permutation constants for the 32 minhash seeds:
@@ -1057,6 +999,46 @@ def f20_ml_minhash_lsh(spark, sf_dir):
 
 
 # ------------------------------------------- F3: similarity search (ANN)
+def _cosine_top5(emb, join, key: str | None = None, probes=None):
+    """Exact cosine top-5 neighbours of every query vector
+    (``vec_id < 20``) — the tail f3_cosine_topk, lsh_ann_topk and
+    f21_ivf_ann share. ``emb`` carries ``vec_id``/``emb``/``nrm``; the
+    query side explodes ``probes`` into ``key`` and the candidate side
+    keeps ``key``. ``join(q, c)`` is the operator's own candidate rule
+    and drops self-pairs. Norms are stored per row; per-pair work is
+    one unrolled 64-dim dot in codegen (bit-identical to the oracle's
+    loop); rank ties break on ``neighbor_id``."""
+    q = emb.filter(F.col("vec_id") < 20).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("emb").alias("q_emb"), F.col("nrm").alias("q_nrm"),
+        *([F.explode(probes).alias(key)] if key else []),
+    )
+    c = emb.select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("emb").alias("c_emb"), F.col("nrm").alias("c_nrm"),
+        *([key] if key else []),
+    )
+    cos = (_dot_unrolled("q_emb", "c_emb")
+           / (F.col("q_nrm") * F.col("c_nrm")))
+    w = W.partitionBy("query_id").orderBy(
+        F.col("_cos").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        join(q, c)
+        .select("query_id", "neighbor_id", cos.alias("_cos"))
+        .withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= 5)
+        .select("query_id", "neighbor_id",
+                fx.r6(F.col("_cos")).alias("cosine"), "rk")
+    )
+
+
+def _probe_join(key: str):
+    """Equi join on a probed bucket/cell id, self-pairs dropped."""
+    return lambda q, c: q.join(c, [key]).filter(
+        F.col("query_id") != F.col("neighbor_id"))
+
+
 @query(
     "f3_cosine_topk",
     oracle=f"""
@@ -1081,139 +1063,78 @@ def f20_ml_minhash_lsh(spark, sf_dir):
 def f3_cosine_topk(spark, sf_dir):
     """F3: exact brute-force cosine top-k — the correctness baseline for
     similarity search. Queries (small side) broadcast against the full
-    candidate set; norms are precomputed once per side; per-pair work is a
-    sequential 64-dim double dot in codegen (bit-identical to the oracle's
-    loop). Top-k is a per-query window, planned as partial top-k under AQE.
-    The scale path (bucketed candidates instead of all-pairs) is
-    f3_lsh_ann."""
-    emb = _embeddings(spark, sf_dir)
-    q = emb.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("emb").alias("q_emb"), F.col("nrm").alias("q_nrm"),
-    )
-    c = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("emb").alias("c_emb"), F.col("nrm").alias("c_nrm"),
-    )
-    pairs = F.broadcast(q).join(
-        c, F.col("query_id") != F.col("neighbor_id")
-    )
-    cos = (_dot_unrolled("q_emb", "c_emb")
-           / (F.col("q_nrm") * F.col("c_nrm")))
-    w = W.partitionBy("query_id").orderBy(
-        F.col("_cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pairs.select("query_id", "neighbor_id", cos.alias("_cos"))
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 5)
-        .select(
-            "query_id", "neighbor_id",
-            fx.r6(F.col("_cos")).alias("cosine"), "rk",
-        )
+    candidate set. Top-k is a per-query window, planned as partial
+    top-k under AQE. The scale path (bucketed candidates instead of
+    all-pairs) is f3_lsh_ann."""
+    return _cosine_top5(
+        _embeddings(spark, sf_dir),
+        lambda q, c: F.broadcast(q).join(
+            c, F.col("query_id") != F.col("neighbor_id")),
     )
 
 
 def lsh_planes_for(n_rows: int, target_bucket: int = 2000) -> int:
-    """Measured plane-count rule for the LSH ANN scale mode (r10,
-    SCALE.md §19c): hold the EXPECTED bucket width ≈ ``target_bucket``
-    as the corpus grows — ``n = log2(corpus / target)`` planes, floored
-    at the 4-plane oracle contract, capped at the seeded prefix. With
+    """Measured plane-count rule for the LSH ANN scale mode (SCALE.md
+    §19c): hold the EXPECTED bucket width ≈ ``target_bucket`` as the
+    corpus grows — ``n = log2(corpus / target)`` planes, floored at the
+    4-plane oracle contract, capped at ``_LSH_MAX_PLANES``. With
     Hamming-1 multi-probe the probed candidate count per query is then
     ≈ (n+1)·target, i.e. LOGARITHMIC growth in corpus size where the
-    pinned-4-plane contract is linear (pairs/query = corpus/16 — the
-    §18b honest negative this rule closes)."""
-    import math as _math
-
+    pinned 4-plane contract is linear (pairs/query = corpus/16)."""
     if n_rows <= 0:
         return _N_LSH_PLANES
     return max(_N_LSH_PLANES,
                min(_LSH_MAX_PLANES,
-                   round(_math.log2(max(n_rows / target_bucket, 1.0)))))
+                   round(math.log2(max(n_rows / target_bucket, 1.0)))))
+
+
+def _check_lsh_width(n_planes: int) -> None:
+    """Refuse an LSH ANN width outside [4, 16]: below the 4-plane oracle
+    contract, or past ``_LSH_MAX_PLANES`` (2^16 buckets), the width
+    every stored ANN index and :func:`lsh_planes_for` stay within."""
+    if not _N_LSH_PLANES <= int(n_planes) <= _LSH_MAX_PLANES:
+        raise ValueError(
+            f"lsh_planes={n_planes} outside "
+            f"[{_N_LSH_PLANES}, {_LSH_MAX_PLANES}] — the ANN width "
+            f"floors at the {_N_LSH_PLANES}-plane oracle contract and "
+            f"caps at {_LSH_MAX_PLANES} planes")
 
 
 @query("f3_lsh_ann", oracle=_lsh_ann_oracle())
 def f3_lsh_ann(spark, sf_dir):
-    """F3 scale path: random-hyperplane LSH ANN with multi-probe. Each
-    vector gets a 4-bit signature (sign of dot with 4 fixed seeded
-    hyperplanes) → 16 buckets; each query probes its own bucket plus the
-    4 Hamming-1 neighbors (explode over 5 probe ids), joins candidates
-    equi on bucket id, then exact top-k within the probed set. At 100 TB:
-    bucket count scales with data (more planes), the join stays
-    equi/shuffle-partitionable, candidates are indexed once while the
-    (small) query side fans out — recall/cost is tuned by probe radius,
-    never by widening to all-pairs. Recall vs the exact baseline is
-    asserted in tests/test_llm_ops.py; because the hyperplanes are fixed
-    literals, the whole approximate pipeline is ALSO value-checked
-    against a DuckDB twin that inlines the same planes.
-
-    Scale mode (r10): ``SPARK_GRAFT_LSH_PLANES=<n>`` widens the
-    signature to ``n`` planes from the same seeded prefix
-    (:data:`LSH_ALL_PLANES`; probe radius widens with it). The default
-    stays the 4-plane oracle contract; deployments size ``n`` with
-    :func:`lsh_planes_for` (the measured bucket-width rule, SCALE.md
-    §19c, recall ≥ 0.9 gated in tests/test_llm_ops.py) and build the
-    embeddings layout AT that width
-    (``build_workload_layout(lsh_planes=n)``, r11) so the wide mode
-    rides the stored pre-partitioned assignment with DPP pruning —
-    the 100 TB deployment shape §19c finding 2 named. A width with no
-    matching layout computes buckets inline (value-correct,
-    tagging-scan-bound)."""
-    n_planes = int(os.environ.get("SPARK_GRAFT_LSH_PLANES",
-                                  _N_LSH_PLANES))
-    if not _N_LSH_PLANES <= n_planes <= _LSH_MAX_PLANES:
-        raise ValueError(
-            f"SPARK_GRAFT_LSH_PLANES={n_planes} outside "
-            f"[{_N_LSH_PLANES}, {_LSH_MAX_PLANES}] — the seeded plane "
-            f"prefix holds {_LSH_MAX_PLANES} planes and the oracle "
-            f"contract floors at {_N_LSH_PLANES}")
-    # bucket comes from the shared accessor: the embeddings layout
-    # serves it pre-partitioned (stored graft_lsh_bucket — the
-    # persisted ANN index) whenever the layout was BUILT at this
-    # width (r11: build_workload_layout(lsh_planes=n) persists a
-    # wide-plane assignment, closing SCALE.md §19c finding 2's
-    # tagging-scan-bound wide mode); any width mismatch recomputes
-    # inline from the same prefix-stable plane stream.
-    return _lsh_ann_topk(spark, sf_dir, n_planes)
+    """F3 scale path: random-hyperplane LSH ANN with multi-probe, at the
+    fixed 4-plane oracle contract (:func:`lsh_ann_topk` at
+    ``_N_LSH_PLANES``). Each vector gets a 4-bit signature (sign of dot
+    with 4 fixed seeded hyperplanes) → 16 buckets; each query probes its
+    own bucket plus the 4 Hamming-1 neighbors, joins candidates equi on
+    bucket id, then exact top-k within the probed set. Recall vs the
+    exact baseline is asserted in tests/test_llm_ops.py; because the
+    hyperplanes are fixed literals, the whole approximate pipeline is
+    ALSO value-checked against a DuckDB twin that inlines the same
+    planes. Wider signatures for larger corpora are
+    :func:`lsh_ann_topk` calls at a width from :func:`lsh_planes_for`."""
+    return lsh_ann_topk(spark, sf_dir, _N_LSH_PLANES)
 
 
-def _lsh_ann_topk(spark, sf_dir, n_planes: int):
-    """The LSH ANN plan at one signature width — shared by f3_lsh_ann
-    (env-selected width, default the 4-plane contract) and
-    f3_lsh_ann_wide (pinned 8-plane scale mode, r11)."""
-    tagged = _embeddings(spark, sf_dir, with_bucket=True,
-                         n_planes=n_planes)
+def lsh_ann_topk(spark, sf_dir, n_planes: int):
+    """LSH ANN top-5 at an ``n_planes``-wide signature: the first
+    ``n_planes`` planes of the seeded prefix-stable ``LSH_PLANES``
+    stream, 2^n_planes buckets, Hamming-1 multi-probe (n_planes + 1
+    probes per query). ``n_planes`` must lie in [4, 16]
+    (:func:`_check_lsh_width`). Deployments size it with
+    :func:`lsh_planes_for` and build the embeddings layout AT that
+    width (``build_workload_layout(lsh_planes=n)`` or
+    :func:`catalog.build_ann_index`), so the candidate side reads the
+    stored pre-partitioned assignment with dynamic partition pruning;
+    a width with no matching layout computes buckets inline
+    (value-identical, tagging-scan-bound)."""
+    _check_lsh_width(n_planes)
+    tagged = _embeddings(spark, sf_dir, n_planes=n_planes)
     probes = F.array(
         F.col("bucket"),
         *[F.col("bucket").bitwiseXOR(F.lit(1 << i)) for i in range(n_planes)],
     )
-    q = (
-        tagged.filter(F.col("vec_id") < 20)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("emb").alias("q_emb"), F.col("nrm").alias("q_nrm"),
-            F.explode(probes).alias("bucket"),
-        )
-    )
-    c = tagged.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("emb").alias("c_emb"), F.col("nrm").alias("c_nrm"), "bucket",
-    )
-    pairs = q.join(c, ["bucket"]).filter(
-        F.col("query_id") != F.col("neighbor_id")
-    )
-    cos = (_dot_unrolled("q_emb", "c_emb")
-           / (F.col("q_nrm") * F.col("c_nrm")))
-    w = W.partitionBy("query_id").orderBy(
-        F.col("_cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pairs.select("query_id", "neighbor_id", cos.alias("_cos"))
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 5)
-        .select("query_id", "neighbor_id",
-                fx.r6(F.col("_cos")).alias("cosine"), "rk")
-    )
+    return _cosine_top5(tagged, _probe_join("bucket"), "bucket", probes)
 
 
 # the wide demo width: 8 planes = 256 buckets — wide enough that the
@@ -1225,20 +1146,14 @@ _WIDE_DEMO_PLANES = 8
 
 @query("f3_lsh_ann_wide", oracle=_lsh_ann_oracle(_WIDE_DEMO_PLANES))
 def f3_lsh_ann_wide(spark, sf_dir):
-    """F3 scale mode under ORACLE (r11, self-initiated): the WIDE LSH
-    signature itself value-checked against a DuckDB twin — 8 planes
-    from the same prefix-stable seeded stream (256 buckets, Hamming-1
-    multi-probe = 9 probes), fixed literals inlined on both sides, so
-    the approximate SCALE path gets the same oracle grade as the
-    4-plane contract instead of a rows-only recall gate. Serves the
-    stored assignment with DPP pruning when the embeddings layout was
-    built at this width (``build_workload_layout(lsh_planes=8)`` /
-    ``build_ann_index`` at an ~0.5 M-row corpus); computes inline
-    otherwise — value-identical either way (the §20 transparency
-    test). At 100 TB the width comes from :func:`lsh_planes_for` and
-    the layout is built AT it; this key pins the machinery at a width
-    the sf0.01 oracle corpus can populate."""
-    return _lsh_ann_topk(spark, sf_dir, _WIDE_DEMO_PLANES)
+    """F3 scale mode under ORACLE: :func:`lsh_ann_topk` at 8 planes
+    (256 buckets, 9 probes), value-checked against a DuckDB twin that
+    inlines the same literals, so the approximate SCALE path gets the
+    same oracle grade as the 4-plane contract instead of a rows-only
+    recall gate. Serves the stored assignment with DPP pruning when
+    the embeddings layout was built at this width; computes inline
+    otherwise — value-identical either way."""
+    return lsh_ann_topk(spark, sf_dir, _WIDE_DEMO_PLANES)
 
 
 def _f21_oracle(k: int = 16, nprobe: int = 4) -> str:
@@ -1321,32 +1236,28 @@ def f21_ivf_ann(spark, sf_dir):
     # side + corpus side) don't recompute the scan+assignment (mode per
     # pinning.py; default localCheckpoint is released with the result)
     tagged = pin(emb.withColumn("cell", nearest_cell("emb")), "f21_cells")
-    q = (
-        tagged.filter(F.col("vec_id") < 20)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("emb").alias("q_emb"), F.col("nrm").alias("q_nrm"),
-            F.explode(probe_cells("emb")).alias("cell"),
-        )
+    return _cosine_top5(tagged, _probe_join("cell"), "cell",
+                        probe_cells("emb"))
+
+
+def _pinned_with_width(spark, sf_dir, name: str, width: int):
+    """The usable embeddings pinned once, and the plane count that
+    holds the expected bucket width at ``width``:
+    ``max(2, round(log2(n/width + 1)))`` — f13 (width 64) and f36
+    (width 256). ``n`` is counted by an Observation riding the pin's
+    own materialization job, so sizing costs no extra corpus pass; it
+    is the exact population that gets bucketed and that the oracle's
+    params CTE counts. Callers derive the bucket tag lazily from the
+    pinned blocks: its consumers re-derive only the k·64-dim sign dots
+    instead of forcing a second corpus-sized materialization."""
+    obs = Observation()
+    emb = pin(
+        _embeddings(spark, sf_dir)
+        .observe(obs, F.count(F.lit(1)).alias("n")),
+        name,
     )
-    c = tagged.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("emb").alias("c_emb"), F.col("nrm").alias("c_nrm"), "cell",
-    )
-    cos = (_dot_unrolled("q_emb", "c_emb")
-           / (F.col("q_nrm") * F.col("c_nrm")))
-    w = W.partitionBy("query_id").orderBy(
-        F.col("_cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        q.join(c, ["cell"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", cos.alias("_cos"))
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 5)
-        .select("query_id", "neighbor_id",
-                fx.r6(F.col("_cos")).alias("cosine"), "rk")
-    )
+    n = int(obs.get["n"])
+    return emb, max(2, round(math.log2(max(n, 1) / width + 1)))
 
 
 @query("f13_embedding_neardup", oracle=_f13_oracle())
@@ -1356,45 +1267,17 @@ def f13_embedding_neardup(spark, sf_dir):
     the embedding-space member of the dedup family. The hyperplane count
     scales as log2(n / target_bucket_width), holding expected bucket
     width (and so per-bucket quadratic work) constant as the corpus
-    grows — the count() that sizes it is a metadata-cheap scalar, the
-    same pattern a real pipeline gets from table stats.
+    grows; the count that sizes it rides the source pin
+    (:func:`_pinned_with_width`). The base planes are the LSH stream
+    f3 uses.
 
     The per-pair cosine runs as an Arrow-batched pandas UDF (one einsum
     over the whole batch) — the bucketed self-join emits ~n²/buckets
     pairs, and a vectorized kernel beats the interpreted higher-order
     fold by ~4× there; the JVM `_dot` stays in the exact-baseline ops
     where bit-identical accumulation against the oracle matters."""
-    # size from the USABLE population — the exact frame that gets
-    # bucketed and the population the oracle's params CTE counts (r6
-    # review finding: an IS-NOT-NULL count here and a _VEC_OK count
-    # there can land either side of a log2 rounding boundary and derive
-    # different plane counts, diverging every bucket id).
-    #
-    # r15 (verdict ask 7, guide §1.2/§5): the r14 shape paid TWO full
-    # passes over the corpus before any pair work — a count() scan to
-    # size the plane count, then a separate pin materialization of the
-    # tagged frame. Folded: the source frame is pinned ONCE with an
-    # attached Observation whose count rides the pin's own
-    # materialization job (zero extra pass — at 100 TB the count scan
-    # was a full corpus read), and the plane-count rule consumes the
-    # observed n. The bucket tag is then derived LAZILY from the
-    # pinned blocks: its two consumers (width gate, refinement join)
-    # re-derive only the k·64-dim sign dots — linear, expression-level
-    # work over in-memory blocks — instead of forcing a second
-    # corpus-sized materialization (the r14 tagged pin). The value is
-    # identical: same n (observed count == count()), same planes, same
-    # buckets. localCheckpoint, not persist: blocks are freed with the
-    # result.
-    obs = Observation()
-    emb = pin(
-        _embeddings(spark, sf_dir)
-        .observe(obs, F.count(F.lit(1)).alias("n")),
-        "f13_emb",
-    )
-    n = int(obs.get["n"])
-    n_planes = max(2, round(math.log2(max(n, 1) / 64 + 1)))
-    _f13_planes(n_planes)  # keeps the >40-plane fail-fast guard
-    tagged = emb.withColumn("bucket", bucket_expr("f13", n_planes, "emb"))
+    emb, n_planes = _pinned_with_width(spark, sf_dir, "f13_emb", 64)
+    tagged = emb.withColumn("bucket", bucket_expr("lsh", n_planes, "emb"))
     # Hot-bucket SPLIT (not drop): plane count targets an EXPECTED width
     # of 64 under uniformity, but clustered corpora — the very thing a
     # near-dup detector hunts — concentrate in few buckets, and an
@@ -3711,11 +3594,7 @@ def _f36_oracle() -> str:
     plane-count rule (differs only at an exact .5 log2, unreachable for
     real counts) and float ulp at the 0.3 threshold, absorbed by
     rounding to 6 dp before comparing (f3's proven pattern)."""
-    bits = ", ".join(
-        f"(CASE WHEN list_dot_product(e, [{', '.join(repr(v) for v in p)}])"
-        f" > 0 THEN {1 << i} ELSE 0 END)"
-        for i, p in enumerate(F36_PLANES)
-    )
+    bits = ", ".join(_sign_bits_sql(F36_PLANES))
     cent = fx.sql_round("list_cosine_similarity(t.e, p.pe)", 6)
     return f"""
     WITH params AS (
@@ -3773,23 +3652,7 @@ def f36_semdedup(spark, sf_dir):
     the oracle's loop). The pairwise member (quadratic within buckets,
     split-capped) is f13; this operator is its linear complement: a
     corpus-shrinking PRUNE, not a pair report."""
-    # r15 (the f13 fold, verdict ask 7's pattern): the plane-count
-    # count() was a separate full corpus pass before the tagged pin's
-    # second one. The source is pinned ONCE with an Observation riding
-    # the pin's own materialization (observed n == count() exactly),
-    # and the bucket tag derives LAZILY from the pinned blocks — its
-    # two consumers (prototype arg-min, member join) re-derive only
-    # the k·64-dim sign dots, linear expression work, instead of
-    # forcing a second corpus materialization.
-    obs = Observation()
-    emb = pin(
-        _embeddings(spark, sf_dir)
-        .observe(obs, F.count(F.lit(1)).alias("n")),
-        "f36_emb",
-    )
-    n = int(obs.get["n"])
-    k = max(2, round(math.log2(max(n, 1) / 256 + 1)))
-    _f36_planes(k)  # fail-fast guard past the inlined-oracle envelope
+    emb, k = _pinned_with_width(spark, sf_dir, "f36_emb", 256)
     tagged = (
         emb.withColumn("bucket",
                        bucket_expr("f36", k, "emb").cast("long"))

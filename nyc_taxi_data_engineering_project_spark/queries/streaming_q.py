@@ -289,10 +289,6 @@ def d8_stateful(spark, sf_dir):
     (``d8_tracked``) over time-ordered file chunks must emit
     monotonically growing per-user counts whose FINAL state equals the
     batch aggregate."""
-    raw = os.environ.get("SPARK_GRAFT_D8_STATE_PARTS", "8")
-    if not raw.strip().isdecimal() or int(raw) < 1:
-        raise ValueError(
-            f"SPARK_GRAFT_D8_STATE_PARTS={raw!r}: expected an integer >= 1")
     out = d8_tracked(events_stream(spark, sf_dir))
     # A FIXED 8 state partitions, sized to the op's compute profile,
     # not to the host: d8's per-partition cost is COMPUTE (a
@@ -302,12 +298,10 @@ def d8_stateful(spark, sf_dir):
     # spawn bill at 32. Fresh-JVM at sf0.1
     # (plans/r15/d8_state_parts_ab.json): at 32 cores parts=2 → 3.4 s,
     # 8 → 1.7 s, 16 → 1.9 s; at 8 cores parts=4 → 5.3 s, 8 → 2.0 s.
-    # Deployments override it with a DEDICATED env knob (the generic
-    # SPARK_GRAFT_REPLAY_STATE_PARTS only applies when no per-query
-    # override is passed, so it cannot reach d8).
+    # The per-query value wins over the generic
+    # SPARK_GRAFT_REPLAY_STATE_PARTS default.
     return run_available_now(
-        out, "d8_state", output_mode="update",
-        state_partitions=int(raw),
+        out, "d8_state", output_mode="update", state_partitions=8,
     )
 
 

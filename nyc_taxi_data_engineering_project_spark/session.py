@@ -194,11 +194,6 @@ def get_session(app_name: str = "nyc_taxi_data_engineering_project_spark",
                 or derived_mem or "8g")
         .config("spark.ui.enabled", "false")
     )
-    # deployment knob (pinning.py): lets bench/stress harnesses run the
-    # whole board under a cluster pin mode without code changes
-    if os.environ.get("SPARK_GRAFT_PIN_MODE"):
-        builder = builder.config("spark.spark_graft.pin_mode",
-                                 os.environ["SPARK_GRAFT_PIN_MODE"])
     for k, v in skew_conf.items():
         builder = builder.config(k, v)
     for k, v in (extra_conf or {}).items():

@@ -1,12 +1,12 @@
-"""LSH plane-count scale rule (r10, verdict ask 3 — closes SCALE.md
-§18b's honest negative).
+"""LSH plane-count scale rule (closes SCALE.md §18b's honest negative).
 
 At the oracle-pinned 4 planes, f3_lsh_ann probes 5 of 16 buckets, so
 candidate pairs per query = corpus·5/16 — LINEAR in corpus size: the
 bucketed join stays shuffle-partitionable but the per-query work grows
-with the data. The documented (but unmeasured, until now) lever is the
-plane count: n planes → 2^n buckets, Hamming-1 multi-probe widens to
-n+1 probes, so holding the EXPECTED bucket width constant
+with the data. The lever is the plane count: ``llm.lsh_ann_topk(spark,
+sf_dir, n)`` signs against the first n planes of the seeded
+``LSH_PLANES`` stream, n planes → 2^n buckets, Hamming-1 multi-probe
+widens to n+1 probes, so holding the EXPECTED bucket width constant
 (n = log2(corpus/target)) makes probed candidates ≈ (n+1)·target —
 logarithmic growth.
 
@@ -19,7 +19,9 @@ What this probe measures, per (corpus size, plane count):
   "nearest" neighbors are meaningless; the registered key's own
   recall gate on the isotropic testdata is 0.25 for that reason).
 - **probed candidate pairs per query** (the linear-vs-log claim).
-- **wall time** of the full ANN query (tag + probe join + top-k).
+- **wall time** of the full ANN query (tag + probe join + top-k),
+  i.e. ``lsh_ann_topk`` itself with buckets computed inline (no
+  layout registered).
 
 Corpus generation is fully deterministic (xxhash64-derived uniforms,
 seeded perturbations) — no RNG state, so reruns are identical.
@@ -39,12 +41,11 @@ import time
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
 
-from pyspark.sql import Window as W, functions as F  # noqa: E402
+from pyspark.sql import functions as F  # noqa: E402
 
 from nyc_taxi_data_engineering_project_spark.queries.llm import (  # noqa: E402
-    LSH_ALL_PLANES,
-    _dot_unrolled,
-    bucket_expr,
+    _embeddings,
+    lsh_ann_topk,
     lsh_planes_for,
 )
 from nyc_taxi_data_engineering_project_spark.session import get_session  # noqa: E402
@@ -90,12 +91,11 @@ def gen_corpus(spark, n_rows: int, path: str) -> None:
      .write.mode("overwrite").parquet(path))
 
 
-def tagged_frame(emb, n_planes: int):
-    return emb.withColumn("bucket", bucket_expr("lsh", n_planes, "emb"))
-
-
-def ann_topk(emb, n_planes: int):
-    tagged = tagged_frame(emb, n_planes)
+def probed_pairs(spark, sf_dir: str, n_planes: int) -> int:
+    """Candidate pairs the ``n_planes``-wide probe join emits (the
+    linear-vs-log claim): each query's n+1 probed buckets joined to the
+    corpus on bucket id, self-pairs dropped."""
+    tagged = _embeddings(spark, sf_dir, n_planes=n_planes)
     probes = F.array(
         F.col("bucket"),
         *[F.col("bucket").bitwiseXOR(F.lit(1 << i))
@@ -103,21 +103,10 @@ def ann_topk(emb, n_planes: int):
     )
     q = (tagged.filter(F.col("vec_id") < N_QUERIES)
          .select(F.col("vec_id").alias("query_id"),
-                 F.col("emb").alias("q_emb"),
-                 F.col("nrm").alias("q_nrm"),
                  F.explode(probes).alias("bucket")))
-    c = tagged.select(F.col("vec_id").alias("neighbor_id"),
-                      F.col("emb").alias("c_emb"),
-                      F.col("nrm").alias("c_nrm"), "bucket")
-    pairs = q.join(c, ["bucket"]).filter(
-        F.col("query_id") != F.col("neighbor_id"))
-    cos = (_dot_unrolled("q_emb", "c_emb")
-           / (F.col("q_nrm") * F.col("c_nrm")))
-    w = W.partitionBy("query_id").orderBy(
-        F.col("_cos").desc(), F.col("neighbor_id").asc())
-    return (pairs.select("query_id", "neighbor_id", cos.alias("_cos"))
-            .withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= 5)), pairs
+    c = tagged.select(F.col("vec_id").alias("neighbor_id"), "bucket")
+    return (q.join(c, ["bucket"])
+            .filter(F.col("query_id") != F.col("neighbor_id")).count())
 
 
 def main() -> None:
@@ -126,19 +115,11 @@ def main() -> None:
     out = {"n_queries": N_QUERIES, "n_planted": N_PLANTED,
            "corpora": []}
     for n_rows in SIZES:
-        path = os.path.join(WORK, f"emb_{n_rows}")
+        sf_dir = os.path.join(WORK, f"emb_{n_rows}")
         t0 = time.time()
-        gen_corpus(spark, n_rows, path)
+        gen_corpus(spark, n_rows, os.path.join(sf_dir, "embeddings.parquet"))
         gen_s = round(time.time() - t0, 1)
-
-        raw = spark.read.parquet(path)
-        # codegen'd norm (the §18c lesson: an interpreted HOF fold over
-        # ~10M×64 elements pins the stage for minutes)
-        emb = raw.select(
-            "vec_id", F.col("embedding").alias("emb"),
-            F.sqrt(_dot_unrolled("embedding", "embedding")).alias("nrm"))
-        emb = emb.filter(F.col("nrm") > 0).localCheckpoint()
-        total = emb.count()
+        total = _embeddings(spark, sf_dir).count()
 
         # ground truth: the planted neighbors of each query (by
         # construction the nearest — cosine ≈ 0.998 vs ≈0.5 isotropic
@@ -148,11 +129,10 @@ def main() -> None:
 
         rec = {"n_rows": total, "gen_s": gen_s, "planes": {}}
         for n_planes in PLANE_COUNTS:
-            topk, pairs = ann_topk(emb, n_planes)
             t0 = time.time()
-            got = topk.collect()
+            got = lsh_ann_topk(spark, sf_dir, n_planes).collect()
             wall = round(time.time() - t0, 2)
-            n_pairs = pairs.count()
+            n_pairs = probed_pairs(spark, sf_dir, n_planes)
             by_q: dict[int, set] = {}
             for r in got:
                 by_q.setdefault(r.query_id, set()).add(r.neighbor_id)
@@ -173,8 +153,7 @@ def main() -> None:
                   flush=True)
         rec["rule_says"] = lsh_planes_for(total)
         out["corpora"].append(rec)
-        emb.unpersist()
-        shutil.rmtree(path, ignore_errors=True)
+        shutil.rmtree(sf_dir, ignore_errors=True)
         _write_artifact(out)  # incremental: an OOM later must not
         # lose this corpus's measurements
 

@@ -116,8 +116,6 @@ def signature(df) -> dict:
 def derive_all(spark, keys=None) -> dict[str, dict | str]:
     from nyc_taxi_data_engineering_project_spark import registry
 
-    from nyc_taxi_data_engineering_project_spark.envguard import scrub_contract_env
-    scrub_contract_env()  # plan/shuffle gates pin the default contract (r10 ADVICE)
     registry.load_all()
     out: dict[str, dict | str] = {}
     for key in sorted(keys or registry.QUERIES):

@@ -26,9 +26,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from nyc_taxi_data_engineering_project_spark import registry  # noqa: E402
 from nyc_taxi_data_engineering_project_spark.session import get_session  # noqa: E402
-from nyc_taxi_data_engineering_project_spark.envguard import scrub_contract_env  # noqa: E402
-
-scrub_contract_env()
 
 
 def _materialize(df) -> None:

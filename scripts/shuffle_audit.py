@@ -83,8 +83,6 @@ def group_shuffle_bytes(evlog: str,
 def run_all(sf_dir: str) -> dict[str, int]:
     from nyc_taxi_data_engineering_project_spark import registry
 
-    from nyc_taxi_data_engineering_project_spark.envguard import scrub_contract_env
-    scrub_contract_env()  # plan/shuffle gates pin the default contract (r10 ADVICE)
     registry.load_all()
     evlog = tempfile.mkdtemp(prefix="shuffle_audit_ev_")
     spark = _session(evlog)

@@ -1,24 +1,25 @@
-"""Wide-plane ANN layout end-to-end (r11, verdict ask 1 — ships the
-100 TB deployment shape SCALE.md §19c finding 2 named: "wide planes in
-the LAYOUT KEY, stored assignment, pruned scan").
+"""Wide-plane ANN layout end-to-end — the 100 TB deployment shape
+SCALE.md §19c finding 2 named: "wide planes in the LAYOUT KEY, stored
+assignment, pruned scan".
 
-r10 measured the plane-count RULE (lsh_plane_rule.json: recall 1.0 at
-every width, pairs/query logarithmic at wide widths) but the wide mode
-still re-derived bucket ids per run — a full tagging scan §19c itself
-measured as the wide mode's bound. This probe drives the REAL registry
-key f3_lsh_ann (not a re-implementation) through THREE modes per
-corpus tier:
+lsh_plane_probe.py measures the plane-count RULE (recall at every
+width, pairs/query logarithmic at wide widths); without a layout at
+the wide width, every run re-derives bucket ids — a full tagging scan
+§19c measured as the wide mode's bound. This probe drives the REAL
+ANN path ``llm.lsh_ann_topk`` (not a re-implementation) through these
+modes per corpus tier:
 
-- ``layout4``   — 4-plane (oracle-contract) layout, default f3: the
+- ``layout4``   — 4-plane (oracle-contract) layout, width 4: the
                   stored-assignment baseline whose probed pairs grow
                   linearly (corpus·5/16).
-- ``wide_scan`` — ``SPARK_GRAFT_LSH_PLANES=lsh_planes_for(n)``, NO
-                  matching layout: buckets recomputed inline (the
-                  tagging-scan-bound mode this round retires).
-- ``wide_layout`` — the layout REBUILT at the wide width
-                  (``build_workload_layout(lsh_planes=w)``), same env:
-                  f3 serves the stored wide assignment with dynamic
-                  partition pruning.
+- ``wide_scan`` — width ``w = lsh_planes_for(n)``, NO layout: buckets
+                  recomputed inline (the tagging-scan-bound mode).
+- ``wide_layout`` — the layout REBUILT at ``w``
+                  (``build_workload_layout(lsh_planes=w)``), width
+                  ``w``: served from the stored wide assignment with
+                  dynamic partition pruning.
+- ``wide_layout_appended_compacted`` — the same layout after two ~5 %
+                  appends and a minor compaction.
 
 Per mode: wall (min of 2), recall@5 against 8 planted near-neighbors
 per query (the same deterministic construction as lsh_plane_probe.py —
@@ -48,7 +49,7 @@ from nyc_taxi_data_engineering_project_spark.catalog import (  # noqa: E402
     layout_lsh_planes,
 )
 from nyc_taxi_data_engineering_project_spark.queries.llm import (  # noqa: E402
-    f3_lsh_ann,
+    lsh_ann_topk,
     lsh_planes_for,
 )
 from nyc_taxi_data_engineering_project_spark.session import (  # noqa: E402
@@ -67,8 +68,8 @@ def gen_vectors(spark, n: int, id_offset: int = 0):
     """(vec_id, label, embedding) isotropic rows — THE base-vector
     formula; mode 4's delta calls this with an offset so the delta's
     distribution can never silently diverge from the corpus it appends
-    to (r12 review: the recall gate's 'delta rows are isotropic like
-    the base' argument depends on one formula, not two copies)."""
+    to (the recall gate's 'delta rows are isotropic like the base'
+    argument depends on one formula, not two copies)."""
     return spark.range(n).select(
         (F.lit(id_offset) + F.col("id")).alias("vec_id"),
         F.lit("x").alias("label"),
@@ -104,13 +105,14 @@ def gen_corpus(spark, n_rows: int, sf_dir: str) -> None:
      .parquet(os.path.join(sf_dir, "embeddings.parquet")))
 
 
-def run_mode(spark, sf_dir: str, truth: dict) -> dict:
-    """One f3_lsh_ann execution: min-of-2 wall + recall@5."""
+def run_mode(spark, sf_dir: str, truth: dict, n_planes: int) -> dict:
+    """One lsh_ann_topk execution at ``n_planes``: min-of-2 wall +
+    recall@5."""
     walls = []
     got = None
     for _ in range(2):
         t0 = time.time()
-        got = f3_lsh_ann(spark, sf_dir).collect()
+        got = lsh_ann_topk(spark, sf_dir, n_planes).collect()
         walls.append(round(time.time() - t0, 2))
     by_q: dict[int, set] = {}
     for r in got:
@@ -145,38 +147,35 @@ def main() -> None:
         rec = {"n_rows": n_rows, "gen_s": gen_s, "wide_planes": wide,
                "modes": {}}
 
-        # mode 1: the 4-plane contract layout, default f3
-        os.environ.pop("SPARK_GRAFT_LSH_PLANES", None)
+        # mode 1: the 4-plane contract layout at the contract width
         t0 = time.time()
         build_workload_layout(spark, sf_dir, lay_dir,
                               tables=("embeddings",))
         rec["build4_s"] = round(time.time() - t0, 1)
         assert layout_lsh_planes(spark, sf_dir) == 4
-        rec["modes"]["layout4"] = run_mode(spark, sf_dir, truth)
+        rec["modes"]["layout4"] = run_mode(spark, sf_dir, truth, 4)
         print(f"n={n_rows} layout4: {rec['modes']['layout4']}", flush=True)
 
         # mode 2: wide planes, NO matching layout (inline tagging scan;
-        # the 4-plane layout is registered but width-mismatched, so f3
-        # recomputes — serve it the PLAIN source to keep the mode
-        # honest: scan-bound over raw parquet, no layout in the way)
+        # a width-mismatched 4-plane layout would be recomputed anyway
+        # — dropping it keeps the mode honest: scan-bound over raw
+        # parquet, no layout in the way)
         drop_workload_layout(spark, sf_dir, tables=("embeddings",))
-        os.environ["SPARK_GRAFT_LSH_PLANES"] = str(wide)
-        rec["modes"]["wide_scan"] = run_mode(spark, sf_dir, truth)
+        rec["modes"]["wide_scan"] = run_mode(spark, sf_dir, truth, wide)
         print(f"n={n_rows} wide_scan({wide}): {rec['modes']['wide_scan']}",
               flush=True)
 
-        # mode 3: the layout REBUILT at the wide width, same env
+        # mode 3: the layout REBUILT at the wide width
         t0 = time.time()
         build_workload_layout(spark, sf_dir, lay_dir,
                               tables=("embeddings",), lsh_planes=wide)
         rec["build_wide_s"] = round(time.time() - t0, 1)
         assert layout_lsh_planes(spark, sf_dir) == wide
-        rec["modes"]["wide_layout"] = run_mode(spark, sf_dir, truth)
+        rec["modes"]["wide_layout"] = run_mode(spark, sf_dir, truth, wide)
         print(f"n={n_rows} wide_layout({wide}): "
               f"{rec['modes']['wide_layout']}", flush=True)
 
-        # mode 4 (r12, verdict ask 6; r13, verdict ask 3): lifecycle
-        # parity at scale — the append → compact → serve cycle on the
+        # mode 4: lifecycle parity at scale — the append → compact → serve cycle on the
         # WIDE layout. TWO ~5% deltas land as new part files, each
         # maintenance call tags its delta at the MANIFEST's pinned
         # width (incremental path), then the SELECTIVE minor
@@ -219,12 +218,11 @@ def main() -> None:
         rec["compact_files"] = list(res["embeddings"])
         rec["compact_mode"] = "minor_selective"
         rec["modes"]["wide_layout_appended_compacted"] = run_mode(
-            spark, sf_dir, truth)
+            spark, sf_dir, truth, wide)
         print(f"n={n_rows} wide_layout_appended_compacted({wide}): "
               f"{rec['modes']['wide_layout_appended_compacted']}",
               flush=True)
 
-        os.environ.pop("SPARK_GRAFT_LSH_PLANES", None)
         drop_workload_layout(spark, sf_dir, tables=("embeddings",))
         out["corpora"].append(rec)
         _write_artifact(out)  # incremental: a later-tier OOM must not

@@ -336,28 +336,26 @@ def test_hll_sketch_union_estimate_within_tolerance(spark):
 
 
 def test_f13_plane_prefix_covers_beyond_100tb_and_is_stable():
-    """ADVICE r5: the r5 plane cap (16 → fail at ~4.2M vectors) turned
-    an oracle-divergence guard into a reachable production failure. The
-    prefix now holds 40 planes — by the sizing rule
-    k = round(log2(n/64 + 1)) that covers ~7e13 vectors, beyond any
-    100 TB corpus — and must stay PREFIX-STABLE (plane i identical at
-    every k) so the inlined DuckDB oracle's [1:k] slice always matches
-    the Spark side."""
+    """f13's base planes (the LSH stream) hold 40 planes — by the sizing
+    rule k = round(log2(n/64 + 1)) that covers ~7e13 vectors, beyond
+    any 100 TB corpus — and must stay PREFIX-STABLE (plane i identical
+    at every k) so the inlined DuckDB oracle's [1:k] slice always
+    matches the Spark side; past the envelope the accessor refuses."""
     import math
 
     from nyc_taxi_data_engineering_project_spark.queries.llm import (
-        _F13_MAX_PLANES,
-        _f13_planes,
+        _MAX_PLANES,
+        _planes,
     )
 
     # 100 TB at a (generous) 1 KB/row is 1e11 vectors; pad two orders
     k_100tb = max(2, round(math.log2(1e13 / 64 + 1)))
-    assert k_100tb <= _F13_MAX_PLANES
+    assert k_100tb <= _MAX_PLANES
 
-    assert _f13_planes(2) == _f13_planes(_F13_MAX_PLANES)[:2]
-    assert _f13_planes(16) == _f13_planes(40)[:16]
-    with pytest.raises(ValueError, match="_F13_MAX_PLANES"):
-        _f13_planes(_F13_MAX_PLANES + 1)
+    assert _planes("lsh", 2) == _planes("lsh", _MAX_PLANES)[:2]
+    assert _planes("lsh", 16) == _planes("lsh", 40)[:16]
+    with pytest.raises(ValueError, match="_MAX_PLANES"):
+        _planes("lsh", _MAX_PLANES + 1)
 
 
 def test_f2_star_fallback_keeps_megacluster_connected(spark):
@@ -454,26 +452,27 @@ def test_seed_hash_portable_on_extreme_ids(spark):
     assert all(0 <= h < 2**31 for h in got_spark.values())
 
 
-def test_lsh_scale_mode_widens_planes_with_recall_gate(
-        spark, tmp_path, monkeypatch):
-    """r10 (verdict ask 3): SPARK_GRAFT_LSH_PLANES widens the signature
-    from the same seeded prefix — on a corpus with PLANTED near
-    neighbors (the workload an ANN index exists for), the widened mode
-    must keep recall ≥ 0.9 while probing strictly fewer candidates
-    than the 4-plane contract; the plane prefix is stable (plane i
-    identical at every count) so the default path is untouched."""
+def test_lsh_scale_mode_widens_planes_with_recall_gate(spark, tmp_path):
+    """lsh_ann_topk's width argument widens the signature from the same
+    seeded prefix — on a corpus with PLANTED near neighbors (the
+    workload an ANN index exists for), the widened mode must keep
+    recall ≥ 0.9 while probing strictly fewer candidates than the
+    4-plane contract; the plane prefix is stable (plane i identical at
+    every count) so the default path is untouched."""
     import os
 
     from pyspark.sql import functions as F
 
     from nyc_taxi_data_engineering_project_spark.queries.llm import (
-        LSH_ALL_PLANES,
         LSH_PLANES,
+        _planes,
+        lsh_ann_topk,
         lsh_planes_for,
     )
 
     # prefix stability: the oracle's 4 planes ARE the first 4
-    assert LSH_ALL_PLANES[:4] == LSH_PLANES
+    assert _planes("lsh", 4) == LSH_PLANES[:4]
+    assert _planes("lsh", 6)[:4] == _planes("lsh", 4)
 
     n_rows, n_q, n_planted = 4000, 20, 8
     base = spark.range(n_rows).select(
@@ -508,40 +507,60 @@ def test_lsh_scale_mode_widens_planes_with_recall_gate(
             len(by_q.get(q, set()) & truth[q]) / 5.0
             for q in range(n_q)) / n_q
 
-    wide = 6
-    monkeypatch.setenv("SPARK_GRAFT_LSH_PLANES", str(wide))
-    got = registry.QUERIES["f3_lsh_ann"](spark, sf)
+    got = lsh_ann_topk(spark, sf, 6)
     assert [f.name for f in got.schema.fields] == \
         ["query_id", "neighbor_id", "cosine", "rk"]
     assert recall_of(got.collect()) >= 0.9
 
-    monkeypatch.delenv("SPARK_GRAFT_LSH_PLANES")
     default_rows = registry.QUERIES["f3_lsh_ann"](spark, sf).collect()
     assert recall_of(default_rows) >= 0.9  # planted dups: both modes find them
 
     # the rule floors at the oracle contract and widens logarithmically
     assert lsh_planes_for(4000) == 4
     assert lsh_planes_for(3_160_000) in (10, 11)
-    assert lsh_planes_for(10**12) == 16  # capped at the seeded prefix
+    assert lsh_planes_for(10**12) == 16  # capped at the ANN width cap
 
-    monkeypatch.setenv("SPARK_GRAFT_LSH_PLANES", "99")
     with pytest.raises(ValueError, match="outside"):
-        registry.QUERIES["f3_lsh_ann"](spark, sf)
+        lsh_ann_topk(spark, sf, 99)
 
 
-def test_f3_wide_key_equals_env_mode(spark, monkeypatch):
-    """r11: f3_lsh_ann_wide (pinned 8 planes, oracle-checked) must be
-    row-identical to the env-selected scale mode at the same width —
-    one machinery, two entry points."""
+def test_f3_wide_key_equals_width_argument(spark):
+    """f3_lsh_ann_wide (pinned 8 planes, oracle-checked) must be
+    row-identical to lsh_ann_topk at the same width, and f3_lsh_ann to
+    it at 4 — one machinery, every entry point."""
     from nyc_taxi_data_engineering_project_spark.queries.llm import (
         f3_lsh_ann,
         f3_lsh_ann_wide,
+        lsh_ann_topk,
     )
 
-    wide = sorted(map(tuple, f3_lsh_ann_wide(spark, SF_DIR).collect()))
-    monkeypatch.setenv("SPARK_GRAFT_LSH_PLANES", "8")
-    env_mode = sorted(map(tuple, f3_lsh_ann(spark, SF_DIR).collect()))
-    assert wide == env_mode
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    assert rows(f3_lsh_ann_wide(spark, SF_DIR)) == \
+        rows(lsh_ann_topk(spark, SF_DIR, 8))
+    assert rows(f3_lsh_ann(spark, SF_DIR)) == \
+        rows(lsh_ann_topk(spark, SF_DIR, 4))
+
+
+def test_lsh_width_past_the_cap_is_refused(spark, tmp_path):
+    """A width past the 16-plane ANN cap is refused by the query and by
+    the layout build with the same error — the query used to slice the
+    plane list to 16 planes while probing 17 bit flips, and returned
+    rows."""
+    from nyc_taxi_data_engineering_project_spark.catalog import (
+        build_workload_layout,
+    )
+    from nyc_taxi_data_engineering_project_spark.queries.llm import (
+        lsh_ann_topk,
+    )
+
+    msg = r"lsh_planes=17 outside \[4, 16\]"
+    with pytest.raises(ValueError, match=msg):
+        lsh_ann_topk(spark, SF_DIR, 17).collect()
+    with pytest.raises(ValueError, match=msg):
+        build_workload_layout(spark, SF_DIR, str(tmp_path / "lay"),
+                              tables=("embeddings",), lsh_planes=17)
 
 
 def test_f34_count_min_one_sided_error_and_no_false_negatives(spark):
@@ -1117,13 +1136,12 @@ def test_f36_plane_prefix_stable_and_guarded():
     inlined-oracle envelope — and come from an INDEPENDENT seed (the
     two operators' cluster geometries must not be coupled)."""
     from nyc_taxi_data_engineering_project_spark.queries.llm import (
-        _F36_MAX_PLANES,
-        F13_PLANES,
-        _f36_planes,
+        _MAX_PLANES,
+        _planes,
     )
 
-    assert _f36_planes(2) == _f36_planes(_F36_MAX_PLANES)[:2]
-    assert _f36_planes(16) == _f36_planes(40)[:16]
-    assert _f36_planes(1)[0] != F13_PLANES[0]
-    with pytest.raises(ValueError, match="_F36_MAX_PLANES"):
-        _f36_planes(_F36_MAX_PLANES + 1)
+    assert _planes("f36", 2) == _planes("f36", _MAX_PLANES)[:2]
+    assert _planes("f36", 16) == _planes("f36", 40)[:16]
+    assert _planes("f36", 1)[0] != _planes("lsh", 1)[0]
+    with pytest.raises(ValueError, match="_MAX_PLANES"):
+        _planes("f36", _MAX_PLANES + 1)

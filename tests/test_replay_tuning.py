@@ -1,19 +1,17 @@
-"""r14 optimization: the bounded-replay harness's tuning seams
-(streaming.run_available_now) — state-partition default/override and
-the ephemeral checkpoint root. The OPTIMIZATION_r14.md streaming section
-documents the measurements these encode (d2 8→2 parts halves the
-micro-batch wall). r15 replaced d8's core-derived override with a
-fixed 8 (its own env knob, SPARK_GRAFT_D8_STATE_PARTS) — the
-core-derived value anti-scaled under the driver's cold protocol
-(OPTIMIZATION_r15.md); the generic override seam stays (deployment
-knob, exercised below)."""
+"""The bounded-replay harness's tuning seams
+(streaming.run_available_now): the state-partition default, its
+SPARK_GRAFT_REPLAY_STATE_PARTS deployment setting and the per-query
+override, and the ephemeral checkpoint root. OPTIMIZATION_r14.md's
+streaming section documents the measurements the default encodes
+(d2 8→2 parts halves the micro-batch wall). d8 passes a fixed 8
+through the per-query override (its compute profile, measured in
+OPTIMIZATION_r15.md)."""
 
 from __future__ import annotations
 
 import os
 import uuid
 
-import pytest
 from pyspark.sql import functions as F
 
 from conftest import SF_DIR
@@ -65,8 +63,7 @@ def test_run_available_now_restores_session_partitions_and_cleans_ckpt(
 
 def test_run_available_now_state_partitions_override(spark):
     """A per-query override changes the state-partition bound without
-    changing the result (deployment seam; d8 passes a fixed 8 through
-    it, overridable via SPARK_GRAFT_D8_STATE_PARTS)."""
+    changing the result (d8 passes a fixed 8 through it)."""
     name = f"ro_{uuid.uuid4().hex[:8]}"
     stream = (
         events_stream(spark, SF_DIR)
@@ -86,16 +83,3 @@ def test_run_available_now_state_partitions_override(spark):
     )
     assert got.count() == batch.count()
 
-
-def test_d8_state_parts_env_is_validated(spark, monkeypatch):
-    """SPARK_GRAFT_D8_STATE_PARTS must be an integer >= 1; anything else
-    is refused with an error naming the variable instead of silently
-    falling back to the generic replay default."""
-    from nyc_taxi_data_engineering_project_spark.queries.streaming_q import (
-        d8_stateful,
-    )
-
-    for bad in ("0", "x"):
-        monkeypatch.setenv("SPARK_GRAFT_D8_STATE_PARTS", bad)
-        with pytest.raises(ValueError, match="SPARK_GRAFT_D8_STATE_PARTS"):
-            d8_stateful(spark, SF_DIR)

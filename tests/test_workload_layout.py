@@ -1165,15 +1165,18 @@ def test_concurrent_reader_during_compaction_swap(spark, tmp_path):
 # ------------------------------------------- r11: wide-plane ANN layout
 
 
-def test_wide_plane_layout_serves_f3_wide_mode(spark, tmp_path, monkeypatch):
-    """r11 (verdict ask 1): the embeddings layout built at a wide plane
-    width (build_workload_layout(lsh_planes=n), the lsh_planes_for
-    deployment shape) serves f3_lsh_ann's wide mode from the STORED
-    assignment with dynamic partition pruning — closing SCALE.md §19c
-    finding 2's tagging-scan-bound wide mode — while the default
-    4-plane oracle contract stays value-true alongside it."""
+def test_wide_plane_layout_serves_f3_wide_mode(spark, tmp_path):
+    """The embeddings layout built at a wide plane width
+    (build_workload_layout(lsh_planes=n), the lsh_planes_for deployment
+    shape) serves lsh_ann_topk at that width from the STORED assignment
+    with dynamic partition pruning — not SCALE.md §19c finding 2's
+    tagging-scan-bound wide mode — while the default 4-plane oracle
+    contract stays value-true alongside it."""
     from nyc_taxi_data_engineering_project_spark.catalog import (
         layout_lsh_planes,
+    )
+    from nyc_taxi_data_engineering_project_spark.queries.llm import (
+        lsh_ann_topk,
     )
 
     registry.load_all()
@@ -1181,14 +1184,14 @@ def test_wide_plane_layout_serves_f3_wide_mode(spark, tmp_path, monkeypatch):
     path = str(tmp_path / "wide_layout")
 
     # wide inline baseline (no layout): value truth for the wide mode
-    monkeypatch.setenv("SPARK_GRAFT_LSH_PLANES", "6")
-    inline_rows = sorted(map(tuple, q(spark, SF_DIR).collect()))
+    inline_rows = sorted(map(tuple,
+                             lsh_ann_topk(spark, SF_DIR, 6).collect()))
 
     built = build_workload_layout(spark, SF_DIR, path,
                                   tables=("embeddings",), lsh_planes=6)
     try:
         assert layout_lsh_planes(spark, SF_DIR) == 6
-        wide = q(spark, SF_DIR)
+        wide = lsh_ann_topk(spark, SF_DIR, 6)
         plan = _fmt_plan(wide)
         # the WIDE mode rides the stored assignment: pruned scan on the
         # materialized bucket, not a per-run tagging recompute
@@ -1199,7 +1202,6 @@ def test_wide_plane_layout_serves_f3_wide_mode(spark, tmp_path, monkeypatch):
         # the DEFAULT contract over the wide layout must not trust the
         # mismatched stored bucket: recomputed inline, identical to the
         # plain default
-        monkeypatch.delenv("SPARK_GRAFT_LSH_PLANES")
         d_over_wide = sorted(map(tuple, q(spark, SF_DIR).collect()))
         spark.conf.set(LAYOUT_SERVE_CONF, "false")
         try:
@@ -1300,21 +1302,20 @@ def test_build_lock_cross_process_contention(tmp_path):
         os.remove(got)
 
 
-def test_build_ann_index_sizes_width_from_corpus(spark, tmp_path,
-                                                 monkeypatch):
-    """r11: the one-call ANN deployment recipe — width from
-    lsh_planes_for(corpus rows), layout built at it, f3 wide mode
-    (explicit env opt-in) value-identical to the inline wide mode."""
+def test_build_ann_index_sizes_width_from_corpus(spark, tmp_path):
+    """The one-call ANN deployment recipe — width from
+    lsh_planes_for(corpus rows), layout built at it, lsh_ann_topk at
+    the returned width value-identical to the inline wide mode."""
     from nyc_taxi_data_engineering_project_spark.catalog import (
         build_ann_index,
         layout_lsh_planes,
     )
     from nyc_taxi_data_engineering_project_spark.queries.llm import (
+        lsh_ann_topk,
         lsh_planes_for,
     )
 
     registry.load_all()
-    q = registry.QUERIES["f3_lsh_ann"]
     path = str(tmp_path / "ann_index")
     info = build_ann_index(spark, SF_DIR, path)
     try:
@@ -1324,12 +1325,13 @@ def test_build_ann_index_sizes_width_from_corpus(spark, tmp_path,
         assert info["buckets"] == 1 << info["lsh_planes"]
         assert layout_lsh_planes(spark, SF_DIR) == info["lsh_planes"]
 
-        monkeypatch.setenv("SPARK_GRAFT_LSH_PLANES",
-                           str(info["lsh_planes"]))
-        served = sorted(map(tuple, q(spark, SF_DIR).collect()))
+        def q():
+            return lsh_ann_topk(spark, SF_DIR, info["lsh_planes"])
+
+        served = sorted(map(tuple, q().collect()))
         spark.conf.set(LAYOUT_SERVE_CONF, "false")
         try:
-            inline = sorted(map(tuple, q(spark, SF_DIR).collect()))
+            inline = sorted(map(tuple, q().collect()))
         finally:
             spark.conf.unset(LAYOUT_SERVE_CONF)
         assert served == inline
