@@ -545,7 +545,7 @@ def _write_manifest(layout_path: str, tbl: str, manifest: dict) -> None:
 
 
 def _layout_swap(layout_path: str, tbl: str) -> store.Swap:
-    """The directory swap that publishes a compacted layout table."""
+    """The directory swap that publishes every layout table write."""
     tbl_dir = os.path.join(layout_path, tbl)
     return store.Swap(tbl_dir, tbl_dir + "_compact_tmp",
                       tbl_dir + "_compact_old", "_graft_manifest.json",
@@ -670,20 +670,22 @@ def build_workload_layout(
 
     Maintenance is INCREMENTAL for append-only sources: each build
     persists a ``_graft_manifest.json`` inside the layout table dir
-    recording the source's per-part (mtime_ns, size) map. When the
-    source drifts by strictly ADDING part files — the reference's own
-    monthly-append ingest pattern
-    (``python/ingest_data.py:160-166``) — only the new parts are read
-    and bucketized, so a month's maintenance costs O(month), not
-    O(100 TB fact): the delta is written as new sorted runs (one per
-    touched bucket per input task) into a staged tree beside hardlinks
-    of every live file, and the tree is published with its manifest by
-    one directory swap (:func:`_rewrite_layout`, the routine both
-    compactions use). An append cut short publishes nothing, so the
-    retry appends the same delta once, incrementally. Any drift the
+    recording the source's per-part (mtime_ns, size) map, the bucket
+    spec and the table's schema. When the source drifts by strictly
+    ADDING part files — the reference's own monthly-append ingest
+    pattern (``python/ingest_data.py:160-166``) — only the new parts
+    are read and bucketized, so a month's maintenance costs O(month),
+    not O(100 TB fact): the delta lands as one new sorted run per
+    touched bucket beside hardlinks of every live file. Any drift the
     diff can't scope — a modified or deleted part, a changed bucket
-    count or key — keeps the loud full-rebuild posture, which
-    overwrites the table in place. The manifest lets a FRESH session
+    count, key or derived column, a lost or older manifest — rebuilds
+    the table in full from every source part. Every build, full or
+    incremental, stages its tree and publishes it with its manifest by
+    one directory swap (:func:`_rewrite_layout`, the routine both
+    compactions use), so a build cut short publishes nothing: the
+    previous table and manifest keep serving, and an append's retry
+    lands the same delta once. The manifest lets a FRESH session — a
+    new JVM included, whose in-memory catalog lost the table —
     re-register a still-fresh layout without any rebuild."""
     # family-consistency gate BEFORE defaulting: a registered sibling's
     # count wins over the parallelism default
@@ -738,181 +740,87 @@ def _build_layout_tables(
     built: dict[str, str] = {}
     for name in tables:
         key = LAYOUT_BUCKET_KEYS[name]  # KeyError = not a layout table
-        h = _layout_conf_key(sf_dir, name).split(".")[-2]
-        tbl = f"spark_graft_layout_{h}_{name}"
         conf_key = _layout_conf_key(sf_dir, name)
+        tbl = f"spark_graft_layout_{conf_key.split('.')[-2]}_{name}"
         src_path = os.path.join(sf_dir, f"{name}.parquet")
         cur_parts = _source_parts(src_path)
         cur_fp = _fingerprint_of(cur_parts)
         _layout_swap(path, tbl).heal()
-        manifest = _read_manifest(path, tbl)
-        # the manifest (it travels inside the table directory) is the
-        # on-disk truth of which source version the table was built
-        # from; session conf is the fallback for pre-manifest layouts
-        built_fp = (manifest or {}).get("fingerprint") \
-            or spark.conf.get(conf_key + ".src", None)
-        # plane width of the embeddings stored LSH bucket — explicit
-        # param > manifest-recorded width > the 4-plane contract
-        # default (a manifest without the field IS the default width)
-        if name == "embeddings":
-            planes_req = lsh_planes
-            default_planes = _N_LSH_PLANES
-            manifest_planes = (manifest or {}).get("lsh_planes")
-            # stored width of an EXISTING build: manifest first; for a
-            # conf-only pre-manifest layout (manifest None) fall back
-            # to the .lsh_planes conf set at the original build —
-            # otherwise a wide stored assignment would silently
-            # re-register as the 4-plane default and _embeddings would
-            # trust a wide bucket as 4-plane
-            conf_planes = spark.conf.get(conf_key + ".lsh_planes", None)
-            stored_planes = manifest_planes or (
-                int(conf_planes) if conf_planes else None)
-            eff_planes: int | None = (planes_req or stored_planes
-                                      or default_planes)
+        # the manifest travels inside the table directory and is the one
+        # record of a built table: the source version it holds, its
+        # spec and the schema its catalog entry is created with
+        m = _read_manifest(path, tbl) or {}
+        # plane width of the embeddings stored LSH bucket (a manifest
+        # without the field IS the 4-plane contract default)
+        stored_planes = int(m.get("lsh_planes", _N_LSH_PLANES))
+        # the table is kept only while its manifest records its schema
+        # (what a new JVM recreates the catalog entry from), this
+        # engine's bucket key and derived columns (an older set would
+        # serve a schema the engine no longer produces) and whatever
+        # bucket count or LSH width the caller names explicitly
+        spec_ok = (
+            "ddl" in m and m.get("key") == key
+            and m.get("derived") == sorted(LAYOUT_DERIVED.get(name, {}))
+            and (not buckets_explicit or int(buckets) == int(m["buckets"]))
+            and not (name == "embeddings" and lsh_planes is not None
+                     and lsh_planes != stored_planes))
+        # the drift a part-map diff can scope: strictly ADDED parts
+        old_parts = m.get("parts", {})
+        new_names = [n for n in cur_parts if n not in old_parts]
+        appended = (
+            spec_ok and os.path.isdir(src_path) and bool(new_names)
+            and all(cur_parts.get(n) == meta
+                    for n, meta in old_parts.items()))
+        full = rebuild or not (
+            appended or (spec_ok and m["fingerprint"] == cur_fp))
+        if full:
+            # CREATE INDEX style: a missing, version-unknown or drifted
+            # table is built from every source part, never re-blessed
+            n_buckets, eff_planes = int(buckets), lsh_planes or stored_planes
+            parts, keep, counters = cur_parts, [], {}
         else:
-            planes_req = None
-            default_planes = 0
-            manifest_planes = None
-            stored_planes = None
-            eff_planes = None
-
-        def _manifest_now(buckets, **fields) -> dict:
-            # the manifest of the table as built from cur_parts
-            return {
+            n_buckets, eff_planes = int(m["buckets"]), stored_planes
+            if not spark.catalog.tableExists(tbl):
+                # a new JVM: the in-memory catalog lost the entry, and
+                # the manifest proves the tree fresh — register only
+                _create_entry(spark, path, tbl, m)
+            parts = {n: cur_parts[n] for n in new_names}
+            keep = _layout_files(os.path.join(path, tbl))
+            counters = {c: int(m.get(c, 0))
+                        for c in ("compactions", "minor_compactions")}
+        if full or appended:
+            rows = _read_parquet_dispatch(spark, src_path, parts)
+            for cn, fac in _derived_factories(name, eff_planes).items():
+                # static derived rules only (fixed-literal hashes):
+                # appended rows get the bucket assignment, at the
+                # stored width, that the existing rows got at build
+                rows = rows.withColumn(cn, fac(rows))
+            manifest = {
                 "fingerprint": cur_fp, "parts": cur_parts,
-                "buckets": int(buckets), "key": key, "source": src_path,
+                "buckets": n_buckets, "key": key, "source": src_path,
                 "derived": sorted(LAYOUT_DERIVED.get(name, {})),
+                "mode": ("partitioned" if name in LAYOUT_VALUE_PARTITIONED
+                         else "bucketed"),
                 **({"lsh_planes": int(eff_planes)}
                    if name == "embeddings" else {}),
-                **fields,
+                **counters,
             }
-
-        def _full_build() -> None:
-            # read the PLAIN source explicitly (serve flag off for this
-            # read): rebuilding with the layout registered must not
-            # read the layout table into itself
-            prev = spark.conf.get(LAYOUT_SERVE_CONF, "true")
-            spark.conf.set(LAYOUT_SERVE_CONF, "false")
-            try:
-                # materialize the derived bucket columns (computed on
-                # the fly by the plain path) into the table, bound to
-                # this build's plane width
-                src = table(spark, sf_dir, name)
-                for cn, fac in _derived_factories(name,
-                                                  eff_planes).items():
-                    src = src.withColumn(cn, fac(src))
-            finally:
-                spark.conf.set(LAYOUT_SERVE_CONF, prev)
-            # in place: the overwrite creates the catalog entry and its
-            # bucket spec, and wipes the old tree with its manifest
-            _layout_write(src, name, tbl, buckets, os.path.join(path, tbl))
-            # a source mutated during the build leaves a manifest-less
-            # table, which the next build rebuilds in full
-            _refuse_if_moved(src_path, cur_fp, name, "building")
-            _write_manifest(path, tbl, _manifest_now(
-                buckets, mode=("partitioned"
-                               if name in LAYOUT_VALUE_PARTITIONED
-                               else "bucketed")))
-
-        reg_buckets = int(buckets)
-        # a layout built under an OLDER derived-column set must be
-        # rebuilt in full — re-registering it would serve a schema the
-        # engine no longer produces (missing graft_* columns), and an
-        # incremental append would write rows the old files lack
-        derived_drift = (
-            manifest is not None
-            and manifest.get("derived", [])
-            != sorted(LAYOUT_DERIVED.get(name, {}))
-        )
-        if rebuild or not spark.catalog.tableExists(tbl) \
-                or built_fp is None or derived_drift:
-            # missing or version-unknown table must never be re-blessed
-            # against the current source; build IS the rebuild,
-            # CREATE INDEX style
-            _full_build()
-        elif built_fp == cur_fp:
-            existing = (int(manifest["buckets"]) if manifest is not None
-                        else int(spark.conf.get(
-                            conf_key + ".buckets", str(int(buckets)))))
-            planes_mismatch = (
-                planes_req is not None
-                and planes_req != (stored_planes or default_planes))
-            if (buckets_explicit and existing != int(buckets)) \
-                    or planes_mismatch:
-                # fresh table, but built at a DIFFERENT count/width
-                # than the caller EXPLICITLY asked for: re-registering
-                # the old build would silently hand back a layout the
-                # caller didn't request, while the drift path treats
-                # the same mismatch as a full-rebuild trigger. Match
-                # that posture — rebuild as requested (bucket count
-                # and LSH plane width alike)
-                _full_build()
-            else:
-                # fresh — register only (CREATE INDEX IF NOT EXISTS),
-                # even from a brand-new session (manifest carries the
-                # proof)
-                reg_buckets = existing
-                if name == "embeddings":
-                    eff_planes = stored_planes or default_planes
-        else:
-            # drifted: diff the part maps — append-only drift is the
-            # incremental path, anything else rebuilds in full
-            old_parts = (manifest or {}).get("parts", {})
-            new_names = [n for n in cur_parts if n not in old_parts]
-            appended_only = (
-                manifest is not None
-                and manifest.get("key") == key
-                and os.path.isdir(src_path)
-                and bool(new_names)
-                and all(cur_parts.get(n) == meta
-                        for n, meta in old_parts.items())
-                and (not buckets_explicit
-                     or int(buckets) == int(manifest["buckets"]))
-                and (planes_req is None
-                     or planes_req == (manifest_planes or default_planes))
-            )
-            if not appended_only:
-                _full_build()
-            else:
-                if name == "embeddings":
-                    # appended rows MUST get the stored assignment's
-                    # width, whatever this call would default to
-                    eff_planes = manifest_planes or default_planes
-                delta = _read_parquet_dispatch(
-                    spark, src_path, {n: cur_parts[n] for n in new_names})
-                for cn, fac in _derived_factories(name,
-                                                  eff_planes).items():
-                    # static derived rules only (fixed-literal hashes):
-                    # appended rows get the same bucket assignment the
-                    # existing rows got at build
-                    delta = delta.withColumn(cn, fac(delta))
-                new_manifest = _manifest_now(
-                    manifest["buckets"],
-                    mode=manifest.get("mode", "bucketed"),
-                    compactions=int(manifest.get("compactions", 0)),
-                    minor_compactions=int(
-                        manifest.get("minor_compactions", 0)))
-                _rewrite_layout(
-                    spark, path, name, tbl, delta,
-                    _layout_files(os.path.join(path, tbl)), new_manifest,
-                    append=True)
-                reg_buckets = int(manifest["buckets"])
-                # auto-compaction: each append lands one new sorted run
-                # per touched bucket; once the average passes
-                # LAYOUT_COMPACT_RUNS_PER_BUCKET, merge back NOW, under
-                # the build lock this path already holds.
-                if (_runs_per_bucket(path, tbl, new_manifest)
-                        > LAYOUT_COMPACT_RUNS_PER_BUCKET):
-                    # MINOR compaction: merge only the append runs, cost
-                    # ∝ appended bytes — the pigeonhole
-                    # guarantees at least one bucket is above the
-                    # per-bucket threshold whenever the average trips
-                    _compact_layout_table(spark, path, name, tbl,
-                                          full=False)
+            _rewrite_layout(spark, path, name, tbl, rows, keep, manifest,
+                            from_source=True)
+            # auto-compaction: each append lands one new sorted run per
+            # touched bucket; once the average passes
+            # LAYOUT_COMPACT_RUNS_PER_BUCKET, the MINOR compaction
+            # merges only the append runs (cost ∝ appended bytes) NOW,
+            # under the build lock this path already holds — the
+            # pigeonhole guarantees at least one bucket is above the
+            # per-bucket threshold whenever the average trips
+            if (not full and _runs_per_bucket(path, tbl, manifest)
+                    > LAYOUT_COMPACT_RUNS_PER_BUCKET):
+                _compact_layout_table(spark, path, name, tbl, full=False)
         # fingerprint the source AS BUILT: table() refuses to serve the
         # layout once the source drifts from this
         spark.conf.set(conf_key + ".src", cur_fp)
-        spark.conf.set(conf_key + ".buckets", str(reg_buckets))
+        spark.conf.set(conf_key + ".buckets", str(n_buckets))
         if name == "embeddings":
             # the width of the STORED assignment — layout_lsh_planes
             # reads this so the vector family only trusts a stored
@@ -963,69 +871,80 @@ LAYOUT_COMPACT_RUNS_PER_BUCKET = 4
 def _layout_write(df: DataFrame, name: str, table_name: str,
                   buckets: int, path: str) -> None:
     """Write ``df`` as catalog table ``table_name`` at ``path`` with the
-    layout writer of source table ``name``."""
+    layout writer of source table ``name``, co-located first so each
+    bucket or partition value gets one new file: an unco-located frame
+    writes every input task × every bucket it touches (at a wide-plane
+    LSH layout, 2^11+ dirs × 64 tasks — the 100k-tiny-files failure
+    mode). Spark's repartition hash is the bucketed writer's
+    Murmur3-pmod, so each task holds exactly one bucket."""
     from . import io as _io
 
     key = LAYOUT_BUCKET_KEYS[name]
     if name in LAYOUT_VALUE_PARTITIONED:
-        # co-locate each partition VALUE into one task: an
-        # unrepartitioned frame writes every input partition × every
-        # value it touches — at a wide-plane LSH layout (2^11+ dirs × 64
-        # input partitions) the 100k-tiny-files failure mode
         _io.write_value_partitioned(df.repartition(F.col(key)),
                                     table_name, key, path=path)
     else:
-        _io.write_bucketed(df, table_name, key, buckets=buckets,
-                           path=path)
+        _io.write_bucketed(df.repartition(buckets, F.col(key)), table_name,
+                           key, buckets=buckets, path=path)
 
 
-def _refuse_if_moved(src_path: str, fp: str, name: str, what: str) -> None:
-    """Refuse loudly when the source no longer has fingerprint ``fp``:
-    it was taken before a potentially minutes-long write, and a source
-    mutated meanwhile must not be registered as fresh."""
-    post_fp = _source_fingerprint(src_path)
-    if post_fp != fp:
-        raise ValueError(
-            f"source {src_path} changed WHILE the layout for {name!r} "
-            f"was {what} (fingerprint {fp} → {post_fp}); the result was "
-            f"NOT registered. Re-run build_workload_layout once the "
-            f"source is settled.")
+def _create_entry(spark: SparkSession, path: str, tbl: str,
+                  manifest: dict) -> None:
+    """(Re)create catalog table ``tbl`` over the published tree
+    ``path/tbl`` from what its ``manifest`` records: the schema, and the
+    bucket spec or partition column. REFRESH cannot change a bucket
+    spec, and a schema-less bucketed CREATE is refused, hence the
+    recorded DDL."""
+    key = manifest["key"]
+    partitioned = manifest["mode"] == "partitioned"
+    spec = (f"PARTITIONED BY ({key})" if partitioned else
+            f"CLUSTERED BY ({key}) SORTED BY ({key}) "
+            f"INTO {int(manifest['buckets'])} BUCKETS")
+    loc = os.path.abspath(os.path.join(path, tbl))
+    loc = loc.replace("\\", "\\\\").replace("'", "\\'")
+    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+    spark.sql(f"CREATE TABLE {tbl} ({manifest['ddl']}) USING parquet "
+              f"{spec} LOCATION '{loc}'")
+    if partitioned:
+        spark.sql(f"ALTER TABLE {tbl} RECOVER PARTITIONS")
 
 
 def _rewrite_layout(spark: SparkSession, path: str, name: str, tbl: str,
                     rows: DataFrame, keep: list[str], manifest: dict,
-                    append: bool = False) -> None:
-    """The one way a built layout table changes — appends, minor and
-    major compaction. ``rows`` are written with the table's layout
-    writer into the swap's staged tree, the live ``keep`` files are
-    hardlinked beside them under their own names, and the tree is
-    published with ``manifest`` by :meth:`store.Swap.publish`. Nothing
-    is published when any step fails, so the live table and its
-    manifest stay exactly as they were.
+                    from_source: bool = False) -> None:
+    """The one way a layout table is written — full builds, appends,
+    minor and major compaction. ``rows`` are written co-located with the
+    table's layout writer into the swap's staged tree (one new file per
+    bucket), the live ``keep`` files are hardlinked beside them under
+    their own names, and the tree is published with ``manifest`` by
+    :meth:`store.Swap.publish`. Nothing is published when any step
+    fails, so the live table and its manifest stay exactly as they were
+    — a full build cut short leaves the previous table serving.
 
-    Compaction rows are co-located one bucket per task, so each bucket
-    gets one new file (partitioned tables always are). ``append`` rows
-    are source rows read at the manifest's fingerprint: they are
-    written as they come (no merge shuffle: one new run per touched
-    bucket per input task), and the source is re-stat'ed before
-    publish, refusing unless it still has that fingerprint. The table
-    is REFRESHed (and a partitioned table's new partition values
-    recovered) before the superseded tree is deleted: queries planned
-    from then on list the new files. Caller holds the build lock."""
+    ``from_source`` rows were read from the source at the manifest's
+    fingerprint: the manifest records their schema as DDL, and the
+    source is re-stat'ed before publish, refusing unless it still has
+    that fingerprint. Compaction rows are read back from the table and
+    keep the manifest's DDL. Before the superseded tree is deleted, the
+    catalog entry of a full build (source rows, nothing kept: its bucket
+    count, LSH width or derived columns may be new) is recreated by
+    :func:`_create_entry`; any other rewrite keeps the spec, so its
+    entry is REFRESHed (a partitioned table's new values recovered) and
+    plans already resolved against it list the new files. Caller holds
+    the build lock."""
     import shutil
 
     from .crashpoints import crash_point
 
     swap = _layout_swap(path, tbl)
     staged_tbl = tbl + "_compact_tmp"
-    buckets = int(manifest["buckets"])
     shutil.rmtree(swap.staged, ignore_errors=True)
     spark.sql(f"DROP TABLE IF EXISTS {staged_tbl}")
-    if not append and name not in LAYOUT_VALUE_PARTITIONED:
-        # Spark's repartition hash is the bucketed writer's
-        # Murmur3-pmod, so each task holds exactly one bucket
-        rows = rows.repartition(buckets, F.col(LAYOUT_BUCKET_KEYS[name]))
-    _layout_write(rows, name, staged_tbl, buckets, swap.staged)
+    _layout_write(rows, name, staged_tbl, int(manifest["buckets"]),
+                  swap.staged)
+    if from_source:
+        manifest = {**manifest,
+                    "ddl": spark.table(staged_tbl).schema.toDDL()}
     # the staged table's catalog entry goes; an external drop keeps
     # the files
     spark.sql(f"DROP TABLE {staged_tbl}")
@@ -1040,12 +959,20 @@ def _rewrite_layout(spark: SparkSession, path: str, name: str, tbl: str,
         if os.path.exists(crc):
             os.link(crc, os.path.join(os.path.dirname(dst),
                                       os.path.basename(crc)))
-    if append:
-        _refuse_if_moved(manifest["source"], manifest["fingerprint"],
-                         name, "being appended to")
-
+    if from_source:
+        post_fp = _source_fingerprint(manifest["source"])
+        if post_fp != manifest["fingerprint"]:
+            raise ValueError(
+                f"source {manifest['source']} changed WHILE the layout "
+                f"for {name!r} was being written (fingerprint "
+                f"{manifest['fingerprint']} → {post_fp}); the result was "
+                f"NOT published. Re-run build_workload_layout once the "
+                f"source is settled.")
     def _serve_new_tree() -> None:
-        if name in LAYOUT_VALUE_PARTITIONED:
+        if from_source and not keep:
+            _create_entry(spark, path, tbl, manifest)
+            return
+        if manifest["mode"] == "partitioned":
             spark.sql(f"ALTER TABLE {tbl} RECOVER PARTITIONS")
         spark.sql(f"REFRESH TABLE {tbl}")
 

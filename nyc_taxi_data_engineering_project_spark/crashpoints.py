@@ -23,15 +23,16 @@ The registered points (each one line inside the window it names):
   ``rename(tmp, target)``: the stranded swap ``Swap.read`` must refuse
   and the next writer's ``Swap.heal`` must repair.
 - ``layout_swap_between_renames`` — the store.Swap that publishes
-  every layout table change (catalog._rewrite_layout: appends, minor
-  and major compaction), same window: readers fail loudly (the catalog
-  table points at a missing dir) and the next maintainer entry restores
-  the previous tree in O(1) via ``Swap.heal`` — the staged tree holds
-  no manifest until the publish writes it, so an interrupted append is
-  rolled back and redone exactly once.
+  every layout table write (catalog._rewrite_layout: full builds,
+  appends, minor and major compaction), same window: readers fail
+  loudly (the catalog table points at a missing dir) and the next
+  maintainer entry restores the previous tree in O(1) via
+  ``Swap.heal`` — the staged tree holds no manifest until the publish
+  writes it, so an interrupted append is rolled back and redone exactly
+  once, and an interrupted rebuild leaves the previous table serving.
 - ``minor_compact_mid_scratch`` — catalog._rewrite_layout, the routine
-  shared by appends and both compactions (the name predates the
-  sharing), after the new rows are written into the staged tree but
+  shared by every layout write (the name predates the sharing), after
+  the new rows are written into the staged tree but
   before the kept files are hardlinked beside them: nothing published;
   the next entry must clean the staged tree and redo.
 - ``layout_publish_before_marker`` — catalog.layout_ingest_writer,

@@ -189,11 +189,13 @@ def write_bucketed(df: DataFrame, table_name: str, key: str,
     Asserted shuffle-free in tests/test_bucketing.py.
 
     Overwrites ``table_name`` (an external table when ``path`` is
-    given). A bucket may hold several files — the layout's appends add
-    sorted runs beside the existing ones (catalog._rewrite_layout);
-    readers keep the hash-partitioning guarantee (bucket id is a
-    property of the key hash, not of file count), and Spark's bucketed
-    scan treats a multi-file bucket as unsorted input."""
+    given). A bucket may hold several files: each task writes one per
+    bucket it holds (the layout co-locates one bucket per task first),
+    and the layout's appends add a sorted run per touched bucket beside
+    the existing files (catalog._rewrite_layout). Readers keep the
+    hash-partitioning guarantee (bucket id is a property of the key
+    hash, not of file count), and Spark's bucketed scan treats a
+    multi-file bucket as unsorted input."""
     writer = (
         df.write.mode("overwrite")
         .bucketBy(buckets, key)

@@ -23,6 +23,9 @@ processes assert the documented recovery:
    (during an incremental append) | pre-append tree and manifest; the
                                   | next build lands the delta exactly
                                   | once (served rows = source rows)
+  layout_swap_between_renames     | heal rolls the table back to the
+   (during a rebuild=True full    | previous tree and manifest; the
+   build)                         | next build serves source rows
   layout_publish_before_marker    | marker proves non-consumption;
                                   | checkpoint replay deletes the
                                   | partial set and republishes
@@ -306,6 +309,47 @@ def phase_append_assert_exactly_once(work: str) -> None:
     print(f"APPEND_EXACTLY_ONCE_OK rows={n}", flush=True)
 
 
+def phase_rebuild_kill(work: str) -> None:
+    """Rebuild the layout in full with the swap window armed: the
+    staged tree is complete, and the process dies between the
+    renames."""
+    from nyc_taxi_data_engineering_project_spark import catalog
+
+    sf, lay = _layout_dirs(work)
+    spark = _session()
+    catalog.build_workload_layout(spark, sf, lay, buckets=4,
+                                  tables=("orders",))  # re-register
+    os.environ["SPARK_GRAFT_CRASH_POINT"] = "layout_swap_between_renames"
+    catalog.build_workload_layout(spark, sf, lay, buckets=4,
+                                  tables=("orders",), rebuild=True)
+    raise AssertionError("unreachable — the rebuild's swap must kill us")
+
+
+def phase_rebuild_assert_previous(work: str) -> None:
+    """The heal restores the previous tree and manifest; the next build
+    serves the source rows."""
+    from nyc_taxi_data_engineering_project_spark import catalog
+
+    sf, lay = _layout_dirs(work)
+    with open(os.path.join(work, "layout_state.json")) as fh:
+        state = json.load(fh)
+    tbl = state["tbl"]
+    catalog._layout_swap(lay, tbl).heal()
+    assert catalog._read_manifest(lay, tbl) == state["manifest"]
+    files = catalog._layout_n_files(os.path.join(lay, tbl))
+    assert files == state["files"], (files, state["files"])
+    spark = _session()
+    catalog.build_workload_layout(spark, sf, lay, buckets=4,
+                                  tables=("orders",))
+    served = catalog.table(spark, sf, "orders")
+    n = served.count()
+    want = spark.read.parquet(os.path.join(sf, "orders.parquet")).count()
+    assert n == want == state["rows"], (n, want, state["rows"])
+    assert not os.path.isdir(os.path.join(lay, tbl + "_compact_old"))
+    assert not os.path.isdir(os.path.join(lay, tbl + "_compact_tmp"))
+    print(f"REBUILD_ROLLED_BACK_OK rows={n}", flush=True)
+
+
 def _stream_paths(work: str) -> dict[str, str]:
     return {k: os.path.join(work, k)
             for k in ("feed", "src", "layout", "ckpt")}
@@ -368,6 +412,8 @@ PHASES = {
     "minor_reentry": phase_minor_assert_intact_then_compact,
     "append_kill": phase_append_kill,
     "append_exactly_once": phase_append_assert_exactly_once,
+    "rebuild_kill": phase_rebuild_kill,
+    "rebuild_previous": phase_rebuild_assert_previous,
     "stream_kill_publish": lambda w: phase_stream_kill(
         w, "layout_publish_before_marker"),
     "stream_kill_marker": lambda w: phase_stream_kill(
@@ -483,6 +529,11 @@ def main() -> None:
         ("append_kill", True),
         ("layout_reader", False),
         ("append_exactly_once", False),
+    ])
+    run("layout_swap_rebuild", [
+        ("layout_build", False),
+        ("rebuild_kill", True),
+        ("rebuild_previous", False),
     ])
     run("stream_publish_before_marker", [
         ("stream_kill_publish", True),

@@ -11,7 +11,9 @@ failure it names reproduced here so the fix can't regress:
    symmetry asserted here on the helper level).
 4. catalog re-registered a conf-only pre-manifest WIDE embeddings
    layout at the 4-plane default, so a stored wide bucket would be
-   trusted as 4-plane.
+   trusted as 4-plane. The manifest is now the one record of a built
+   table: one without it is rebuilt, and the registered width is the
+   width the rebuild stored.
 """
 
 from __future__ import annotations
@@ -92,14 +94,17 @@ class TestHeapWarningFallback:
 # ---------------------------------------------------------------- 4 —
 def test_conf_only_premanifest_register_keeps_wide_width(
         spark, tmp_path):
-    """A wide (6-plane) layout whose manifest is LOST but whose session
-    conf survives (the pre-manifest fallback path) must re-register at
-    the stored width, not the 4-plane default — _embeddings would
-    otherwise trust wide stored buckets as 4-plane (r11 ADVICE)."""
+    """A wide (6-plane) layout whose manifest is LOST must never be
+    registered at a width it does not store: the manifest is the one
+    record of a built table, so the next build rebuilds it, and the
+    registered width (``layout_lsh_planes``) is the width the rebuild
+    actually stored in ``graft_lsh_bucket``."""
     import shutil
 
     from nyc_taxi_data_engineering_project_spark.catalog import (
+        _embeddings_lsh_bucket_at,
         _manifest_path,
+        _read_manifest,
         build_workload_layout,
         drop_workload_layout,
         layout_lsh_planes,
@@ -114,12 +119,20 @@ def test_conf_only_premanifest_register_keeps_wide_width(
                                   tables=("embeddings",), lsh_planes=6)
     tbl = built["embeddings"]
     try:
-        os.remove(_manifest_path(lay, tbl))  # conf-only layout now
-        # register-only maintenance call, width unstated
+        os.remove(_manifest_path(lay, tbl))  # the record is lost
+        # maintenance call, width unstated: rebuilt at the default
         built2 = build_workload_layout(spark, src_dir, lay,
                                        tables=("embeddings",))
         assert built2 == built
-        assert layout_lsh_planes(spark, src_dir) == 6
+        width = layout_lsh_planes(spark, src_dir)
+        assert width == _read_manifest(lay, tbl)["lsh_planes"] == 4
+        stored = spark.table(tbl).select("vec_id", "graft_lsh_bucket")
+        want = plain.select(
+            "vec_id",
+            _embeddings_lsh_bucket_at(width)(plain).alias(
+                "graft_lsh_bucket"))
+        assert stored.exceptAll(want).count() == 0
+        assert want.exceptAll(stored).count() == 0
     finally:
         drop_workload_layout(spark, src_dir)
         shutil.rmtree(lay, ignore_errors=True)

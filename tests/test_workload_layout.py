@@ -538,11 +538,13 @@ def test_failed_append_publishes_nothing_and_retries_incrementally(
         drop_workload_layout(spark, src_dir)
 
 
+@pytest.mark.parametrize("rebuild", [False, True],
+                         ids=["append", "rebuild"])
 def test_source_part_added_during_append_refuses_and_publishes_nothing(
-        spark, tmp_path, monkeypatch):
-    """A source part landing while an append runs must raise the loud
-    "changed WHILE" error, publish nothing (the table still serves the
-    pre-append rows) and keep the old manifest."""
+        spark, tmp_path, monkeypatch, rebuild):
+    """A source part landing while an append — or a full rebuild — runs
+    must raise the loud "changed WHILE" error, publish nothing (the
+    table still serves the previous rows) and keep the old manifest."""
     import os
     import shutil
 
@@ -568,11 +570,47 @@ def test_source_part_added_during_append_refuses_and_publishes_nothing(
         monkeypatch.setattr(_io, "write_bucketed", _write_while_ingest_lands)
         with pytest.raises(ValueError, match="changed WHILE"):
             build_workload_layout(spark, src_dir, lay, buckets=4,
-                                  tables=("orders",))
+                                  tables=("orders",), rebuild=rebuild)
         monkeypatch.undo()
         spark.sql(f"REFRESH TABLE {tbl}")
         assert spark.table(tbl).count() == n0
         assert _read_manifest(lay, tbl) == m0
+    finally:
+        drop_workload_layout(spark, src_dir)
+
+
+def test_full_build_writes_one_file_per_bucket(spark, tmp_path):
+    """A full build co-locates its rows: a source of several part files
+    still gives exactly one file per bucket, and a rebuild at a new
+    explicit bucket count serves the new spec — one file per bucket
+    and a bucket-key aggregate with no shuffle."""
+    import os
+
+    from nyc_taxi_data_engineering_project_spark.catalog import (
+        _read_manifest,
+    )
+
+    src_dir = str(tmp_path / "src")
+    os.makedirs(src_dir)
+    plain = spark.read.parquet(f"{SF_DIR}/orders.parquet")
+    plain.repartition(3).write.parquet(f"{src_dir}/orders.parquet")
+    assert len([p for p in os.listdir(f"{src_dir}/orders.parquet")
+                if p.endswith(".parquet")]) >= 3
+    lay = str(tmp_path / "layout")
+
+    def _bucket_ids(tbl):
+        return sorted(re.search(r"_(\d+)\.c\d+", os.path.basename(f))
+                      .group(1) for f in _layout_data_files(spark, tbl))
+
+    try:
+        for n in (4, 8):
+            tbl = build_workload_layout(spark, src_dir, lay, buckets=n,
+                                        tables=("orders",))["orders"]
+            assert _bucket_ids(tbl) == [f"{i:05d}" for i in range(n)]
+            assert _read_manifest(lay, tbl)["buckets"] == n
+            served = table(spark, src_dir, "orders")
+            assert served.count() == plain.count()
+            assert _n_exchanges(served.groupBy("o_orderkey").count()) == 0
     finally:
         drop_workload_layout(spark, src_dir)
 
@@ -897,8 +935,9 @@ def test_compaction_partitioned_embeddings(spark, tmp_path):
 
 def test_fresh_session_reregisters_without_rebuild(spark, tmp_path):
     """The manifest is the cross-session freshness proof: with the
-    session conf wiped (what a NEW SparkSession sees), a build call
-    over an unchanged source must re-register WITHOUT rewriting a
+    session conf wiped (what a NEW SparkSession sees), and then with
+    the catalog entries gone as well (what a new JVM sees), a build
+    call over an unchanged source must re-register WITHOUT rewriting a
     single byte (pre-manifest layouts paid a full rebuild per
     session)."""
     import os
@@ -932,6 +971,16 @@ def test_fresh_session_reregisters_without_rebuild(spark, tmp_path):
         assert spark.conf.get(
             _layout_conf_key(src_dir, "orders") + ".buckets") == "4"
         assert table(spark, src_dir, "orders").count() > 0
+        # a new JVM's in-memory catalog has lost the tables too: the
+        # manifest recreates each entry, bucket spec included
+        for t in built.values():
+            spark.sql(f"DROP TABLE {t}")
+        assert build_workload_layout(spark, src_dir, lay) == built
+        assert _layout_data_files(spark, tbl) == before
+        served = table(spark, src_dir, "orders")
+        assert served.count() == spark.read.parquet(
+            f"{src_dir}/orders.parquet").count()
+        assert _n_exchanges(served.groupBy("o_orderkey").count()) == 0
     finally:
         drop_workload_layout(spark, src_dir)
 
