@@ -15,37 +15,33 @@ Each key is then measured REPS (2) times — cache cleared between
 repetitions so every rep is cold — and the MINIMUM is reported: in a
 single shared JVM, per-run noise (GC pauses, Janino compiles, Python
 worker spawns) is strictly additive, so min-of-N estimates the true
-steady-state cost (the standard JMH/hyperfine posture). Round-1 runs
-measured single-shot and the same keys swung 4-10× between runs purely
-by which of them absorbed the pauses.
+steady-state cost (the standard JMH/hyperfine posture); single-shot
+timings swing several-fold by which key absorbs the pauses.
 
-Noise-immune per-key metrics (r12, verdict ask 2): wall clock on this
-shared box has a documented ±40% ambient band, which made every
-round-over-round delta an adjudication. Each key now ALSO records, via
-the Spark event log (the same source scripts/shuffle_audit.py uses):
+Noise-immune per-key metrics: wall clock on a shared box moves with
+ambient load, so each key ALSO records, from the Spark event log read
+by ``enginebench/spans.read_event_log``:
 
 - ``task_cpu_s`` — summed executor task-thread CPU seconds. CPU time
   is what the plan actually burns; page-cache state, GC pauses on
-  other threads, and co-tenant load move wall but barely move it. The
-  r12+ regression read uses this as the PRIMARY per-key signal; wall
-  stays the gate.
+  other threads, and co-tenant load move wall but barely move it. It
+  is the primary per-key regression signal; wall stays the gate.
 - ``shuffle_bytes`` — summed shuffle bytes written. A plan regression
   (new Exchange, lost broadcast) shows here exactly, with zero noise.
+- ``python_worker_s`` — the per-task "time to run Python workers"
+  SQL-metric accumulable: Pandas/Arrow/row-Python UDF work runs
+  outside executor CPU time by definition.
+- ``python_worker_bytes`` — bytes sent to and returned from Python
+  workers: the Python data-source scan publishes no timing accumulable.
 
-Jobs are attributed per key/rep through thread-local job groups PLUS —
-r13, verdict ask 1 — a per-rep submission-time window: keys run
+Jobs are attributed per key/rep through thread-local job groups PLUS a
+per-rep submission-time window (:func:`tag_task_metrics`): keys run
 sequentially, so any job whose group is not a bench tag (streaming
 microbatch jobs carry their query runId as the group, set by the
 stream execution thread) is folded into the rep whose window contains
-its JobStart time. Every D key now reads real task_cpu_s, closing the
-r12 gap where d11 recorded 0.012 CPU s against 3.35 s wall.
-Python-worker CPU (Pandas UDF keys) remains outside executor CPU time
-by definition — so r14 (verdict ask 6) adds a FOURTH column,
-``python_worker_s``: the per-task "time to run Python workers"
-SQL-metric accumulable summed per key, closing the blind spot where
-e1–e6/f12/f19/f20/f28/d13 read near-zero task-CPU against real work.
-BENCH_DETAIL.json carries the full per-key quadruple under
-``metrics``; ``queries`` stays wall-only for older readers.
+its submission time, and streaming keys read their real task CPU.
+BENCH_DETAIL.json carries the full per-key record under ``metrics``;
+``queries`` stays wall-only.
 """
 
 from __future__ import annotations
@@ -58,9 +54,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from nyc_taxi_data_engineering_project_spark import registry  # noqa: E402
-from nyc_taxi_data_engineering_project_spark.evlog import (  # noqa: E402
-    group_task_metrics,
-)
 from nyc_taxi_data_engineering_project_spark.session import get_session  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -74,6 +67,26 @@ def _sf_of(path: str) -> float:
         return -1.0
 
 
+def tag_task_metrics(evlog_dir: str, windows: dict[str, tuple[float, float]]
+                     ) -> dict[str, dict[str, float]]:
+    """tag -> ``spans.sum_metrics`` of its jobs, for each tag whose jobs
+    ran a task. A job goes to its group when the group is a tag of
+    ``windows`` ({tag: (start_ms, end_ms)}, epoch millis), else to the
+    tag whose [start, end) window holds its submission time, else
+    nowhere (warm-up, housekeeping)."""
+    from enginebench import spans
+
+    by_tag: dict[str, list] = {}
+    for job in spans.read_event_log(evlog_dir):
+        tag = job.group if job.group in windows else next(
+            (t for t, (lo, hi) in windows.items()
+             if lo / 1e3 <= job.start < hi / 1e3), None)
+        if tag is not None:
+            by_tag.setdefault(tag, []).append(job)
+    return {tag: m for tag, jobs in by_tag.items()
+            if (m := spans.sum_metrics(jobs))["tasks"]}
+
+
 def _materialize(df) -> None:
     # noop sink evaluates every row/column without driver collect or I/O
     df.write.format("noop").mode("overwrite").save()
@@ -84,7 +97,7 @@ def main() -> None:
     import tempfile
 
     registry.load_all()
-    # event log feeds the per-key {task_cpu_s, shuffle_bytes} metrics;
+    # the event log feeds the per-key noise-immune metrics;
     # uncompressed JSON at bench scale is ~1 MB/s of sequential write —
     # inside the ambient band, and the CPU numbers it buys are immune
     # to the band entirely
@@ -98,10 +111,10 @@ def main() -> None:
     # Opt-in A15 workload layout (catalog.build_workload_layout): with
     # SPARK_GRAFT_LAYOUT_DIR set, the full four-table layout (orderkey-
     # bucketed facts + doc_id-bucketed documents + LSH-partitioned
-    # embeddings, r9) is built there once (timed separately below —
+    # embeddings) is built there once (timed separately below —
     # it's amortized capital, not per-query cost) and served
     # transparently to every layout-class key. Off by default so the
-    # headline board stays comparable across rounds; run both ways to
+    # headline board stays comparable between boards; run both ways to
     # price the layout at any SF.
     layout_dir = os.environ.get("SPARK_GRAFT_LAYOUT_DIR")
     layout_build_s = None
@@ -135,7 +148,7 @@ def main() -> None:
         reps_run[key] = 0
         for rep in range(REPS):
             # thread-local tag: every job this rep submits lands in one
-            # event-log group so _group_metrics can attribute it;
+            # event-log group so tag_task_metrics can attribute it;
             # the wall window catches jobs from OTHER threads too
             # (streaming microbatches tag themselves with their runId —
             # keys run sequentially, so window attribution is exact)
@@ -160,11 +173,9 @@ def main() -> None:
 
     total = round(sum(t for t in timings.values() if t >= 0), 3)
     sf = _sf_of(SF_DIR)
-    # r15 (verdict ask 5): board-level CPU totals on the one-line JSON
-    # so the driver can separate the box's ±40% ambient wall band from
-    # real plan regressions without trusting builder-side boards.
-    # Additive fields only, present on both outputs only when the
-    # event log parsed.
+    # board-level CPU totals on the one-line JSON separate ambient
+    # wall noise from real plan regressions. Present on both outputs
+    # only when the event log parsed.
     cpu_totals: dict[str, float] = {}
 
     # flush + parse the event log into per-key noise-immune metrics:
@@ -175,22 +186,22 @@ def main() -> None:
     spark.stop()
     metrics: dict[str, dict[str, float]] = {}
     try:
-        by_group = group_task_metrics(evlog, windows=windows)
+        by_group = tag_task_metrics(evlog, windows)
         for key, n in reps_run.items():
             per_rep = [by_group[f"{key}::rep{r}"] for r in range(n)
                        if f"{key}::rep{r}" in by_group]
             if not per_rep:
                 continue
             # pick by total compute signal (JVM CPU + Python worker
-            # time, r14 ask 6) — for JVM keys python_worker_s is 0 and
-            # this is the r13 min-CPU rule unchanged; for Python keys
-            # the JVM residue alone would pick a rep at random
+            # time) — for JVM keys python_worker_s is 0 and this is
+            # the min-CPU rule; for Python keys the JVM residue alone
+            # would pick a rep at random
             pick = min(per_rep, key=lambda d: (d["task_cpu_s"]
                                                + d["python_worker_s"]))
             metrics[key] = {
                 "wall_s": timings[key],
                 "task_cpu_s": round(pick["task_cpu_s"], 3),
-                "shuffle_bytes": int(pick["shuffle_bytes"]),
+                "shuffle_bytes": int(pick["shuffle_write_bytes"]),
                 "python_worker_s": round(pick["python_worker_s"], 3),
                 # the Python DATA SOURCE scan (d13) publishes byte
                 # counters but no timing accumulable — bytes are its
@@ -208,8 +219,8 @@ def main() -> None:
     finally:
         shutil.rmtree(evlog, ignore_errors=True)
 
-    # Full per-key detail → repo file (the driver's stdout tail capture is
-    # ~2 KB; a 104-key JSON line is ~2.7 KB and gets decapitated, r01).
+    # Full per-key detail → repo file: a per-key JSON line for every key
+    # is longer than a ~2 KB stdout tail capture.
     detail = {
         "metric": "total_query_wall_clock",
         "value": total,
@@ -217,16 +228,14 @@ def main() -> None:
         "queries": timings,
         "sf": sf,
         "n_queries": len(timings),
-        # r14 (§24e like-for-like protocol): best-of-N is part of a
-        # recording's identity — the 2-rep window sits inside the
-        # cold-codegen phase, so CPU compares are only valid between
-        # same-reps boards; the artifact now says which it is
+        # best-of-N is part of a recording's identity — the 2-rep
+        # window sits inside the cold-codegen phase, so CPU compares
+        # are only valid between same-reps boards
         "reps": REPS,
-        # r12 (verdict ask 2): {wall_s, task_cpu_s, shuffle_bytes} per
-        # key — task_cpu_s is the primary regression signal (immune to
-        # the box's ±40% wall band), wall stays the gate
+        # per key: wall_s plus the event-log columns; task_cpu_s is the
+        # primary regression signal, wall stays the gate
         "metrics": metrics,
-        # r15 verdict ask 5: board totals of the noise-immune columns
+        # board totals of the noise-immune columns
         **cpu_totals,
     }
     if layout_build_s is not None:
@@ -240,11 +249,9 @@ def main() -> None:
     except OSError as exc:
         print(f"# BENCH DETAIL WRITE ERROR: {exc}", file=sys.stderr)
 
-    # Final stdout line (r11, verdict ask 6): the driver's stdout tail
-    # capture decapitated a 142-key line two rounds running (73/142
-    # parsed), so BENCH_DETAIL.json is the DECLARED per-key source of
+    # Final stdout line: BENCH_DETAIL.json is the per-key source of
     # truth and the stdout line stays compact — total + flagship + the
-    # 12 slowest keys (~700 B, far inside any tail window). Printed
+    # 12 slowest keys (~700 B, inside any stdout tail capture). Printed
     # LAST so the tail always catches it whole.
     print(f"# full per-key board ({len(timings)} keys): {detail_path}",
           flush=True)
@@ -255,9 +262,8 @@ def main() -> None:
             "unit": "sec", "queries": out, "sf": sf,
             "n_queries": len(timings), "queries_shown": len(out),
             "reps": REPS, "detail": "BENCH_DETAIL.json"}
-    # r15 verdict ask 5: wall sits in the box's ±40% ambient band;
-    # these two totals are the noise-immune companions (task-thread
-    # CPU + Python-worker time summed over all keys' min-CPU reps)
+    # the noise-immune companions of the wall total: task-thread CPU
+    # and Python-worker time summed over all keys' min-CPU reps
     line.update(cpu_totals)
     print(json.dumps(line, separators=(",", ":")))
     # session already stopped above (event-log flush)

@@ -1268,12 +1268,13 @@ def layout_ingest_writer(sf_dir: str, path: str, name: str,
       Spark job, no byte rewrite. ONLY valid when the streamed frame
       is a BARE file-source scan of immutable feed files (no
       filter/projection/transform — the batch's rows are exactly its
-      input files' rows verbatim); the caller opts in because only it
-      knows its plan. d14's feed replay is exactly this shape, and at
-      ingest scale the saving is a full re-serialization of every
-      batch. The batch→files mapping comes from the file source's own
-      checkpointed metadata log (``source_log`` =
-      ``<checkpoint>/sources/<i>``; the foreachBatch frame wraps the
+      input files' rows verbatim); :func:`stream_append_layout`
+      refuses any other stream. d14's feed replay is exactly this
+      shape, and at ingest scale the saving is a full
+      re-serialization of every batch. The batch→files mapping comes
+      from the file source's own checkpointed metadata log
+      (``source_log`` = ``<checkpoint>/sources/<i>``; the foreachBatch
+      frame wraps the
       executed RDD, so ``inputFiles()`` is empty there) — Spark's
       durable record of exactly which files constitute each batch,
       written at batch construction, so it exists for originals AND
@@ -1419,9 +1420,24 @@ def stream_append_layout(stream_df, sf_dir: str, path: str, name: str,
     passes through to :func:`layout_ingest_writer` — ``"link"`` is the
     zero-rewrite publication for bare single-file-source replays (see
     there for the contract); the batch→files mapping is read from THIS
-    checkpoint's ``sources/0`` metadata log."""
+    checkpoint's ``sources/0`` metadata log, and ``"link"`` on any
+    stream other than a bare parquet file-source scan refuses with
+    ``ValueError`` before the stream starts: a filter, projection or
+    other transform would be dropped by publishing the input files."""
     from .streaming import drain_available_now
 
+    if publish == "link":
+        # no Spark job: the analyzed plan's root is the bare source
+        # scan (StreamingRelation) or the transform above it
+        plan = stream_df._jdf.queryExecution().analyzed()
+        kind = plan.nodeName()
+        if kind == "StreamingRelation":
+            kind = plan.dataSource().className()
+        if kind != "parquet":
+            raise ValueError(
+                "publish='link' publishes each batch's input files "
+                "verbatim, so the stream must be a bare parquet file "
+                f"source, not {kind}; use publish='write'")
     writer = layout_ingest_writer(
         sf_dir, path, name, stream_id=os.path.abspath(checkpoint),
         buckets=buckets, lsh_planes=lsh_planes, publish=publish,

@@ -22,11 +22,10 @@ Reading the result (SHUFFLE_AUDIT.json / SCALE.md §12):
 
 Streaming (d*) keys execute their replay during *construction* on
 Spark's own streaming threads, where the job group does not propagate.
-Since r13 the audit records a per-key submission-time window and the
-shared parser folds those foreign-group jobs into the key executing at
-that moment (bench.py's attribution fix) — d-key bytes are EXACT;
-``streaming: true`` now just marks that a key's volume includes replay
-jobs attributed via the window fold.
+The audit records a per-key submission-time window, and
+``bench.tag_task_metrics`` folds those foreign-group jobs into the key
+executing at that moment, so d-key bytes are exact; ``streaming: true``
+marks that a key's volume includes replay jobs attributed by window.
 
 Usage: python scripts/shuffle_audit.py [sf_dir_small] [sf_dir_big]
 Writes SHUFFLE_AUDIT.json at the repo root.
@@ -61,26 +60,9 @@ def _session(evlog: str):
     )
 
 
-def group_shuffle_bytes(evlog: str,
-                        windows: dict[str, tuple[float, float]]
-                        | None = None,
-                        ) -> dict[str, int]:
-    """job-group -> summed task Shuffle Bytes Written (the shared
-    evlog walk; bench.py reads the CPU side of the same parse). The
-    submission-time windows fold streaming micro-batch jobs — which
-    run under the query runId, not the key's job group — into the key
-    executing at that moment (r13, the bench.py attribution fix), so
-    d-key bytes are now EXACT, not read-back lower bounds."""
-    from nyc_taxi_data_engineering_project_spark.evlog import (
-        group_task_metrics,
-    )
-
-    return {grp: int(m["shuffle_bytes"])
-            for grp, m in group_task_metrics(evlog,
-                                             windows=windows).items()}
-
-
 def run_all(sf_dir: str) -> dict[str, int]:
+    """key -> summed task Shuffle Bytes Written over its jobs."""
+    from bench import tag_task_metrics
     from nyc_taxi_data_engineering_project_spark import registry
 
     registry.load_all()
@@ -105,30 +87,16 @@ def run_all(sf_dir: str) -> dict[str, int]:
         spark.stop()
         time.sleep(1)  # let the event log flush on stop
     try:
-        return group_shuffle_bytes(evlog, windows)
+        return {key: int(m["shuffle_write_bytes"])
+                for key, m in tag_task_metrics(evlog, windows).items()}
     finally:
         shutil.rmtree(evlog, ignore_errors=True)
 
 
-_UUID_RE = __import__("re").compile(
-    r"^[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}$")
-
-
-def _fold_streaming(groups: dict[str, int]) -> dict[str, int]:
-    """Streaming micro-batch jobs run on Spark's own threads under the
-    query's runId (a UUID) — fold them into one bucket; per-key d*
-    numbers are therefore lower bounds (read-back only)."""
-    out: dict[str, int] = {}
-    for grp, b in groups.items():
-        key = "_streaming_replays" if _UUID_RE.match(grp) else grp
-        out[key] = out.get(key, 0) + b
-    return out
-
-
 def main() -> None:
     t0 = time.time()
-    small = _fold_streaming(run_all(SF_SMALL))
-    big = _fold_streaming(run_all(SF_BIG))
+    small = run_all(SF_SMALL)
+    big = run_all(SF_BIG)
     keys = sorted(set(small) | set(big))
     rows = {}
     for k in keys:
@@ -137,15 +105,15 @@ def main() -> None:
             "small_bytes": s,
             "big_bytes": b,
             "ratio": round(b / s, 2) if s else None,
-            "streaming": k.startswith("d") or k == "_streaming_replays",
+            "streaming": k.startswith("d"),
         }
     result = {
         "sf_small": SF_SMALL,
         "sf_big": SF_BIG,
         "secs": round(time.time() - t0, 1),
         "keys": rows,
-        # standing adjudications for flagged outliers (r11, verdict
-        # ask 4): carried by the generator so regeneration keeps them
+        # standing adjudications for flagged outliers: carried by the
+        # generator so regeneration keeps them
         "notes": {
             "tpch_q2": (
                 "16.5x on the sf0.01->sf0.1 step is a broadcast-"

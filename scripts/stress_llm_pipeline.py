@@ -1,8 +1,6 @@
-"""The LLM-pipeline END-TO-END battery at the K tier (r14, verdict
-ask 1): the north-star workload's analog of the TPC-H K=1000
-certification (§23e). Through r13 the F family had only COMPONENT
-probes (f2 alone at K=1000, f10 at K=316, the ANN lifecycle); this
-harness chains the production pipeline as ONE battery over a
+"""The LLM-pipeline END-TO-END battery at the K tier: the north-star
+workload's analog of the TPC-H K=1000 certification (§23e). It chains
+the production pipeline as ONE battery over a
 K-replicated documents corpus, each stage consuming the previous
 stage's output corpus:
 
@@ -15,9 +13,9 @@ stage's output corpus:
                                         Bloom twin must be a superset
       -> s6 training order  (f31)       deterministic global shuffle
 
-Every stage records the noise-immune metric triple {wall, task_cpu_s,
-shuffle_bytes} (+ python_worker_s, r14 ask 6) via the shared event-log
-parser, plus rows_in/rows_out — and the battery VALUE-CHECKS at tier:
+Every stage records {wall, task_cpu_s, shuffle_bytes, python_worker_s}
+from the Spark event log (``bench.tag_task_metrics``), plus
+rows_in/rows_out — and the battery VALUE-CHECKS at tier:
 
 - s1: survivor count == DuckDB's count(DISTINCT md5(lower(trim(text))))
   over the same corpus parquet, and zero keep-best rule violations
@@ -48,7 +46,7 @@ domain at any K here):
   hot-bucket shape f2's star-pair cap exists for (SCALE.md §11).
 
 One JVM runs the whole chain (a pipeline is one logical job, unlike
-stress_tpch's 23 independent queries — the r14 fresh-JVM battery
+stress_tpch's 23 independent queries — the fresh-JVM battery
 posture applies to independent-query regression reads); heap comes
 from the engine rule over the EXPANDED working set: text parquet
 decompresses ~3x and f2 pins shingle arrays (~8 B/gram) twice, so the
@@ -324,8 +322,7 @@ def main() -> None:
         # invariant counts below plus the survivors write re-executed
         # the full 4.9M-row join at K=1000, and those ~5 repeats were
         # booked inside s2's timing window — the recorded stage
-        # wall/CPU measured check-harness rework, not f14 (r14
-        # self-review finding)
+        # wall/CPU measured check-harness rework, not f14
         from nyc_taxi_data_engineering_project_spark.pinning import (
             pin, unpin,
         )
@@ -494,8 +491,7 @@ def main() -> None:
         # count, the Bloom violation join, the gramless count, the
         # survivor anti-join) and unpinned each would re-run the full
         # gram explode + broadcast join + per-doc rollup — the same
-        # check-harness-rework-booked-as-stage-cost class as the s2
-        # finding (r14 self-review)
+        # check-harness-rework-booked-as-stage-cost class as s2's
         from nyc_taxi_data_engineering_project_spark.pinning import (
             pin as _pin, unpin as _unpin,
         )
@@ -539,7 +535,7 @@ def main() -> None:
         # whose text shrank under 5 tokens after s3/s4 produces no
         # gram rows, so it has no `rep` row — an inner join on the
         # not-contaminated report silently dropped it AND booked it as
-        # contaminated (r14 self-review finding). No 5-gram means it
+        # contaminated. No 5-gram means it
         # cannot contain eval text: it survives.
         n_gramless = n_in - rep.count()
         out = cur.join(
@@ -612,15 +608,14 @@ def main() -> None:
     # fold the event log into the per-stage metric quadruple
     spark.stop()
     try:
-        from nyc_taxi_data_engineering_project_spark.evlog import (
-            group_task_metrics,
-        )
+        from bench import tag_task_metrics
 
-        by_group = group_task_metrics(evlog, windows=windows)
+        by_group = tag_task_metrics(evlog, windows)
         for name, m in by_group.items():
             if name in stages:
                 stages[name]["task_cpu_s"] = round(m["task_cpu_s"], 1)
-                stages[name]["shuffle_bytes"] = int(m["shuffle_bytes"])
+                stages[name]["shuffle_bytes"] = int(
+                    m["shuffle_write_bytes"])
                 stages[name]["python_worker_s"] = round(
                     m["python_worker_s"], 1)
     except Exception as exc:  # noqa: BLE001

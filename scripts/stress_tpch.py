@@ -19,7 +19,8 @@ Replication is ONE pass per table via explode(sequence(0, K-1)) — a
 map-only plan, no K-way union.
 
 Correctness at scale: every key's registered DuckDB oracle runs on the
-SAME workdir parquet and the comparison classifies each key as
+SAME workdir parquet and ``enginebench/oracle.matches`` classifies each
+key as
   exact    — canonicalized values identical (the drive_contract bar)
   quantum  — numeric columns differ by at most one rounding quantum of
              the key's fround'ed output (the documented residual
@@ -37,7 +38,6 @@ per_row_vs_sf01 = secs / (K * bench_detail_secs_at_sf0.1).
 from __future__ import annotations
 
 import json
-import math
 import os
 import shutil
 import subprocess
@@ -49,9 +49,10 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import duckdb  # noqa: E402
 
-from canon import canon_rows  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
+from bench import tag_task_metrics  # noqa: E402
+from enginebench import oracle  # noqa: E402
 from nyc_taxi_data_engineering_project_spark import catalog, fx, registry  # noqa: E402
 from nyc_taxi_data_engineering_project_spark.session import get_session  # noqa: E402
 
@@ -110,88 +111,6 @@ def materialize(spark) -> None:
           flush=True)
 
 
-def _quantum(col_vals_a, col_vals_b) -> float:
-    """Max abs diff between two aligned numeric columns."""
-    worst = 0.0
-    for a, b in zip(col_vals_a, col_vals_b):
-        if a is None or b is None:
-            if a is not b:
-                return math.inf
-            continue
-        try:
-            d = abs(float(a) - float(b))
-        except (TypeError, ValueError):
-            return math.inf if a != b else worst
-        if math.isnan(d):
-            d = 0.0 if (math.isnan(float(a)) and math.isnan(float(b))) \
-                else math.inf
-        worst = max(worst, d)
-    return worst
-
-
-# Per-column quanta + hashed digest: engine functions since r8
-# (fx.column_quanta / fx.hashed_row_sql / fx.hashed_result_digest /
-# fx.sql_hashed_digest — promoted from this harness, verdict ask 6);
-# thin aliases keep this file's call sites readable.
-_column_quanta = fx.column_quanta
-
-
-def compare(sdf, odf, oracle_sql: str = "") -> tuple[str, str]:
-    """-> (status, note); status in exact|quantum|MISMATCH."""
-    scols, ocols = sorted(sdf.columns), sorted(odf.columns)
-    if scols != ocols:
-        return "MISMATCH", f"cols {scols} vs {ocols}"
-    if len(sdf) != len(odf):
-        return "MISMATCH", f"rowcount {len(sdf)} vs {len(odf)}"
-    s = canon_rows(sdf[scols].itertuples(index=False))
-    o = canon_rows(odf[scols].itertuples(index=False))
-    if s == o:
-        return "exact", ""
-    # numeric-tolerance pass: sort both frames by the non-float columns
-    # (keys/dates/counts — must match exactly), then bound each float
-    # column's drift by ITS OWN fround quantum (parsed from the oracle
-    # SQL; unrounded columns get the canon 1e-6), scaled by 1+eps for
-    # the boundary-flip case.
-    keycols = [c for c in scols
-               if str(sdf[c].dtype) not in ("float64", "float32")]
-    numcols = [c for c in scols if c not in keycols]
-    if not numcols:
-        return "MISMATCH", "non-numeric values differ"
-    if not keycols and len(sdf) > 1:
-        # >1 all-float rows: no sound alignment (each frame would sort
-        # by its own drifting values) — refuse rather than guess. A
-        # SINGLE all-float row (the global-aggregate keys, e.g. q19)
-        # aligns trivially and proceeds to the per-column quantum pass.
-        return "MISMATCH", ("ambiguous alignment: no non-float columns "
-                            "to align rows by")
-    if keycols:
-        ss = sdf.sort_values(keycols).reset_index(drop=True)
-        oo = odf.sort_values(keycols).reset_index(drop=True)
-        # alignment soundness: duplicate key tuples would let rows pair
-        # up arbitrarily across engines (r6 ADVICE) — refuse instead of
-        # producing a spurious verdict in either direction
-        if ss.duplicated(subset=keycols).any():
-            return "MISMATCH", ("ambiguous alignment: duplicate key "
-                                f"tuples in {keycols}")
-        for c in keycols:
-            if list(ss[c]) != list(oo[c]):
-                return "MISMATCH", f"key column {c} differs"
-    else:  # single all-float row, trivially aligned
-        ss, oo = sdf.reset_index(drop=True), odf.reset_index(drop=True)
-    quanta = _column_quanta(oracle_sql)
-    worst = {c: _quantum(ss[c], oo[c]) for c in numcols}
-    bad = {
-        c: (w, quanta.get(c.lower(), 1e-6))
-        for c, w in worst.items()
-        if w > quanta.get(c.lower(), 1e-6) * 1.0000001
-    }
-    if bad:
-        return "MISMATCH", f"numeric drift beyond per-column quantum: {bad}"
-    return "quantum", (
-        "float-sum rounding drift <= the column's own fround quantum in: "
-        + ", ".join(f"{c}={w:.4g}" for c, w in worst.items() if w > 0))
-
-
 # Order-insensitive IN-ENGINE value hash for keys whose verified result
 # is too large to canonicalize driver-side (q18 at K=1000 is ~15 M
 # rows; the driver compare, not the Spark plan, was the bottleneck —
@@ -217,8 +136,8 @@ HASH_MIN_K = int(os.environ.get("SPARK_GRAFT_TPCH_HASH_MIN_K", "500"))
 
 
 def auto_hashed_row(schema, oracle_sql: str) -> str:
-    """Canonical row-string SQL (engine function since r8 —
-    fx.hashed_row_sql with the quanta parsed from the key's oracle)."""
+    """Canonical row-string SQL: fx.hashed_row_sql with the quanta
+    parsed from the key's oracle."""
     return fx.hashed_row_sql(schema, fx.column_quanta(oracle_sql))
 
 
@@ -262,23 +181,22 @@ def _out_path() -> str | None:
 
 
 def battery_main() -> None:
-    """r14 (verdict ask 4): fresh-JVM-per-query is the ENFORCED battery
-    posture. The r13 K=1000 battery OOM'd q5 at the heap rule's 22 g
-    when ONE JVM carried all 23 queries and only passed at a hand-set
-    48 g — the rule is per-query honest but battery-dishonest, because
-    accumulated JVM state (broadcast refs, codegen caches, shuffle
-    bookkeeping from 22 prior queries) eats the margin the rule sizes
-    for a single plan. Rather than inflate the rule with an
+    """Fresh-JVM-per-query is the ENFORCED battery posture. With ONE
+    JVM carrying all 23 queries, a K=1000 battery OOMs q5 at the heap
+    rule's 22 g: the rule is per-query honest but battery-dishonest,
+    because accumulated JVM state (broadcast refs, codegen caches,
+    shuffle bookkeeping from 22 prior queries) eats the margin the rule
+    sizes for a single plan. Rather than inflate the rule with an
     accumulated-state fudge factor (which would also over-size every
     real EXECUTOR, where one JVM never serially owns a whole battery),
-    the harness now runs each key in its OWN subprocess whose heap is
+    the harness runs each key in its OWN subprocess whose heap is
     the rule's OWN number — the same posture cpu_soak.py uses for the
-    board, and the same fresh-JVM A/B that BASELINE.md already names
-    as the honest K-tier wall read (accumulated state swings per-key
-    wall up to ~2×). Single-JVM mode stays available for A/B via
+    board, and the fresh-JVM A/B that BASELINE.md names as the honest
+    K-tier wall read (accumulated state swings per-key wall up to
+    ~2×). Single-JVM mode stays available for A/B via
     SPARK_GRAFT_TPCH_ONE_JVM=1. Each child runs its key + DuckDB
-    oracle + event-log metric triple exactly as before; the parent
-    materializes the corpus once, fans out, and merges the summary."""
+    oracle + event-log metric triple; the parent materializes the
+    corpus once, fans out, and merges the summary."""
     if not os.path.exists(f"{WORK}/lineitem.parquet"):
         rc = subprocess.call(
             [sys.executable, os.path.abspath(__file__), str(K), WORK,
@@ -331,8 +249,8 @@ def main() -> None:
             and os.environ.get("SPARK_GRAFT_TPCH_ONE_JVM") != "1"):
         battery_main()
         return
-    # driver-heap sizing (r11, verdict ask 3): the engine now owns the
-    # rule (session.driver_memory_for — 2× input bytes, [8g, 64g]).
+    # driver-heap sizing: the engine owns the rule
+    # (session.driver_memory_for — 2× input bytes, [8g, 64g]).
     # When the corpus already exists its real bytes drive the floor;
     # before materialization, estimate from K at the measured ~11 MB
     # of parquet per K unit (K=1000 ≈ 11 GB).
@@ -348,10 +266,8 @@ def main() -> None:
         print(f"driver memory defaulted to {mem} "
               f"(engine rule driver_memory_for; set "
               f"SPARK_GRAFT_DRIVER_MEM to override)", flush=True)
-    # r13 (verdict ask 7): the battery records the noise-immune metric
-    # triple {wall, task_cpu_s, shuffle_bytes} per key via the shared
-    # event-log parser, exactly like bench.py — the relational core's
-    # scale baseline stops being wall-only
+    # the battery records {wall, task_cpu_s, shuffle_bytes,
+    # python_worker_s} per key from the event log, exactly like bench.py
     import tempfile
 
     evlog = tempfile.mkdtemp(prefix="stress_tpch_ev_")
@@ -387,7 +303,7 @@ def main() -> None:
     spark.conf.set("spark.sql.shuffle.partitions", str(n_shuffle))
     print(f"shuffle partitions: {n_shuffle} (input-bytes heuristic)",
           flush=True)
-    # the companion AQE skew gates from the same walk (r10 — what a
+    # the companion AQE skew gates from the same walk (what a
     # get_session(sf_dir=WORK) session would derive; set at runtime
     # here because this harness reuses one session across corpora)
     from nyc_taxi_data_engineering_project_spark.session import (
@@ -469,7 +385,8 @@ def main() -> None:
         t0 = time.time()
         odf = con.sql(registry.ORACLES[key]).df()
         osecs = round(time.time() - t0, 2)
-        status, note = compare(sdf, odf, registry.ORACLES[key])
+        ok, note = oracle.matches(sdf, odf, registry.ORACLES[key])
+        status = ("quantum" if note else "exact") if ok else "MISMATCH"
         r = {"secs": min(secs), "reps": secs, "rows": len(sdf),
              "duck_secs": osecs, "match": status}
         if note:
@@ -482,15 +399,10 @@ def main() -> None:
               + (f" [{note}]" if note else ""), flush=True)
 
     # flush + parse the event log into the per-key noise-immune triple
-    # (bench.py's exact recipe: min-CPU rep, windows fold streaming /
-    # untagged jobs — none here, but the parser contract is shared)
+    # (bench.py's recipe: min-CPU rep, windows fold untagged jobs)
     spark.stop()
     try:
-        from nyc_taxi_data_engineering_project_spark.evlog import (
-            group_task_metrics,
-        )
-
-        by_group = group_task_metrics(evlog, windows=windows)
+        by_group = tag_task_metrics(evlog, windows)
         for key, n in reps_run.items():
             per_rep = [by_group[f"{key}::rep{r}"] for r in range(n)
                        if f"{key}::rep{r}" in by_group]
@@ -499,7 +411,8 @@ def main() -> None:
             pick = min(per_rep, key=lambda d: (d["task_cpu_s"]
                                                + d["python_worker_s"]))
             results[key]["task_cpu_s"] = round(pick["task_cpu_s"], 3)
-            results[key]["shuffle_bytes"] = int(pick["shuffle_bytes"])
+            results[key]["shuffle_bytes"] = int(
+                pick["shuffle_write_bytes"])
             results[key]["python_worker_s"] = round(
                 pick["python_worker_s"], 3)
     except Exception as exc:  # noqa: BLE001

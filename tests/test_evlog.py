@@ -1,11 +1,27 @@
-"""Unit contract for the shared event-log walk (evlog.py, r12) —
-bench.py's metrics and shuffle_audit's byte ratios both ride this
-parse, so its field handling is pinned against a synthetic log."""
+"""Unit contract for ``bench.tag_task_metrics``, the fold of
+``enginebench/spans.read_event_log``'s jobs onto tags. bench.py's
+metrics, shuffle_audit's byte ratios and the stress batteries' metric
+columns all ride it, so the four columns bench.py reports are pinned
+against a synthetic log."""
 
 import json
 import os
 
-from nyc_taxi_data_engineering_project_spark.evlog import group_task_metrics
+from bench import tag_task_metrics
+
+
+def _columns(evlog_dir, windows):
+    """The fold, projected to the four columns bench.py reports."""
+    return {tag: {"task_cpu_s": m["task_cpu_s"],
+                  "shuffle_bytes": m["shuffle_write_bytes"],
+                  "python_worker_s": m["python_worker_s"],
+                  "python_worker_bytes": m["python_worker_bytes"]}
+            for tag, m in tag_task_metrics(evlog_dir, windows).items()}
+
+
+def _tags(*tags):
+    """Zero-width windows: jobs reach a tag only through their group."""
+    return {t: (0, 0) for t in tags}
 
 
 def _write_log(tmp_path, lines):
@@ -19,9 +35,10 @@ def _write_log(tmp_path, lines):
 
 def test_groups_sum_cpu_and_shuffle(tmp_path):
     log = [
-        {"Event": "SparkListenerJobStart", "Stage IDs": [1, 2],
+        {"Event": "SparkListenerJobStart", "Job ID": 0,
+         "Stage IDs": [1, 2],
          "Properties": {"spark.jobGroup.id": "k1::rep0"}},
-        {"Event": "SparkListenerJobStart", "Stage IDs": [3],
+        {"Event": "SparkListenerJobStart", "Job ID": 1, "Stage IDs": [3],
          "Properties": {"spark.jobGroup.id": "k2::rep0"}},
         {"Event": "SparkListenerTaskEnd", "Stage ID": 1,
          "Task Metrics": {"Executor CPU Time": 2_000_000_000,
@@ -37,13 +54,14 @@ def test_groups_sum_cpu_and_shuffle(tmp_path):
         {"Event": "SparkListenerTaskEnd", "Stage ID": 99,
          "Task Metrics": {"Executor CPU Time": 9_000_000_000}},
         # ungrouped job (no Properties): ignored
-        {"Event": "SparkListenerJobStart", "Stage IDs": [50]},
+        {"Event": "SparkListenerJobStart", "Job ID": 2,
+         "Stage IDs": [50]},
         # malformed line must be skipped, not fatal
     ]
     evdir = _write_log(tmp_path, log)
     with open(os.path.join(evdir, "app-1"), "a") as fh:
         fh.write("{not json\n")
-    got = group_task_metrics(evdir)
+    got = _columns(evdir, _tags("k1::rep0", "k2::rep0"))
     assert got == {
         "k1::rep0": {"task_cpu_s": 2.5, "shuffle_bytes": 100,
                      "python_worker_s": 0.0,
@@ -56,42 +74,42 @@ def test_groups_sum_cpu_and_shuffle(tmp_path):
 
 def test_missing_metrics_blocks_are_zero(tmp_path):
     log = [
-        {"Event": "SparkListenerJobStart", "Stage IDs": [1],
+        {"Event": "SparkListenerJobStart", "Job ID": 0, "Stage IDs": [1],
          "Properties": {"spark.jobGroup.id": "g"}},
         {"Event": "SparkListenerTaskEnd", "Stage ID": 1,
          "Task Metrics": None},
         {"Event": "SparkListenerTaskEnd", "Stage ID": 1},
     ]
-    got = group_task_metrics(_write_log(tmp_path, log))
+    got = _columns(_write_log(tmp_path, log), _tags("g"))
     assert got == {"g": {"task_cpu_s": 0.0, "shuffle_bytes": 0,
                    "python_worker_s": 0.0,
                      "python_worker_bytes": 0}}
 
 
 def test_windows_fold_foreign_groups_by_submission_time(tmp_path):
-    """r13 (verdict ask 1): streaming microbatch jobs carry their query
-    runId as the job group (set by the stream execution thread), which
-    is not a bench tag — with ``windows``, such jobs fold into the tag
+    """Streaming microbatch jobs carry their query runId as the job
+    group (set by the stream execution thread), which is not a bench
+    tag — such jobs fold into the tag
     whose submission-time window contains them, so D keys read real
     task_cpu_s. Jobs outside every window (warm-up) are dropped; jobs
     already tagged with a window tag pass through untouched."""
     log = [
         # warm-up job: outside every window -> dropped
-        {"Event": "SparkListenerJobStart", "Stage IDs": [1],
+        {"Event": "SparkListenerJobStart", "Job ID": 0, "Stage IDs": [1],
          "Submission Time": 500,
          "Properties": {"spark.jobGroup.id":
                         "11111111-aaaa-bbbb-cccc-000000000000"}},
         {"Event": "SparkListenerTaskEnd", "Stage ID": 1,
          "Task Metrics": {"Executor CPU Time": 9_000_000_000}},
         # bench's own tagged job: group IS a window tag -> direct
-        {"Event": "SparkListenerJobStart", "Stage IDs": [2],
+        {"Event": "SparkListenerJobStart", "Job ID": 1, "Stage IDs": [2],
          "Submission Time": 1100,
          "Properties": {"spark.jobGroup.id": "d2::rep0"}},
         {"Event": "SparkListenerTaskEnd", "Stage ID": 2,
          "Task Metrics": {"Executor CPU Time": 1_000_000_000}},
         # microbatch job: runId group, submitted inside d2::rep0's
         # window -> folded into d2::rep0
-        {"Event": "SparkListenerJobStart", "Stage IDs": [3],
+        {"Event": "SparkListenerJobStart", "Job ID": 2, "Stage IDs": [3],
          "Submission Time": 1500,
          "Properties": {"spark.jobGroup.id":
                         "22222222-aaaa-bbbb-cccc-000000000000"}},
@@ -100,19 +118,19 @@ def test_windows_fold_foreign_groups_by_submission_time(tmp_path):
                           "Shuffle Write Metrics":
                               {"Shuffle Bytes Written": 64}}},
         # UNGROUPED job inside rep1's window -> folded as well
-        {"Event": "SparkListenerJobStart", "Stage IDs": [4],
+        {"Event": "SparkListenerJobStart", "Job ID": 3, "Stage IDs": [4],
          "Submission Time": 2200},
         {"Event": "SparkListenerTaskEnd", "Stage ID": 4,
          "Task Metrics": {"Executor CPU Time": 750_000_000}},
         # job with no Submission Time and a foreign group -> dropped
-        {"Event": "SparkListenerJobStart", "Stage IDs": [5],
+        {"Event": "SparkListenerJobStart", "Job ID": 4, "Stage IDs": [5],
          "Properties": {"spark.jobGroup.id": "mystery"}},
         {"Event": "SparkListenerTaskEnd", "Stage ID": 5,
          "Task Metrics": {"Executor CPU Time": 1_000_000_000}},
     ]
     evdir = _write_log(tmp_path, log)
     windows = {"d2::rep0": (1000, 2000), "d2::rep1": (2000, 3000)}
-    got = group_task_metrics(evdir, windows=windows)
+    got = _columns(evdir, windows)
     assert got == {
         "d2::rep0": {"task_cpu_s": 3.5, "shuffle_bytes": 64,
                      "python_worker_s": 0.0,
@@ -124,7 +142,7 @@ def test_windows_fold_foreign_groups_by_submission_time(tmp_path):
 
 
 def test_stage_map_scoped_per_application_file(tmp_path):
-    """r12 ADVICE: stage IDs restart per application, so a directory
+    """Stage IDs restart per application, so a directory
     holding two app logs must not bleed one file's stage->group map
     into the other — file 2's stage 1 belongs to ITS job, and a
     TaskEnd-before-JobStart walk order cannot misattribute."""
@@ -134,7 +152,7 @@ def test_stage_map_scoped_per_application_file(tmp_path):
     d = tmp_path / "ev"
     _os.makedirs(d)
     app1 = [
-        {"Event": "SparkListenerJobStart", "Stage IDs": [1],
+        {"Event": "SparkListenerJobStart", "Job ID": 0, "Stage IDs": [1],
          "Properties": {"spark.jobGroup.id": "a1"}},
         {"Event": "SparkListenerTaskEnd", "Stage ID": 1,
          "Task Metrics": {"Executor CPU Time": 1_000_000_000}},
@@ -144,7 +162,7 @@ def test_stage_map_scoped_per_application_file(tmp_path):
         # JobStart in this file -> must be ignored, not billed to a1
         {"Event": "SparkListenerTaskEnd", "Stage ID": 1,
          "Task Metrics": {"Executor CPU Time": 5_000_000_000}},
-        {"Event": "SparkListenerJobStart", "Stage IDs": [2],
+        {"Event": "SparkListenerJobStart", "Job ID": 0, "Stage IDs": [2],
          "Properties": {"spark.jobGroup.id": "a2"}},
         {"Event": "SparkListenerTaskEnd", "Stage ID": 2,
          "Task Metrics": {"Executor CPU Time": 2_000_000_000}},
@@ -153,7 +171,7 @@ def test_stage_map_scoped_per_application_file(tmp_path):
         with open(d / name, "w") as fh:
             for ln in lines:
                 fh.write(_json.dumps(ln) + "\n")
-    got = group_task_metrics(str(d))
+    got = _columns(str(d), _tags("a1", "a2"))
     assert got == {
         "a1": {"task_cpu_s": 1.0, "shuffle_bytes": 0,
                "python_worker_s": 0.0,
@@ -165,14 +183,14 @@ def test_stage_map_scoped_per_application_file(tmp_path):
 
 
 def test_python_worker_time_fourth_column(tmp_path):
-    """r14 (verdict ask 6): Arrow/Pandas/row-Python keys burn their
+    """Arrow/Pandas/row-Python keys burn their
     real work in Python workers, invisible to "Executor CPU Time" —
     the per-task "time to run Python workers" accumulable (ms, in the
     TaskEnd's Task Info) sums into python_worker_s per group.
     Start/initialize-worker accumulables are one-off pool warming and
     must NOT be counted; malformed Update values must not crash."""
     log = [
-        {"Event": "SparkListenerJobStart", "Stage IDs": [1],
+        {"Event": "SparkListenerJobStart", "Job ID": 0, "Stage IDs": [1],
          "Properties": {"spark.jobGroup.id": "e2::rep0"}},
         {"Event": "SparkListenerTaskEnd", "Stage ID": 1,
          "Task Info": {"Accumulables": [
@@ -194,7 +212,7 @@ def test_python_worker_time_fourth_column(tmp_path):
         {"Event": "SparkListenerTaskEnd", "Stage ID": 1,
          "Task Metrics": {"Executor CPU Time": 200_000_000}},
     ]
-    got = group_task_metrics(_write_log(tmp_path, log))
+    got = _columns(_write_log(tmp_path, log), _tags("e2::rep0"))
     assert got == {
         "e2::rep0": {"task_cpu_s": 0.4, "shuffle_bytes": 0,
                      "python_worker_s": 2.0,
@@ -242,7 +260,7 @@ def test_bench_outputs_omit_cpu_totals_when_the_log_does_not_parse(
     monkeypatch.setattr(bench, "get_session", lambda *a, **kw: _Session())
     monkeypatch.setattr(bench.registry, "load_all", lambda: None)
     monkeypatch.setattr(bench.registry, "QUERIES", {})
-    monkeypatch.setattr(bench, "group_task_metrics", _unparsable)
+    monkeypatch.setattr(bench, "tag_task_metrics", _unparsable)
     bench.main()
 
     with open(tmp_path / "BENCH_DETAIL.json") as fh:

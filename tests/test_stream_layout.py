@@ -402,6 +402,35 @@ def test_link_publish_requires_source_log():
                              publish="rename")
 
 
+@pytest.mark.parametrize("transform", ["filter", "select"])
+def test_link_publish_refuses_a_transformed_stream(spark, tmp_path,
+                                                   transform):
+    """Link publication hardlinks each batch's input files, so on a
+    filtered or projected stream it would publish rows the stream
+    dropped. The call refuses before the stream starts: nothing is
+    published and no stream marker is written."""
+    feed = str(tmp_path / "feed")
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    orders = spark.read.parquet(f"{SF_DIR}/orders.parquet")
+    orders.repartition(2).write.parquet(feed)
+    stream = (spark.readStream.schema(orders.schema)
+              .option("maxFilesPerTrigger", 1).parquet(feed))
+    stream = (stream.filter(F.col("o_orderkey") % 2 == 0)
+              if transform == "filter"
+              else stream.select("o_orderkey", "o_custkey"))
+    try:
+        with pytest.raises(ValueError, match="publish='write'"):
+            stream_append_layout(stream, src, str(tmp_path / "lay"),
+                                 "orders", str(tmp_path / "ckpt"),
+                                 buckets=4, publish="link")
+        assert not _published(src)
+        assert not os.path.exists(
+            _stream_marker_path(f"{src}/orders.parquet"))
+    finally:
+        drop_workload_layout(spark, src)
+
+
 def test_link_publish_across_metadata_log_compaction(spark, tmp_path):
     """Spark compacts the file-source metadata log every
     compactInterval (default 10) batches: that batch's log entry is

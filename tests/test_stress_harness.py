@@ -1,7 +1,8 @@
-"""Unit gates for the scale-harness comparison logic
-(scripts/stress_tpch.py) — the r6 ADVICE fixes and the r7 hashed-
-compare derivation, pinned so future harness edits can't silently
-weaken the verification bar.
+"""Unit gates for the scale-harness comparison logic: the per-column
+quanta, the Spark-vs-DuckDB comparator the TPC-H battery
+(scripts/stress_tpch.py) calls (``enginebench/oracle.matches``) and
+the hashed-compare derivation, pinned so future harness edits can't
+silently weaken the verification bar.
 
 Pure-function tests: no SparkSession, no DuckDB connection.
 """
@@ -12,6 +13,14 @@ import pandas as pd
 import pytest
 
 import stress_tpch as st
+from enginebench import oracle
+from nyc_taxi_data_engineering_project_spark import fx
+
+
+def _status(got, want, sql: str) -> tuple[str, str]:
+    """oracle.matches mapped onto the statuses stress_tpch writes."""
+    ok, note = oracle.matches(got, want, sql)
+    return ("quantum" if note else "exact") if ok else "MISMATCH", note
 
 
 # ------------------------------------------------ per-column quanta
@@ -27,57 +36,58 @@ def test_column_quanta_parses_fround_scales():
            CAST(octet_length(s) // 64 AS INTEGER) AS blocks
     FROM t GROUP BY 1
     """
-    q = st._column_quanta(sql)
+    q = fx.column_quanta(sql)
     assert q["revenue"] == pytest.approx(0.01)
     assert q["avg_qty"] == pytest.approx(0.0001)
     assert q["tot"] == pytest.approx(0.01)  # CAST(... AS DOUBLE) form
     assert "raw_sum" not in q  # unrounded columns fall back to canon 1e-6
-    # r8 ADVICE: ordinary divisions are NOT roundings — the match is
+    # ordinary divisions are NOT roundings — the match is
     # anchored to sql_round's `+ 0.5) /` spelling, so neither a literal
     # division nor an integer `//` may fabricate a coarse quantum
     assert "quarter_avg" not in q
     assert "blocks" not in q and "integer" not in q
 
 
-# ------------------------------------------------ compare() alignment
+# ------------------------------------------------ comparator alignment
 
 def test_compare_exact_and_per_column_quantum():
-    oracle = "SELECT FLOOR(x * 100.0 + 0.5) / 100.0 AS v FROM t"
+    sql = "SELECT FLOOR(x * 100.0 + 0.5) / 100.0 AS v FROM t"
     a = pd.DataFrame({"k": ["a", "b"], "v": [1.00, 2.00]})
-    assert st.compare(a, a.copy(), oracle)[0] == "exact"
+    assert _status(a, a.copy(), sql)[0] == "exact"
     # drift within the column's own 0.01 quantum -> 'quantum'
     b = pd.DataFrame({"k": ["a", "b"], "v": [1.01, 2.00]})
-    assert st.compare(a, b, oracle)[0] == "quantum"
+    assert _status(a, b, sql)[0] == "quantum"
     # beyond it -> MISMATCH
     c = pd.DataFrame({"k": ["a", "b"], "v": [1.02, 2.00]})
-    assert st.compare(a, c, oracle)[0] == "MISMATCH"
+    assert _status(a, c, sql)[0] == "MISMATCH"
 
 
 def test_compare_4dp_column_no_longer_gets_2dp_slack():
-    """The r6 ADVICE core case: a 4-dp output drifting 0.01 must fail."""
-    oracle = "SELECT FLOOR(x * 10000.0 + 0.5) / 10000.0 AS v FROM t"
+    """A 4-dp output drifting 0.01 must fail: each column gets its
+    own quantum, not the coarsest one in the query."""
+    sql = "SELECT FLOOR(x * 10000.0 + 0.5) / 10000.0 AS v FROM t"
     a = pd.DataFrame({"k": ["a"], "v": [1.0000]})
     b = pd.DataFrame({"k": ["a"], "v": [1.0099]})
-    status, note = st.compare(a, b, oracle)
+    status, note = _status(a, b, sql)
     assert status == "MISMATCH", note
     # but one 4-dp quantum passes
     c = pd.DataFrame({"k": ["a"], "v": [1.0001]})
-    assert st.compare(a, c, oracle)[0] == "quantum"
+    assert _status(a, c, sql)[0] == "quantum"
 
 
 def test_compare_refuses_duplicate_key_tuples():
-    oracle = "SELECT FLOOR(x * 100.0 + 0.5) / 100.0 AS v FROM t"
+    sql = "SELECT FLOOR(x * 100.0 + 0.5) / 100.0 AS v FROM t"
     a = pd.DataFrame({"k": ["a", "a"], "v": [1.0, 2.0]})
     b = pd.DataFrame({"k": ["a", "a"], "v": [2.005, 1.005]})
-    status, note = st.compare(a, b, oracle)
-    assert status == "MISMATCH" and "ambiguous alignment" in note
+    ok, note = oracle.matches(a, b, sql)
+    assert not ok, note
 
 
 def test_compare_refuses_all_float_frames():
     a = pd.DataFrame({"x": [1.0, 2.0], "y": [3.0, 4.0]})
     b = pd.DataFrame({"x": [1.005, 2.0], "y": [3.0, 4.005]})
-    status, note = st.compare(a, b, "")
-    assert status == "MISMATCH" and "ambiguous alignment" in note
+    ok, note = oracle.matches(a, b, "")
+    assert not ok, note
 
 
 # ------------------------------------------------ auto_hashed_row
@@ -106,10 +116,10 @@ def test_auto_hashed_row_derivation():
     assert "floor(revenue * 1000000 + 0.5)" in expr2
 
 
-# --------------------------------------- r14: LLM pipeline battery
+# --------------------------------------- LLM pipeline battery
 
 def test_llm_pipeline_battery_contract():
-    """r14 (verdict ask 1): the end-to-end pipeline battery exists,
+    """The end-to-end pipeline battery exists,
     chains the six production stages, and pins its eval suite to the
     fixed replica-0 slice (a corpus-growing eval set blankets the
     synthetic vocabulary at tier — measured 99.7% dropped on the first
