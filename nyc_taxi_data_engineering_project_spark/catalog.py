@@ -150,11 +150,11 @@ def _part_paths(path: str, fingerprint: tuple) -> tuple[str, ...]:
     return tuple(os.path.join(path, n) for n, *_meta in fingerprint)
 
 
-# Driver-side parquet schema cache (r14 optimization round, guide §1/§5:
-# the driver should do almost no per-query work). ``spark.read.parquet``
-# pays ~140 ms of py4j + Hadoop footer inference PER CALL; with ~190
-# ``table()`` call sites × 2 bench reps that inference was ~25% of the
-# whole sf0.1 board's wall. Passing the cached schema back to the reader
+# Driver-side parquet schema cache (the driver should do almost no
+# per-query work). ``spark.read.parquet`` pays ~140 ms of py4j + Hadoop
+# footer inference PER CALL; with ~190 ``table()`` call sites × 2 bench
+# reps, uncached inference is ~25% of the whole sf0.1 board's wall.
+# Passing the cached schema back to the reader
 # (``spark.read.schema(s).parquet(path)``) skips inference (~19 ms) and
 # changes NOTHING downstream: the relation still gets fresh attribute
 # ids (no self-join aliasing hazard), and column pruning + predicate
@@ -162,7 +162,7 @@ def _part_paths(path: str, fingerprint: tuple) -> tuple[str, ...]:
 # tests/test_plans.py PushedFilters checks). Keyed on the same
 # fingerprint rule as the nanos dispatch, so a rewritten file re-infers.
 #
-# Scope assumption (r14 ADVICE): the cache is process-global, keyed on
+# Scope assumption: the cache is process-global, keyed on
 # (path, fingerprint) only — NOT on the SparkSession or on parquet-
 # inference confs (e.g. spark.sql.parquet.inferTimestampNTZ.enabled).
 # Every session in this engine comes from session.get_session with
@@ -268,7 +268,7 @@ def table(spark: SparkSession, sf_dir: str, name: str,
             except (FileNotFoundError, OSError) as exc:
                 # a DELETED source is the extreme staleness case — the
                 # gate must still speak in its own vocabulary, not leak
-                # a bare os.stat error (r8 ADVICE)
+                # a bare os.stat error
                 raise ValueError(
                     f"workload layout {bucketed!r} is STALE: the source "
                     f"{src} no longer exists ({exc}). Drop the layout "
@@ -313,14 +313,14 @@ def table(spark: SparkSession, sf_dir: str, name: str,
     return df
 
 
-# Per-session view-registration memo (r14 optimization round):
-# ``createOrReplaceTempView`` costs ~110 ms of py4j/catalog work per
-# view per call, and the SQL-surface keys re-registered identical views
-# every bench rep. The memo records what each view name was last
-# registered AS — (sf_dir, source fingerprint, layout-serving state) —
-# and skips the re-registration only on an exact match, so a changed
-# file, a different sf_dir, a registered/dropped layout, or a new
-# session re-registers exactly as before. Keyed weakly on the session
+# Per-session view-registration memo: ``createOrReplaceTempView``
+# costs ~110 ms of py4j/catalog work per view per call, and the
+# SQL-surface keys would re-register identical views every bench rep.
+# The memo records what each view name was last registered AS —
+# (sf_dir, source fingerprint, layout-serving state) — and skips the
+# re-registration only on an exact match, so a changed file, a
+# different sf_dir, a registered/dropped layout, or a new session
+# re-registers exactly as before. Keyed weakly on the session
 # object: a stopped/recreated session starts with an empty memo.
 import weakref as _weakref
 
@@ -336,7 +336,7 @@ def register_views(spark: SparkSession, sf_dir: str,
     Mirrors ``CREATE TABLE IF NOT EXISTS`` idempotency
     (``sql/init.sql:12,21``): safe to call repeatedly.
 
-    Invariant (r14 ADVICE): temp views named after TESTDATA_TABLES are
+    Invariant: temp views named after TESTDATA_TABLES are
     only ever (re)registered THROUGH this function — the per-session
     memo below skips a re-registration when (sf_dir, source
     fingerprint, layout state) are unchanged, so any code that drops or
@@ -381,7 +381,7 @@ def bootstrap_database(spark: SparkSession, db: str = "nyc") -> None:
 
 LAYOUT_BUCKET_KEYS = {
     "orders": "o_orderkey", "lineitem": "l_orderkey",
-    # r9 (verdict ask 2): the dedup/ANN family's layout class.
+    # the dedup/ANN family's layout class:
     # documents buckets on the STORED doc_id — hash partitioning is
     # preserved through Generate (explode), so every tokenize→explode→
     # groupBy(doc_id) aggregate in the F-group (f10 simhash, f25/f26
@@ -512,6 +512,13 @@ def _layout_conf_key(sf_dir: str, name: str) -> str:
 
     h = hashlib.sha1(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
     return f"spark.spark_graft.layout.{h}.{name}"
+
+
+def _layout_table(sf_dir: str, name: str) -> str:
+    """Catalog name (and directory under the layout ``path``) of one
+    table's layout."""
+    h = _layout_conf_key(sf_dir, name).split(".")[-2]
+    return f"spark_graft_layout_{h}_{name}"
 
 
 def _fingerprint_of(parts: dict[str, list[int]]) -> str:
@@ -663,10 +670,11 @@ def build_workload_layout(
 
     Subset builds (``tables=("lineitem",)``) keep the one-count-per-
     family invariant: if a sibling in the same join family
-    (``LAYOUT_FAMILIES``) is already registered, ``buckets=None``
-    REUSES the sibling's count, and an explicit mismatching ``buckets``
-    raises — a family split across two counts would silently lose the
-    shuffle-free join the layout exists for.
+    (``LAYOUT_FAMILIES``) is registered in this session, or, failing
+    that, has a manifest under ``path`` (built by another session),
+    ``buckets=None`` REUSES the sibling's count, and an explicit
+    mismatching ``buckets`` raises — a family split across two counts
+    would silently lose the shuffle-free join the layout exists for.
 
     Maintenance is INCREMENTAL for append-only sources: each build
     persists a ``_graft_manifest.json`` inside the layout table dir
@@ -687,8 +695,9 @@ def build_workload_layout(
     lands the same delta once. The manifest lets a FRESH session — a
     new JVM included, whose in-memory catalog lost the table —
     re-register a still-fresh layout without any rebuild."""
-    # family-consistency gate BEFORE defaulting: a registered sibling's
-    # count wins over the parallelism default
+    # family-consistency gate BEFORE defaulting: a sibling's count —
+    # registered in this session, else recorded in its manifest — wins
+    # over the parallelism default
     buckets_explicit = buckets is not None
     for name in tables:
         fam = LAYOUT_FAMILIES.get(name)
@@ -700,13 +709,16 @@ def build_workload_layout(
             sib_buckets = spark.conf.get(
                 _layout_conf_key(sf_dir, sib) + ".buckets", None)
             if sib_buckets is None:
+                sib_buckets = (_read_manifest(
+                    path, _layout_table(sf_dir, sib)) or {}).get("buckets")
+            if sib_buckets is None:
                 continue
             if buckets is None:
                 buckets = int(sib_buckets)
             elif int(buckets) != int(sib_buckets):
                 raise ValueError(
                     f"bucket-count mismatch within join family {fam!r}: "
-                    f"{sib!r} is registered at {sib_buckets} buckets but "
+                    f"{sib!r} is built at {sib_buckets} buckets but "
                     f"this build of {name!r} asked for {buckets}. Both "
                     f"facts must share one count for shuffle-free joins "
                     f"— rebuild the whole family together, or pass "
@@ -741,7 +753,7 @@ def _build_layout_tables(
     for name in tables:
         key = LAYOUT_BUCKET_KEYS[name]  # KeyError = not a layout table
         conf_key = _layout_conf_key(sf_dir, name)
-        tbl = f"spark_graft_layout_{conf_key.split('.')[-2]}_{name}"
+        tbl = _layout_table(sf_dir, name)
         src_path = os.path.join(sf_dir, f"{name}.parquet")
         cur_parts = _source_parts(src_path)
         cur_fp = _fingerprint_of(cur_parts)

@@ -28,7 +28,6 @@ from pyspark.sql import DataFrame, Observation, Window as W, functions as F
 
 from .. import fx, store
 from ..catalog import _N_LSH_PLANES, table
-from ..pinning import pin, unpin
 from ..registry import query
 from ..streaming import drain_available_now
 
@@ -125,9 +124,8 @@ def _dot(a, b):
     where the call count is linear in the corpus (per-row norms,
     bucket tagging), but NOT in the pair-cosine hot loop whose row
     count is superlinear (probed pairs): use :func:`_dot_unrolled`
-    there (r9 — the K=316 ANN probe caught the pair projection at
-    ~ms/pair with executor stacks pinned in ZipWith.eval/
-    ArrayAggregate.eval)."""
+    there (at K=316 the HOF pair projection costs ~ms/pair, with
+    executor stacks pinned in ZipWith.eval/ArrayAggregate.eval)."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y),
         F.lit(0.0),
@@ -135,8 +133,51 @@ def _dot(a, b):
     )
 
 
+_NO_JVM_COUNTER = itertools.count()
+
+
+def _jvm_token() -> str:
+    """Cache discriminator for memoized Column expressions: the
+    applicationId identifies the JVM context whose py4j refs the
+    cached Column wraps — a restart mints a new one, so stale entries
+    miss instead of serving dead references. When the calling thread
+    has no active session (expressions built from a secondary thread),
+    fall back to the process-wide active SparkContext's applicationId;
+    if no context is resolvable at all, mint a UNIQUE token so the memo
+    is bypassed rather than pooling entries under a shared constant
+    that survives stop()/restart."""
+    from pyspark import SparkContext
+    from pyspark.sql import SparkSession
+
+    sess = SparkSession.getActiveSession()
+    if sess is not None:
+        return sess.sparkContext.applicationId
+    sc = SparkContext._active_spark_context
+    if sc is not None:
+        return sc.applicationId
+    return f"<no-jvm-{next(_NO_JVM_COUNTER)}>"
+
+
+def _jvm_memo(maxsize: int):
+    """``functools.lru_cache`` for Column builders, keyed on the call's
+    arguments plus :func:`_jvm_token`: a cached Column wraps py4j refs
+    into the JVM context that built it, so after a ``spark.stop()`` /
+    restart in the same process the old entries miss instead of
+    serving dead references."""
+    def deco(fn):
+        cached = functools.lru_cache(maxsize=maxsize)(
+            lambda _token, *args, **kwargs: fn(*args, **kwargs))
+
+        @functools.wraps(fn)
+        def memo(*args, **kwargs):
+            return cached(_jvm_token(), *args, **kwargs)
+        return memo
+    return deco
+
+
+@_jvm_memo(maxsize=64)
 def _dot_unrolled(a, b):
-    """The pair-cosine hot-loop spelling of :func:`_dot` (r9):
+    """The pair-cosine hot-loop spelling of :func:`_dot`:
     ``0.0 + a1·b1 + … + a64·b64`` statically unrolled over the fixed
     embedding dim — plain whole-stage-codegen arithmetic, no
     interpreted HOF. Bit-identical to the HOF fold and to DuckDB's
@@ -166,42 +207,9 @@ def _dot_unrolled(a, b):
     the 300-node tree costs ~190 py4j round trips (~1 s per query
     invocation — measured as a flat overhead on every key that calls
     this); an unresolved-by-name Column is plan-agnostic, so one
-    build serves every query in the process. The memo key includes
-    the SparkContext's applicationId (r10 ADVICE): a cached Column
-    wraps py4j refs into the JVM context that built it, and after a
-    ``spark.stop()``/restart in the same process (tests, notebooks,
-    probe scripts) the old entries would serve dead JVM references."""
-    return _dot_unrolled_cached(a, b, _jvm_token())
-
-
-_NO_JVM_COUNTER = itertools.count()
-
-
-def _jvm_token() -> str:
-    """Cache discriminator for memoized Column expressions: the
-    applicationId identifies the JVM context whose py4j refs the
-    cached Column wraps — a restart mints a new one, so stale entries
-    miss instead of serving dead references. When the calling thread
-    has no active session (r10 ADVICE: expressions built from a
-    secondary thread), fall back to the process-wide active
-    SparkContext's applicationId; if no context is resolvable at all,
-    mint a UNIQUE token so the memo is bypassed rather than pooling
-    entries under a shared constant that survives stop()/restart."""
-    from pyspark import SparkContext
-    from pyspark.sql import SparkSession
-
-    sess = SparkSession.getActiveSession()
-    if sess is not None:
-        return sess.sparkContext.applicationId
-    sc = SparkContext._active_spark_context
-    if sc is not None:
-        return sc.applicationId
-    return f"<no-jvm-{next(_NO_JVM_COUNTER)}>"
-
-
-@functools.lru_cache(maxsize=64)
-def _dot_unrolled_cached(a_name: str, b_name: str, _app_id: str):
-    a, b = F.col(a_name), F.col(b_name)
+    build per JVM (:func:`_jvm_memo`) serves every query in the
+    process."""
+    a, b = F.col(a), F.col(b)
     acc = F.lit(0.0)
     for i in range(_EMB_DIM):
         acc = acc + (F.element_at(a, i + 1).cast("double")
@@ -224,8 +232,8 @@ def _norm(a):
 # exists because DuckDB's list_sum SKIPS null elements (a [1.0, NULL,
 # ...] vector would get a finite norm and be kept) while Spark's
 # fold-based norm nulls out and excludes it — parquet list<float>
-# permits null elements and a failed encoder can emit them (r6 review
-# finding). BETWEEN spells positive-and-finite off ONE subtree: NaN
+# permits null elements and a failed encoder can emit them. BETWEEN
+# spells positive-and-finite off ONE subtree: NaN
 # fails `<= max` (DuckDB orders NaN above every number — a bare `> 0`
 # would KEEP a NaN norm), +Inf fails `<= max`, 0 fails `>= min`.
 _VEC_OK = (
@@ -561,31 +569,21 @@ def _hyperplane_bucket(planes, emb_col):
 # reference their inputs BY NAME, so one build per (plane set, prefix,
 # column, JVM) serves every query in the process; _jvm_token keys out
 # dead-JVM refs.
+@_jvm_memo(maxsize=64)
 def bucket_expr(planes_key: str, n: int, emb_name: str,
                 as_double: bool = False):
     """Memoized :func:`_hyperplane_bucket` over :func:`_planes`
     ``(planes_key, n)``, applied to column ``emb_name``."""
-    return _bucket_expr_cached(planes_key, n, emb_name, as_double,
-                               _jvm_token())
-
-
-@functools.lru_cache(maxsize=64)
-def _bucket_expr_cached(planes_key: str, n: int, emb_name: str,
-                        as_double: bool, _app_id: str):
     col = F.col(emb_name)
     if as_double:
         col = _as_double(col)
     return _hyperplane_bucket(_planes(planes_key, n), col)
 
 
+@_jvm_memo(maxsize=16)
 def nrm_expr(emb_name: str, as_double: bool = False):
     """Memoized vector norm over the named column (the stored-metadata
     expression catalog.LAYOUT_DERIVED materializes as ``graft_nrm``)."""
-    return _nrm_expr_cached(emb_name, as_double, _jvm_token())
-
-
-@functools.lru_cache(maxsize=16)
-def _nrm_expr_cached(emb_name: str, as_double: bool, _app_id: str):
     col = F.col(emb_name)
     if as_double:
         col = _as_double(col)
@@ -745,9 +743,9 @@ def f2_minhash_dedup(spark, sf_dir):
     DataFrame ops (shingle → 32 minhashes → 4 bands of 8 → hot-bucket cap
     → band-bucket join → exact-Jaccard verify ≥ 0.6).
 
-    Oracle-checked as of r6: previously rows-only because the minhash
-    path was built on Spark's xxhash64, which DuckDB cannot reproduce.
-    The hash family is now cross-engine exact: ONE md5 per distinct
+    Oracle-checked: the hash family is cross-engine exact (Spark's
+    xxhash64, which DuckDB cannot reproduce, is not used): ONE md5 per
+    distinct
     shingle, its first 14 hex chars packed into a 56-bit long ``s``,
     and the 32 per-seed permutations computed by the classic universal
     family ``(a_j·(s mod p) + b_j) mod p`` with p = 2^31−1 (F2_PERMS
@@ -779,22 +777,22 @@ def f2_minhash_dedup(spark, sf_dir):
     MAX_BUCKET — buckets at or under the cap expand all-pairs (bounded
     at B·MAX_BUCKET² candidates regardless of skew); buckets OVER the
     cap emit STAR pairs to the bucket's min-doc_id representative
-    (linear in width) instead of being dropped. Dropping was the r5
-    behavior and it failed at scale: the r6 100×-stress recall probe
-    measured planted-pair recall 0.15 (3/20) because every ~100-member
-    replica family flooded its band buckets past the cap and the cap
-    silently discarded them — i.e. the MOST-duplicated content is
-    exactly what a drop-cap misses. A mega-cluster's all-pairs output
+    (linear in width) instead of being dropped. A drop-cap fails at
+    scale: on the 100× stress corpus it recalls 0.15 (3/20) of the
+    planted pairs, because every ~100-member replica family floods its
+    band buckets past the cap and the cap silently discards them —
+    i.e. the MOST-duplicated content is exactly what a drop-cap
+    misses. A mega-cluster's all-pairs output
     is inherently quadratic (no sound algorithm emits it at linear
     cost); the star pattern is the standard linear-cost answer that
     keeps every true member reachable from the representative, which is
     what downstream dedup (f14 connected components, f1-style
     keep-min) actually consumes. Same exact-Jaccard verify applies to
     star candidates, so soundness is unchanged. The verify step rejoins
-    shingle sets by doc id (broadcast-size here; bucketed join at
-    scale); a 10M-copy boilerplate family makes its representative a
-    hot verify-join key — AQE's skew split handles a replicated
-    single-array payload."""
+    shingle sets by doc id (broadcast while the shingle pin fits, a
+    shuffle join beyond); a 10M-copy boilerplate family makes its
+    representative a hot verify-join key — AQE's skew split handles a
+    replicated single-array payload."""
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
     corpus = _planted_corpus(docs)
     # Two materialization decisions, both measured (see BASELINE.md):
@@ -802,20 +800,14 @@ def f2_minhash_dedup(spark, sf_dir):
     #   across the cluster before the expensive minhash stage, and stops
     #   projection collapse from substituting the shingle transform into
     #   all 32 minhash lambdas (14× recompute without it);
-    # - pinning.pin() pins the shingled frame, which three plan branches
-    #   consume (band generation + both sides of the verify join) and
-    #   which Spark would otherwise re-evaluate per branch — exchange
-    #   reuse does not fire across differently-aliased subtrees. The pin
-    #   MECHANISM is the session's spark.spark_graft.pin_mode (pinning.py):
-    #   localCheckpoint for single-node/bench (blocks owned by the plan,
-    #   self-cleaning, not executor-loss tolerant), persist(DISK_ONLY)
-    #   or a checkpoint table for clusters. bucket_key="doc_id" makes
-    #   the checkpoint_table layout hash-bucketed+sorted on doc_id, so
-    #   the verify join below plans with ZERO Exchange on both shingle
-    #   sides (SCALE.md §7's 100 TB posture, proved in
-    #   tests/test_bucketing.py). The payload is only doc_id +
-    #   hashed-gram arrays (~8·|grams| B/doc), far smaller than the
-    #   text it derives from.
+    # - the shingled frame is localCheckpoint-pinned: three plan branches
+    #   consume it (band generation + both sides of the verify join) and
+    #   Spark would otherwise re-evaluate it per branch — exchange reuse
+    #   does not fire across differently-aliased subtrees. The blocks are
+    #   owned by the returned plan and released with it; a lost executor
+    #   fails the job rather than recomputing. The payload is only
+    #   doc_id + hashed-gram arrays (~8·|grams| B/doc), far smaller than
+    #   the text it derives from.
     # NB: no filter on size(sh) here — the toks-size filter above already
     # guarantees ≥1 gram, and a post-projection filter on `sh` would be
     # pushed below the projection, re-evaluating the entire shingle
@@ -836,7 +828,7 @@ def f2_minhash_dedup(spark, sf_dir):
         )
         .repartition(F.col("doc_id"))
     )
-    shingled = pin(shingled, "f2_shingled", bucket_key="doc_id")
+    shingled = shingled.localCheckpoint()
 
     n_hashes, n_bands, max_bucket = F2_N_HASHES, F2_N_BANDS, F2_MAX_BUCKET
     rows_per_band = n_hashes // n_bands
@@ -870,13 +862,10 @@ def f2_minhash_dedup(spark, sf_dir):
     # both bucket joins) would otherwise each re-derive all 32 minhashes
     # from the shingle arrays — the dominant map cost of the whole
     # operator. The payload is 4 rows of 3 longs per doc.
-    bands = pin(
-        shingled.select(
-            "doc_id",
-            F.explode(F.expr(f"array({band_structs})")).alias("band"),
-        ).select("doc_id", "band.band_id", "band.band_hash"),
-        "f2_bands",
-    )
+    bands = shingled.select(
+        "doc_id",
+        F.explode(F.expr(f"array({band_structs})")).alias("band"),
+    ).select("doc_id", "band.band_id", "band.band_hash").localCheckpoint()
 
     # Candidate generation as a count-gated aggregation instead of a band
     # self-join + window cap. Phases on the same bucket key:
@@ -892,7 +881,7 @@ def f2_minhash_dedup(spark, sf_dir):
     # (3) buckets OVER the cap: star pairs (rep=min doc_id → member) via
     #     a broadcast-size join of the few hot-bucket keys back onto
     #     bands — map-only, linear in bucket width, no per-bucket buffer
-    #     anywhere (see docstring: the r6 100× recall fix).
+    #     anywhere (see docstring: the drop-cap recall failure).
     # All-pairs work and shuffle stay bounded by B·cap²; star work is
     # linear however skewed the input.
     pair_expr = (
@@ -944,7 +933,7 @@ def f2_minhash_dedup(spark, sf_dir):
         )
         .filter(F.col("jaccard") >= 0.6)
     )
-    return verified.select("doc_a", "doc_b", fx.r4(F.col("jaccard")).alias("jaccard"))
+    return verified.select("doc_a", "doc_b", fx.fround(F.col("jaccard"), 4).alias("jaccard"))
 
 
 @query("f20_ml_minhash_lsh")  # rows-only: library LSH, no SQL twin
@@ -955,7 +944,7 @@ def f20_ml_minhash_lsh(spark, sf_dir):
     planted-duplicate corpus as f2.
 
     Two findings from measurement (sf0.1, 5000 docs):
-    - the feature frame MUST be persisted — ``approxSimilarityJoin``
+    - the feature frame MUST be pinned — ``approxSimilarityJoin``
       references it on both join sides and in the model transform, and
       without pinning every task re-derives it from the parquet scan
       (35 s unpinned → ~3 s pinned);
@@ -976,11 +965,11 @@ def f20_ml_minhash_lsh(spark, sf_dir):
                    numFeatures=1 << 14, binary=True)
     # pin: approxSimilarityJoin references this frame on both join sides
     # and inside the model transform — without pinning, every task
-    # re-derives it from the parquet scan. Mode-switchable (pinning.py):
-    # default localCheckpoint blocks die with the result frame instead
-    # of holding a session-wide CacheManager entry.
-    feat = pin(tf.transform(shingled).select("doc_id", "features"),
-               "f20_feat")
+    # re-derives it from the parquet scan. localCheckpoint blocks die
+    # with the result frame instead of holding a session-wide
+    # CacheManager entry.
+    feat = (tf.transform(shingled).select("doc_id", "features")
+            .localCheckpoint())
     lsh = MinHashLSH(inputCol="features", outputCol="hashes",
                      numHashTables=4, seed=42)
     model = lsh.fit(feat)
@@ -993,7 +982,7 @@ def f20_ml_minhash_lsh(spark, sf_dir):
         .select(
             F.col("datasetA.doc_id").alias("doc_a"),
             F.col("datasetB.doc_id").alias("doc_b"),
-            fx.r4(1 - F.col("jaccard_dist")).alias("jaccard"),
+            fx.fround(1 - F.col("jaccard_dist"), 4).alias("jaccard"),
         )
     )
 
@@ -1029,7 +1018,7 @@ def _cosine_top5(emb, join, key: str | None = None, probes=None):
         .withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= 5)
         .select("query_id", "neighbor_id",
-                fx.r6(F.col("_cos")).alias("cosine"), "rk")
+                fx.fround(F.col("_cos"), 6).alias("cosine"), "rk")
     )
 
 
@@ -1232,15 +1221,15 @@ def f21_ivf_ann(spark, sf_dir):
     nearest_cell = _nearest_seed_udf(centers_np)
     probe_cells = _probe_seeds_udf(centers_np, nprobe)
 
-    # cells: one map pass; pinned so the probe join's two reads (query
-    # side + corpus side) don't recompute the scan+assignment (mode per
-    # pinning.py; default localCheckpoint is released with the result)
-    tagged = pin(emb.withColumn("cell", nearest_cell("emb")), "f21_cells")
+    # cells: one map pass; localCheckpoint-pinned so the probe join's two
+    # reads (query side + corpus side) don't recompute the
+    # scan+assignment; the blocks are released with the result
+    tagged = emb.withColumn("cell", nearest_cell("emb")).localCheckpoint()
     return _cosine_top5(tagged, _probe_join("cell"), "cell",
                         probe_cells("emb"))
 
 
-def _pinned_with_width(spark, sf_dir, name: str, width: int):
+def _pinned_with_width(spark, sf_dir, width: int):
     """The usable embeddings pinned once, and the plane count that
     holds the expected bucket width at ``width``:
     ``max(2, round(log2(n/width + 1)))`` — f13 (width 64) and f36
@@ -1251,10 +1240,10 @@ def _pinned_with_width(spark, sf_dir, name: str, width: int):
     pinned blocks: its consumers re-derive only the k·64-dim sign dots
     instead of forcing a second corpus-sized materialization."""
     obs = Observation()
-    emb = pin(
+    emb = (
         _embeddings(spark, sf_dir)
-        .observe(obs, F.count(F.lit(1)).alias("n")),
-        name,
+        .observe(obs, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint()
     )
     n = int(obs.get["n"])
     return emb, max(2, round(math.log2(max(n, 1) / width + 1)))
@@ -1276,7 +1265,7 @@ def f13_embedding_neardup(spark, sf_dir):
     pairs, and a vectorized kernel beats the interpreted higher-order
     fold by ~4× there; the JVM `_dot` stays in the exact-baseline ops
     where bit-identical accumulation against the oracle matters."""
-    emb, n_planes = _pinned_with_width(spark, sf_dir, "f13_emb", 64)
+    emb, n_planes = _pinned_with_width(spark, sf_dir, 64)
     tagged = emb.withColumn("bucket", bucket_expr("lsh", n_planes, "emb"))
     # Hot-bucket SPLIT (not drop): plane count targets an EXPECTED width
     # of 64 under uniformity, but clustered corpora — the very thing a
@@ -1308,7 +1297,7 @@ def f13_embedding_neardup(spark, sf_dir):
         )
         .drop("_w")
     )
-    refined = pin(refined, "f13_refined")
+    refined = refined.localCheckpoint()
     w2 = refined.groupBy("bucket").agg(F.count(F.lit(1)).alias("_w"))
     flagged = refined.join(w2, "bucket")
     cold = flagged.filter(F.col("_w") <= max_bucket)
@@ -1361,7 +1350,7 @@ def f13_embedding_neardup(spark, sf_dir):
     )
     return (
         pairs.select("id_a", "id_b",
-                     fx.r6(cosine_batch("emb_a", "emb_b")).alias("cosine"))
+                     fx.fround(cosine_batch("emb_a", "emb_b"), 6).alias("cosine"))
         # synthetic embeddings are isotropic random (max pairwise cosine
         # ≈0.48); 0.3 marks the top ~1% as "near-dup" for a non-degenerate
         # demonstration — real corpora use 0.85-0.95
@@ -1371,7 +1360,7 @@ def f13_embedding_neardup(spark, sf_dir):
 
 @query(
     "f14_dedup_clusters",
-    # Oracle-checked as of r6 (was rows-only): f2's pair set now has an
+    # Oracle-checked: f2's pair set has an
     # exact SQL twin (md5-derived hashes, see f2), so connected
     # components over it does too — a recursive CTE computes the true
     # transitive closure and takes MIN(label) per node. The Spark side
@@ -1415,23 +1404,21 @@ def f14_dedup_clusters(spark, sf_dir):
     min(own label, neighbors' labels, label-of-own-label) — the last
     term is the path-halving jump, fused into the same round plan — so
     label chains collapse exponentially and rounds-to-converge is
-    O(log diameter), not O(diameter). Converged when a round changes nothing; if the
-    round cap (1 fused + 9) is ever insufficient the query REFUSES
-    loudly instead of returning near-converged labels (the r6 edge
-    corpus caught exactly that: a chain component whose diameter
-    exceeded the cap left 7 docs one hop above the component min, and
-    the plain-propagation loop exited silently — found by the f14
-    oracle differential the same day it was added).
+    O(log diameter), not O(diameter). Converged when a round changes
+    nothing; if the round cap (1 fused + 9) is ever insufficient the
+    query REFUSES loudly instead of returning near-converged labels (a
+    chain component whose diameter exceeds the cap would otherwise
+    leave docs one hop above the component min; the hostile edge corpus
+    and the f14 oracle differential cover that case).
 
     Scale notes: the per-round work is two equi joins (edges⋈labels and
     labels⋈labels) plus a min-aggregate — all shuffle-partitioned on
-    vertex id. Each round's result is pinned (pinning.pin — mode
-    switchable between localCheckpoint / persist(DISK_ONLY) /
-    checkpoint table; rounds N-1's pin is released as soon as round N
-    materializes): without lineage truncation an iterative loop's plan
-    doubles per round and the job dies at plan compile time long before
-    data size matters; the pin also makes the labels⋈labels self-join
-    read materialized blocks instead of recomputing the round. The
+    vertex id. Each round's result is localCheckpoint-pinned (its
+    blocks are released with the plan that owns them): without lineage
+    truncation an iterative loop's plan doubles per round and the job
+    dies at plan compile time long before data size matters; the pin
+    also makes the labels⋈labels self-join read materialized blocks
+    instead of recomputing the round. The
     convergence check is a scalar count per round (a driver-side
     decision, not a data collect)."""
     pairs = f2_minhash_dedup(spark, sf_dir).select("doc_a", "doc_b")
@@ -1443,9 +1430,9 @@ def f14_dedup_clusters(spark, sf_dir):
         )
     )
     # consumed every propagation round + the final corpus union; the pin
-    # also cuts the f2 lineage out of the loop plans (mode per pinning.py)
-    edges = pin(edges, "f14_edges")
-    # round 1 fused into initialization: with labels starting equal to
+    # also cuts the f2 lineage out of the loop plans
+    edges = edges.localCheckpoint()
+    # the first round is fused into initialization: with labels equal to
     # ids, the first propagation is exactly min(id, min neighbor id) —
     # one aggregation instead of a full join+aggregate+checkpoint round
     labels = (
@@ -1455,8 +1442,7 @@ def f14_dedup_clusters(spark, sf_dir):
             "id", F.least(F.col("id"), F.col("_mn")).alias("label")
         )
     )
-    labels = pin(labels, "f14_labels0", eager=False)
-    prev_pin = labels
+    labels = labels.localCheckpoint(eager=False)
     changed = -1
     for _ in range(9):
         nbr_min = (
@@ -1481,29 +1467,20 @@ def f14_dedup_clusters(spark, sf_dir):
             F.coalesce(F.col("jlabel"), F.col("label")),
         )
         # carry the changed flag through the checkpoint so convergence is
-        # a filter-count on materialized data, not a second join per round
-        stepped = pin(
+        # a filter-count on materialized data, not a second join per
+        # round; the pin is lazy because that count is the round's
+        # materializing action, so the pin rides that ONE job
+        stepped = (
             labels.join(nbr_min, labels.id == nbr_min.src, "left")
             .join(lookup, labels.label == lookup.jid, "left")
             .select(
                 labels.id,
                 new_label.alias("label"),
                 (new_label < labels.label).alias("_changed"),
-            ),
-            "f14_round",
-            # lazy: the convergence count right below is the round's
-            # materializing action, so the pin rides that ONE job
-            # instead of running its own (measured: disk_persist mode
-            # 6.7 → ~4 s at sf0.1; identical job count in default mode)
-            eager=False,
+            )
+            .localCheckpoint(eager=False)
         )
         changed = stepped.filter("_changed").count()
-        # round N is materialized: round N-1's pin is dead — release it
-        # in the tracked modes so cluster disk footprint stays one round
-        # deep (no-op under localCheckpoint, where the ContextCleaner
-        # owns block lifetime)
-        unpin(prev_pin)
-        prev_pin = stepped
         labels = stepped.drop("_changed")
         if changed == 0:
             break
@@ -1604,7 +1581,7 @@ def f16_pack_sequences(spark, sf_dir):
     bucket_w = 1024  # docs per sub-stream bucket
     # fx.nsize: a null document must carry NULL n_tokens, not legacy -1 —
     # a -1 lands in the running prefix sum and shifts EVERY later
-    # document's pack_id in that language stream (r6 edge finding; NULL
+    # document's pack_id in that language stream (NULL
     # is skipped by SUM on both engines, so the stream packs as if the
     # null doc contributed nothing, and its own pack_id is NULL)
     toks = fx.nsize(_tokens())
@@ -1629,8 +1606,8 @@ def f16_pack_sequences(spark, sf_dir):
     # thousands of times smaller than the corpus but still CORPUS-SCALING,
     # so the de-hint discipline (SCALE.md §3c) applies; AQE sizes the join
     # at runtime (broadcast while it fits, shuffle join past that).
-    # NULL-SAFE on lang (r6 edge finding): a plain equi join silently
-    # DROPPED every null-lang document — the two-phase decomposition
+    # NULL-SAFE on lang: a plain equi join would silently
+    # DROP every null-lang document — the two-phase decomposition
     # must not change the single-window form's semantics, and a window's
     # PARTITION BY keeps the null group. The null-lang stream packs like
     # any other language stream.
@@ -1679,7 +1656,7 @@ def f4_tfidf(spark, sf_dir):
     )
     return tok.groupBy("term").agg(
         F.count(F.lit(1)).alias("doc_freq"),
-        fx.r6(F.log(F.lit(float(n_docs)) / F.count(F.lit(1)))).alias("idf"),
+        fx.fround(F.log(F.lit(float(n_docs)) / F.count(F.lit(1))), 6).alias("idf"),
     )
 
 
@@ -1694,7 +1671,7 @@ def f19_ml_tfidf_pipeline(spark, sf_dir):
     Scale: fit() is one aggregation over the corpus (document
     frequencies); transform() is a map-only pass.
 
-    Null text is filtered at the source (r6 edge finding): pyspark.ml's
+    Null text is filtered at the source: pyspark.ml's
     Tokenizer is not null-tolerant — its Scala lambda NPEs on the first
     null document and kills the fit job. A library constraint, made an
     explicit input contract here rather than a 100 TB-run surprise."""
@@ -1748,7 +1725,7 @@ def f19_ml_tfidf_pipeline(spark, sf_dir):
     return out.select(
         "doc_id",
         vec_active("arr").alias("n_active_terms"),
-        fx.r6(vec_norm("arr")).alias("tfidf_l2"),
+        fx.fround(vec_norm("arr"), 6).alias("tfidf_l2"),
     )
 
 
@@ -1873,7 +1850,7 @@ def f17_quality_filter(spark, sf_dir):
     toks = _tokens()
     # fx.nsize: the flags reach the output — a null document must emit
     # NULL flags (unknown), not the legacy -1's confident 0/1 mix
-    # (-1/-1 = 1.0 "passes" the diversity rule; r6 edge finding)
+    # (-1/-1 = 1.0 "passes" the diversity rule)
     n_tok = fx.nsize(toks).cast("double")
     distinct_ratio = fx.nsize(F.array_distinct(toks)) / n_tok
     avg_len = (F.length("text") - fx.nsize(toks) + 1.0) / n_tok
@@ -1971,8 +1948,8 @@ def f6_text_stats(spark, sf_dir):
     toks = _tokens()
     # fx.nsize throughout: every count/ratio here reaches the output, and
     # legacy size(NULL) = -1 turns a null document into -1 tokens and
-    # -1/-1 = 1.0 ratios under the production ansi=false session (r6
-    # edge finding — see fx.nsize)
+    # -1/-1 = 1.0 ratios under the production ansi=false session (see
+    # fx.nsize)
     n_tok = fx.nsize(toks).cast("double")
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS_EN])
     n_stop = fx.nsize(
@@ -1981,10 +1958,10 @@ def f6_text_stats(spark, sf_dir):
         "doc_id",
         F.length("text").alias("n_chars"),
         fx.nsize(toks).alias("n_tokens"),
-        fx.r4(fx.nsize(F.array_distinct(toks)) / n_tok)
+        fx.fround(fx.nsize(F.array_distinct(toks)) / n_tok, 4)
         .alias("distinct_ratio"),
-        fx.r4(n_stop / n_tok).alias("stopword_ratio"),
-        fx.r4((F.length("text") - fx.nsize(toks) + 1.0) / n_tok)
+        fx.fround(n_stop / n_tok, 4).alias("stopword_ratio"),
+        fx.fround((F.length("text") - fx.nsize(toks) + 1.0) / n_tok, 4)
         .alias("avg_token_len"),
     )
 
@@ -2019,7 +1996,7 @@ def f7_lang_id(spark, sf_dir):
         # fx.nsize: null text must score NULL, not -1 — under the legacy
         # -1, (-1 >= -1) satisfies the first argmax branch and mislabels
         # every null document 'en'; NULL scores fall through to the
-        # CASE's ELSE exactly like the SQL oracle (r6 edge finding)
+        # CASE's ELSE exactly like the SQL oracle
         return fx.nsize(F.filter(toks, lambda t: F.array_contains(arr, t)))
 
     d = table(spark, sf_dir, "documents").select(
@@ -2138,7 +2115,7 @@ def f10_simhash(spark, sf_dir):
     arrays), which is evaluated interpreted, not codegen'd — 5× slower
     measured at sf0.1.
 
-    Hash family (r6): the token hash is the first 16 hex chars of
+    Hash family: the token hash is the first 16 hex chars of
     md5(token), reassembled as a signed long from two 32-bit halves —
     chosen over xxhash64 because BOTH engines compute it bit-identically
     (DuckDB has no xxhash64), which upgrades this key from rows-only to
@@ -2158,7 +2135,7 @@ def f10_simhash(spark, sf_dir):
     ).bitwiseOR(
         F.conv(F.substring(F.col("m"), 9, 8), 16, 10).cast("long")
     )
-    # r14 optimization: the 64 vote aggregates and the 64-term sign
+    # the 64 vote aggregates and the 64-term sign
     # reassembly are built as parsed SQL strings (one py4j call each)
     # instead of 64 chained Column-op loops (~6 py4j round trips per
     # term, ~1.4 s of driver time PER BUILD measured at sf0.1). The
@@ -2226,7 +2203,7 @@ def f11_ngram_jaccard(spark, sf_dir):
     )
     return (
         a.join(b, F.col("doc_b") == F.col("doc_a") + 1)
-        .select("doc_a", "doc_b", fx.r6(jac).alias("jaccard"))
+        .select("doc_a", "doc_b", fx.fround(jac, 6).alias("jaccard"))
     )
 
 
@@ -2283,8 +2260,8 @@ def f22_stratified_sample(spark, sf_dir):
     )
     totals = counts.groupBy("lang").agg(F.sum("_n").alias("_total"))
     w = W.partitionBy("lang", "bk").orderBy("hk", "doc_id")
-    # NULL-SAFE on lang (r6 edge finding, same class as f16): plain
-    # equi joins dropped the null-lang stratum that the oracle's
+    # NULL-SAFE on lang (same class as f16): plain
+    # equi joins would drop the null-lang stratum that the oracle's
     # PARTITION BY lang keeps — undocumented-language docs are a
     # stratum like any other, not discardable.
     offs = (
@@ -2355,8 +2332,8 @@ def f23_repetition_ratio(spark, sf_dir):
     return per_doc.select(
         "doc_id",
         F.col("nt").cast("long").alias("n_tokens"),
-        fx.r4(1.0 - F.col("nd") / F.col("nt")).alias("dup_ratio"),
-        fx.r4(F.col("tc") / F.col("nt")).alias("top_token_share"),
+        fx.fround(1.0 - F.col("nd") / F.col("nt"), 4).alias("dup_ratio"),
+        fx.fround(F.col("tc") / F.col("nt"), 4).alias("top_token_share"),
     )
 
 
@@ -2460,9 +2437,9 @@ def f25_boilerplate_removal(spark, sf_dir):
     order-restoring sort is per-row array_sort, not a global sort.
 
     A null-text document has no passages and is absent from the output
-    on BOTH sides (r6 edge finding: Spark's sequence/slice chain on a
-    null token array manufactured one null block per null doc, while
-    the oracle's range(NULL) produced none — the explicit filter makes
+    on BOTH sides (Spark's sequence/slice chain on a null token array
+    would manufacture one null block per null doc, while the oracle's
+    range(NULL) produces none — the explicit filter makes
     the contract visible instead of an expression-evaluation accident).
     """
     docs = (
@@ -2617,7 +2594,7 @@ def f27_chunk_rag(spark, sf_dir):
     # size(NULL) = -1 makes a null document's single chunk claim
     # n_tokens = -1 where both ANSI Spark and the oracle agree on
     # least(CHUNK) = CHUNK (greatest/least skip NULLs identically in
-    # both engines; r6 edge finding)
+    # both engines)
     n = fx.nsize(F.col("toks"))
     last = (
         F.ceil(F.greatest(n - _CHUNK, F.lit(0)) / F.lit(float(_STRIDE)))
@@ -2700,7 +2677,7 @@ def f28_doc_clustering(spark, sf_dir):
         .agg(
             F.count(F.lit(1)).alias("n_vecs"),
             F.count_distinct("label").alias("n_labels"),
-            fx.r6(F.avg("nrm")).alias("avg_norm"),
+            fx.fround(F.avg("nrm"), 6).alias("avg_norm"),
         )
     )
 
@@ -2743,10 +2720,8 @@ def f29_unigram_logprob(spark, sf_dir):
     # consumers (the scalar total and the broadcast lookup), and an
     # unpinned frame would re-run the full corpus explode+shuffle for
     # each (SCALE.md §5 multi-consumer rule). Vocab-sized → cheap pin.
-    cnt = pin(
-        tok.groupBy("term").agg(F.count(F.lit(1)).alias("c")),
-        "f29_vocab",
-    )
+    cnt = (tok.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
+           .localCheckpoint())
     # SUM over an empty vocab is NULL; 1 keeps the log finite and the
     # query's answer on an empty corpus is (correctly) zero rows — the
     # empty-partition case a date-filtered 100 TB run hits routinely
@@ -2760,7 +2735,7 @@ def f29_unigram_logprob(spark, sf_dir):
         tok.join(cnt, "term")
         .groupBy("doc_id")
         .agg(
-            fx.r4(F.avg(-F.log(F.col("c") / F.lit(float(total)))))
+            fx.fround(F.avg(-F.log(F.col("c") / F.lit(float(total)))), 4)
             .alias("xent")
         )
     )
@@ -2809,8 +2784,8 @@ def f30_ngram_decontaminate(spark, sf_dir):
     # grams live in one row's array, so array_distinct before the
     # explode replaces what would otherwise be a corpus-sized
     # .distinct() shuffle of 16-byte keys with zero-coordination
-    # per-row work. ONE gram constructor for f30/f35/build_bloom_filter
-    # (r12 review): the exact set and the Bloom sketch must stay
+    # per-row work. ONE gram constructor for f30/f35/build_bloom_filter:
+    # the exact set and the Bloom sketch must stay
     # bit-identical, so they share the expression.
     grams = gram_hashes(table(spark, sf_dir, "documents"))
     eval_grams = (
@@ -3010,10 +2985,10 @@ def _cm_token_stream(spark, sf_dir):
 
 def _cm_bucketed(toks):
     """(token, ...) -> (token, ..., i, bucket): ONE md5 per token row,
-    row i's bucket = hex chars [3i+1, 3i+3] -> 12 bits (r12, verdict
-    ask 5: ¼ the hash work of the former per-row md5("i:token"); md5
-    bits are independent, so disjoint nibble ranges of one digest act
-    as the d seeded hashes)."""
+    row i's bucket = hex chars [3i+1, 3i+3] -> 12 bits (¼ the hash
+    work of a per-row md5("i:token"); md5 bits are independent, so
+    disjoint nibble ranges of one digest act as the d seeded
+    hashes)."""
     hashed = toks.withColumn("_h", F.md5(F.col("token")))
     seeded = hashed.select(
         "*",
@@ -3276,15 +3251,15 @@ _F34_SQL = f"""
 
 @query("f34_heavy_hitters", oracle=_F34_SQL)
 def f34_heavy_hitters(spark, sf_dir):
-    """F34 (r11, self-initiated): heavy-hitter tokens via a PORTABLE
+    """F34: heavy-hitter tokens via a PORTABLE
     count-min sketch — the c38_portable_hll playbook applied to the
     frequency-sketch class. Every step is computed bit-identically by
     both engines: ONE md5(token) per occurrence, split into d=4
     disjoint 3-hex-char fields — field i is row i's bucket (4096
     buckets, the POSITION string-ops trick from the portable HLL;
     md5's bits are independent, so disjoint nibble ranges of one
-    digest serve as the d seeded hashes at ¼ the hash work — the r11
-    verdict's ask 5, was md5("i:token") × 4). The grid is per-(row,
+    digest serve as the d seeded hashes at ¼ the hash work of
+    md5("i:token") × 4). The grid is per-(row,
     bucket) COUNT(*), the estimate is the INTEGER MIN over the 4 rows,
     and a token is reported when cm_count exceeds 0.5% of the stream
     (the comparison stays in integers: cm_count * 200 > total — no
@@ -3301,8 +3276,8 @@ def f34_heavy_hitters(spark, sf_dir):
     deployment estimates only QUERIED tokens against the same stored
     grid, which is the point of the structure — and is now product
     surface: :func:`build_cm_grid` persists the grid once,
-    :func:`cm_estimate` probes it later (r12, verdict ask 3; pinned
-    estimate-for-estimate against this key in test_llm_ops.py). CM never
+    :func:`cm_estimate` probes it later (pinned estimate-for-estimate
+    against this key in test_llm_ops.py). CM never
     under-estimates, so no truly-heavy token can be missed; the
     one-sided error is pinned in tests/test_llm_ops.py.
 
@@ -3325,7 +3300,7 @@ def f34_heavy_hitters(spark, sf_dir):
 
 
 # ------------------------------------- F35: Bloom-filter decontamination
-# Completes the portable-sketch taxonomy (r11): HLL = cardinality
+# Completes the portable-sketch taxonomy: HLL = cardinality
 # (c38_portable_hll), histogram = quantile (c11_portable_quantile),
 # count-min = frequency (f34), BLOOM = membership. k=3 seeded
 # positions per gram over m=2^16 bits: the whole filter is <= 3x|eval
@@ -3339,8 +3314,8 @@ def _bloom_positions(grams):
     """(…, gh) -> (…, gh, j, pos): the k seeded bit positions of each
     gram hash. gh IS ALREADY an md5 hex digest, so the positions are
     its disjoint 4-hex-char nibble ranges — ZERO additional hashing
-    (r12, verdict ask 5: was md5("j:gh") × k; md5 bits are independent
-    across disjoint ranges)."""
+    instead of md5("j:gh") × k (md5 bits are independent across
+    disjoint ranges)."""
     return grams.select(
         "*",
         F.explode(F.array(*[F.lit(j) for j in range(_BLOOM_K)])).alias("j"),
@@ -3491,13 +3466,13 @@ _F35_SQL = f"""
 
 @query("f35_bloom_decontaminate", oracle=_F35_SQL)
 def f35_bloom_decontaminate(spark, sf_dir):
-    """F35 (r11, self-initiated): f30's n-gram decontamination with the
+    """F35: f30's n-gram decontamination with the
     eval-gram set compressed into a PORTABLE BLOOM FILTER — the
     membership sketch, oracle-exact because every step is integer/string
     ops both engines compute identically: each distinct 5-gram md5 maps
     to k=3 seeded positions (its own disjoint 4-hex-char nibble ranges
     -> 2^16 bits; the gram hash is already an md5 digest, so the
-    positions cost no additional hashing — r12), the filter is the
+    positions cost no additional hashing), the filter is the
     DISTINCT position set of
     the planted eval grams (doc_id % 89, f30's stand-in), a gram
     bloom-hits iff ALL k positions are set, and a doc is contaminated
@@ -3519,31 +3494,26 @@ def f35_bloom_decontaminate(spark, sf_dir):
     corpus, a REAL eval suite is fixed KBs), per-doc rollup is one
     map-side-combinable aggregate."""
     grams = gram_hashes(table(spark, sf_dir, "documents"))
-    # r14 optimization (guide §2.3/§2.4): a gram's k=3 positions are
-    # nibble ranges of the SAME md5 digest, i.e. derivable as three
-    # COLUMNS of one row — the previous explode-to-3-rows +
-    # groupBy(doc_id, gh) re-aggregation shuffled every corpus gram
-    # (10.1 MB at sf0.1, corpus-sized at tier) merely to count set
-    # positions that were co-located all along. Column form: k_hit is
+    # a gram's k=3 positions are nibble ranges of the SAME md5 digest,
+    # i.e. derivable as three COLUMNS of one row — an explode-to-3-rows
+    # + groupBy(doc_id, gh) re-aggregation would shuffle every corpus
+    # gram (10.1 MB at sf0.1, corpus-sized at tier) merely to count set
+    # positions that are co-located all along. Column form: k_hit is
     # a per-row expression over three membership joins against the
     # bits set, which is ≤ 2^16 rows BY CONSTRUCTION (m = 2^16 bits)
-    # and therefore always broadcastable — made explicit per guide
-    # §3.1 instead of trusting AQE's estimate. The only exchanges left
-    # are the tiny eval-side distinct and the map-side-combinable
-    # per-doc rollup: the corpus truly never shuffles now (2 Exchange
-    # → 1 on the corpus path; same rows, pinned by the oracle).
+    # and therefore always broadcastable — made explicit instead of
+    # trusting AQE's estimate. The only exchanges left are the tiny
+    # eval-side distinct and the map-side-combinable per-doc rollup:
+    # the corpus never shuffles (1 Exchange on the corpus path).
     #
-    # r15 (verdict ask 6 / r14 ADVICE): the r14 form renamed the bits
-    # columns PER JOIN (_p{j}/_s{j}), so the three BroadcastExchange
-    # subplans canonicalized differently and ReuseExchange could not
-    # dedupe them — the eval-side scan+gram+distinct pipeline executed
-    # 3× (Scan parquet 4, not 2). Renaming on the PROBE side instead
-    # (each _p{j} becomes ``pos`` for its join, the shared ``bits``
-    # frame is broadcast verbatim) makes the three broadcast subplans
-    # plan-identical: ONE BroadcastExchange built, two ReusedExchange
-    # nodes, eval pipeline executed once (Scan parquet 4 → 2). Join
-    # semantics unchanged (left equi join per position column), rows
-    # pinned by the oracle.
+    # The renaming happens on the PROBE side (each _p{j} becomes
+    # ``pos`` for its join, the shared ``bits`` frame is broadcast
+    # verbatim), so the three broadcast subplans are plan-identical:
+    # ONE BroadcastExchange built, two ReusedExchange nodes, the
+    # eval-side scan+gram+distinct pipeline executed once (Scan parquet
+    # 2). Renaming the bits columns per join would make the subplans
+    # canonicalize differently, defeat ReuseExchange and run that
+    # pipeline 3×.
     pos_cols = [
         F.conv(F.expr(f"substring(gh, {j * 4 + 1}, 4)"), 16, 10)
         .cast("int").alias(f"_p{j}")
@@ -3652,7 +3622,7 @@ def f36_semdedup(spark, sf_dir):
     the oracle's loop). The pairwise member (quadratic within buckets,
     split-capped) is f13; this operator is its linear complement: a
     corpus-shrinking PRUNE, not a pair report."""
-    emb, k = _pinned_with_width(spark, sf_dir, "f36_emb", 256)
+    emb, k = _pinned_with_width(spark, sf_dir, 256)
     tagged = (
         emb.withColumn("bucket",
                        bucket_expr("f36", k, "emb").cast("long"))
@@ -3674,17 +3644,12 @@ def f36_semdedup(spark, sf_dir):
     # 8-byte column and the keep-filter stage codegens; the pinned
     # frame is 4 narrow columns, an order of magnitude smaller than
     # the tagged pin above.
-    scored = pin(
-        tagged.join(proto, "bucket").select(
-            "vec_id", "bucket", "pid", cos.alias("_cos"),
-        ),
-        "f36_scored",
-    )
-    out = (
-        scored.withColumn("centrality", fx.r6(F.col("_cos")))
+    scored = tagged.join(proto, "bucket").select(
+        "vec_id", "bucket", "pid", cos.alias("_cos"),
+    ).localCheckpoint()
+    return (
+        scored.withColumn("centrality", fx.fround(F.col("_cos"), 6))
         .filter((F.col("vec_id") == F.col("pid"))
                 | (F.col("centrality") < 0.3))
         .select("vec_id", "bucket", "centrality")
     )
-    unpin(emb)  # scored is materialized; the wide source pin can go now
-    return out

@@ -298,8 +298,7 @@ def d8_stateful(spark, sf_dir):
     # spawn bill at 32. Fresh-JVM at sf0.1
     # (plans/r15/d8_state_parts_ab.json): at 32 cores parts=2 → 3.4 s,
     # 8 → 1.7 s, 16 → 1.9 s; at 8 cores parts=4 → 5.3 s, 8 → 2.0 s.
-    # The per-query value wins over the generic
-    # SPARK_GRAFT_REPLAY_STATE_PARTS default.
+    # The per-query value replaces the replay default of 2.
     return run_available_now(
         out, "d8_state", output_mode="update", state_partitions=8,
     )

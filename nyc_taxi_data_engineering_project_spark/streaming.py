@@ -25,7 +25,7 @@ def _events_raw_schema(nanos: bool) -> T.StructType:
     # (session tz pinned UTC, see session.py). A regenerated
     # TIMESTAMP(NANOS) file is streamed as long then floor-divided to
     # micros — the SAME dispatch as catalog.table, so batch and stream
-    # paths can never disagree on the unit again (the r3 incident).
+    # paths can never disagree on the unit.
     ts_type = T.LongType() if nanos else T.TimestampNTZType()
     return T.StructType([
         T.StructField("event_id", T.LongType()),
@@ -40,14 +40,13 @@ def _events_raw_schema(nanos: bool) -> T.StructType:
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D1: file-source stream over the events table.
 
-    Layout dispatch (r4): ``events.parquet`` may be a single FILE (the
+    Layout dispatch: ``events.parquet`` may be a single FILE (the
     driver testdata) or a DIRECTORY of part files (any Spark-written
     copy, e.g. scripts/stress.py replicas). The file source requires a
     directory basePath, so a single file streams via its parent dir + a
     leaf-name glob — but that same glob silently matches ZERO part
-    files under a directory layout (caught when the r4 stress run's
-    streaming keys came back suspiciously instant on empty streams), so
-    a directory streams directly."""
+    files under a directory layout (the streaming keys would run
+    instantly on empty streams), so a directory streams directly."""
     path = os.path.join(sf_dir, "events.parquet")
     nanos = events_ts_is_nanos(path)
     if nanos:
@@ -64,22 +63,6 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # watermarks demand TIMESTAMP (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE on
     # NTZ); under the UTC-pinned session the cast is wall-clock identity
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
-
-
-def _replay_state_partitions() -> str:
-    """State-store partition count for the bounded replay
-    (``SPARK_GRAFT_REPLAY_STATE_PARTS`` to override; default 2).
-
-    Each state partition costs a store load+commit (+ for pandas state
-    ops, a Python worker round) PER micro-batch — pure fixed overhead
-    that dwarfs the per-row work at replay scale, where the whole
-    state is a few thousand keys (r14 measured on d2 at sf0.1: 8 → 2
-    partitions halves the micro-batch wall with byte-identical
-    output). A production stream sizes this to peak key cardinality /
-    state volume, not CPU count — that decision belongs to the
-    deployment, which is why it is an env knob rather than a constant
-    derived from local cores."""
-    return os.environ.get("SPARK_GRAFT_REPLAY_STATE_PARTS", "2")
 
 
 def _replay_checkpoint_root() -> str | None:
@@ -116,7 +99,7 @@ def ephemeral_scratch_dir(prefix: str) -> str:
     returned DataFrame reads lazily) must NOT use this — an uncleaned
     tmpfs tree would accumulate in RAM instead of on disk.
 
-    SIZE caveat (r14 ADVICE), not just lifetime: the scratch tree
+    SIZE caveat, not just lifetime: the scratch tree
     lives in RAM for the duration of the call — d14 materializes a
     full feed copy + source + bucketed layout there, so at
     larger-than-bench scale that is ~3× the table's bytes of tmpfs.
@@ -133,16 +116,20 @@ def ephemeral_scratch_dir(prefix: str) -> str:
 
 def run_available_now(sdf: DataFrame, name: str,
                       output_mode: str = "append",
-                      state_partitions: int | None = None) -> DataFrame:
+                      state_partitions: int = 2) -> DataFrame:
     """Execute a streaming DataFrame to completion over existing input
     (availableNow trigger → memory sink) and return the materialized
     result table. This is the bounded-replay harness; production sinks
     use ``foreachBatch``/parquet with checkpoints (D10).
 
-    ``state_partitions`` overrides the replay default for ops whose
-    per-partition work is COMPUTE, not state bookkeeping (d8's pandas
-    state function): those want core-scaled parallelism, where the
-    store-bound ops want the minimum store count."""
+    ``state_partitions`` is the state-store partition count. Each state
+    partition costs a store load+commit (+ for pandas state ops, a
+    Python worker round) PER micro-batch — fixed overhead that dwarfs
+    the per-row work at replay scale, where the whole state is a few
+    thousand keys, so the default is 2 (on d2 at sf0.1, 8 → 2
+    partitions halves the micro-batch wall with byte-identical output).
+    Ops whose per-partition work is COMPUTE, not state bookkeeping
+    (d8's pandas state function), pass a larger count."""
     import shutil
     import tempfile
 
@@ -151,9 +138,7 @@ def run_available_now(sdf: DataFrame, name: str,
     # query start and AQE does not apply to streaming state — pin it to
     # the replay bound, then restore the session value.
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-                   str(state_partitions) if state_partitions
-                   else _replay_state_partitions())
+    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     ckpt_root = _replay_checkpoint_root()
     ckpt = tempfile.mkdtemp(prefix=f"replay_{name}_", dir=ckpt_root) \
         if ckpt_root else None

@@ -323,11 +323,7 @@ def main() -> None:
         # the full 4.9M-row join at K=1000, and those ~5 repeats were
         # booked inside s2's timing window — the recorded stage
         # wall/CPU measured check-harness rework, not f14
-        from nyc_taxi_data_engineering_project_spark.pinning import (
-            pin, unpin,
-        )
-
-        joined = pin(cur.join(cmap, "doc_id", "left"), "s2_joined")
+        joined = cur.join(cmap, "doc_id", "left").localCheckpoint()
         # cluster-cover invariants at tier, in ONE aggregate pass
         n_docs = cur.count()
         inv = joined.agg(
@@ -344,7 +340,6 @@ def main() -> None:
         n_clusters, bad_rep = inv.n_clusters, inv.bad_rep
         survivors = joined.filter("keep").drop("cluster_id", "keep")
         _write_docs(survivors, 2)
-        unpin(joined)
 
         # planted-family recovery: source s (id<SHIFT, mod 50 == 2,
         # >= 16 toks — short mod-2 sources got plain prefixed copies,
@@ -492,11 +487,7 @@ def main() -> None:
         # survivor anti-join) and unpinned each would re-run the full
         # gram explode + broadcast join + per-doc rollup — the same
         # check-harness-rework-booked-as-stage-cost class as s2's
-        from nyc_taxi_data_engineering_project_spark.pinning import (
-            pin as _pin, unpin as _unpin,
-        )
-
-        rep = _pin(
+        rep = (
             grams.join(F.broadcast(
                 eval_gh.withColumn("hit", F.lit(True))), "gh", "left")
             .groupBy("doc_id")
@@ -505,8 +496,8 @@ def main() -> None:
                  .alias("n_hit"))
             .select("doc_id", "n_grams", "n_hit",
                     (F.col("n_hit") * 10 >= F.col("n_grams"))
-                    .alias("contaminated")),
-            "s5_rep",
+                    .alias("contaminated"))
+            .localCheckpoint()
         )
         # recall 1.0 by construction: every replica-0 eval doc's grams
         # are ALL in the suite
@@ -543,7 +534,6 @@ def main() -> None:
             "doc_id", "left_anti",
         )
         _write_docs(out, 5)
-        _unpin(rep)
         n_out = spark.read.parquet(
             os.path.join(_stage_dir(5), "documents.parquet")).count()
         checks["s5"] = {

@@ -71,81 +71,6 @@ def test_bucketed_aggregation_is_shuffle_free(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS b_li_agg")
 
 
-def test_f2_verify_join_bucketed_zero_exchange(spark, tmp_path):
-    """SCALE.md §7's 100 TB posture for f2, wired and proved: under
-    pin_mode=checkpoint_table the shingled frame is persisted as a
-    bucketed+sorted table on doc_id (pinning.pin(bucket_key="doc_id"),
-    exactly what f2 passes), and the verify join — candidate pairs
-    joined back to the shingle sets on doc_a then doc_b — plans with
-    ZERO Exchange on either bucketed side: only the candidate side
-    shuffles (it arrives partitioned by band bucket, not doc id). The
-    plain-parquet pin of the same frame needs two extra Exchanges.
-    Broadcast is disabled so the test sees the strategy that exists at
-    scale, where the shingle table does not fit in a broadcast."""
-    from pyspark.sql import functions as F
-
-    from nyc_taxi_data_engineering_project_spark.pinning import (
-        pin, release_pins,
-    )
-
-    docs = (
-        spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
-        .select(
-            "doc_id",
-            F.array_distinct(F.split("text", " ")).alias("sh"),
-        )
-    )
-    cand = (
-        docs.select(F.col("doc_id").alias("doc_a"))
-        .withColumn("doc_b", F.col("doc_a") + 1)
-        .limit(200)
-    )
-
-    def verify(shingled):
-        sh_a = shingled.select(F.col("doc_id").alias("doc_a"),
-                               F.col("sh").alias("sh_a"))
-        sh_b = shingled.select(F.col("doc_id").alias("doc_b"),
-                               F.col("sh").alias("sh_b"))
-        return (
-            cand.join(sh_a, "doc_a").join(sh_b, "doc_b")
-            .select(
-                "doc_a", "doc_b",
-                (F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-                 / F.size(F.array_union("sh_a", "sh_b"))).alias("jaccard"),
-            )
-        )
-
-    spark.conf.set("spark.spark_graft.pin_mode", "checkpoint_table")
-    spark.conf.set("spark.spark_graft.pin_dir", str(tmp_path / "pins"))
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    try:
-        bucketed = pin(docs, "f2v_bucketed", bucket_key="doc_id")
-        plain = pin(docs, "f2v_plain")
-        bplan, pplan = _plan(verify(bucketed)), _plan(verify(plain))
-        assert "Bucketed: true" in bplan or "SelectedBucketsCount" in bplan
-        import re
-
-        def n_exchanges(plan):  # count nodes, not mentions (tree+details)
-            return len(re.findall(r"\(\d+\) Exchange", plan))
-
-        n_b, n_p = n_exchanges(bplan), n_exchanges(pplan)
-        # candidate side must still shuffle; both bucketed sides must not
-        assert n_b == n_p - 2, (
-            f"bucketed verify join planned {n_b} exchanges vs {n_p} "
-            f"plain — expected exactly 2 fewer\n{bplan}"
-        )
-        # same answer either way
-        assert sorted(map(tuple, verify(bucketed).collect())) == \
-            sorted(map(tuple, verify(plain).collect()))
-    finally:
-        release_pins(spark)
-        spark.conf.unset("spark.spark_graft.pin_mode")
-        spark.conf.unset("spark.spark_graft.pin_dir")
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-
-
 def test_bucketed_superset_key_aggregation_is_shuffle_free(spark, tmp_path):
     """The q21-layout property (SCALE.md §13c): a group-by on a
     SUPERSET of the bucket key — (l_orderkey, l_suppkey) over a table

@@ -1,132 +1,23 @@
-"""Pin-mode switch (pinning.py): the executor-loss-tolerance knob.
-
-Three claims, per mode:
-1. mechanism — pin() actually uses the requested machinery (checkpointed
-   RDD / DISK_ONLY persist / parquet-or-bucketed table under pin_dir);
-2. equivalence — f2 (DAG pins) and f14 (loop pins with mid-loop release)
-   return identical rows in every mode;
-3. lifetime — tracked pins (cluster modes) are released by
-   unpin/release_pins: no CacheManager entry, no table, no files left.
-"""
+"""Multi-consumer pins are ``localCheckpoint``: the pinned frame's plan
+scans the materialized RDD instead of re-deriving it from the source."""
 
 from __future__ import annotations
 
-import contextlib
-import io as _io
-import os
-
-import pytest
-
 from conftest import SF_DIR
 
-from nyc_taxi_data_engineering_project_spark import pinning
-from nyc_taxi_data_engineering_project_spark.pinning import (
-    pin, release_pins, unpin,
-)
 
-
-@contextlib.contextmanager
-def _mode(spark, mode, pin_dir=None):
-    spark.conf.set("spark.spark_graft.pin_mode", mode)
-    if pin_dir is not None:
-        spark.conf.set("spark.spark_graft.pin_dir", pin_dir)
-    try:
-        yield
-    finally:
-        release_pins(spark)
-        spark.conf.unset("spark.spark_graft.pin_mode")
-        if pin_dir is not None:
-            spark.conf.unset("spark.spark_graft.pin_dir")
-
-
-def _small(spark):
-    return spark.range(0, 100).selectExpr("id", "id % 7 AS k")
-
-
-def test_default_mode_is_local_checkpoint(spark):
-    assert pinning.pin_mode(spark) == "localCheckpoint"
-    pinned = pin(_small(spark), "t_default")
-    # a localCheckpoint plan scans the materialized RDD, not a Range
-    assert pinned.rdd.is_checkpointed or "ExistingRDD" in \
-        pinned._jdf.queryExecution().executedPlan().toString()
-    assert pinned.count() == 100
-    # untracked: nothing for release_pins to do
-    assert release_pins(spark) == 0
-
-
-def test_disk_persist_mode_mechanism_and_release(spark):
-    with _mode(spark, "disk_persist"):
-        pinned = pin(_small(spark), "t_disk")
-        lvl = pinned.storageLevel
-        assert lvl.useDisk and not lvl.useMemory, lvl
-        assert pinned.count() == 100
-        unpin(pinned)
-        assert not pinned.storageLevel.useDisk  # unpersisted
-        again = pin(_small(spark), "t_disk2")
-        assert release_pins(spark) == 1
-        assert not again.storageLevel.useDisk
-
-
-def test_checkpoint_table_mode_mechanism_and_release(spark, tmp_path):
-    pin_dir = str(tmp_path / "pins")
-    with _mode(spark, "checkpoint_table", pin_dir):
-        pinned = pin(_small(spark), "t_tbl")
-        # the pin is a parquet round-trip under pin_dir
-        plan = pinned._jdf.queryExecution().executedPlan().toString()
-        assert "parquet" in plan.lower()
-        assert os.path.isdir(pin_dir) and os.listdir(pin_dir)
-        assert pinned.count() == 100
-        release_pins(spark)
-        assert not any(os.scandir(pin_dir))
-
-
-def test_checkpoint_table_bucketed_layout(spark, tmp_path):
-    """bucket_key yields a bucketed table whose self-join on the key
-    plans with zero Exchange (the persisted pre-shuffle)."""
-    pin_dir = str(tmp_path / "pins")
-    with _mode(spark, "checkpoint_table", pin_dir):
-        pinned = pin(_small(spark), "t_bkt", bucket_key="id")
-        a = pinned.alias("a")
-        b = pinned.alias("b")
-        joined = a.hint("merge").join(b, "id")
-        buf = _io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            joined.explain("formatted")
-        plan = buf.getvalue()
-        assert "Exchange" not in plan, plan
-        assert joined.count() == 100
-
-
-def test_checkpoint_table_empty_frame(spark, tmp_path):
-    """An empty pinned frame keeps its schema (zero part files written)."""
-    pin_dir = str(tmp_path / "pins")
-    with _mode(spark, "checkpoint_table", pin_dir):
-        empty = _small(spark).filter("id < 0")
-        pinned = pin(empty, "t_empty")
-        assert pinned.count() == 0
-        assert [f.name for f in pinned.schema] == ["id", "k"]
-
-
-@pytest.mark.parametrize("mode", ["disk_persist", "checkpoint_table"])
-def test_f2_and_f14_equal_across_modes(spark, tmp_path, mode):
-    """The deployment knob must not change answers: f2 (DAG pins incl.
-    the bucketed shingle table) and f14 (loop pins with per-round
-    release) produce the same rows as the default localCheckpoint mode."""
+def test_f14_rounds_scan_local_checkpoint(spark):
+    """f14's label-propagation loop cuts its lineage each round: the
+    result's executed plan reads checkpointed blocks (``ExistingRDD``)
+    instead of re-planning f2's pair verification, and no pin leaves a
+    session-wide CacheManager entry behind."""
     from nyc_taxi_data_engineering_project_spark.queries.llm import (
-        f14_dedup_clusters, f2_minhash_dedup,
+        f14_dedup_clusters,
     )
 
-    def rows(df):
-        return sorted(map(tuple, df.collect()))
-
-    base_f2 = rows(f2_minhash_dedup(spark, SF_DIR))
-    base_f14 = rows(f14_dedup_clusters(spark, SF_DIR))
-    assert base_f2 and base_f14  # planted dups: non-degenerate
-
-    with _mode(spark, mode, str(tmp_path / "pins")):
-        assert rows(f2_minhash_dedup(spark, SF_DIR)) == base_f2
-        assert rows(f14_dedup_clusters(spark, SF_DIR)) == base_f14
-        release_pins(spark)
-    # nothing leaked into the session cache in any mode
-    jspark = spark._jsparkSession
-    assert jspark.sharedState().cacheManager().isEmpty()
+    out = f14_dedup_clusters(spark, SF_DIR)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" in plan, plan
+    assert "array_intersect" not in plan, plan  # f2's Jaccard verify
+    assert out.count() > 0
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -147,16 +147,14 @@ def test_compact_swap_failure_restores_original_tree(
 
 
 # ------------------------------------------------- dot-kernel memo
-def test_dot_kernel_memo_is_jvm_scoped(spark):
-    from nyc_taxi_data_engineering_project_spark.queries.llm import (
-        _dot_unrolled,
-        _dot_unrolled_cached,
-    )
+def test_dot_kernel_memo_is_jvm_scoped(spark, monkeypatch):
+    from nyc_taxi_data_engineering_project_spark.queries import llm
 
-    c1 = _dot_unrolled("a_vec", "b_vec")
-    c2 = _dot_unrolled("a_vec", "b_vec")
+    c1 = llm._dot_unrolled("a_vec", "b_vec")
+    c2 = llm._dot_unrolled("a_vec", "b_vec")
     assert c1 is c2  # memo hit within one session
     # a different JVM context (application id) must MISS the memo —
     # a cached Column wraps py4j refs into the JVM that built it
-    c3 = _dot_unrolled_cached("a_vec", "b_vec", "app-from-before-restart")
+    monkeypatch.setattr(llm, "_jvm_token", lambda: "app-from-before-restart")
+    c3 = llm._dot_unrolled("a_vec", "b_vec")
     assert c3 is not c1

@@ -1,7 +1,6 @@
 """The bounded-replay harness's tuning seams
-(streaming.run_available_now): the state-partition default, its
-SPARK_GRAFT_REPLAY_STATE_PARTS deployment setting and the per-query
-override, and the ephemeral checkpoint root. OPTIMIZATION_r14.md's
+(streaming.run_available_now): the state-partition default and the
+per-query override, and the ephemeral checkpoint root. OPTIMIZATION_r14.md's
 streaming section documents the measurements the default encodes
 (d2 8→2 parts halves the micro-batch wall). d8 passes a fixed 8
 through the per-query override (its compute profile, measured in
@@ -9,6 +8,7 @@ OPTIMIZATION_r15.md)."""
 
 from __future__ import annotations
 
+import inspect
 import os
 import uuid
 
@@ -17,17 +17,15 @@ from pyspark.sql import functions as F
 from conftest import SF_DIR
 from nyc_taxi_data_engineering_project_spark.streaming import (
     _replay_checkpoint_root,
-    _replay_state_partitions,
     events_stream,
     run_available_now,
 )
 
 
-def test_replay_state_partitions_default_and_env(monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_REPLAY_STATE_PARTS", raising=False)
-    assert _replay_state_partitions() == "2"
-    monkeypatch.setenv("SPARK_GRAFT_REPLAY_STATE_PARTS", "7")
-    assert _replay_state_partitions() == "7"
+def test_replay_state_partitions_default_and_env():
+    """The replay default is 2 state partitions."""
+    params = inspect.signature(run_available_now).parameters
+    assert params["state_partitions"].default == 2
 
 
 def test_replay_checkpoint_root_env_and_tmpfs(monkeypatch):

@@ -1042,6 +1042,37 @@ def test_subset_build_enforces_family_bucket_count(spark, tmp_path):
         drop_workload_layout(spark, src_dir)
 
 
+def test_family_bucket_count_survives_a_new_session(spark, tmp_path):
+    """A sibling built by an earlier session (dropped from this one, its
+    files still under ``path``) still fixes the family's count: its
+    manifest is read when the session holds no registration, so a later
+    subset build cannot split orders and lineitem across two counts."""
+    import glob
+    import json
+    import shutil
+
+    src_dir = str(tmp_path / "src")
+    lay = str(tmp_path / "l")
+    os.makedirs(src_dir)
+    for name in ("orders", "lineitem"):
+        shutil.copy(f"{SF_DIR}/{name}.parquet",
+                    f"{src_dir}/{name}.parquet")
+    build_workload_layout(spark, src_dir, lay, buckets=4,
+                          tables=("orders",))
+    drop_workload_layout(spark, src_dir)  # files stay, as in a new JVM
+    try:
+        build_workload_layout(spark, src_dir, lay, tables=("lineitem",))
+        build_workload_layout(spark, src_dir, lay, tables=("orders",))
+        counts = {}
+        for name in ("orders", "lineitem"):
+            [mf] = glob.glob(f"{lay}/*_{name}/_graft_manifest.json")
+            with open(mf) as fh:
+                counts[name] = json.load(fh)["buckets"]
+        assert counts["orders"] == counts["lineitem"] == 4, counts
+    finally:
+        drop_workload_layout(spark, src_dir)
+
+
 def test_drop_layout_clears_staleness_state(spark, tmp_path):
     """After drop_workload_layout, table() must serve the plain path
     with no fingerprint residue (a re-registered conf must not compare
