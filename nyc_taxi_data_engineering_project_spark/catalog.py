@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import contextlib
 import functools
+import math
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -888,7 +889,11 @@ def _layout_write(df: DataFrame, name: str, table_name: str,
     writes every input task × every bucket it touches (at a wide-plane
     LSH layout, 2^11+ dirs × 64 tasks — the 100k-tiny-files failure
     mode). Spark's repartition hash is the bucketed writer's
-    Murmur3-pmod, so each task holds exactly one bucket."""
+    Murmur3-pmod, so with a task count T that divides the bucket count,
+    every bucket lands whole in one task (task p holds the buckets
+    ≡ p mod T): whole buckets per task. T is gcd(buckets, cores), at
+    most one task per core: each task costs ~50 ms of deserialize,
+    while a month's append is a few KB per bucket."""
     from . import io as _io
 
     key = LAYOUT_BUCKET_KEYS[name]
@@ -896,7 +901,9 @@ def _layout_write(df: DataFrame, name: str, table_name: str,
         _io.write_value_partitioned(df.repartition(F.col(key)),
                                     table_name, key, path=path)
     else:
-        _io.write_bucketed(df.repartition(buckets, F.col(key)), table_name,
+        tasks = math.gcd(
+            buckets, df.sparkSession.sparkContext.defaultParallelism)
+        _io.write_bucketed(df.repartition(tasks, F.col(key)), table_name,
                            key, buckets=buckets, path=path)
 
 
@@ -1128,8 +1135,8 @@ def compact_workload_layout(spark: SparkSession, sf_dir: str,
     Mechanics — no source re-read, no shuffle beyond one co-located
     repartition: the table's files are read back, repartitioned on
     their own bucket key (Spark's repartition hash is the same
-    Murmur3-pmod the bucketed writer uses, so each task holds exactly
-    one bucket → exactly one output file per bucket), and published
+    Murmur3-pmod the bucketed writer uses, so each task holds whole
+    buckets → exactly one output file per bucket), and published
     under the unchanged catalog table by :func:`_rewrite_layout`, the
     staged-tree directory swap every layout change goes through (bucket
     ids live in the file names, which the swap preserves). The

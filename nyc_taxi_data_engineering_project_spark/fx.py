@@ -92,18 +92,6 @@ def fround(col: Column | str, n: int) -> Column:
     )
 
 
-def r2(col: Column | str) -> Column:
-    return fround(col, 2)
-
-
-def r4(col: Column | str) -> Column:
-    return fround(col, 4)
-
-
-def r6(col: Column | str) -> Column:
-    return fround(col, 6)
-
-
 def sql_round(expr: str, n: int) -> str:
     """The oracle-side spelling of :func:`fround` (ANSI/DuckDB SQL).
 

@@ -21,9 +21,11 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import (DataFrame, Observation, SparkSession,
+                         functions as F, types as T)
 
 from .conform import conform_trips
+from .schemas import TRIPS_SCHEMA
 
 MONTH_COL = "pickup_month"
 
@@ -121,7 +123,14 @@ def write_trips_month_idempotent(df: DataFrame, target: str,
     is far bigger than one task's worth, so N is sized to make individual
     files land near the 128 MB-1 GB sweet spot — one-file-per-month does
     not survive a 100 TB table."""
-    keyed = with_month(df).withColumn(
+    _write_months(with_month(df), target, files_per_month)
+
+
+def _write_months(df: DataFrame, target: str,
+                  files_per_month: int = 1) -> None:
+    """:func:`write_trips_month_idempotent` of a frame that already
+    carries ``MONTH_COL``."""
+    keyed = df.withColumn(
         "_file_bucket",
         F.pmod(F.hash("pickup_datetime"), F.lit(files_per_month)),
     )
@@ -148,30 +157,29 @@ def ingest_trips(spark: SparkSession, source_path: str, target: str) -> int:
     Returns rows written BY THIS BATCH (the reference's logged row count,
     ``:183``) — counted on the target restricted to the months this batch
     replaced, so pre-existing untouched months never inflate the number."""
-    # persist so the batch is scanned+conformed once: the write
-    # materializes the cache, the month list reads it, and the pin is
-    # released before returning (this function owns the materialization,
-    # unlike the lazy query builders)
-    conformed = conform_trips(read_trips(spark, source_path)).persist()
-    try:
-        write_trips_month_idempotent(conformed, target)
-        months = [
-            r[0]
-            for r in with_month(conformed)
-            .select(MONTH_COL).distinct().collect()
-        ]
-    finally:
-        conformed.unpersist()
-    if not months:
-        # fully-filtered batch: the write produced no data files, and a
-        # schemaless read of an empty target would fail schema inference
+    # one pass over the source: the batch's months are an Observation
+    # riding the write's own job (with_month first, so its UTC guard
+    # still runs)
+    obs = Observation()
+    batch = with_month(conform_trips(read_trips(spark, source_path)))
+    _write_months(
+        batch.observe(obs, F.collect_set(MONTH_COL).alias("months")),
+        target)
+    # a fully-filtered batch: AQE prunes the empty write, metrics and
+    # all, so the observation holds an empty row, which obs.get refuses
+    # to convert. No data files were written; nothing to count.
+    if obs._jo.getRow().size() == 0:
         return 0
     # read-back validation (count what's AT REST, not what we think we
-    # wrote). Cheap: the month filter prunes to this batch's partitions
-    # and parquet count() is served from row-group metadata, not a scan.
+    # wrote). Cheap: the month filter prunes to this batch's partitions,
+    # parquet count() is served from row-group metadata, and the known
+    # schema skips an inference job over the growing target. A new
+    # StructType: StructType.add would mutate the shared TRIPS_SCHEMA.
+    at_rest = T.StructType(
+        TRIPS_SCHEMA.fields + [T.StructField(MONTH_COL, T.StringType())])
     return (
-        spark.read.parquet(target)
-        .filter(F.col(MONTH_COL).isin(months))
+        spark.read.schema(at_rest).parquet(target)
+        .filter(F.col(MONTH_COL).isin(obs.get["months"]))
         .count()
     )
 
@@ -190,7 +198,7 @@ def write_bucketed(df: DataFrame, table_name: str, key: str,
 
     Overwrites ``table_name`` (an external table when ``path`` is
     given). A bucket may hold several files: each task writes one per
-    bucket it holds (the layout co-locates one bucket per task first),
+    bucket it holds (the layout co-locates whole buckets per task first),
     and the layout's appends add a sorted run per touched bucket beside
     the existing files (catalog._rewrite_layout). Readers keep the
     hash-partitioning guarantee (bucket id is a property of the key

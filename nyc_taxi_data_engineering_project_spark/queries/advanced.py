@@ -44,7 +44,8 @@ def c1_smj_selfjoin(spark, sf_dir):
         .groupBy(F.col("l1.l_returnflag").alias("returnflag"))
         .agg(
             F.count(F.lit(1)).alias("n_pairs"),
-            fx.r2(F.sum(F.col("l1.l_quantity") + F.col("l2.l_quantity")))
+            fx.fround(F.sum(F.col("l1.l_quantity")
+                            + F.col("l2.l_quantity")), 2)
             .alias("pair_qty"),
         )
     )
@@ -189,8 +190,8 @@ def c7_range_join(spark, sf_dir):
         .groupBy(F.col("band_name").alias("band"))
         .agg(
             F.count(F.lit(1)).alias("n_parts"),
-            fx.r2(F.sum(fx.dec("p_retailprice", scale=2))
-                  .cast("double")).alias("total_price"),
+            fx.fround(F.sum(fx.dec("p_retailprice", scale=2))
+                      .cast("double"), 2).alias("total_price"),
         )
     )
 
@@ -282,7 +283,7 @@ def c9_rollup(spark, sf_dir):
         .rollup("l_returnflag", "l_linestatus")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            fx.r2(F.sum("l_quantity")).alias("sum_qty"),
+            fx.fround(F.sum("l_quantity"), 2).alias("sum_qty"),
         )
         .select(
             F.coalesce("l_returnflag", F.lit("ALL")).alias("returnflag"),
@@ -379,11 +380,11 @@ def c11_percentiles(spark, sf_dir):
         table(spark, sf_dir, "lineitem")
         .groupBy(F.col("l_returnflag").alias("returnflag"))
         .agg(
-            fx.r4(F.expr("percentile(l_quantity, 0.5D)")).alias("med_qty"),
-            fx.r4(F.expr("percentile(l_extendedprice, 0.25D)")).alias("p25_price"),
-            fx.r4(F.expr("percentile(l_extendedprice, 0.75D)")).alias("p75_price"),
-            fx.r4(F.stddev_samp("l_quantity")).alias("sd_qty"),
-            fx.r4(F.corr("l_quantity", "l_extendedprice")).alias("qty_price_corr"),
+            fx.fround(F.expr("percentile(l_quantity, 0.5D)"), 4).alias("med_qty"),
+            fx.fround(F.expr("percentile(l_extendedprice, 0.25D)"), 4).alias("p25_price"),
+            fx.fround(F.expr("percentile(l_extendedprice, 0.75D)"), 4).alias("p75_price"),
+            fx.fround(F.stddev_samp("l_quantity"), 4).alias("sd_qty"),
+            fx.fround(F.corr("l_quantity", "l_extendedprice"), 4).alias("qty_price_corr"),
         )
     )
 
@@ -446,8 +447,8 @@ def c12_rank(spark, sf_dir):
             F.rank().over(w).alias("rnk"),
             F.dense_rank().over(w).alias("drnk"),
             F.ntile(4).over(w).alias("tile4"),
-            fx.r6(F.percent_rank().over(w)).alias("pct_rank"),
-            fx.r6(F.cume_dist().over(w)).alias("cdist"),
+            fx.fround(F.percent_rank().over(w), 6).alias("pct_rank"),
+            fx.fround(F.cume_dist().over(w), 6).alias("cdist"),
         )
         .filter(F.col("rn") <= 3)
     )
@@ -511,7 +512,7 @@ def c14_running_sum(spark, sf_dir):
     return table(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("custkey"),
         F.col("o_orderkey").alias("orderkey"),
-        fx.r2(F.sum("o_totalprice").over(w)).alias("running_rev"),
+        fx.fround(F.sum("o_totalprice").over(w), 2).alias("running_rev"),
     )
 
 
@@ -718,9 +719,9 @@ def c33_salted_join(spark, sf_dir):
         .groupBy(F.col("o_orderpriority").alias("priority"))
         .agg(
             F.count(F.lit(1)).alias("n_items"),
-            fx.r2(F.sum(fx.dec(F.col("l_extendedprice")
+            fx.fround(F.sum(fx.dec(F.col("l_extendedprice")
                                * (1 - F.col("l_discount"))))
-                  .cast("double")).alias("revenue"),
+                  .cast("double"), 2).alias("revenue"),
         )
     )
 
@@ -792,7 +793,7 @@ def c35_range_frame(spark, sf_dir):
         F.col("o_custkey").alias("custkey"),
         F.col("o_orderkey").alias("orderkey"),
         days.cast("long").alias("d"),
-        fx.r2(F.sum("o_totalprice").over(w)).alias("spend_30d"),
+        fx.fround(F.sum("o_totalprice").over(w), 2).alias("spend_30d"),
     )
 
 
@@ -857,7 +858,7 @@ def c36_sessionize(spark, sf_dir):
         F.count(F.lit(1)).alias("n_events"),
         (F.max(F.to_unix_timestamp("ts")) - F.min(F.to_unix_timestamp("ts")))
         .alias("duration_s"),
-        fx.r2(F.sum("value")).alias("total_value"),
+        fx.fround(F.sum("value"), 2).alias("total_value"),
     )
 
 

@@ -224,7 +224,7 @@ def a24_observed_metrics(spark, sf_dir):
     observed = e.observe(
         obs,
         F.count(F.lit(1)).alias("n_rows"),
-        fx.r2(F.sum("value")).alias("total_value"),
+        fx.fround(F.sum("value"), 2).alias("total_value"),
         F.count(F.when(F.col("props").isNull(), 1)).alias("null_props"),
     )
     observed.write.format("noop").mode("overwrite").save()

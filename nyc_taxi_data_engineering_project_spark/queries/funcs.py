@@ -39,8 +39,8 @@ def c18_pivot(spark, sf_dir):
     )
     return piv.select(
         "returnflag",
-        fx.r2(F.col("O")).alias("qty_o"),
-        fx.r2(F.col("F")).alias("qty_f"),
+        fx.fround(F.col("O"), 2).alias("qty_o"),
+        fx.fround(F.col("F"), 2).alias("qty_f"),
     )
 
 
@@ -65,8 +65,8 @@ def c19_unpivot(spark, sf_dir):
         table(spark, sf_dir, "lineitem")
         .groupBy(F.col("l_returnflag").alias("returnflag"))
         .agg(
-            fx.r2(F.sum("l_quantity")).alias("sum_qty"),
-            fx.r4(F.sum("l_discount")).alias("sum_disc"),
+            fx.fround(F.sum("l_quantity"), 2).alias("sum_qty"),
+            fx.fround(F.sum("l_discount"), 4).alias("sum_disc"),
         )
     )
     return agg.unpivot(
@@ -217,7 +217,7 @@ def c22_math_funcs(spark, sf_dir):
         F.floor(price).cast("double").alias("floor_price"),
         F.sqrt(price).alias("sqrt_price"),
         (price * price).alias("price_sq"),
-        fx.r6(F.log(price)).alias("ln_price"),
+        fx.fround(F.log(price), 6).alias("ln_price"),
         F.greatest(price, F.lit(950.0)).alias("hi"),
         F.least(price, F.lit(950.0)).alias("lo"),
         F.signum(price - 950.0).alias("dev_sign"),
@@ -583,6 +583,6 @@ def c40_nullsafe_join(spark, sf_dir):
         .groupBy(F.col("l.k").alias("k"))
         .agg(
             F.count(F.lit(1)).alias("n"),
-            fx.r4(F.max("av")).alias("avg_v"),
+            fx.fround(F.max("av"), 4).alias("avg_v"),
         )
     )

@@ -120,7 +120,7 @@ def d3_tumbling(spark, sf_dir):
         .groupBy(F.window("ts", "1 hour"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            fx.r2(F.sum("value")).alias("total_value"),
+            fx.fround(F.sum("value"), 2).alias("total_value"),
         )
         .select(
             F.date_format("window.start", _TS_FMT).alias("win_start"),
@@ -195,7 +195,7 @@ def d5_session(spark, sf_dir):
         .groupBy("user_id", F.session_window("ts", "30 minutes"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            fx.r2(F.sum("value")).alias("session_value"),
+            fx.fround(F.sum("value"), 2).alias("session_value"),
         )
         .select(
             "user_id",
@@ -366,7 +366,7 @@ def d9_stream_static_join(spark, sf_dir):
         .groupBy(F.col("c_mktsegment").alias("segment"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            fx.r2(F.sum("value")).alias("total_value"),
+            fx.fround(F.sum("value"), 2).alias("total_value"),
         )
     )
 

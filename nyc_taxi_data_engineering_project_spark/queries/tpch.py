@@ -87,8 +87,8 @@ def tpch_q1(spark, sf_dir):
             fx.fround(
                 F.sum(dec_price * one_m_disc * one_p_tax).cast("double"), 2
             ).alias("sum_charge"),
-            fx.r4(F.avg("l_quantity")).alias("avg_qty"),
-            fx.r4(F.avg("l_discount")).alias("avg_disc"),
+            fx.fround(F.avg("l_quantity"), 4).alias("avg_qty"),
+            fx.fround(F.avg("l_discount"), 4).alias("avg_disc"),
             F.count(F.lit(1)).alias("count_order"),
         )
     )
@@ -132,7 +132,7 @@ def tpch_q3(spark, sf_dir):
             F.col("l_orderkey").alias("orderkey"),
             F.date_format("o_orderdate", "yyyy-MM-dd").alias("orderdate"),
         )
-        .agg(fx.r2(F.sum(rev)).alias("revenue"))
+        .agg(fx.fround(F.sum(rev), 2).alias("revenue"))
         .orderBy(F.desc("revenue"), F.asc("orderkey"))
         .limit(10)
         .select("orderkey", "revenue", "orderdate")
@@ -189,7 +189,7 @@ def tpch_q5(spark, sf_dir):
         .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
         .groupBy(F.col("n_name").alias("nation"))
-        .agg(fx.r2(F.sum(rev).cast("double")).alias("revenue"))
+        .agg(fx.fround(F.sum(rev).cast("double"), 2).alias("revenue"))
     )
 
 
@@ -220,9 +220,9 @@ def tpch_q6(spark, sf_dir):
             & (F.col("l_discount") <= 0.07)
             & (F.col("l_quantity") < 24)
         )
-        .agg(fx.r2(F.sum(fx.dec(F.col("l_extendedprice")
-                                * F.col("l_discount")))
-                   .cast("double")).alias("revenue"))
+        .agg(fx.fround(F.sum(fx.dec(F.col("l_extendedprice")
+                                    * F.col("l_discount")))
+                       .cast("double"), 2).alias("revenue"))
     )
 
 
@@ -269,7 +269,7 @@ def tpch_q10(spark, sf_dir):
             F.col("c_name").alias("name"),
             F.col("n_name").alias("nation"),
         )
-        .agg(fx.r2(F.sum(rev)).alias("revenue"))
+        .agg(fx.fround(F.sum(rev), 2).alias("revenue"))
         .orderBy(F.desc("revenue"), F.asc("custkey"))
         .limit(20)
     )
@@ -311,8 +311,8 @@ def tpch_q14(spark, sf_dir):
     return (
         li.join(p, li.l_partkey == p.p_partkey)
         .agg(
-            fx.r4(100.0 * F.sum(promo).cast("double")
-                  / F.sum(rev).cast("double"))
+            fx.fround(100.0 * F.sum(promo).cast("double")
+                      / F.sum(rev).cast("double"), 4)
             .alias("promo_revenue_pct")
         )
     )
@@ -428,7 +428,7 @@ def tpch_q15(spark, sf_dir):
             & (F.col("l_shipdate") < F.lit("1996-04-01"))
         )
         .groupBy(F.col("l_suppkey").alias("supplier_no"))
-        .agg(fx.r2(F.sum(rev)).alias("total_revenue"))
+        .agg(fx.fround(F.sum(rev), 2).alias("total_revenue"))
     )
     max_rev = revenue.agg(F.max("total_revenue").alias("mr"))
     s = table(spark, sf_dir, "supplier")
@@ -480,8 +480,8 @@ def tpch_q17(spark, sf_dir):
         li.join(p, li.l_partkey == p.p_partkey)
         .join(part_avg, li.l_partkey == F.col("pa_partkey"))
         .filter(F.col("l_quantity") < F.col("qty_cut"))
-        .agg(fx.r2(F.sum(fx.dec("l_extendedprice", scale=2))
-                   .cast("double") / 7.0).alias("avg_yearly"))
+        .agg(fx.fround(F.sum(fx.dec("l_extendedprice", scale=2))
+                       .cast("double") / 7.0, 2).alias("avg_yearly"))
     )
 
 
@@ -568,7 +568,7 @@ def tpch_q19(spark, sf_dir):
     return (
         li.join(p, li.l_partkey == p.p_partkey)
         .filter(arm)
-        .agg(fx.r2(F.sum(rev).cast("double")).alias("revenue"))
+        .agg(fx.fround(F.sum(rev).cast("double"), 2).alias("revenue"))
     )
 
 
@@ -638,7 +638,8 @@ def tpch_q2(spark, sf_dir):
             F.col("l_suppkey").alias("suppkey"),
         )
         .agg(
-            fx.r6(F.min(F.col("l_extendedprice") / F.col("l_quantity")))
+            fx.fround(F.min(F.col("l_extendedprice")
+                            / F.col("l_quantity")), 6)
             .alias("supply_cost")
         )
     )
@@ -668,7 +669,7 @@ def tpch_q2(spark, sf_dir):
         .join(s_out, F.col("suppkey") == F.col("out_suppkey"))
         .join(F.broadcast(n_out), F.col("out_natkey") == F.col("out_nkey"))
         .select(
-            fx.r2(F.col("s_acctbal")).alias("acctbal"),
+            fx.fround(F.col("s_acctbal"), 2).alias("acctbal"),
             F.col("s_name").alias("supp_name"),
             F.col("n_name").alias("nation"),
             F.col("p_partkey").alias("partkey"),
@@ -739,7 +740,7 @@ def tpch_q7(spark, sf_dir):
             "supp_nation", "cust_nation",
             F.year("l_shipdate").alias("l_year"),
         )
-        .agg(fx.r2(F.sum(rev).cast("double")).alias("revenue"))
+        .agg(fx.fround(F.sum(rev).cast("double"), 2).alias("revenue"))
     )
 
 
@@ -812,11 +813,12 @@ def tpch_q8(spark, sf_dir):
     )
     dec_zero = F.lit(0).cast("decimal(18,4)")
     return vol.groupBy("o_year").agg(
-        fx.r6(
+        fx.fround(
             F.sum(F.when(F.col("nation") == "NATION_1",
                          F.col("volume")).otherwise(dec_zero))
             .cast("double")
-            / F.sum("volume").cast("double")
+            / F.sum("volume").cast("double"),
+            6,
         ).alias("mkt_share")
     )
 
@@ -869,7 +871,7 @@ def tpch_q9(spark, sf_dir):
             F.col("n_name").alias("nation"),
             F.year("o_orderdate").alias("o_year"),
         )
-        .agg(fx.r2(F.sum(profit).cast("double")).alias("sum_profit"))
+        .agg(fx.fround(F.sum(profit).cast("double"), 2).alias("sum_profit"))
     )
 
 

@@ -58,9 +58,9 @@ def test_fround_bitwise_parity_spark_vs_duckdb(spark, oracle_con):
     got = (
         sdf.select(
             "i",
-            fx.r2("x").alias("r2"),
-            fx.r4("x").alias("r4"),
-            fx.r6("x").alias("r6"),
+            fx.fround("x", 2).alias("r2"),
+            fx.fround("x", 4).alias("r4"),
+            fx.fround("x", 6).alias("r6"),
         )
         .toPandas()
         .sort_values("i")

@@ -5,6 +5,8 @@ other months untouched."""
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 from pyspark.sql import functions as F
 
@@ -85,6 +87,39 @@ def test_ingest_trips_end_to_end(spark, tmp_path):
     n = ingest_trips(spark, src, target)
     assert n == 30
     assert ingest_trips(spark, src, target) == 30  # rerun converges
+
+
+def _month_inodes(target: str, month: str) -> dict[str, int]:
+    d = os.path.join(target, f"pickup_month={month}")
+    return {f: os.stat(os.path.join(d, f)).st_ino for f in os.listdir(d)}
+
+
+def test_ingest_two_month_batch_beside_a_third_month(spark, tmp_path):
+    """One-pass ingest of a two-month batch into a target that already
+    holds a third month: it returns exactly the batch's rows, leaves
+    the third month's files in place (same inodes), pins nothing, and a
+    re-run converges."""
+    old = str(tmp_path / "old")
+    spark.createDataFrame(_trips_pdf({"2025-09": 12})).write.parquet(old)
+    target = str(tmp_path / "fact")
+    assert ingest_trips(spark, old, target) == 12
+    september = _month_inodes(target, "2025-09")
+
+    src = str(tmp_path / "src")
+    spark.createDataFrame(
+        _trips_pdf({"2025-10": 25, "2025-11": 40})).write.parquet(src)
+    jsc = spark.sparkContext._jsc
+    pinned = set(jsc.getPersistentRDDs().keySet())
+    assert ingest_trips(spark, src, target) == 65
+    assert set(jsc.getPersistentRDDs().keySet()) == pinned
+    assert ingest_trips(spark, src, target) == 65  # rerun converges
+    assert _month_inodes(target, "2025-09") == september
+    per_month = {
+        r["pickup_month"]: r["n"]
+        for r in spark.read.parquet(target).groupBy("pickup_month")
+        .agg(F.count("*").alias("n")).collect()
+    }
+    assert per_month == {"2025-09": 12, "2025-10": 25, "2025-11": 40}
 
 
 def test_surrogate_ids(spark):

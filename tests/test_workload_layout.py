@@ -615,6 +615,66 @@ def test_full_build_writes_one_file_per_bucket(spark, tmp_path):
         drop_workload_layout(spark, src_dir)
 
 
+def test_layout_write_runs_one_task_per_core_with_whole_buckets(
+        spark, tmp_path):
+    """A layout write co-locates into gcd(buckets, cores) tasks, and
+    each task writes whole buckets: per write (one uuid in the file
+    names) the distinct ``part-NNNNN`` task prefixes number that gcd,
+    every bucket id appears exactly once, and a bucket-key aggregate
+    still plans with no shuffle — for full builds at 8 and 6 buckets
+    and for the append that follows."""
+    import math
+    import shutil
+
+    src_dir = str(tmp_path / "src")
+    lay = str(tmp_path / "layout")
+    plain = spark.read.parquet(f"{SF_DIR}/orders.parquet")
+    plain.filter(F.month("o_orderdate") != 12).coalesce(1) \
+        .write.parquet(f"{src_dir}/orders.parquet")
+    plain.filter(F.month("o_orderdate") == 12).coalesce(1) \
+        .write.parquet(str(tmp_path / "m12"))
+    [part] = [p for p in os.listdir(tmp_path / "m12")
+              if p.endswith(".parquet")]
+    cores = spark.sparkContext.defaultParallelism
+
+    def _writes(tbl):
+        """{write uuid: [(task prefix, bucket id)]} of the live files."""
+        out: dict[str, list[tuple[str, str]]] = {}
+        for f in _layout_data_files(spark, tbl):
+            m = re.match(r"part-(\d{5})-([0-9a-f-]{36})_(\d{5})\.c\d+",
+                         os.path.basename(f))
+            out.setdefault(m.group(2), []).append(
+                (m.group(1), m.group(3)))
+        return out
+
+    def _check(write, n):
+        assert len({task for task, _ in write}) == math.gcd(n, cores)
+        assert sorted(b for _, b in write) == [f"{i:05d}"
+                                               for i in range(n)]
+
+    try:
+        for n in (8, 6):
+            tbl = build_workload_layout(spark, src_dir, lay, buckets=n,
+                                        tables=("orders",))["orders"]
+            [full] = _writes(tbl).values()
+            _check(full, n)
+            served = table(spark, src_dir, "orders")
+            assert _n_exchanges(served.groupBy("o_orderkey").count()) == 0
+        shutil.copy(str(tmp_path / "m12" / part),
+                    f"{src_dir}/orders.parquet/month12-{part}")
+        before = _writes(tbl)
+        build_workload_layout(spark, src_dir, lay, buckets=6,
+                              tables=("orders",))
+        after = _writes(tbl)
+        [new] = set(after) - set(before)
+        assert after.keys() - {new} == before.keys()
+        _check(after[new], 6)
+        served = table(spark, src_dir, "orders")
+        assert _n_exchanges(served.groupBy("o_orderkey").count()) == 0
+    finally:
+        drop_workload_layout(spark, src_dir)
+
+
 def test_concurrent_reader_during_append(spark, tmp_path):
     """A reader hammering the layout table while an incremental append
     publishes must only ever see a whole version: every successful read
