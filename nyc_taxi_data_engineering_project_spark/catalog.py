@@ -12,7 +12,6 @@ from __future__ import annotations
 
 import contextlib
 import functools
-import math
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -891,7 +890,7 @@ def _layout_write(df: DataFrame, name: str, table_name: str,
     mode). Spark's repartition hash is the bucketed writer's
     Murmur3-pmod, so with a task count T that divides the bucket count,
     every bucket lands whole in one task (task p holds the buckets
-    ≡ p mod T): whole buckets per task. T is gcd(buckets, cores), at
+    ≡ p mod T): whole buckets per task. T is :func:`_write_tasks`, at
     most one task per core: each task costs ~50 ms of deserialize,
     while a month's append is a few KB per bucket."""
     from . import io as _io
@@ -901,10 +900,19 @@ def _layout_write(df: DataFrame, name: str, table_name: str,
         _io.write_value_partitioned(df.repartition(F.col(key)),
                                     table_name, key, path=path)
     else:
-        tasks = math.gcd(
+        tasks = _write_tasks(
             buckets, df.sparkSession.sparkContext.defaultParallelism)
         _io.write_bucketed(df.repartition(tasks, F.col(key)), table_name,
                            key, buckets=buckets, path=path)
+
+
+def _write_tasks(buckets: int, cores: int) -> int:
+    """The task count of a bucketed layout write: the largest divisor of
+    ``buckets`` that is at most ``cores``, so each task holds whole
+    buckets and the cores stay busy (32 buckets on 6 cores → 4 tasks,
+    where gcd(32, 6) would give 2)."""
+    return max(d for d in range(1, min(buckets, cores) + 1)
+               if buckets % d == 0)
 
 
 def _create_entry(spark: SparkSession, path: str, tbl: str,

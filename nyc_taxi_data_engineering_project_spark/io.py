@@ -21,11 +21,9 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import (DataFrame, Observation, SparkSession,
-                         functions as F, types as T)
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from .conform import conform_trips
-from .schemas import TRIPS_SCHEMA
 
 MONTH_COL = "pickup_month"
 
@@ -123,14 +121,7 @@ def write_trips_month_idempotent(df: DataFrame, target: str,
     is far bigger than one task's worth, so N is sized to make individual
     files land near the 128 MB-1 GB sweet spot — one-file-per-month does
     not survive a 100 TB table."""
-    _write_months(with_month(df), target, files_per_month)
-
-
-def _write_months(df: DataFrame, target: str,
-                  files_per_month: int = 1) -> None:
-    """:func:`write_trips_month_idempotent` of a frame that already
-    carries ``MONTH_COL``."""
-    keyed = df.withColumn(
+    keyed = with_month(df).withColumn(
         "_file_bucket",
         F.pmod(F.hash("pickup_datetime"), F.lit(files_per_month)),
     )
@@ -162,23 +153,25 @@ def ingest_trips(spark: SparkSession, source_path: str, target: str) -> int:
     # still runs)
     obs = Observation()
     batch = with_month(conform_trips(read_trips(spark, source_path)))
-    _write_months(
+    write_trips_month_idempotent(
         batch.observe(obs, F.collect_set(MONTH_COL).alias("months")),
         target)
     # a fully-filtered batch: AQE prunes the empty write, metrics and
     # all, so the observation holds an empty row, which obs.get refuses
-    # to convert. No data files were written; nothing to count.
+    # to convert. No data files were written; nothing to count. The
+    # check reads the row through the private py4j handle ``obs._jo``
+    # and the JVM's ``private[sql] Observation.getRow`` — the same call
+    # ``Observation.get`` makes (measured on Spark 4.1.2); pinned by
+    # tests/test_conform_edges.py::test_ingest_empty_batch_returns_zero.
     if obs._jo.getRow().size() == 0:
         return 0
     # read-back validation (count what's AT REST, not what we think we
     # wrote). Cheap: the month filter prunes to this batch's partitions,
-    # parquet count() is served from row-group metadata, and the known
-    # schema skips an inference job over the growing target. A new
-    # StructType: StructType.add would mutate the shared TRIPS_SCHEMA.
-    at_rest = T.StructType(
-        TRIPS_SCHEMA.fields + [T.StructField(MONTH_COL, T.StringType())])
+    # parquet count() is served from row-group metadata, and naming the
+    # partition column's type skips an inference job over the growing
+    # target (a count reads no data column).
     return (
-        spark.read.schema(at_rest).parquet(target)
+        spark.read.schema(f"{MONTH_COL} string").parquet(target)
         .filter(F.col(MONTH_COL).isin(obs.get["months"]))
         .count()
     )

@@ -21,6 +21,7 @@ from conftest import SF_DIR
 from nyc_taxi_data_engineering_project_spark import registry
 from nyc_taxi_data_engineering_project_spark.catalog import (
     LAYOUT_SERVE_CONF,
+    _write_tasks,
     build_workload_layout,
     drop_workload_layout,
     table,
@@ -617,13 +618,13 @@ def test_full_build_writes_one_file_per_bucket(spark, tmp_path):
 
 def test_layout_write_runs_one_task_per_core_with_whole_buckets(
         spark, tmp_path):
-    """A layout write co-locates into gcd(buckets, cores) tasks, and
-    each task writes whole buckets: per write (one uuid in the file
-    names) the distinct ``part-NNNNN`` task prefixes number that gcd,
-    every bucket id appears exactly once, and a bucket-key aggregate
-    still plans with no shuffle — for full builds at 8 and 6 buckets
-    and for the append that follows."""
-    import math
+    """A layout write co-locates into ``_write_tasks(buckets, cores)``
+    tasks, and each task writes whole buckets: per write (one uuid in
+    the file names) the distinct ``part-NNNNN`` task prefixes number
+    that count, every bucket id appears exactly once, and a bucket-key
+    aggregate still plans with no shuffle — for full builds at 8 and 6
+    buckets and for the append that follows. On 4 cores that is 4 and
+    3 tasks: 6 buckets is a count the cores do not divide."""
     import shutil
 
     src_dir = str(tmp_path / "src")
@@ -648,7 +649,7 @@ def test_layout_write_runs_one_task_per_core_with_whole_buckets(
         return out
 
     def _check(write, n):
-        assert len({task for task, _ in write}) == math.gcd(n, cores)
+        assert len({task for task, _ in write}) == _write_tasks(n, cores)
         assert sorted(b for _, b in write) == [f"{i:05d}"
                                                for i in range(n)]
 
@@ -673,6 +674,18 @@ def test_layout_write_runs_one_task_per_core_with_whole_buckets(
         assert _n_exchanges(served.groupBy("o_orderkey").count()) == 0
     finally:
         drop_workload_layout(spark, src_dir)
+
+
+@pytest.mark.parametrize("buckets,cores,tasks", [
+    (32, 3, 2), (32, 4, 4), (32, 5, 4), (32, 6, 4), (32, 7, 4),
+    (32, 8, 8), (32, 64, 32), (6, 4, 3), (8, 4, 4), (5, 4, 1),
+])
+def test_write_tasks_is_the_largest_bucket_divisor_within_the_cores(
+        buckets, cores, tasks):
+    """Whole buckets per task and no more tasks than cores, with the
+    cores as busy as that allows — also where the core count and the
+    bucket count share no factor (32 buckets on 3, 5, 6 or 7 cores)."""
+    assert _write_tasks(buckets, cores) == tasks
 
 
 def test_concurrent_reader_during_append(spark, tmp_path):
