@@ -149,8 +149,7 @@ def ingest_trips(spark: SparkSession, source_path: str, target: str) -> int:
     ``:183``) — counted on the target restricted to the months this batch
     replaced, so pre-existing untouched months never inflate the number."""
     # one pass over the source: the batch's months are an Observation
-    # riding the write's own job (with_month first, so its UTC guard
-    # still runs)
+    # riding the write's own job
     obs = Observation()
     batch = with_month(conform_trips(read_trips(spark, source_path)))
     write_trips_month_idempotent(
