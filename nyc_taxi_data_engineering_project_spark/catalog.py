@@ -12,11 +12,13 @@ from __future__ import annotations
 
 import contextlib
 import functools
+import math
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import store
+from .session import _TARGET_PARTITION_BYTES
 from .store import check_stream_identity  # noqa: F401  (public re-export)
 
 TESTDATA_TABLES = (
@@ -656,17 +658,24 @@ def build_workload_layout(
 
     Sizing: ``buckets`` fixes BOTH the scan parallelism (a bucketed
     scan runs one task per bucket — AQE cannot re-split it) and the
-    join/agg parallelism for every consumer, so it must scale with the
-    CLUSTER, not the data. Default: ``4 × defaultParallelism`` (floor
-    32). Measured at K=1000 (~600 M lineitem rows, 32 cores, SCALE.md
-    §15c): 32 buckets STARVES the scan — q3/q9 run 1.9-2.3× SLOWER than
-    plain despite fewer exchanges — while 128 (4× cores) wins 1.9-2.2×
-    on q3/q9/q18; undersizing the bucket count turns the index into a
-    regression. Both tables must share the count or the shuffle-free
-    join property is lost (enforced here by building them together).
-    Disable serving without dropping via
-    ``spark.conf.set(LAYOUT_SERVE_CONF, "false")`` — the A/B switch
-    tests and operators use.
+    join/agg parallelism for every consumer. Precedence: an explicit
+    ``buckets``, then a join-family sibling's count (below), then
+    :func:`_layout_buckets` of the summed bytes of the call's
+    hash-bucketed sources and ``defaultParallelism``: one bucket per
+    core while each bucket holds at most the 32 MB partition target
+    (``session._TARGET_PARTITION_BYTES``), more in whole multiples of
+    the core count as the data grows, capped at 4 × cores — the count
+    SCALE.md §15c measured winning 1.9-2.2× on q3/q9/q18 at K=1000
+    (~600 M lineitem rows, 32 cores), where 32 buckets starved the scan
+    (q3/q9 1.9-2.3× slower than plain). A co-located join task reads
+    bucket *i* of both facts, so the sum is the per-task measure. The
+    count applies to full builds only: a kept or appended table keeps
+    its manifest's count. Both facts must share the count or the
+    shuffle-free join property is lost, so a family leaves each call at
+    one count: a member fully built after another takes that member's
+    count, and one kept at another count is rebuilt at it. Disable serving
+    without dropping via ``spark.conf.set(LAYOUT_SERVE_CONF, "false")``
+    — the A/B switch tests and operators use.
 
     Subset builds (``tables=("lineitem",)``) keep the one-count-per-
     family invariant: if a sibling in the same join family
@@ -725,7 +734,12 @@ def build_workload_layout(
                     f"buckets={sib_buckets}."
                 )
     if buckets is None:
-        buckets = max(32, 4 * spark.sparkContext.defaultParallelism)
+        buckets = _layout_buckets(
+            sum(size for name in tables
+                if name not in LAYOUT_VALUE_PARTITIONED
+                for _mtime, size in _source_parts(
+                    os.path.join(sf_dir, f"{name}.parquet")).values()),
+            spark.sparkContext.defaultParallelism)
     if lsh_planes is not None:
         # the width lsh_ann_topk accepts: an index built at any other
         # width no query could probe
@@ -739,6 +753,15 @@ def build_workload_layout(
                                     lsh_planes)
 
 
+def _layout_buckets(nbytes: int, cores: int) -> int:
+    """Default bucket count of a full layout build over ``nbytes`` of
+    hash-bucketed source: whole multiples of ``cores``, one bucket per
+    core until buckets pass the 32 MB partition target, capped at
+    4 × cores (SCALE.md §15c)."""
+    return cores * min(4, max(1, math.ceil(
+        nbytes / (cores * _TARGET_PARTITION_BYTES))))
+
+
 def _build_layout_tables(
     spark: SparkSession,
     sf_dir: str,
@@ -750,8 +773,14 @@ def _build_layout_tables(
     lsh_planes: int | None = None,
 ) -> dict[str, str]:
     built: dict[str, str] = {}
+    # the count each join family took in this call: a later member
+    # fully built takes it, and a later member kept at another count is
+    # rebuilt at it, so a drifted member cannot split its family
+    family_buckets: dict[str, int] = {}
     for name in tables:
         key = LAYOUT_BUCKET_KEYS[name]  # KeyError = not a layout table
+        fam = LAYOUT_FAMILIES.get(name)
+        want = int(buckets) if buckets_explicit else family_buckets.get(fam)
         conf_key = _layout_conf_key(sf_dir, name)
         tbl = _layout_table(sf_dir, name)
         src_path = os.path.join(sf_dir, f"{name}.parquet")
@@ -768,12 +797,13 @@ def _build_layout_tables(
         # the table is kept only while its manifest records its schema
         # (what a new JVM recreates the catalog entry from), this
         # engine's bucket key and derived columns (an older set would
-        # serve a schema the engine no longer produces) and whatever
-        # bucket count or LSH width the caller names explicitly
+        # serve a schema the engine no longer produces), the bucket
+        # count the caller names or its family took, and the LSH width
+        # the caller names
         spec_ok = (
             "ddl" in m and m.get("key") == key
             and m.get("derived") == sorted(LAYOUT_DERIVED.get(name, {}))
-            and (not buckets_explicit or int(buckets) == int(m["buckets"]))
+            and (want is None or want == int(m["buckets"]))
             and not (name == "embeddings" and lsh_planes is not None
                      and lsh_planes != stored_planes))
         # the drift a part-map diff can scope: strictly ADDED parts
@@ -788,7 +818,8 @@ def _build_layout_tables(
         if full:
             # CREATE INDEX style: a missing, version-unknown or drifted
             # table is built from every source part, never re-blessed
-            n_buckets, eff_planes = int(buckets), lsh_planes or stored_planes
+            n_buckets = int(buckets) if want is None else want
+            eff_planes = lsh_planes or stored_planes
             parts, keep, counters = cur_parts, [], {}
         else:
             n_buckets, eff_planes = int(m["buckets"]), stored_planes
@@ -833,6 +864,8 @@ def _build_layout_tables(
         # layout once the source drifts from this
         spark.conf.set(conf_key + ".src", cur_fp)
         spark.conf.set(conf_key + ".buckets", str(n_buckets))
+        if fam is not None:
+            family_buckets.setdefault(fam, n_buckets)
         if name == "embeddings":
             # the width of the STORED assignment — layout_lsh_planes
             # reads this so the vector family only trusts a stored

@@ -177,7 +177,7 @@ def ingest_trips(spark: SparkSession, source_path: str, target: str) -> int:
 
 
 def write_bucketed(df: DataFrame, table_name: str, key: str,
-                   buckets: int = 16, path: str | None = None) -> None:
+                   buckets: int, path: str | None = None) -> None:
     """A15 (scale option): hash-bucketed, per-bucket-sorted table layout.
 
     Two tables bucketed on the same key with the same bucket count join
@@ -371,9 +371,8 @@ def wait_for_jdbc(spark: SparkSession, url: str, attempts: int = 30,
                   sleep_s: float = 3.0, probe_sql: str = "SELECT 1",
                   **properties: str) -> int:
     """A17: JDBC sink readiness retry — the reference's ``SELECT 1``
-    ping ×30 with 3 s sleep (``python/ingest_data.py:210-221``),
-    previously declared an infra non-goal; closed in r8 because the
-    engine ships a real JDBC sink (:func:`write_jdbc`) and a warehouse
+    ping ×30 with 3 s sleep (``python/ingest_data.py:210-221``): the
+    engine ships a real JDBC sink (:func:`write_jdbc`), and a warehouse
     restart mid-pipeline is an ordinary cluster event. Probes the url
     through the JVM's DriverManager (the exact connection stack the
     Spark JDBC writer uses, so readiness here means the WRITE will
@@ -406,10 +405,10 @@ def wait_for_jdbc(spark: SparkSession, url: str, attempts: int = 30,
                 conn.close()
             return attempt
         except Exception as exc:  # noqa: BLE001 — any JDBC failure retries
-            # fail FAST on configuration errors retrying can never fix
-            # (r8 ADVICE): a missing/unregistered driver is the same on
-            # attempt 30 as on attempt 1 — burning attempts×sleep_s
-            # (default 90 s) before surfacing it just hides a typo
+            # fail FAST on configuration errors retrying can never fix:
+            # a missing/unregistered driver is the same on attempt 30
+            # as on attempt 1 — burning attempts×sleep_s (default 90 s)
+            # before surfacing it just hides a typo
             msg = str(exc)
             if ("No suitable driver" in msg
                     or "ClassNotFoundException" in msg):

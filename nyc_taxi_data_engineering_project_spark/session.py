@@ -37,7 +37,8 @@ DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 # the high end — AQE coalesces excess partitions for free at runtime,
 # while an underestimate OOMs stage-level hash aggregates (SCALE.md
 # §13b finding 2: 32 partitions at K=1000 is ~19 M rows/partition
-# through an aggregate and dies).
+# through an aggregate and dies). The workload layout's default bucket count
+# (catalog._layout_buckets) sizes its buckets against the same target.
 _TARGET_PARTITION_BYTES = 32 << 20
 
 
@@ -64,15 +65,15 @@ def shuffle_partitions_for(data: str | int,
                math.ceil(_input_bytes(data) / _TARGET_PARTITION_BYTES))
 
 
-# AQE skew-gate sizing (r10, verdict ask 1 — the SCALE.md §17 measured
-# rule as engine code): AQE splits a skewed join partition only when it
-# exceeds BOTH 5× the median AND skewedPartitionThresholdInBytes. The
-# 256 MB default threshold assumes 64 MB-advisory healthy partitions;
-# an engine that sizes partitions toward ~32 MB of input leaves even a
-# pathological hot partition under 256 MB, so the split SILENTLY never
-# fires and the stage runs at straggler speed (measured at 60 M rows /
-# 50% hot: 10.9 s with default-gated "AQE on" vs 2.9 s once the byte
-# thresholds were scaled — 2× faster than explicit 16-way salting,
+# AQE skew-gate sizing (the SCALE.md §17 measured rule as engine code):
+# AQE splits a skewed join partition only when it exceeds BOTH 5× the
+# median AND skewedPartitionThresholdInBytes. The 256 MB default
+# threshold assumes 64 MB-advisory healthy partitions; an engine that
+# sizes partitions toward ~32 MB of input leaves even a pathological hot
+# partition under 256 MB, so the split SILENTLY never fires and the
+# stage runs at straggler speed (measured at 60 M rows / 50% hot: 10.9 s
+# with default-gated "AQE on" vs 2.9 s once the byte thresholds were
+# scaled — 2× faster than explicit 16-way salting,
 # scripts/stress100_results/aqe_vs_salting_60m.json). Rule: advisory =
 # half the expected per-partition bytes (the split's target chunk,
 # shuffle data being roughly parquet-compressed), threshold = 2×
@@ -101,19 +102,18 @@ def aqe_skew_conf_for(data: str | int,
     }
 
 
-# Local-mode heap sizing (r11, verdict ask 3 — the two r10 hand-fixed
-# OOMs as an engine rule): in local[N] the ONE JVM is driver and every
+# Local-mode heap sizing: in local[N] the ONE JVM is driver and every
 # executor, so its heap must scale with the input like an executor
-# fleet's aggregate memory would. Measured points: 8 g green through
-# the full board at ≤1.1 GB input (K≤100); 8 g OOM in q5's shuffle and
-# the LSH probe at 11 GB input (K=1000); 16 g (r7) and 20 g (r10
-# harness default) green at 11 GB. Rule: heap ≥ 2× the on-disk parquet
-# bytes (decompressed working set per stage is 3-8× the column chunks
-# actually touched, spread across stages with spilling — 2× of TOTAL
-# bytes covers it with margin at every measured tier), clamped to
-# [8 g, 64 g] (floor = the proven small-tier default, cap = half this
-# host's RAM). On a real CLUSTER this rule sizes EXECUTOR memory;
-# driver heap there only needs collect/broadcast headroom.
+# fleet's aggregate memory would. Measured points: 8 g green through the
+# full board at ≤1.1 GB input (K≤100); 8 g OOM in q5's shuffle and the
+# LSH probe at 11 GB input (K=1000); 16 g and 20 g green at 11 GB. Rule:
+# heap ≥ 2× the on-disk parquet bytes (decompressed working set per
+# stage is 3-8× the column chunks actually touched, spread across stages
+# with spilling — 2× of TOTAL bytes covers it with margin at every
+# measured tier), clamped to [8 g, 64 g] (floor = the proven small-tier
+# default, cap = half the measured host's RAM). On a real CLUSTER the rule
+# sizes EXECUTOR memory; driver heap there only needs collect/broadcast
+# headroom.
 _HEAP_MIN_GB = 8
 _HEAP_MAX_GB = 64
 
@@ -144,9 +144,9 @@ def get_session(app_name: str = "nyc_taxi_data_engineering_project_spark",
     ``spark.sql.shuffle.partitions`` or skew gate wins.
     """
     cpus = str(cpus or DEFAULT_CPUS)
-    # ONE walk feeds all three input-derived settings (r10 ADVICE: the
-    # walk is driver-side metadata over a potentially many-file tree —
-    # don't repeat it); without sf_dir the core-count partition default
+    # ONE walk feeds all three input-derived settings (the walk is
+    # driver-side metadata over a potentially many-file tree — don't
+    # repeat it); without sf_dir the core-count partition default
     # and the Spark-default skew gates stand (right for ≤sf0.1).
     if sf_dir is not None:
         nbytes = _input_bytes(sf_dir)
@@ -173,8 +173,8 @@ def get_session(app_name: str = "nyc_taxi_data_engineering_project_spark",
         # emits for join-consume stages (SCALE.md §19b): the unrolled
         # 64-dim dot fuses into a ~17 KB-bytecode method, past
         # HotSpot's DontCompileHugeMethods threshold (8000), so the
-        # stage ran bytecode-INTERPRETED on every execution (the whole
-        # r9→r10 vector-family regression). Measured alternatives:
+        # stage would run bytecode-INTERPRETED on every execution, a
+        # vector-family slowdown. Measured alternatives:
         # spark.sql.codegen.hugeMethodLimit=8000 fixes these stages 3×
         # via per-expression fallback but un-fuses every 8–64 KB stage
         # board-wide (+16 s at sf0.1, rejected); this JVM flag keeps
@@ -207,14 +207,14 @@ def get_session(app_name: str = "nyc_taxi_data_engineering_project_spark",
         # later. Compared on the RETURNED session's conf, not an
         # active-session flag: getActiveSession is thread-scoped, so a
         # secondary thread re-entering the process-wide session would
-        # skip a flag-gated check exactly when it matters (r11 review).
+        # skip a flag-gated check exactly when it matters.
         # When THIS call launched the JVM the conf equals derived_mem
         # and the check is a no-op.
         running_gb, running = _running_heap_gb(spark)
         # maxMemory() excludes one survivor space (~5-10% of -Xmx), so
         # when the estimate came from the JVM rather than the conf, an
         # unmanaged heap sized EXACTLY at the floor must not cry wolf —
-        # compare against 0.9× the floor for that branch (r12 review)
+        # compare against 0.9× the floor for that branch
         floor_gb = _mem_gb(derived_mem) * (
             0.9 if "maxMemory" in running else 1.0)
         if running_gb < floor_gb:
@@ -233,7 +233,7 @@ def _running_heap_gb(spark) -> tuple[float, str]:
     get_session without it) do NOT assume the engine's 8 g floor —
     Spark's actual default heap is 1 g, so an '8g' assumption would
     suppress the undersized-heap warning exactly in the unmanaged-
-    session case it targets (r11 ADVICE). Read the REAL heap from
+    session case it targets. Read the REAL heap from
     ``Runtime.maxMemory()``; only if even that is unreachable assume
     Spark's true 1 g default."""
     running = spark.conf.get("spark.driver.memory", None)
@@ -249,9 +249,9 @@ def _running_heap_gb(spark) -> tuple[float, str]:
 
 def _mem_gb(mem: str) -> float:
     """Parse a JVM memory string ('20g', '512m', '20480') to GiB.
-    Spark reads a bare number in spark.driver.memory as MiB (r11
-    review: '20480' is 20 GiB, not 20 KB), so the suffix-less branch
-    divides by 1024."""
+    Spark reads a bare number in spark.driver.memory as MiB ('20480'
+    is 20 GiB, not 20 KB), so the suffix-less branch divides by
+    1024."""
     mem = mem.strip().lower()
     mult = {"k": 1 / (1 << 20), "m": 1 / 1024, "g": 1, "t": 1024}
     if mem[-1] in mult:

@@ -21,6 +21,7 @@ from conftest import SF_DIR
 from nyc_taxi_data_engineering_project_spark import registry
 from nyc_taxi_data_engineering_project_spark.catalog import (
     LAYOUT_SERVE_CONF,
+    _layout_buckets,
     _write_tasks,
     build_workload_layout,
     drop_workload_layout,
@@ -686,6 +687,99 @@ def test_write_tasks_is_the_largest_bucket_divisor_within_the_cores(
     cores as busy as that allows — also where the core count and the
     bucket count share no factor (32 buckets on 3, 5, 6 or 7 cores)."""
     assert _write_tasks(buckets, cores) == tasks
+
+
+_MB = 1 << 20
+
+
+@pytest.mark.parametrize("nbytes,cores,buckets", [
+    (int(17.5 * _MB), 4, 4), (int(17.5 * _MB), 32, 32),
+    (129 * _MB, 4, 8), (600 * _MB, 4, 16),
+    (6 << 30, 32, 128), (60 << 30, 32, 128), (0, 4, 4),
+])
+def test_layout_buckets_follow_the_data_up_to_four_per_core(
+        nbytes, cores, buckets):
+    """One bucket per core while buckets hold at most the 32 MB
+    partition target, then whole multiples of the cores, capped at
+    4 × cores: the count SCALE.md §15c measured at K=100 and K=1000."""
+    assert _layout_buckets(nbytes, cores) == buckets
+
+
+def _tpch_copy(tmp_path) -> str:
+    """A private copy of the test corpus, so a layout registered for it
+    leaves the module fixture's registration for ``SF_DIR`` alone."""
+    import shutil
+
+    src_dir = str(tmp_path / "src")
+    shutil.copytree(SF_DIR, src_dir)
+    return src_dir
+
+
+def test_default_bucket_count_is_the_data_sized_rule(spark, tmp_path):
+    """A build without ``buckets`` records :func:`_layout_buckets` of
+    the two facts' source bytes in both manifests, and the orderkey
+    keys still plan fully co-located with the plain path's answers."""
+    from nyc_taxi_data_engineering_project_spark.catalog import (
+        _read_manifest,
+        _source_parts,
+    )
+
+    registry.load_all()
+    src_dir = _tpch_copy(tmp_path)
+    lay = str(tmp_path / "layout")
+    cores = spark.sparkContext.defaultParallelism
+    nbytes = sum(size for name in ("orders", "lineitem")
+                 for _mtime, size in _source_parts(
+                     f"{src_dir}/{name}.parquet").values())
+    want = _layout_buckets(nbytes, cores)
+    assert want == cores  # a test corpus is far under 32 MB a core
+    try:
+        built = build_workload_layout(spark, src_dir, lay)
+        assert {_read_manifest(lay, tbl)["buckets"]
+                for tbl in built.values()} == {want}
+        for key in ZERO_EXCHANGE_KEYS:
+            qfn = registry.QUERIES[key]
+            served = qfn(spark, src_dir)
+            assert _n_exchanges(served) == 0, key
+            spark.conf.set(LAYOUT_SERVE_CONF, "false")
+            try:
+                plain_rows = sorted(map(tuple, qfn(spark, src_dir).collect()))
+            finally:
+                spark.conf.unset(LAYOUT_SERVE_CONF)
+            assert sorted(map(tuple, served.collect())) == plain_rows, key
+    finally:
+        drop_workload_layout(spark, src_dir)
+
+
+def test_family_leaves_a_default_build_at_one_count(spark, tmp_path):
+    """A default-count build in which one fact is rebuilt (its source
+    changed) and its sibling is kept must leave both facts at one
+    count: the rebuilt orders takes the rule's count, so lineitem, kept
+    at another count, is rebuilt at it."""
+    import time as _time
+
+    from nyc_taxi_data_engineering_project_spark.catalog import (
+        _read_manifest,
+    )
+
+    registry.load_all()
+    src_dir = _tpch_copy(tmp_path)
+    lay = str(tmp_path / "layout")
+    cores = spark.sparkContext.defaultParallelism
+    try:
+        built = build_workload_layout(spark, src_dir, lay,
+                                      buckets=2 * cores)
+        # touch orders: a drift the part diff cannot scope
+        _time.sleep(0.01)  # a fresh mtime tick
+        os.utime(f"{src_dir}/orders.parquet")
+        build_workload_layout(spark, src_dir, lay)
+        counts = {name: _read_manifest(lay, tbl)["buckets"]
+                  for name, tbl in built.items()}
+        assert counts == {"orders": cores, "lineitem": cores}, counts
+        served = registry.QUERIES["tpch_q18"](spark, src_dir)
+        assert _n_exchanges(served) == 0
+    finally:
+        drop_workload_layout(spark, src_dir)
 
 
 def test_concurrent_reader_during_append(spark, tmp_path):
